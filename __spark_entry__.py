@@ -6,9 +6,10 @@ matching ``oracle_sql()[name]`` via DuckDB (row-count + schema +
 order-insensitive value-hash → CORRECTNESS_r{N}.json).
 
 Implementations live in ``geniepool_etl_spark.contract`` — one
-(Spark query, DuckDB oracle) pair per SURVEY.md §2 operator plus the
-LLM-data-pipeline families (dedup, similarity, text analysis,
-events/windows, multimodal, streaming, packing/sampling). Every entry
+(Spark query, DuckDB oracle) pair per lane that runs package code
+(SURVEY.md §2 operators and the LLM-data-pipeline families: dedup,
+similarity, text analysis, events/windows, multimodal, streaming,
+packing/sampling), plus seven Spark-baseline controls. Every entry
 has an exact oracle (approx ops are checked as within-tolerance
 booleans whose oracle side computes the exact value).
 """
@@ -49,7 +50,7 @@ def _rotation_order(names) -> list[str]:
     proven the round it lands), then ascending last-green round from
     the CORRECTNESS_r*.json history (stalest external record
     re-proven first), registry order as the tiebreak. The registry
-    itself stays grouped by family; rotation is a view. With 297
+    itself stays grouped by family; rotation is a view. With 286
     lanes and a 50-lane window this bounds every lane's external
     re-proof cycle at ~6 rounds (r12 verdict, process nit #1)."""
     import glob

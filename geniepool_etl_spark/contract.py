@@ -1,7 +1,9 @@
 """Driver-contract query catalog: one (Spark query, DuckDB oracle)
-pair per operator of SURVEY.md §2 plus the LLM-data-pipeline operator
-families (dedup, similarity, text analysis, events/windows, multimodal,
-streaming), all over the synthetic star schema in ``$sf_dir``.
+pair per lane, each lane running package code (the SURVEY.md §2
+operators and the LLM-data-pipeline families: dedup, similarity, text
+analysis, events/windows, multimodal, streaming) over the synthetic
+star schema in ``$sf_dir``, plus seven labelled Spark-baseline
+controls at the end of ``SPARK_QUERIES``.
 
 Conventions that make the cross-engine value-hash comparison exact:
 
@@ -27,7 +29,6 @@ from __future__ import annotations
 
 import itertools
 import os
-import shutil
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
@@ -94,145 +95,6 @@ def _memo_fixture(tag: str, sf_dir: str, write) -> str:
 # S: sources / sinks (SURVEY §2.1)
 # =====================================================================
 
-def q_s1_s3_text_csv_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """S1+S2+S3: text source with '#' comment lines, parsed as TSV in
-    one fused scan (explicit schema, comment filter in-scan — the
-    engine's VCF-reader design, sources/vcf.py)."""
-    rows = sorted(
-        _t(spark, sf_dir, "region").collect(), key=lambda r: r.r_regionkey
-    )  # 5-row dim: fixture generation only, not a data path
-    path = os.path.join(_tmpdir("s1"), "region.tsv")
-    with open(path, "w") as f:
-        f.write("##fileformat=TSVv1\n#comment line\n")
-        for r in rows:
-            f.write(f"{r.r_regionkey}\t{r.r_name}\n")
-    schema = T.StructType(
-        [
-            T.StructField("r_regionkey", T.IntegerType()),
-            T.StructField("r_name", T.StringType()),
-        ]
-    )
-    return (
-        spark.read.option("sep", "\t")
-        .option("comment", "#")
-        .schema(schema)
-        .csv(path)
-    )
-
-
-def q_s4_csv_header_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """S4: CSV sink+source with header and custom separator."""
-    out = _tmpdir("s4")
-    nation = _t(spark, sf_dir, "nation")
-    nation.write.mode("overwrite").option("sep", "\t").option(
-        "header", True
-    ).csv(out)
-    return (
-        spark.read.option("sep", "\t")
-        .option("header", True)
-        .schema(nation.schema)
-        .csv(out)
-    )
-
-
-def q_s5_csv_noheader_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """S5: headerless CSV with positional names renamed to semantic."""
-    out = _tmpdir("s5")
-    supplier = _t(spark, sf_dir, "supplier")
-    supplier.write.mode("overwrite").csv(out)
-    raw = spark.read.schema(
-        "c0 LONG, c1 STRING, c2 INT, c3 DOUBLE"
-    ).csv(out)
-    return (
-        raw.withColumnRenamed("c0", "s_suppkey")
-        .withColumnRenamed("c1", "s_name")
-        .withColumnRenamed("c2", "s_nationkey")
-        .withColumnRenamed("c3", "s_acctbal")
-    )
-
-
-def q_s6_parquet_explicit_schema(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """S6: explicit-schema parquet scan — listed columns are pruned to
-    the schema, and a schema column missing from the file reads as
-    null (the dbSNP-T2T / gnomAD subtleties, sources/annotations.py)."""
-    schema = T.StructType(
-        [
-            T.StructField("c_custkey", T.LongType()),
-            T.StructField("c_name", T.StringType()),
-            T.StructField("c_phone", T.StringType()),  # not in file → null
-        ]
-    )
-    return spark.read.schema(schema).parquet(
-        os.path.join(sf_dir, "customer.parquet")
-    )
-
-
-def q_s7_parquet_inferred(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """S7: inferred-schema parquet scan with projection."""
-    return _t(spark, sf_dir, "part").select("p_partkey", "p_name")
-
-
-def q_s8_input_file_name(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """S8: file-name lineage via input_file_name + substring_index
-    (the sample-id/chrom-from-filename pattern, sources/filename.py)."""
-    return _t(spark, sf_dir, "region").select(
-        "r_regionkey",
-        F.substring_index(F.input_file_name(), "/", -1).alias("src_file"),
-    )
-
-
-def q_s15_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """S15 (ext): schema evolution across lake batches — an old batch
-    without a column and a new batch with it, read back as ONE dataset
-    via mergeSchema (the missing column nulls out). The annotation-
-    table release-to-release reality S6's missing-col-null handles at
-    the reader level, here at the lake level."""
-    def _write(out: str) -> None:
-        nation = _t(spark, sf_dir, "nation")
-        nation.select("n_nationkey", "n_name").write.mode(
-            "overwrite"
-        ).parquet(f"{out}/batch=1")
-        nation.select("n_nationkey", "n_name", "n_regionkey").write.mode(
-            "overwrite"
-        ).parquet(f"{out}/batch=2")
-
-    out = _memo_fixture("s15", sf_dir, _write)
-    back = spark.read.option("mergeSchema", "true").parquet(
-        f"{out}/batch=1", f"{out}/batch=2"
-    )
-    return back.select("n_nationkey", "n_name", "n_regionkey")
-
-
-def q_s9_partitioned_write_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """S9: Hive-partitioned parquet sink with maxRecordsPerFile +
-    repartition-by-partition-cols discipline, then read-back."""
-    out = _tmpdir("s9")
-    li = _t(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_linenumber", "l_returnflag", "l_quantity"
-    )
-    (
-        li.repartition("l_returnflag")
-        .write.option("maxRecordsPerFile", 25000)
-        .mode("overwrite")
-        .partitionBy("l_returnflag")
-        .parquet(out)
-    )
-    back = spark.read.parquet(out)
-    return back.groupBy("l_returnflag").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("l_quantity").alias("sum_qty"),
-    )
-
-
-def q_s10_json_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """S10: JSON append sink (coalesce(1)) + read-back with schema."""
-    out = _tmpdir("s10")
-    orders = _t(spark, sf_dir, "orders").select("o_orderkey", "o_orderstatus")
-    orders.coalesce(1).write.mode("append").json(out)
-    back = spark.read.schema("o_orderkey LONG, o_orderstatus STRING").json(out)
-    return back.groupBy("o_orderstatus").agg(F.count(F.lit(1)).alias("n"))
-
-
 def q_s11_lake_range_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S11 + the lake centerpiece: orders mapped onto the genomic lake
     shape (chrom, pos, pos_bucket), written Hive-partitioned, then a
@@ -256,40 +118,6 @@ def q_s11_lake_range_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("pos").cast("long").alias("pos"),
         "o_totalprice",
         F.col("pos_bucket").cast("long").alias("pos_bucket"),
-    )
-
-
-def q_s12_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ORC sink + source (columnar alternative to parquet, built into
-    Spark) — write, read back, aggregate."""
-    out = _tmpdir("s12")
-    part = _t(spark, sf_dir, "part").select("p_partkey", "p_brand", "p_size")
-    part.write.mode("overwrite").orc(out)
-    back = spark.read.orc(out)
-    return back.groupBy("p_brand").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.col("p_size").cast("long")).alias("sum_size"),
-    )
-
-
-def q_s13_csv_dropmalformed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Data-quality source handling: DROPMALFORMED discards rows that
-    don't fit the schema (the production posture for dirty text
-    feeds; PERMISSIVE + corrupt-record column is the forensic one)."""
-    rows = sorted(
-        _t(spark, sf_dir, "nation").collect(), key=lambda r: r.n_nationkey
-    )  # 25-row dim: fixture generation only
-    path = os.path.join(_tmpdir("s13"), "nation_dirty.tsv")
-    with open(path, "w") as f:
-        f.write("garbage line without any tabs\n")
-        for r in rows:
-            f.write(f"{r.n_nationkey}\t{r.n_name}\t{r.n_regionkey}\n")
-        f.write("not_an_int\tBADROW\talso_not_int\n")
-    return (
-        spark.read.option("sep", "\t")
-        .option("mode", "DROPMALFORMED")
-        .schema("n_nationkey INT, n_name STRING, n_regionkey INT")
-        .csv(path)
     )
 
 
@@ -725,40 +553,6 @@ def q_snap_compact_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     return T.history(spark, out)
 
 
-def q_s16_csv_permissive_corrupt(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Data-quality forensics: PERMISSIVE + columnNameOfCorruptRecord
-    keeps malformed rows (unparseable fields null, the raw line
-    captured) instead of dropping them — the audit-trail counterpart
-    of s13's DROPMALFORMED posture."""
-    def _write(out: str) -> None:
-        rows = sorted(
-            _t(spark, sf_dir, "nation").collect(),
-            key=lambda r: r.n_nationkey,
-        )  # 25-row dim: fixture generation only
-        with open(os.path.join(out, "nation_dirty.tsv"), "w") as f:
-            f.write("garbage line without any tabs\n")
-            for r in rows:
-                f.write(f"{r.n_nationkey}\t{r.n_name}\t{r.n_regionkey}\n")
-            f.write("not_an_int\tBADROW\talso_not_int\n")
-
-    out = _memo_fixture("s16", sf_dir, _write)
-    df = (
-        spark.read.option("sep", "\t")
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", "_bad")
-        .schema(
-            "n_nationkey INT, n_name STRING, n_regionkey INT, _bad STRING"
-        )
-        .csv(os.path.join(out, "nation_dirty.tsv"))
-    )
-    return df.select(
-        "n_nationkey",
-        "n_name",
-        "n_regionkey",
-        F.col("_bad").isNotNull().alias("is_corrupt"),
-    )
-
-
 def q_s17_fixed_width(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fixed-width (mainframe/copybook) text source: byte-offset
     fields decoded with JVM substring projections over a plain text
@@ -792,93 +586,8 @@ def q_s17_fixed_width(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # =====================================================================
-# P: projections / filters / row ops (SURVEY §2.2)
-# =====================================================================
-
-def q_p1_rename(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return (
-        _t(spark, sf_dir, "customer")
-        .withColumnRenamed("c_custkey", "cust_id")
-        .withColumnRenamed("c_nationkey", "nation_id")
-        .select("cust_id", "nation_id", "c_mktsegment")
-    )
-
-
-def q_p2_derive(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """P2 + the §2.5 scalar family: concat/lit/upper/trim/split/
-    substring_index/when/floor/casts."""
-    p = _t(spark, sf_dir, "part")
-    return p.select(
-        "p_partkey",
-        F.concat(F.lit("B#"), F.upper(F.col("p_brand"))).alias("brand_tag"),
-        F.substring_index(F.col("p_type"), " ", 1).alias("type_head"),
-        F.split(F.col("p_type"), " ").getItem(0).alias("type_first"),
-        F.floor(F.col("p_retailprice") / 100).cast("long").alias("price_bucket"),
-        F.when(F.col("p_size") >= 25, F.lit("large"))
-        .otherwise(F.lit("small"))
-        .alias("size_class"),
-        F.trim(F.lit("  pad  ")).alias("trimmed"),
-    )
-
-
-def q_p3_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _t(spark, sf_dir, "lineitem").drop(
-        "l_extendedprice", "l_discount", "l_tax", "l_shipdate",
-        "l_quantity", "l_returnflag", "l_linestatus",
-    )
-
-
-def q_p4_select_reorder(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """P4: reorder-with-prepend (reference's alpha-first select)."""
-    n = _t(spark, sf_dir, "nation")
-    return n.select("n_name", *[c for c in n.columns if c != "n_name"])
-
-
-def q_p5_sql_predicate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return (
-        _t(spark, sf_dir, "orders")
-        .where("o_totalprice > 150000 AND o_orderstatus = 'O'")
-        .select("o_orderkey", "o_totalprice")
-    )
-
-
-def q_p6_dropdup_subset(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """P6: dropDuplicates(subset) — projected to the subset so the
-    kept-row nondeterminism can't leak into the result."""
-    return (
-        _t(spark, sf_dir, "lineitem")
-        .dropDuplicates(["l_orderkey"])
-        .select("l_orderkey")
-    )
-
-
-# =====================================================================
 # J: joins (SURVEY §2.3)
 # =====================================================================
-
-def q_j1_multikey_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J1-J3 shape: 4-column equi left join (the variants⟕annotation
-    pattern) — lineitem against a 4-key aggregate of itself."""
-    li = _t(spark, sf_dir, "lineitem")
-    keys = ["l_orderkey", "l_linenumber", "l_returnflag", "l_linestatus"]
-    dim = li.groupBy(*keys).agg(F.max("l_discount").alias("max_disc"))
-    return li.join(dim, keys, "left").select(
-        "l_orderkey", "l_linenumber", "l_returnflag", "l_linestatus", "max_disc"
-    )
-
-
-def q_j2_left_join_nulls(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Left join against a filtered dim → unmatched rows keep nulls
-    (coalesced to a sentinel, the annotation-enrichment semantics)."""
-    orders = _t(spark, sf_dir, "orders")
-    cust = _t(spark, sf_dir, "customer").where(F.col("c_acctbal") > 5000)
-    joined = orders.join(
-        cust, orders.o_custkey == cust.c_custkey, "left"
-    )
-    return joined.groupBy(
-        F.coalesce(F.col("c_mktsegment"), F.lit("NONE")).alias("seg")
-    ).agg(F.count(F.lit(1)).alias("n"))
-
 
 def q_j3_broadcast_join_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Explicit broadcast hint on the small dim (part) — the scale-up
@@ -895,85 +604,9 @@ def q_j3_broadcast_join_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_j4_case_pick_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The alpha-join pattern (operators/annotate.py): join then a
-    multi-branch CASE picks the score column based on key columns."""
-    li = _t(spark, sf_dir, "lineitem")
-    part = _t(spark, sf_dir, "part").select("p_partkey", "p_size", "p_retailprice")
-    joined = li.join(F.broadcast(part), li.l_partkey == part.p_partkey, "left")
-    rf, ls = F.col("l_returnflag"), F.col("l_linestatus")
-    score = (
-        F.when((rf == "R") & (ls == "F"), F.col("p_size").cast("double"))
-        .when((rf == "A") & (ls == "F"), F.col("p_retailprice"))
-        .when((rf == "N") & (ls == "O"), F.col("l_quantity"))
-        .when((rf == "N") & (ls == "F"), F.col("l_discount"))
-        .otherwise(F.lit(None).cast("double"))
-    )
-    return joined.select(
-        "l_orderkey",
-        "l_linenumber",
-        F.round(score, 4).alias("score"),
-    )
-
-
-def q_j5_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust = _t(spark, sf_dir, "customer")
-    big = _t(spark, sf_dir, "orders").where(F.col("o_totalprice") > 250000)
-    return cust.join(
-        big, cust.c_custkey == big.o_custkey, "left_semi"
-    ).select("c_custkey")
-
-
-def q_j6_anti_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust = _t(spark, sf_dir, "customer")
-    big = _t(spark, sf_dir, "orders").where(F.col("o_totalprice") > 250000)
-    return cust.join(
-        big, cust.c_custkey == big.o_custkey, "left_anti"
-    ).select("c_custkey", "c_mktsegment")
-
-
-SIZE_BUCKETS = [(0, 10, "small"), (11, 25, "medium"), (26, 50, "large")]
-
-
-def q_j7_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Non-equi (range) join against a tiny literal dim — broadcast
-    nested-loop on a 3-row side, never an all-pairs shuffle."""
-    part = _t(spark, sf_dir, "part")
-    buckets = spark.createDataFrame(SIZE_BUCKETS, "lo INT, hi INT, label STRING")
-    joined = part.join(
-        F.broadcast(buckets),
-        (part.p_size >= buckets.lo) & (part.p_size <= buckets.hi),
-        "left",
-    )
-    return joined.groupBy("label").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.round(F.avg("p_retailprice"), 4).alias("avg_price"),
-    )
-
-
 # =====================================================================
 # A: aggregations (SURVEY §2.4)
 # =====================================================================
-
-def q_a1_collect_set_nest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A1: grouped collect_set, canonicalized with sort_array for
-    order-insensitive comparison (operators/nest.py pattern). The nest
-    is emitted as a comma-joined string — the driver's pandas
-    canonicalizer cannot hash raw array<...> columns."""
-    return (
-        _t(spark, sf_dir, "lineitem")
-        .groupBy("l_orderkey")
-        .agg(
-            F.array_join(
-                F.sort_array(F.collect_set("l_linenumber")).cast(
-                    "array<string>"
-                ),
-                ",",
-            ).alias("line_numbers"),
-            F.count(F.lit(1)).alias("n_lines"),
-        )
-    )
-
 
 def q_a2_two_level_nest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A2: second-level nesting — per-order aggregates re-nested per
@@ -995,15 +628,6 @@ def q_a2_two_level_nest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_a3_multi_count_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A3: global multi-column countDistinct (the status record)."""
-    return _t(spark, sf_dir, "lineitem").groupBy().agg(
-        F.count_distinct("l_orderkey").alias("orders_num"),
-        F.count_distinct("l_orderkey", "l_linenumber").alias("lines_num"),
-        F.count_distinct("l_suppkey").alias("suppliers_num"),
-    )
-
-
 def q_a4_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q1-shaped flagship aggregate: filter → 2-key groupBy →
     sums/avgs/count, all map-side-partial-aggregated."""
@@ -1022,162 +646,6 @@ def q_a4_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_Q3 = """
-    SELECT l.l_orderkey,
-           o.o_orderpriority,
-           round(SUM(l.l_extendedprice * (1 - l.l_discount)), 2) AS revenue
-    FROM customer c
-    JOIN orders o ON c.c_custkey = o.o_custkey
-    JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-    WHERE c.c_mktsegment = 'BUILDING'
-    GROUP BY l.l_orderkey, o.o_orderpriority
-    ORDER BY revenue DESC, l.l_orderkey
-    LIMIT 10
-"""
-
-
-def q_sql_tpch_q3(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The SQL entry point as a first-class surface: TPC-H Q3-shaped
-    text executed via spark.sql over registered temp views — same
-    Catalyst plan as the DataFrame API (dim joins broadcast, one
-    partial-agg'd shuffle). The identical text runs on DuckDB as the
-    oracle; deterministic top-10 via the rounded-revenue + orderkey
-    sort rule."""
-    for t in ("customer", "orders", "lineitem"):
-        _t(spark, sf_dir, t).createOrReplaceTempView(t)
-    return spark.sql(_SQL_Q3)
-
-
-_SQL_Q5 = """
-    SELECT n.n_name,
-           round(SUM(l.l_extendedprice * (1 - l.l_discount)), 2) AS revenue
-    FROM customer c
-    JOIN orders o ON c.c_custkey = o.o_custkey
-    JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-    JOIN supplier s ON l.l_suppkey = s.s_suppkey
-                   AND c.c_nationkey = s.s_nationkey
-    JOIN nation n ON s.s_nationkey = n.n_nationkey
-    GROUP BY n.n_name
-    ORDER BY revenue DESC, n.n_name
-"""
-
-
-def q_sql_tpch_q5(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q5-shaped local-supplier-volume SQL: a five-table join
-    chain with a two-column join on supplier (the classic
-    co-located-nation condition), grouped revenue per nation. Same
-    Catalyst treatment as the DataFrame API — tiny dims broadcast,
-    fact joins shuffle on their keys; the identical text runs on
-    DuckDB as the oracle."""
-    for t in ("customer", "orders", "lineitem", "supplier", "nation"):
-        _t(spark, sf_dir, t).createOrReplaceTempView(t)
-    return spark.sql(_SQL_Q5)
-
-
-_SQL_Q6 = """
-    SELECT CAST(SUM(CAST(round(l_extendedprice * l_discount * 100)
-                         AS BIGINT)) / 100.0 AS DOUBLE) AS revenue,
-           COUNT(*) AS n_items
-    FROM lineitem
-    WHERE l_shipdate >= TIMESTAMP '1996-01-01'
-      AND l_shipdate <  TIMESTAMP '1997-01-01'
-      AND l_discount BETWEEN 0.03 AND 0.07
-      AND l_quantity < 24
-"""
-
-
-def q_sql_tpch_q6(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q6-shaped forecasting-revenue-change SQL: the pure
-    scan-filter-aggregate probe. Every predicate is pushdown-eligible
-    (date range, discount band, quantity cut reach the parquet reader
-    as PushedFilters; row groups outside the shipdate range skip on
-    min/max stats) and the aggregate is a map-side partial — at 100 TB
-    this query's cost IS the scan, which is exactly what the plan
-    reduces it to. Identical text is the DuckDB oracle."""
-    _t(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
-    return spark.sql(_SQL_Q6)
-
-
-_SQL_Q10 = """
-    SELECT c.c_custkey,
-           c.c_name,
-           n.n_name,
-           CAST(SUM(CAST(round(l.l_extendedprice * (1 - l.l_discount) * 100)
-                         AS BIGINT)) / 100.0 AS DOUBLE) AS revenue
-    FROM customer c
-    JOIN orders o ON c.c_custkey = o.o_custkey
-    JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-    JOIN nation n ON c.c_nationkey = n.n_nationkey
-    WHERE o.o_orderdate >= TIMESTAMP '1996-01-01'
-      AND o.o_orderdate <  TIMESTAMP '1996-07-01'
-      AND l.l_returnflag = 'R'
-    GROUP BY c.c_custkey, c.c_name, n.n_name
-    ORDER BY revenue DESC, c.c_custkey
-    LIMIT 20
-"""
-
-
-def q_sql_tpch_q10(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q10-shaped returned-item reporting: selective fact
-    filters (order-date window, return flag) push to both fact scans
-    BEFORE the orderkey shuffle, nation broadcasts, and the top-20 is
-    TakeOrderedAndProject (never a global sort materialization).
-    Deterministic cut: revenue is summed in integer cents (per-row
-    round → BIGINT — order-independent under any shuffle/merge order,
-    where a double sum's last ulp is not) with a custkey tiebreak."""
-    for t in ("customer", "orders", "lineitem", "nation"):
-        _t(spark, sf_dir, t).createOrReplaceTempView(t)
-    return spark.sql(_SQL_Q10)
-
-
-def q_a5_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hierarchical subtotals via rollup (region → nation)."""
-    cust = _t(spark, sf_dir, "customer")
-    nation = _t(spark, sf_dir, "nation")
-    region = _t(spark, sf_dir, "region")
-    joined = (
-        cust.join(F.broadcast(nation), cust.c_nationkey == nation.n_nationkey)
-        .join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)
-    )
-    return joined.rollup("r_name", "n_name").agg(
-        F.count(F.lit(1)).alias("n_cust"),
-        F.round(F.sum("c_acctbal"), 2).alias("sum_bal"),
-    )
-
-
-def q_a6_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _t(spark, sf_dir, "orders").cube(
-        "o_orderstatus", "o_orderpriority"
-    ).agg(F.count(F.lit(1)).alias("n"))
-
-
-def q_a8_stats_aggs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Statistical aggregates: min/max (exact), median (deterministic
-    on integer-valued quantities), stddev rounded (merge-order error is
-    ~1e-12 relative)."""
-    return _t(spark, sf_dir, "lineitem").groupBy("l_returnflag").agg(
-        F.min("l_quantity").alias("min_qty"),
-        F.max("l_quantity").alias("max_qty"),
-        F.median("l_quantity").alias("med_qty"),
-        F.round(F.stddev_samp("l_quantity"), 4).alias("sd_qty"),
-        F.count(F.lit(1)).alias("n"),
-    )
-
-
-def q_w4_rank_dense(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """rank vs dense_rank with real ties (price bucketed to 10k)."""
-    o = _t(spark, sf_dir, "orders")
-    w = Window.partitionBy("o_orderpriority").orderBy(
-        F.floor(F.col("o_totalprice") / 10000).desc()
-    )
-    return o.select(
-        "o_orderkey",
-        "o_orderpriority",
-        F.rank().over(w).cast("long").alias("rnk"),
-        F.dense_rank().over(w).cast("long").alias("drnk"),
-    ).where(F.col("rnk") <= 20)
-
-
 def q_skew_salted_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-phase salted aggregation (operators/skew.py). The oracle is
     the PLAIN aggregation — salting must be answer-invisible."""
@@ -1189,27 +657,6 @@ def q_skew_salted_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         16,
         F.col("l_orderkey"),
         "l_quantity",
-    )
-
-
-def q_a7_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """approx_count_distinct (HLL++). The estimate itself is
-    engine-specific, so the checkable output is the exact count plus a
-    boolean asserting the HLL estimate landed within 5% relative error
-    (rsd=0.01, so 5% is a ~5-sigma bound) — the oracle computes the
-    exact count and expects within_tol = true."""
-    agg = _t(spark, sf_dir, "lineitem").groupBy("l_returnflag").agg(
-        F.approx_count_distinct("l_orderkey", 0.01).alias("approx"),
-        F.count_distinct("l_orderkey").alias("exact_orders"),
-    )
-    return agg.select(
-        "l_returnflag",
-        "exact_orders",
-        (
-            F.abs(F.col("approx") - F.col("exact_orders"))
-            / F.col("exact_orders")
-            < 0.05
-        ).alias("within_tol"),
     )
 
 
@@ -1272,52 +719,9 @@ def q_a13_hll_sketch_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return per_type.unionByName(total)
 
 
-def q_status_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The reference's status record (pipeline.get_status shape) on the
-    star schema: multi-distinct counts + timestamp presence flag."""
-    return (
-        _t(spark, sf_dir, "lineitem")
-        .groupBy()
-        .agg(
-            F.count_distinct("l_orderkey").alias("coordinates_num"),
-            F.count_distinct("l_orderkey", "l_linenumber").alias("mutations_num"),
-            F.count_distinct("l_suppkey").alias("samples_num"),
-        )
-        .withColumn(
-            "has_update_date",
-            F.current_timestamp().cast("string").isNotNull(),
-        )
-    )
-
-
 # =====================================================================
 # Sort / limit / set ops / window functions (SURVEY §2.6)
 # =====================================================================
-
-def q_sort_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """orderBy + limit with an id tiebreak (deterministic top-k)."""
-    return (
-        _t(spark, sf_dir, "orders")
-        .orderBy(F.col("o_totalprice").desc(), F.col("o_orderkey"))
-        .limit(100)
-        .select("o_orderkey", "o_totalprice")
-    )
-
-
-def q_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """union / intersect / except (all distinct variants)."""
-    cust = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders")
-    building = cust.where("c_mktsegment = 'BUILDING'").select("c_custkey")
-    auto = cust.where("c_mktsegment = 'AUTOMOBILE'").select("c_custkey")
-    big = (
-        orders.where("o_totalprice > 200000")
-        .select(F.col("o_custkey").alias("c_custkey"))
-    )
-    return building.union(auto).distinct().intersect(big.distinct()).exceptAll(
-        cust.where("c_acctbal < 0").select("c_custkey")
-    )
-
 
 def q_w1_window_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """row_number top-3 orders per market segment."""
@@ -1333,24 +737,6 @@ def q_w1_window_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         joined.withColumn("rnk", F.row_number().over(w).cast("long"))
         .where(F.col("rnk") <= 3)
         .select("c_mktsegment", "rnk", "o_orderkey", "o_totalprice")
-    )
-
-
-def q_w5_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Value-based window frame (RANGE BETWEEN): per order, how many
-    same-priority orders price within the trailing 1000-dollar band.
-    Range frames include all value-ties, so the count is deterministic
-    under any sort order."""
-    o = _t(spark, sf_dir, "orders")
-    w = (
-        Window.partitionBy("o_orderpriority")
-        .orderBy("o_totalprice")
-        .rangeBetween(-1000, 0)
-    )
-    return o.select(
-        "o_orderkey",
-        "o_orderpriority",
-        F.count(F.lit(1)).over(w).alias("n_near"),
     )
 
 
@@ -2320,49 +1706,6 @@ def q_pipeline_corpus_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_obs_quality_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Single-pass data-quality metrics via ``DataFrame.observe``: the
-    row count, rounded quantity sum, null count, and key range are
-    collected as OBSERVED METRICS on the write action itself — the
-    production pattern for quality gates on a 100 TB ingest, where a
-    separate validation aggregate would mean a second full scan. The
-    observation rides the noop write's single pass; the returned
-    one-row frame is rebuilt from the metrics (driver-side, but
-    metrics-row-sized — O(1), not O(data)). Oracle = the same
-    aggregates as plain SQL."""
-    import uuid
-
-    from pyspark.sql import Observation
-
-    li = _t(spark, sf_dir, "lineitem")
-    # unique name: observations are single-use; the entry must be
-    # re-invocable in one session (verify probes call twice)
-    obs = Observation(f"quality_{uuid.uuid4().hex}")
-    observed = li.observe(
-        obs,
-        F.count(F.lit(1)).alias("n_rows"),
-        F.sum("l_quantity").alias("sum_qty"),
-        F.count(F.when(F.col("l_quantity").isNull(), 1)).alias("n_null_qty"),
-        F.min("l_orderkey").alias("min_key"),
-        F.max("l_orderkey").alias("max_key"),
-    )
-    observed.write.format("noop").mode("overwrite").save()
-    m = obs.get
-    return spark.createDataFrame(
-        [
-            (
-                int(m["n_rows"]),
-                round(float(m["sum_qty"]), 2),
-                int(m["n_null_qty"]),
-                int(m["min_key"]),
-                int(m["max_key"]),
-            )
-        ],
-        "n_rows LONG, sum_qty DOUBLE, n_null_qty LONG, "
-        "min_key LONG, max_key LONG",
-    )
-
-
 def q_sample_mixture_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token-budget mixture planner: per-source keep-fractions hitting
     a 50/30/10 target mix over three sources, capped at 1.0 with the
@@ -2922,32 +2265,6 @@ def q_multimodal_image_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_dups"),
             F.min("asset_id").alias("keep_id"),
         )
-    )
-
-
-def q_a20_bitmap_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact distinct counting via bitmap aggregates (Spark 4
-    bitmap_bucket_number / bitmap_bit_position / bitmap_construct_agg
-    / bitmap_count) — the two-level pattern that replaces a global
-    count_distinct shuffle-of-keys with fixed-size bitmap partials:
-    keys hash to (bucket, bit), per-(group, bucket) bitmaps build
-    map-side, and the final count is a sum of popcounts. At 100 TB
-    the partial state per group×bucket is a constant 4 KB bitmap
-    regardless of key cardinality — exact, unlike HLL (a7), and
-    mergeable, unlike count_distinct. The oracle is the semantic
-    equivalent COUNT(DISTINCT)."""
-    li = _t(spark, sf_dir, "lineitem")
-    per_bucket = (
-        li.select(
-            "l_linestatus",
-            F.bitmap_bucket_number(F.col("l_partkey")).alias("_bkt"),
-            F.bitmap_bit_position(F.col("l_partkey")).alias("_pos"),
-        )
-        .groupBy("l_linestatus", "_bkt")
-        .agg(F.bitmap_construct_agg(F.col("_pos")).alias("_bm"))
-    )
-    return per_bucket.groupBy("l_linestatus").agg(
-        F.sum(F.bitmap_count(F.col("_bm"))).alias("n_distinct_parts")
     )
 
 
@@ -4897,26 +4214,6 @@ def q_text_script_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     return TX.script_profile(cases).drop("text")
 
 
-def q_orc_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ORC SINK + READ-BACK (r15): the remaining built-in columnar
-    format (parquet/csv/json/text already land) — documents project
-    → zlib-compressed ORC write → read-back → per-(source, lang)
-    rollup, proving type fidelity through the ORC writer/reader pair
-    the same way S9 proves parquet. Fresh unique tempdir per call
-    (re-invocable)."""
-    out = _tmpdir("orc")
-    docs = _t(spark, sf_dir, "documents").select(
-        "doc_id", "source", "lang", F.length("text").alias("n_chars")
-    )
-    docs.write.mode("overwrite").option("compression", "zlib").orc(out)
-    back = spark.read.orc(out)
-    return back.groupBy("source", "lang").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum("n_chars").alias("sum_chars"),
-        F.min("doc_id").alias("min_doc"),
-    )
-
-
 def q_sitemap_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SITEMAP.XML (r15 — operators.cdx.parse_sitemap): the
     sitemaps.org crawl-frontier source, and the XML leg of the
@@ -6257,32 +5554,6 @@ def q_pipeline_corpus_card(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_sql_variables_params(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spark 4 SQL-scripting surface in one entry: a session variable
-    (DECLARE OR REPLACE + SET VARIABLE — re-invocable by design), the
-    IDENTIFIER() clause resolving a parameterized table name, and a
-    named query parameter via ``spark.sql(..., args=...)`` — the
-    templated-SQL toolkit that replaces string interpolation (and its
-    injection risks) in production jobs. The oracle is the fully
-    resolved query; parameterization must not change semantics."""
-    _t(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
-    spark.sql(
-        "DECLARE OR REPLACE VARIABLE min_qty DOUBLE DEFAULT 30.0"
-    )
-    spark.sql("SET VARIABLE min_qty = 40.0")
-    return spark.sql(
-        """
-        SELECT l_returnflag,
-               count(*) AS n_items,
-               round(SUM(l_quantity), 2) AS sum_qty
-        FROM IDENTIFIER(:tbl)
-        WHERE l_quantity >= min_qty AND l_linestatus = :status
-        GROUP BY l_returnflag
-        """,
-        args={"tbl": "lineitem", "status": "F"},
-    )
-
-
 def q_obs_drift_ks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact two-sample KS statistic (operators/profile.ks_statistic)
     on the document length distribution, English vs non-English — the
@@ -6360,8 +5631,7 @@ def q_multimodal_decode_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # =====================================================================
-# Round-3 extensions: upsert, sampling, percentiles, IVF, binary
-# source, grouping sets, unpivot, collection functions
+# Round-3 extensions: upsert, sampling, IVF
 # =====================================================================
 
 def q_lake_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6425,89 +5695,6 @@ def q_rollup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_s19_xml_source(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """S-family: XML source (built-in as of Spark 4) with rowTag
-    record delineation and an explicit schema — the config-file /
-    feed-manifest ingestion path. Fixture is the 5-row region dim
-    serialized to XML; the oracle reads the same dim from parquet."""
-    rows = sorted(
-        _t(spark, sf_dir, "region").collect(), key=lambda r: r.r_regionkey
-    )  # 5-row dim: fixture generation only, not a data path
-    path = os.path.join(_tmpdir("s19"), "region.xml")
-    with open(path, "w") as f:
-        f.write("<regions>\n")
-        for r in rows:
-            f.write(
-                f"  <region><key>{r.r_regionkey}</key>"
-                f"<name>{r.r_name}</name></region>\n"
-            )
-        f.write("</regions>\n")
-    schema = T.StructType(
-        [
-            T.StructField("key", T.LongType()),
-            T.StructField("name", T.StringType()),
-        ]
-    )
-    df = (
-        spark.read.format("xml")
-        .option("rowTag", "region")
-        .schema(schema)
-        .load(path)
-    )
-    return df.select(
-        F.col("key").cast("int").alias("r_regionkey"),
-        F.col("name").alias("r_name"),
-    )
-
-
-_SQL_LATERAL = """
-    SELECT n.n_name, c.c_custkey, c.c_acctbal
-    FROM nation n, LATERAL (
-      SELECT c_custkey, round(c_acctbal, 2) AS c_acctbal
-      FROM customer WHERE c_nationkey = n.n_nationkey
-      ORDER BY round(c_acctbal, 2) DESC, c_custkey LIMIT 2
-    ) c
-"""
-
-
-def q_sql_lateral_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Correlated LATERAL subquery (Spark 4 SQL surface): per-nation
-    top-2 customers by balance. Catalyst decorrelates the LATERAL
-    LIMIT into a per-key window — the same plan the DataFrame top-k
-    gets — so the SQL spelling costs nothing extra at scale.
-    Deterministic cut: rounded balance + custkey tiebreak; identical
-    text is the oracle."""
-    for t in ("nation", "customer"):
-        _t(spark, sf_dir, t).createOrReplaceTempView(t)
-    return spark.sql(_SQL_LATERAL)
-
-
-_SQL_RECURSIVE = """
-    WITH RECURSIVE reach(node, depth) AS (
-      SELECT CAST(1 AS BIGINT) AS node, 0 AS depth
-      UNION ALL
-      SELECT e.dst, r.depth + 1
-      FROM reach r JOIN (
-        SELECT s_suppkey AS src, s_suppkey * 2 AS dst FROM supplier
-      ) e ON e.src = r.node
-      WHERE r.depth < 20
-    )
-    SELECT node, depth FROM reach
-"""
-
-
-def q_sql_recursive_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recursive CTE (Spark 4.1 SQL surface): BFS reachability over a
-    deterministic edge set (k → 2k) — each iteration is one
-    distributed join against the frontier, the driver only
-    coordinates the fixpoint. The depth guard bounds runaway
-    recursion, the habit that matters on a graph whose diameter you
-    don't know. The non-SQL sibling is dedup_clusters'
-    alternating-star contraction; identical text is the oracle."""
-    _t(spark, sf_dir, "supplier").createOrReplaceTempView("supplier")
-    return spark.sql(_SQL_RECURSIVE)
-
-
 def q_p7_hash_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic hash sampling — the distributed, reproducible
     alternative to RNG-based ``df.sample`` (same rows on every engine,
@@ -6521,28 +5708,6 @@ def q_p7_hash_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return li.where(portable_hash32(key, 7) % 20 == 0).select(
         "l_orderkey", "l_linenumber", "l_quantity"
-    )
-
-
-def q_a9_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact interpolated percentiles (p25/p50/p75) per group, plus a
-    tolerance boolean proving the t-digest approximation
-    (percentile_approx) lands within 1 unit of the exact median."""
-    li = _t(spark, sf_dir, "lineitem")
-    agg = li.groupBy("l_linestatus").agg(
-        F.round(F.percentile("l_quantity", F.lit(0.25)), 4).alias("p25"),
-        F.round(F.percentile("l_quantity", F.lit(0.5)), 4).alias("p50"),
-        F.round(F.percentile("l_quantity", F.lit(0.75)), 4).alias("p75"),
-        F.percentile_approx("l_quantity", F.lit(0.5), F.lit(10000)).alias(
-            "_approx"
-        ),
-    )
-    return agg.select(
-        "l_linestatus",
-        "p25",
-        "p50",
-        "p75",
-        (F.abs(F.col("_approx") - F.col("p50")) <= 1).alias("approx_ok"),
     )
 
 
@@ -6604,136 +5769,6 @@ def q_sim_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_s14_binaryfile_source(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """binaryFile source — the multimodal ingestion path: opaque asset
-    bytes as a binary column with typed metadata (path, length),
-    reduced to scalar lineage columns (id from the file name, byte
-    length, content md5)."""
-    def _write(out: str) -> None:
-        rows = (
-            _t(spark, sf_dir, "documents")
-            .where("doc_id < 50")
-            .select("doc_id", "text")
-            .collect()
-        )  # 50-row fixture generation only, not a data path
-        for r in rows:
-            with open(os.path.join(out, f"doc_{r.doc_id}.bin"), "wb") as f:
-                f.write(r.text.encode("utf-8"))
-
-    out = _memo_fixture("s14", sf_dir, _write)
-    bf = spark.read.format("binaryFile").load(out)
-    return bf.select(
-        F.regexp_extract(F.col("path"), r"doc_(\d+)\.bin", 1)
-        .cast("long")
-        .alias("doc_id"),
-        F.col("length"),
-        F.md5(F.col("content")).alias("content_md5"),
-    )
-
-
-def q_a10_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Explicit GROUPING SETS with grouping() null-vs-group markers —
-    the generalization of rollup/cube (a5/a6)."""
-    _t(spark, sf_dir, "orders").createOrReplaceTempView("gs_orders")
-    return spark.sql(
-        """
-        SELECT o_orderstatus, o_orderpriority, count(*) AS n,
-               CAST(grouping(o_orderstatus) AS INT) AS g_status,
-               CAST(grouping(o_orderpriority) AS INT) AS g_prio
-        FROM gs_orders
-        GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority), ())
-        """
-    )
-
-
-def q_f4_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """unpivot/melt: wide measure columns to (key, measure, value)
-    rows — the inverse of events_pivot."""
-    p = _t(spark, sf_dir, "part").select(
-        "p_partkey",
-        F.col("p_size").cast("double").alias("p_size"),
-        F.col("p_retailprice").cast("double").alias("p_retailprice"),
-    )
-    return p.unpivot(
-        ids=["p_partkey"],
-        values=["p_size", "p_retailprice"],
-        variableColumnName="measure",
-        valueColumnName="val",
-    )
-
-
-def q_j8_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Full outer join: customers with/without orders, order rows
-    with/without a (filtered) customer — both null sides exercised."""
-    cust = _t(spark, sf_dir, "customer").where("c_acctbal > 9000").select(
-        "c_custkey", "c_mktsegment"
-    )
-    ords = (
-        _t(spark, sf_dir, "orders")
-        .where("o_totalprice > 300000")
-        .groupBy("o_custkey")
-        .agg(F.count(F.lit(1)).alias("n_big_orders"))
-    )
-    joined = cust.join(ords, cust.c_custkey == ords.o_custkey, "full_outer")
-    return joined.select(
-        F.coalesce(F.col("c_custkey"), F.col("o_custkey")).alias("custkey"),
-        F.coalesce(F.col("c_mktsegment"), F.lit("NONE")).alias("seg"),
-        F.coalesce(F.col("n_big_orders"), F.lit(0)).cast("long").alias(
-            "n_big_orders"
-        ),
-    )
-
-
-def q_w6_ntile_pct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distribution window functions: ntile, percent_rank, cume_dist
-    over a deterministic ordering (price bucket + key tiebreak)."""
-    o = _t(spark, sf_dir, "orders")
-    w = Window.partitionBy("o_orderpriority").orderBy(
-        F.floor(F.col("o_totalprice") / 1000).asc(), F.col("o_orderkey").asc()
-    )
-    return o.select(
-        "o_orderkey",
-        "o_orderpriority",
-        F.ntile(4).over(w).cast("int").alias("quartile"),
-        F.round(F.percent_rank().over(w), 4).alias("pct_rank"),
-        F.round(F.cume_dist().over(w), 4).alias("cume"),
-    )
-
-
-def q_w7_value_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Value window functions: first/last/nth over a running frame with
-    deterministic ordering."""
-    o = _t(spark, sf_dir, "orders")
-    w = (
-        Window.partitionBy("o_custkey")
-        .orderBy(F.col("o_orderkey").asc())
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    return o.select(
-        "o_orderkey",
-        "o_custkey",
-        F.first("o_orderkey").over(w).alias("first_key"),
-        F.last("o_orderkey").over(w).alias("last_key"),
-        F.nth_value("o_orderkey", 2).over(w).alias("second_key"),
-    )
-
-
-def q_a12_conditional_aggs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Conditional/boolean aggregate breadth: count_if, bool_and/or,
-    distinct sum, filtered average."""
-    li = _t(spark, sf_dir, "lineitem")
-    return li.groupBy("l_linestatus").agg(
-        F.count_if(F.col("l_discount") > 0.05).alias("n_discounted"),
-        F.bool_and(F.col("l_quantity") > 0).alias("all_positive"),
-        F.bool_or(F.col("l_quantity") > 49).alias("any_large"),
-        F.sum_distinct(F.col("l_quantity")).alias("sum_distinct_qty"),
-        F.round(
-            F.avg(F.when(F.col("l_discount") > 0.05, F.col("l_quantity"))), 4
-        ).alias("avg_discounted_qty"),
-        F.count(F.lit(1)).alias("n"),
-    )
-
-
 def q_text_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus tf-idf: top-3 terms per document (operators/text.
     tfidf_top_terms) — one explode, df derived from the tf aggregate,
@@ -6787,21 +5822,6 @@ def q_dedup_levenshtein(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
     pairs = D.jaccard_pairs(docs, n=3).where(F.col("jaccard") >= 0.1)
     return D.levenshtein_pairs(docs, pairs)
-
-
-def q_a11_corr_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bivariate statistics per group: Pearson correlation and sample/
-    population covariance (quantity vs price)."""
-    return _t(spark, sf_dir, "lineitem").groupBy("l_returnflag").agg(
-        F.round(F.corr("l_quantity", "l_extendedprice"), 4).alias("qp_corr"),
-        F.round(F.covar_samp("l_quantity", "l_extendedprice"), 2).alias(
-            "qp_covar"
-        ),
-        F.round(F.covar_pop("l_quantity", "l_extendedprice"), 2).alias(
-            "qp_covar_pop"
-        ),
-        F.count(F.lit(1)).alias("n"),
-    )
 
 
 def q_events_gap_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6967,132 +5987,6 @@ def q_events_pattern_match(spark: SparkSession, sf_dir: str) -> DataFrame:
             "purchase": "P",
             "error": "E",
         },
-    )
-
-
-def q_f3_collection_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Collection-function breadth: split, size, array_distinct,
-    array_sort, array_join, array_contains, element_at (positive and
-    negative indices)."""
-    n = _t(spark, sf_dir, "nation")
-    parts = F.split(F.col("n_name"), "A")
-    return n.select(
-        "n_nationkey",
-        F.size(parts).alias("n_parts"),
-        F.array_join(F.array_sort(F.array_distinct(parts)), "|").alias(
-            "distinct_parts"
-        ),
-        F.array_contains(parts, "").alias("has_empty"),
-        F.element_at(parts, 1).alias("first_part"),
-        F.element_at(parts, -1).alias("last_part"),
-    )
-
-
-# =====================================================================
-# Generators + scalar-function breadth (SURVEY §2.5/§2.6 extensions)
-# =====================================================================
-
-def q_x1_explode_unnest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Generate operator: nest → posexplode round-trip. The position
-    index over the sorted array is deterministic (= rank within the
-    group), so it oracles as a window rank."""
-    nested = (
-        _t(spark, sf_dir, "lineitem")
-        .groupBy("l_orderkey")
-        .agg(F.sort_array(F.collect_set("l_linenumber")).alias("lns"))
-    )
-    exploded = nested.select(
-        "l_orderkey", F.posexplode("lns").alias("idx", "l_linenumber")
-    )
-    # long idx: matches the BIGINT the oracle's row_number-1 produces
-    return exploded.withColumn("idx", F.col("idx").cast("long"))
-
-
-def q_f5_try_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ANSI-era safe-failure functions (Spark 4 runs ANSI ON by
-    default, where 1/0 and bad casts THROW): ``try_divide`` nulls the
-    division-by-zero row, ``try_cast`` nulls unparseable casts,
-    ``try_element_at`` nulls out-of-bounds access — per-row nulls
-    instead of a dead 100 TB job three hours in. Oracle spells the
-    same semantics with CASE / TRY_CAST / list bounds."""
-    n = _t(spark, sf_dir, "nation")
-    name = F.col("n_name")
-    return n.select(
-        "n_nationkey",
-        F.round(
-            F.try_divide(F.lit(10.0), F.col("n_nationkey") - 3), 4
-        ).alias("tdiv"),
-        F.substring(name, 8, 2).try_cast("int").alias("tcast"),
-        F.try_element_at(F.split(name, "_"), F.lit(2)).alias("tsecond"),
-    )
-
-
-def q_x2_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Set operators: customers with BOTH finished and open orders
-    (``intersect`` — distinct semantics) and finished-only customers
-    (``subtract`` — EXCEPT DISTINCT), tagged and unioned. Catalyst
-    plans both as keyed aggregates/joins on o_custkey — one shuffle
-    each, no materialized distinct lists."""
-    ords = _t(spark, sf_dir, "orders")
-    f = ords.where("o_orderstatus = 'F'").select("o_custkey")
-    o_ = ords.where("o_orderstatus = 'O'").select("o_custkey")
-    both = f.intersect(o_).select(
-        F.lit("both").alias("tag"), "o_custkey"
-    )
-    f_only = f.subtract(o_).select(
-        F.lit("f_only").alias("tag"), "o_custkey"
-    )
-    return both.unionByName(f_only)
-
-
-def q_x3_union_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Schema-evolution union: two snapshot versions of the part dim
-    with different column sets combined via ``unionByName(
-    allowMissingColumns=True)`` — absent columns null-fill, the
-    ingestion shape when upstream adds fields between snapshots
-    (the in-plan counterpart to the s15 mergeSchema lake read)."""
-    part = _t(spark, sf_dir, "part")
-    v1 = part.select("p_partkey", "p_name")
-    v2 = part.select("p_partkey", "p_brand", "p_retailprice")
-    return v1.unionByName(v2, allowMissingColumns=True)
-
-
-def q_f1_string_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Scalar string-function breadth beyond p2: regexp_replace, lpad,
-    reverse, lower, substring, replace, length, concat_ws, instr."""
-    n = _t(spark, sf_dir, "nation")
-    name = F.col("n_name")
-    return n.select(
-        "n_nationkey",
-        F.regexp_replace(name, "[AEIOU]", "_").alias("devoweled"),
-        F.lpad(F.col("n_nationkey").cast("string"), 4, "0").alias("padded"),
-        F.reverse(name).alias("reversed"),
-        F.lower(name).alias("lowered"),
-        F.substring(name, 2, 3).alias("mid3"),
-        F.replace(name, F.lit("AN"), F.lit("**")).alias("replaced"),
-        F.length(name).alias("name_len"),
-        F.concat_ws("-", name, F.col("n_nationkey").cast("string")).alias(
-            "tagged"
-        ),
-        F.instr(name, "A").alias("first_a"),
-    )
-
-
-def q_f2_datetime_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Datetime scalar functions on TIMESTAMP_NTZ (timezone-free in
-    both engines): year/quarter/month/day, normalized day-of-week,
-    month truncation."""
-    o = _t(spark, sf_dir, "orders")
-    d = F.col("o_orderdate")
-    return o.select(
-        "o_orderkey",
-        F.year(d).alias("y"),
-        F.quarter(d).alias("q"),
-        F.month(d).alias("m"),
-        F.dayofmonth(d).alias("dom"),
-        (F.dayofweek(d) - 1).alias("dow"),  # normalize to 0=Sunday
-        # cast to date: DuckDB's date_trunc('month') yields DATE
-        F.date_trunc("month", d).cast("date").alias("month_start"),
     )
 
 
@@ -7987,143 +6881,6 @@ def q_text_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_Q18 = """
-    SELECT c.c_custkey, c.c_name, o.o_orderkey,
-           round(o.o_totalprice, 2) AS total_price,
-           round(SUM(l.l_quantity), 2) AS total_qty
-    FROM customer c
-    JOIN orders o ON c.c_custkey = o.o_custkey
-    JOIN lineitem l ON o.o_orderkey = l.l_orderkey
-    WHERE o.o_orderkey IN (
-      SELECT l_orderkey FROM lineitem
-      GROUP BY l_orderkey HAVING SUM(l_quantity) > 150
-    )
-    GROUP BY c.c_custkey, c.c_name, o.o_orderkey, o.o_totalprice
-    ORDER BY total_price DESC, o.o_orderkey
-    LIMIT 100
-"""
-
-# Spark-side single-pass formulation (r16): one per-order quantity
-# aggregate serves both the HAVING filter and the output sum; the
-# oracle keeps the literal IN-(grouped-HAVING) SQL above, so the
-# equivalence is genuinely cross-checked.
-_SQL_Q18_SPARK = """
-    WITH qty AS (
-      SELECT l_orderkey, SUM(l_quantity) AS sum_qty
-      FROM lineitem GROUP BY l_orderkey
-    )
-    SELECT c.c_custkey, c.c_name, o.o_orderkey,
-           round(o.o_totalprice, 2) AS total_price,
-           round(q.sum_qty, 2) AS total_qty
-    FROM customer c
-    JOIN orders o ON c.c_custkey = o.o_custkey
-    JOIN qty q ON o.o_orderkey = q.l_orderkey
-    WHERE q.sum_qty > 150
-    ORDER BY total_price DESC, o.o_orderkey
-    LIMIT 100
-"""
-
-
-def q_sql_tpch_q18(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q18 (large-volume customers). r16: the classic
-    IN-(grouped-HAVING) formulation aggregated lineitem TWICE (the
-    decorrelated semi-join side and the output SUM — two full
-    lineitem scans in the plan); since ``o_orderkey`` is unique in
-    orders and each order has one customer, the per-
-    (custkey, name, orderkey, totalprice) groups ARE the per-order
-    groups, so ONE per-order quantity aggregate serves both the
-    HAVING filter and the output sum. l_quantity is whole-numbered,
-    so the sum is exact in doubles and reassociation cannot change
-    it; the DuckDB oracle keeps the literal IN-subquery SQL and the
-    results are row-identical. Deterministic top-100 via rounded
-    price + orderkey."""
-    for t in ("customer", "orders", "lineitem"):
-        _t(spark, sf_dir, t).createOrReplaceTempView(t)
-    return spark.sql(_SQL_Q18_SPARK)
-
-
-_SQL_EXISTS_LATE = """
-    SELECT o.o_orderpriority, count(*) AS n_orders
-    FROM orders o
-    WHERE EXISTS (
-      SELECT 1 FROM lineitem l
-      WHERE l.l_orderkey = o.o_orderkey
-        AND l.l_shipdate >= o.o_orderdate + INTERVAL 60 DAY
-    )
-    GROUP BY o.o_orderpriority
-"""
-
-
-def q_sql_exists_late(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q4-shaped correlated EXISTS (adapted to this star
-    schema's columns: a lineitem shipped ≥60 days after the order
-    date): decorrelates to one equi semi-join on the order key —
-    the correlated predicate never executes per-row."""
-    for t in ("orders", "lineitem"):
-        _t(spark, sf_dir, t).createOrReplaceTempView(t)
-    return spark.sql(_SQL_EXISTS_LATE)
-
-
-# Above-average test in EXACT integer arithmetic: cents·n > Σcents
-# (both BIGINT) instead of a float avg threshold — the boolean cannot
-# flip on engine summation order, unlike `acctbal > avg(acctbal)`.
-_SQL_SCALAR_ANTI = """
-    SELECT n.n_name, count(*) AS n_cust,
-           round(SUM(c.c_acctbal), 2) AS total_bal
-    FROM customer c
-    JOIN nation n ON c.c_nationkey = n.n_nationkey
-    WHERE CAST(round(c.c_acctbal * 100) AS BIGINT) * (
-            SELECT count(*) FROM customer WHERE c_acctbal > 0
-          ) > (
-            SELECT SUM(CAST(round(c_acctbal * 100) AS BIGINT))
-            FROM customer WHERE c_acctbal > 0
-          )
-      AND NOT EXISTS (
-            SELECT 1 FROM orders o
-            WHERE o.o_custkey = c.c_custkey
-              AND o.o_orderpriority = '1-URGENT'
-          )
-    GROUP BY n.n_name
-"""
-
-# Spark-side formulation (r16): the positive-balance count and cents
-# sum come from ONE 1-row aggregate cross-joined in, not two scalar
-# subqueries each rescanning customer; the oracle keeps the literal
-# two-subquery SQL above, so the equivalence is cross-checked.
-_SQL_SCALAR_ANTI_SPARK = """
-    SELECT n.n_name, count(*) AS n_cust,
-           round(SUM(c.c_acctbal), 2) AS total_bal
-    FROM customer c
-    JOIN nation n ON c.c_nationkey = n.n_nationkey
-    CROSS JOIN (
-      SELECT count(*) AS n_pos,
-             SUM(CAST(round(c_acctbal * 100) AS BIGINT)) AS cents_pos
-      FROM customer WHERE c_acctbal > 0
-    ) s
-    WHERE CAST(round(c.c_acctbal * 100) AS BIGINT) * s.n_pos > s.cents_pos
-      AND NOT EXISTS (
-            SELECT 1 FROM orders o
-            WHERE o.o_custkey = c.c_custkey
-              AND o.o_orderpriority = '1-URGENT'
-          )
-    GROUP BY n.n_name
-"""
-
-
-def q_sql_scalar_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q22-shaped: customers with above-average balance and no
-    urgent orders, per nation — the positive-balance count and cents
-    sum come from ONE 1-row aggregate broadcast-cross-joined in (r16:
-    the two separate scalar subqueries each scanned customer again —
-    3 customer scans in the plan, now 2) + NOT EXISTS with a filter
-    (planned as a left-anti equi join over the pre-filtered orders
-    side). The above-average comparison is exact-integer (see
-    _SQL_SCALAR_ANTI note) so the selected set is engine-independent."""
-    for t in ("customer", "nation", "orders"):
-        _t(spark, sf_dir, t).createOrReplaceTempView(t)
-    return spark.sql(_SQL_SCALAR_ANTI_SPARK)
-
-
 def q_j9_nullsafe_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J9: null-safe equality join (``eqNullSafe`` / SQL
     ``IS NOT DISTINCT FROM``): NULL keys match each other instead of
@@ -8174,35 +6931,6 @@ def q_scd2_point_in_time(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Ratio of independently-rounded sums: both engines round each SUM to
-# cents-exact 2 decimals BEFORE dividing, so the quotient's inputs are
-# bit-identical — the unrounded sum/sum ratio could flip the 4th
-# decimal on engine summation order.
-_SQL_Q14 = """
-    SELECT round(
-             100.0 * round(SUM(CASE WHEN p.p_type = 'PROMO'
-               THEN l.l_extendedprice * (1 - l.l_discount)
-               ELSE 0.0 END), 2)
-             / round(SUM(l.l_extendedprice * (1 - l.l_discount)), 2),
-             4) AS promo_revenue_pct,
-           count(*) AS n_lineitems
-    FROM lineitem l
-    JOIN part p ON l.l_partkey = p.p_partkey
-    WHERE l.l_shipdate >= TIMESTAMP '1995-09-01'
-      AND l.l_shipdate < TIMESTAMP '1995-10-01'
-"""
-
-
-def q_sql_tpch_q14(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q14 (promotion effect): conditional-aggregate ratio over
-    a lineitem⋈part join — part broadcasts, the month filter pushes
-    to the lineitem scan, and the single global aggregate is map-side
-    partial."""
-    for t in ("lineitem", "part"):
-        _t(spark, sf_dir, t).createOrReplaceTempView(t)
-    return spark.sql(_SQL_Q14)
-
-
 # 2024-01-20T00:00:00Z — splits the 30-day event log into a standing
 # prefix and an incremental batch for the SCD2 maintenance entry
 _SCD2_SPLIT_US = 1_705_708_800 * 1_000_000
@@ -8251,33 +6979,6 @@ def q_events_dwell(spark: SparkSession, sf_dir: str) -> DataFrame:
     type, interval count, total and integer-mean dwell µs — one
     lead-window per user, one small aggregate."""
     return E.dwell_times(_events(spark, sf_dir))
-
-
-def q_f6_ordered_aggs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """F6: ordered/positional aggregates — ``max_by``/``min_by`` (on a
-    deterministic composite rank: price-cents ⊕ orderkey, so ties
-    cannot make the winner engine-dependent) and exact ``median``.
-    The 10^10 multiplier keeps the rank price-monotone and
-    collision-free while o_orderkey < 10^10 — TPC-H orderkeys reach
-    6e9 at SF 1000, so the composite survives every supported scale
-    (10^7 would collide from SF≈2)."""
-    o = _t(spark, sf_dir, "orders")
-    rank = (
-        F.round(F.col("o_totalprice") * 100).cast("long")
-        * 10_000_000_000
-        + F.col("o_orderkey")
-    )
-    return (
-        o.select("o_orderpriority", "o_orderkey", "o_totalprice",
-                 rank.alias("_rank"))
-        .groupBy("o_orderpriority")
-        .agg(
-            F.max_by("o_orderkey", F.col("_rank")).alias("dearest_key"),
-            F.min_by("o_orderkey", F.col("_rank")).alias("cheapest_key"),
-            F.round(F.median("o_totalprice"), 2).alias("median_price"),
-            F.count(F.lit(1)).alias("n"),
-        )
-    )
 
 
 def q_split_leakage_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -8358,90 +7059,6 @@ def q_text_dsir_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_s20_csv_quoted_multiline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """S20: CSV with embedded quotes, commas, AND newlines inside
-    quoted fields — the roundtrip that breaks naive line-split
-    readers. Spark writes RFC-4180 quoting; the read-back needs
-    ``multiLine`` (which trades per-line splittability for
-    correctness — at 100 TB, store such data as parquet and keep
-    multiLine CSV for ingest edges only, which is exactly this
-    lane). Oracle recomputes the derived field from the dim."""
-    out = _tmpdir("s20")
-    nation = _t(spark, sf_dir, "nation")
-    derived = nation.select(
-        "n_nationkey",
-        F.concat(
-            F.col("n_name"), F.lit(', "x"\nsecond line')
-        ).alias("note"),
-    )
-    derived.write.mode("overwrite").option("header", True).csv(out)
-    schema = T.StructType(
-        [
-            T.StructField("n_nationkey", T.IntegerType()),
-            T.StructField("note", T.StringType()),
-        ]
-    )
-    return (
-        spark.read.option("header", True)
-        .option("multiLine", True)
-        .schema(schema)
-        .csv(out)
-    )
-
-
-def q_s21_json_nested_flatten(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """S21: nested-JSON source with an explicit struct schema,
-    flattened to columns — the semi-structured ingest lane (schema
-    DECLARED, not inferred: at 100 TB an inference pass is a full
-    extra scan, and drifting inputs must fail loud, not re-shape the
-    table). Oracle is the flat projection of the same dim."""
-    out = _tmpdir("s21")
-    orders = _t(spark, sf_dir, "orders")
-    nested = orders.select(
-        F.col("o_orderkey").alias("k"),
-        F.struct(
-            F.col("o_custkey").alias("id"),
-            F.col("o_orderstatus").alias("status"),
-        ).alias("cust"),
-    )
-    nested.write.mode("overwrite").json(out)
-    schema = T.StructType(
-        [
-            T.StructField("k", T.LongType()),
-            T.StructField(
-                "cust",
-                T.StructType(
-                    [
-                        T.StructField("id", T.LongType()),
-                        T.StructField("status", T.StringType()),
-                    ]
-                ),
-            ),
-        ]
-    )
-    return (
-        spark.read.schema(schema)
-        .json(out)
-        .select(
-            "k",
-            F.col("cust.id").alias("cust_id"),
-            F.col("cust.status").alias("cust_status"),
-        )
-    )
-
-
-def q_a14_grouped_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A14: exact grouped percentiles (linear-interpolated — Spark
-    ``percentile`` ≡ DuckDB ``quantile_cont``) — the per-segment
-    latency/price-distribution rollup."""
-    o = _t(spark, sf_dir, "orders")
-    return o.groupBy("o_orderpriority").agg(
-        F.round(F.percentile("o_totalprice", 0.5), 2).alias("p50"),
-        F.round(F.percentile("o_totalprice", 0.9), 2).alias("p90"),
-        F.count(F.lit(1)).alias("n"),
-    )
-
-
 def q_events_asof_cogroup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cogrouped-pandas as-of join (operators/events.
     asof_join_cogroup): pandas ``merge_asof`` per user key over
@@ -8474,52 +7091,6 @@ def q_w8_time_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_f7_parse_kv(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """F7: key-value string parsing via ``str_to_map`` +
-    ``element_at`` — the config/telemetry-string decoder (the map is
-    intermediate only; output stays flat for the driver). The oracle
-    inverts the roundtrip algebraically (parse(render(x)) = x), so
-    DuckDB needs no str_to_map equivalent."""
-    docs = _t(spark, sf_dir, "documents")
-    kv = F.concat(
-        F.lit("lang="), F.col("lang"),
-        F.lit(";src="), F.col("source"),
-    )
-    m = F.str_to_map(kv, F.lit(";"), F.lit("="))
-    return docs.select(
-        "doc_id",
-        F.element_at(m, "lang").alias("lang_parsed"),
-        F.element_at(m, "src").alias("src_parsed"),
-    )
-
-
-def q_f8_sql_pandas_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """F8: the SQL-registered VECTORIZED UDF surface —
-    ``spark.udf.register`` over a ``pandas_udf`` makes the function
-    callable from SQL text while staying Arrow-batched (the
-    migration path for UDF-heavy workloads: register the vectorized
-    form, keep the SQL). The function itself (price→integer cents)
-    is deliberately trivial so the entry pins the SURFACE, not the
-    math; production rule stays 'built-ins first' (SCALE.md)."""
-    from pyspark.sql.functions import pandas_udf
-
-    # call form, not decorator: under `from __future__ import
-    # annotations` the pd.Series hints become unresolvable strings
-    to_cents = pandas_udf(
-        lambda p: (p * 100).round().astype("int64"), "long"
-    )
-    spark.udf.register("to_cents", to_cents)
-    _t(spark, sf_dir, "orders").createOrReplaceTempView("orders")
-    return spark.sql(
-        """
-        SELECT o_orderpriority,
-               CAST(sum(to_cents(o_totalprice)) AS BIGINT) AS cents,
-               count(*) AS n
-        FROM orders GROUP BY o_orderpriority
-        """
-    )
-
-
 def q_lake_upsert_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Conditional merge (operators/upsert.merge_upsert_latest): an
     update wins only if strictly NEWER — late/re-delivered snapshots
@@ -8547,151 +7118,6 @@ def q_lake_upsert_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_a15_decimal_money(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A15: exact DECIMAL money arithmetic — the surface users
-    migrate with when they don't adopt the integer-cents convention.
-    Sums of DECIMAL(18,2) are exact and order-independent on any
-    engine; the exact value is EMITTED as its canonical string
-    rendering because engines spell the decimal dtype itself
-    differently ('decimal(18,2)' vs 'DECIMAL(18,2)') and the
-    driver's schema compare is textual."""
-    o = _t(spark, sf_dir, "orders")
-    d = F.col("o_totalprice").cast("decimal(18,2)")
-    return (
-        o.select("o_orderstatus", d.alias("d"))
-        .groupBy("o_orderstatus")
-        .agg(
-            F.sum("d").cast("decimal(18,2)").cast("string")
-            .alias("total"),
-            F.count(F.lit(1)).alias("n"),
-        )
-    )
-
-
-def q_x4_explode_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X4: null-preserving generator (``explode_outer``) — rows whose
-    array is empty survive with a NULL element instead of vanishing,
-    the variant every fan-out that must not drop parents needs."""
-    nation = _t(spark, sf_dir, "nation")
-    arr = F.when(
-        F.col("n_nationkey") % 5 == 0,
-        F.array().cast("array<int>"),
-    ).otherwise(
-        F.array(
-            F.col("n_nationkey") * 10, F.col("n_nationkey") * 10 + 1
-        )
-    )
-    return nation.select(
-        "n_nationkey", F.explode_outer(arr).alias("_v")
-    ).select("n_nationkey", F.col("_v").cast("long").alias("v"))
-
-
-def q_a16_yoy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A16: year-over-year comparison via a value-based self-join on
-    the month key (ym − 100), not a rows-based lag(12) — correct
-    even with missing months, and the joined side is the tiny
-    monthly aggregate (broadcast)."""
-    o = _t(spark, sf_dir, "orders")
-    ym = (
-        F.year("o_orderdate") * 100 + F.month("o_orderdate")
-    ).cast("long")
-    m = o.groupBy(ym.alias("ym")).agg(
-        F.round(F.sum("o_totalprice"), 2).alias("rev")
-    )
-    prev = m.select(
-        (F.col("ym") + 100).alias("ym"),
-        F.col("rev").alias("rev_prev_year"),
-    )
-    return m.join(F.broadcast(prev), "ym", "left").select(
-        "ym",
-        "rev",
-        "rev_prev_year",
-        F.round(
-            F.col("rev") - F.col("rev_prev_year"), 2
-        ).alias("yoy_delta"),
-    )
-
-
-def q_f9_pandas_api(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """F9: the pandas-on-Spark surface (``pyspark.pandas``) — the
-    lift-and-shift lane for pandas codebases: read_parquet →
-    groupby-agg → reset_index, converted back to a Spark frame. It
-    compiles to the SAME Catalyst plan as the DataFrame API (one
-    partial-agg'd shuffle), so pandas syntax costs nothing at scale
-    — the caveat a migrating user needs is ordering-sensitive ops
-    (head/iloc without sort) and the default-index generation, both
-    avoided here."""
-    import warnings
-
-    import pyspark.pandas as ps
-
-    with warnings.catch_warnings():
-        warnings.simplefilter("ignore")
-        pdf = ps.read_parquet(os.path.join(sf_dir, "orders.parquet"))
-        out = (
-            pdf.groupby("o_orderstatus")
-            .agg(n=("o_orderkey", "count"), total=("o_totalprice", "sum"))
-            .reset_index()
-        )
-        sdf = out.to_spark()
-    return sdf.select(
-        "o_orderstatus", "n", F.round(F.col("total"), 2).alias("total")
-    )
-
-
-_SQL_PIVOT = """
-    SELECT * FROM (
-      SELECT o_orderstatus, o_orderpriority FROM orders
-    )
-    PIVOT (
-      count(*) AS n
-      FOR o_orderpriority IN (
-        '1-URGENT' AS urgent, '2-HIGH' AS high, '3-MEDIUM' AS medium,
-        '4-NOT SPECIFIED' AS unspecified, '5-LOW' AS low
-      )
-    )
-"""
-
-
-def q_sql_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SQL-text PIVOT clause (not the DataFrame API): explicit value
-    list with aliases — the declared-domain rule again (no extra
-    distinct-values job at scale). The oracle states the equivalent
-    conditional aggregation, since PIVOT syntax is engine-specific."""
-    _t(spark, sf_dir, "orders").createOrReplaceTempView("orders")
-    out = spark.sql(_SQL_PIVOT)
-    # Spark's count-pivot yields NULL for empty cells; report 0
-    return out.na.fill(
-        0, [c for c in out.columns if c != "o_orderstatus"]
-    )
-
-
-def q_x5_set_ops_all(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X5: multiset set operators — INTERSECT ALL / EXCEPT ALL keep
-    MULTIPLICITY (min / difference of per-row counts), unlike the
-    distinct variants in ``set_ops``. Derived frames plant rows with
-    counts >1 on both sides so the multiset semantics are actually
-    exercised."""
-    li = _t(spark, sf_dir, "lineitem")
-    a = li.where(F.col("l_orderkey") % 3 == 0).select(
-        (F.col("l_orderkey") % 50).alias("k")
-    )
-    b = li.where(F.col("l_orderkey") % 2 == 0).select(
-        (F.col("l_orderkey") % 50).alias("k")
-    )
-    inter = a.intersectAll(b).groupBy("k").agg(
-        F.count(F.lit(1)).alias("n_inter")
-    )
-    exc = a.exceptAll(b).groupBy("k").agg(
-        F.count(F.lit(1)).alias("n_except")
-    )
-    return inter.join(exc, "k", "full_outer").select(
-        "k",
-        F.coalesce(F.col("n_inter"), F.lit(0)).alias("n_inter"),
-        F.coalesce(F.col("n_except"), F.lit(0)).alias("n_except"),
-    )
-
-
 def q_stream_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sliding windows under readStream (streaming.run_sliding_stream):
     overlapping 1h windows sliding by 30min, count + sum — the
@@ -8700,43 +7126,6 @@ def q_stream_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     from geniepool_etl_spark.streaming import run_sliding_stream
 
     return run_sliding_stream(spark, sf_dir, name=f"sl_{next(_uniq)}")
-
-
-def q_a17_equidepth(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A17: equi-depth (quartile) histogram WITHOUT a global sort —
-    ntile's single-partition trap at scale. Exact interpolated
-    quartile boundaries come from one 1-row aggregate (broadcast
-    back); bucket assignment is a narrow integer-cents comparison
-    sum; counts aggregate on 4 keys. Boundaries round to integer
-    cents so the comparisons are engine-exact."""
-    o = _t(spark, sf_dir, "orders")
-    cents = F.round(F.col("o_totalprice") * 100).cast("long")
-    stats = o.agg(
-        *[
-            F.round(F.percentile(cents, q)).cast("long").alias(f"q{i}")
-            for i, q in ((1, 0.25), (2, 0.5), (3, 0.75))
-        ]
-    )
-    c = F.col("_c")
-    bucket = (
-        (c > F.col("q1")).cast("int")
-        + (c > F.col("q2")).cast("int")
-        + (c > F.col("q3")).cast("int")
-    ).cast("long")
-    return (
-        o.select(cents.alias("_c"))
-        .crossJoin(F.broadcast(stats))
-        .select(
-            bucket.alias("bucket"),
-            c,
-        )
-        .groupBy("bucket")
-        .agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.min("_c").alias("min_cents"),
-            F.max("_c").alias("max_cents"),
-        )
-    )
 
 
 def q_text_bigram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -8755,65 +7144,6 @@ def q_text_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     the hapax-pair pathology."""
     return TX.pmi_collocations(
         _t(spark, sf_dir, "documents"), k=20, min_count=3
-    )
-
-
-def q_lake_file_census(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Lake file-layout census through the ``_metadata`` hidden
-    column: write a partitioned lake with a bounded
-    ``maxRecordsPerFile``, read it back, and report per-partition
-    file counts and per-file row extremes — the small-files /
-    compaction-planning diagnostic, computed from the scan itself
-    (no filesystem listing pass). The writer's split rule (roll a new
-    file every K records, remainder last) makes the expected census a
-    pure function of the partition counts, which is what the oracle
-    computes."""
-    out = tempfile.mkdtemp(prefix="gp_census_")
-    _t(spark, sf_dir, "orders").repartition("o_orderstatus").write.mode(
-        "overwrite"
-    ).option("maxRecordsPerFile", 7000).partitionBy(
-        "o_orderstatus"
-    ).parquet(out)
-    lake = spark.read.parquet(out)
-    per_file = lake.groupBy(
-        "o_orderstatus",
-        F.col("_metadata.file_path").alias("_f"),
-    ).agg(F.count(F.lit(1)).alias("_rows"))
-    return per_file.groupBy("o_orderstatus").agg(
-        F.count(F.lit(1)).alias("n_files"),
-        F.sum("_rows").alias("n_rows"),
-        F.min("_rows").alias("min_file_rows"),
-        F.max("_rows").alias("max_file_rows"),
-    )
-
-
-def q_text_url_domains(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-domain corpus rollup through real URL parsing
-    (``parse_url`` HOST / PATH / QUERY-param forms — the JVM
-    built-in, not a regex UDF): the web-curation operation behind
-    domain mixing and per-site quality policies. URLs are
-    deterministically constructed from (source, doc_id, lang) so the
-    oracle can verify every parsed component against the generative
-    rule — the parser is the system under test."""
-    docs = _t(spark, sf_dir, "documents")
-    url = F.concat(
-        F.lit("https://"),
-        F.col("source"),
-        F.lit(".example.com/docs/"),
-        F.col("doc_id").cast("string"),
-        F.lit("?lang="),
-        F.col("lang"),
-    )
-    parsed = docs.select(
-        F.parse_url(url, F.lit("HOST")).alias("host"),
-        F.parse_url(url, F.lit("PATH")).alias("path"),
-        F.parse_url(url, F.lit("QUERY"), F.lit("lang")).alias("url_lang"),
-    )
-    return parsed.groupBy("host").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.count_distinct("path").alias("n_paths"),
-        F.count_distinct("url_lang").alias("n_langs"),
-        F.min("path").alias("min_path"),
     )
 
 
@@ -9438,100 +7768,6 @@ def q_pipeline_user_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     return E.user_feature_table(_events(spark, sf_dir))
 
 
-_SQL_Q7 = """
-    SELECT supp_nation, cust_nation, l_year,
-           round(SUM(volume), 2) AS revenue
-    FROM (
-      SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
-             CAST(year(l.l_shipdate) AS BIGINT) AS l_year,
-             l.l_extendedprice * (1 - l.l_discount) AS volume
-      FROM supplier s
-      JOIN lineitem l ON s.s_suppkey = l.l_suppkey
-      JOIN orders o ON o.o_orderkey = l.l_orderkey
-      JOIN customer c ON c.c_custkey = o.o_custkey
-      JOIN nation n1 ON s.s_nationkey = n1.n_nationkey
-      JOIN nation n2 ON c.c_nationkey = n2.n_nationkey
-      WHERE ((n1.n_name = 'NATION_1' AND n2.n_name = 'NATION_2')
-          OR (n1.n_name = 'NATION_2' AND n2.n_name = 'NATION_1'))
-        AND l.l_shipdate BETWEEN TIMESTAMP '1995-01-01'
-                             AND TIMESTAMP '1996-12-31'
-    ) shipping
-    GROUP BY supp_nation, cust_nation, l_year
-"""
-
-
-def q_sql_tpch_q7(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q7 (volume shipping): six-table join with a DISJUNCTIVE
-    cross-nation pair predicate — the filter prunes both nation dims
-    to 2 rows each before they broadcast, and the year() extraction
-    groups three ways. Nation names follow the synthetic dim."""
-    for t in ("supplier", "lineitem", "orders", "customer", "nation"):
-        _t(spark, sf_dir, t).createOrReplaceTempView(t)
-    return spark.sql(_SQL_Q7)
-
-
-# Q14's round-before-divide rule again: the market-share quotient's
-# numerator and denominator are independently rounded sums
-_SQL_Q8 = """
-    SELECT o_year,
-           round(round(SUM(CASE WHEN nation = 'NATION_3'
-                                THEN volume ELSE 0.0 END), 2)
-                 / round(SUM(volume), 2), 4) AS mkt_share
-    FROM (
-      SELECT CAST(year(o.o_orderdate) AS BIGINT) AS o_year,
-             l.l_extendedprice * (1 - l.l_discount) AS volume,
-             n2.n_name AS nation
-      FROM part p
-      JOIN lineitem l ON p.p_partkey = l.l_partkey
-      JOIN supplier s ON s.s_suppkey = l.l_suppkey
-      JOIN orders o ON o.o_orderkey = l.l_orderkey
-      JOIN customer c ON c.c_custkey = o.o_custkey
-      JOIN nation n1 ON c.c_nationkey = n1.n_nationkey
-      JOIN region r ON n1.n_regionkey = r.r_regionkey
-      JOIN nation n2 ON s.s_nationkey = n2.n_nationkey
-      WHERE r.r_name = 'ASIA' AND p.p_type = 'PROMO'
-        AND o.o_orderdate BETWEEN TIMESTAMP '1995-01-01'
-                              AND TIMESTAMP '1996-12-31'
-    ) all_nations
-    GROUP BY o_year
-"""
-
-
-def q_sql_tpch_q8(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q8 (national market share): the eight-table join —
-    every dim broadcasts, lineitem shuffles once for the year
-    aggregate; the share is a conditional-over-total ratio of
-    independently rounded sums."""
-    for t in (
-        "part", "lineitem", "supplier", "orders", "customer",
-        "nation", "region",
-    ):
-        _t(spark, sf_dir, t).createOrReplaceTempView(t)
-    return spark.sql(_SQL_Q8)
-
-
-_SQL_Q13 = """
-    SELECT c_count, count(*) AS custdist
-    FROM (
-      SELECT c.c_custkey, count(o.o_orderkey) AS c_count
-      FROM customer c
-      LEFT JOIN orders o ON c.c_custkey = o.o_custkey
-      GROUP BY c.c_custkey
-    ) c_orders
-    GROUP BY c_count
-"""
-
-
-def q_sql_tpch_q13(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q13 (customer order distribution): the double
-    aggregation — per-customer order counts (left join keeps
-    zero-order customers, count(col) skips their NULLs) re-grouped
-    into a count histogram."""
-    for t in ("customer", "orders"):
-        _t(spark, sf_dir, t).createOrReplaceTempView(t)
-    return spark.sql(_SQL_Q13)
-
-
 # ---- TPC-H tail, round 7: the remaining distinctive plan shapes,
 # adapted to this star schema (no partsupp / commitdate / shipmode /
 # container columns — each docstring names the substitution). The
@@ -9711,147 +7947,6 @@ def q_sql_tpch_q15(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_Q16 = """
-    SELECT p.p_brand, p.p_type, p.p_size,
-           count(DISTINCT l.l_suppkey) AS supplier_cnt
-    FROM part p
-    JOIN lineitem l ON p.p_partkey = l.l_partkey
-    WHERE p.p_brand <> 'Brand#1'
-      AND p.p_type NOT LIKE 'PROMO%'
-      AND p.p_size IN (1, 4, 9, 16, 25, 36, 49)
-      AND l.l_suppkey NOT IN (
-        SELECT s_suppkey FROM supplier WHERE s_acctbal < 0
-      )
-    GROUP BY p.p_brand, p.p_type, p.p_size
-"""
-
-
-def q_sql_tpch_q16(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q16-shaped (supplier count per part attribute; the
-    supplier relation comes through lineitem since this schema has no
-    partsupp, and the excluded-supplier complaint filter is adapted
-    to negative ``s_acctbal``): NOT IN → null-aware anti join against
-    a tiny broadcast set, negated brand/LIKE/IN pushdown filters, and
-    a grouped COUNT DISTINCT over three part attributes."""
-    for t in ("part", "lineitem", "supplier"):
-        _t(spark, sf_dir, t).createOrReplaceTempView(t)
-    return spark.sql(_SQL_Q16)
-
-
-_SQL_Q17 = """
-    SELECT round(CAST(SUM(CAST(round(l.l_extendedprice * 100)
-                              AS BIGINT)) AS DOUBLE)
-                 / 700.0, 2) AS avg_yearly
-    FROM lineitem l
-    JOIN part p ON p.p_partkey = l.l_partkey
-    WHERE p.p_brand = 'Brand#3'
-      AND p.p_type = 'SMALL'
-      AND l.l_quantity < (
-        SELECT 0.2 * avg(l_quantity)
-        FROM lineitem WHERE l_partkey = p.p_partkey
-      )
-"""
-
-
-# Spark-side formulation (r16): the correlated avg decorrelated into
-# a per-part aggregate over the UNFILTERED lineitem (a second full
-# pass); the subquery correlates only on the part key, so an avg
-# window over the (filtered-part ⋈ lineitem) frame sees the identical
-# row set per surviving part. Quantities are integer-valued doubles —
-# the window's sum/count are exact, so 0.2·avg is bit-identical to
-# the subquery's. The oracle keeps the literal correlated SQL above.
-_SQL_Q17_SPARK = """
-    SELECT round(CAST(SUM(cents) AS DOUBLE) / 700.0, 2) AS avg_yearly
-    FROM (
-      SELECT CAST(round(l.l_extendedprice * 100) AS BIGINT) AS cents,
-             l.l_quantity,
-             avg(l.l_quantity)
-               OVER (PARTITION BY l.l_partkey) AS avg_qty
-      FROM lineitem l
-      JOIN part p ON p.p_partkey = l.l_partkey
-      WHERE p.p_brand = 'Brand#3'
-        AND p.p_type = 'SMALL'
-    )
-    WHERE l_quantity < 0.2 * avg_qty
-"""
-
-
-def q_sql_tpch_q17(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q17 (small-quantity-order revenue; brand/container
-    filter adapted to this schema's brand/type): the correlated
-    scalar aggregate — each lineitem compares against ITS part's
-    average quantity. r16: the decorrelated form aggregated the
-    UNFILTERED lineitem in a second full pass; the correlation is on
-    the part key alone, so an avg window over the already-filtered
-    join frame computes the identical threshold (quantities are
-    integer-valued doubles — exact sum/count, bit-identical 0.2·avg)
-    — one lineitem pass instead of two, cross-checked against the
-    oracle's literal correlated SQL. Revenue accumulates as exact
-    per-row cents (the one-row money-total rule Q9/Q11/Q15/Q19
-    follow); the single division by 700 happens once on the exact
-    integer."""
-    for t in ("lineitem", "part"):
-        _t(spark, sf_dir, t).createOrReplaceTempView(t)
-    return spark.sql(_SQL_Q17_SPARK)
-
-
-_SQL_Q19 = """
-    SELECT CAST(SUM(CAST(round(l.l_extendedprice * (1 - l.l_discount)
-                               * 100) AS BIGINT)) AS BIGINT)
-             AS revenue_cents,
-           count(*) AS n_items
-    FROM lineitem l
-    JOIN part p ON p.p_partkey = l.l_partkey
-    WHERE (p.p_brand = 'Brand#1' AND p.p_size BETWEEN 1 AND 15
-           AND l.l_quantity BETWEEN 1 AND 11)
-       OR (p.p_brand = 'Brand#2' AND p.p_size BETWEEN 1 AND 25
-           AND l.l_quantity BETWEEN 10 AND 20)
-       OR (p.p_brand = 'Brand#3' AND p.p_size BETWEEN 1 AND 35
-           AND l.l_quantity BETWEEN 20 AND 30)
-"""
-
-
-def q_sql_tpch_q19(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q19 (discounted revenue under disjunctive multi-range
-    predicates; the container/shipmode legs are adapted to
-    brand/size/quantity ranges): the classic OR-of-ANDs that an
-    optimizer must split into a residual join filter plus pushable
-    per-side bounds (brand IN {...}, size ≤ 35, quantity ≤ 30).
-    One-row output in exact cents."""
-    for t in ("lineitem", "part"):
-        _t(spark, sf_dir, t).createOrReplaceTempView(t)
-    return spark.sql(_SQL_Q19)
-
-
-_SQL_Q20 = """
-    SELECT s.s_suppkey, s.s_name
-    FROM supplier s
-    WHERE s.s_suppkey IN (
-      SELECT l.l_suppkey
-      FROM lineitem l
-      WHERE l.l_partkey IN (
-          SELECT p_partkey FROM part WHERE p_type = 'PROMO'
-        )
-        AND l.l_shipdate >= TIMESTAMP '1996-01-01'
-        AND l.l_shipdate < TIMESTAMP '1997-01-01'
-      GROUP BY l.l_suppkey
-      HAVING SUM(l.l_quantity) > 100
-    )
-"""
-
-
-def q_sql_tpch_q20(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q20-shaped (suppliers with excess stock of a part class;
-    the partsupp availability test is adapted to shipped-quantity
-    volume): the nested-IN chain — part class → that year's lineitem
-    → qualifying suppliers — planned as two stacked semi joins with
-    the HAVING aggregate between them. Quantity sums are
-    integer-valued doubles (exact compare)."""
-    for t in ("supplier", "lineitem", "part"):
-        _t(spark, sf_dir, t).createOrReplaceTempView(t)
-    return spark.sql(_SQL_Q20)
-
-
 _SQL_Q21 = """
     SELECT s.s_name, count(*) AS numwait
     FROM supplier s
@@ -9947,94 +8042,6 @@ def q_sql_tpch_q21(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("s_name")
         .agg(F.sum("_late_rows").cast("long").alias("numwait"))
     )
-
-
-_SQL_Q12 = """
-    SELECT l.l_returnflag,
-           CAST(SUM(CASE WHEN o.o_orderpriority IN
-                              ('1-URGENT', '2-HIGH')
-                         THEN 1 ELSE 0 END) AS BIGINT)
-             AS high_line_count,
-           CAST(SUM(CASE WHEN o.o_orderpriority NOT IN
-                              ('1-URGENT', '2-HIGH')
-                         THEN 1 ELSE 0 END) AS BIGINT)
-             AS low_line_count
-    FROM orders o
-    JOIN lineitem l ON o.o_orderkey = l.l_orderkey
-    WHERE l.l_returnflag IN ('A', 'R')
-      AND l.l_shipdate >= TIMESTAMP '1997-01-01'
-      AND l.l_shipdate < TIMESTAMP '1998-01-01'
-    GROUP BY l.l_returnflag
-"""
-
-
-def q_sql_tpch_q12(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q12-shaped (shipping-class priority split; the
-    shipmode/receipt-window legs are adapted to returnflag classes
-    over a shipdate year): the conditional-aggregation pattern —
-    one fact/dim join, the IN + date-range filters pushed to the
-    lineitem scan, and both priority counters computed in a single
-    grouped pass (never two joins). With this entry every one of the
-    22 TPC-H query SHAPES has a contract entry (Q1=a4_pricing_summary,
-    Q4=sql_exists_late, Q22=sql_scalar_anti, the rest explicit)."""
-    for t in ("orders", "lineitem"):
-        _t(spark, sf_dir, t).createOrReplaceTempView(t)
-    return spark.sql(_SQL_Q12)
-
-
-_SQL_Q2_CORR_MIN = """
-    SELECT DISTINCT p.p_partkey, p.p_name, s.s_suppkey,
-           round(s.s_acctbal, 2) AS s_acctbal
-    FROM part p
-    JOIN lineitem l ON l.l_partkey = p.p_partkey
-    JOIN supplier s ON s.s_suppkey = l.l_suppkey
-    WHERE p.p_type = 'LARGE' AND p.p_size < 6
-      AND s.s_acctbal = (
-        SELECT min(s2.s_acctbal)
-        FROM lineitem l2
-        JOIN supplier s2 ON s2.s_suppkey = l2.l_suppkey
-        WHERE l2.l_partkey = p.p_partkey
-      )
-"""
-
-# Spark-side formulation (r16): min window over the joined frame —
-# the subquery correlates only on the part key, so the window
-# partition holds the identical row set; the oracle keeps the
-# literal correlated-MIN SQL above, so the equivalence is
-# cross-checked.
-_SQL_Q2_SPARK = """
-    SELECT DISTINCT p_partkey, p_name, s_suppkey,
-           round(s_acctbal, 2) AS s_acctbal
-    FROM (
-      SELECT p.p_partkey, p.p_name, s.s_suppkey, s.s_acctbal,
-             min(s.s_acctbal)
-               OVER (PARTITION BY p.p_partkey) AS min_bal
-      FROM part p
-      JOIN lineitem l ON l.l_partkey = p.p_partkey
-      JOIN supplier s ON s.s_suppkey = l.l_suppkey
-      WHERE p.p_type = 'LARGE' AND p.p_size < 6
-    )
-    WHERE s_acctbal = min_bal
-"""
-
-
-def q_sql_tpch_q2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q2-shaped (minimum-cost supplier per part; the
-    min-supplycost correlated subquery is adapted to min supplier
-    acctbal over the part's shippers, through lineitem instead of the
-    absent partsupp). r16: the correlated-MIN subquery rescanned
-    lineitem+supplier for the per-part aggregate that was joined
-    back; the subquery correlates ONLY on the part key, so the
-    (filtered-part ⋈ lineitem ⋈ supplier) frame already holds every
-    row of each surviving part and a min window over it computes the
-    identical per-part minimum — one pass over each table instead of
-    two. The equality compares stored doubles (no arithmetic), ties
-    keep every minimal supplier, DISTINCT collapses repeat
-    shipments; the DuckDB oracle keeps the literal correlated
-    subquery and the results are row-identical."""
-    for t in ("part", "lineitem", "supplier"):
-        _t(spark, sf_dir, t).createOrReplaceTempView(t)
-    return spark.sql(_SQL_Q2_SPARK)
 
 
 # Deterministic HTML wrapper for the strip_html lane: real tag soup
@@ -10456,23 +8463,6 @@ _EVENT_US = (
 
 def _oracles() -> dict[str, str]:
     o: dict[str, str] = {}
-    o["s1_s3_text_csv_scan"] = "SELECT r_regionkey, r_name FROM region"
-    o["s4_csv_header_roundtrip"] = "SELECT * FROM nation"
-    o["s5_csv_noheader_roundtrip"] = "SELECT * FROM supplier"
-    o["s6_parquet_explicit_schema"] = (
-        "SELECT c_custkey, c_name, CAST(NULL AS VARCHAR) AS c_phone FROM customer"
-    )
-    o["s7_parquet_inferred"] = "SELECT p_partkey, p_name FROM part"
-    o["s8_input_file_name"] = (
-        "SELECT r_regionkey, 'region.parquet' AS src_file FROM region"
-    )
-    o["s9_partitioned_write_roundtrip"] = """
-        SELECT l_returnflag, count(*) AS n, sum(l_quantity) AS sum_qty
-        FROM lineitem GROUP BY l_returnflag
-    """
-    o["s10_json_sink_roundtrip"] = """
-        SELECT o_orderstatus, count(*) AS n FROM orders GROUP BY o_orderstatus
-    """
     o["s11_lake_range_read"] = """
         SELECT concat('chr', CAST(o_orderkey % 5 AS VARCHAR)) AS chrom,
                CAST(o_orderkey * 37 AS BIGINT) AS pos,
@@ -10481,7 +8471,6 @@ def _oracles() -> dict[str, str]:
         FROM orders
         WHERE o_orderkey % 5 = 2 AND o_orderkey * 37 BETWEEN 50000 AND 1200000
     """
-    o["s13_csv_dropmalformed"] = "SELECT * FROM nation"
     o["snap_time_travel"] = """
         WITH c AS (
           SELECT o_orderstatus AS s,
@@ -10626,113 +8615,10 @@ def _oracles() -> dict[str, str]:
           PARTITION BY user_id
           ORDER BY {_EVENT_US} DESC, event_id DESC) = 1
     """
-    o["sql_tpch_q3"] = _SQL_Q3
-    o["sql_tpch_q5"] = _SQL_Q5
-    o["sql_tpch_q6"] = _SQL_Q6
-    o["sql_tpch_q10"] = _SQL_Q10
-    o["s15_schema_evolution"] = """
-        SELECT n_nationkey, n_name, CAST(NULL AS INTEGER) AS n_regionkey
-        FROM nation
-        UNION ALL
-        SELECT n_nationkey, n_name, n_regionkey FROM nation
-    """
-    o["w5_range_frame"] = """
-        SELECT o_orderkey, o_orderpriority,
-               count(*) OVER (PARTITION BY o_orderpriority
-                              ORDER BY o_totalprice
-                              RANGE BETWEEN 1000 PRECEDING AND CURRENT ROW)
-                 AS n_near
-        FROM orders
-    """
-    o["s12_orc_roundtrip"] = """
-        SELECT p_brand, count(*) AS n,
-               CAST(sum(p_size) AS BIGINT) AS sum_size
-        FROM part GROUP BY p_brand
-    """
-    o["p1_rename"] = (
-        "SELECT c_custkey AS cust_id, c_nationkey AS nation_id, c_mktsegment "
-        "FROM customer"
-    )
-    o["p2_derive"] = """
-        SELECT p_partkey,
-               concat('B#', upper(p_brand)) AS brand_tag,
-               split_part(p_type, ' ', 1) AS type_head,
-               split_part(p_type, ' ', 1) AS type_first,
-               CAST(floor(p_retailprice / 100) AS BIGINT) AS price_bucket,
-               CASE WHEN p_size >= 25 THEN 'large' ELSE 'small' END AS size_class,
-               'pad' AS trimmed
-        FROM part
-    """
-    o["p3_drop"] = (
-        "SELECT l_orderkey, l_partkey, l_suppkey, l_linenumber FROM lineitem"
-    )
-    o["p4_select_reorder"] = (
-        "SELECT n_name, n_nationkey, n_regionkey FROM nation"
-    )
-    o["p5_sql_predicate"] = """
-        SELECT o_orderkey, o_totalprice FROM orders
-        WHERE o_totalprice > 150000 AND o_orderstatus = 'O'
-    """
-    o["p6_dropdup_subset"] = "SELECT DISTINCT l_orderkey FROM lineitem"
-    o["j1_multikey_left_join"] = """
-        WITH dim AS (
-          SELECT l_orderkey, l_linenumber, l_returnflag, l_linestatus,
-                 max(l_discount) AS max_disc
-          FROM lineitem GROUP BY 1, 2, 3, 4
-        )
-        SELECT l.l_orderkey, l.l_linenumber, l.l_returnflag, l.l_linestatus,
-               d.max_disc
-        FROM lineitem l
-        LEFT JOIN dim d USING (l_orderkey, l_linenumber, l_returnflag, l_linestatus)
-    """
-    o["j2_left_join_nulls"] = """
-        SELECT coalesce(c.c_mktsegment, 'NONE') AS seg, count(*) AS n
-        FROM orders o
-        LEFT JOIN (SELECT * FROM customer WHERE c_acctbal > 5000) c
-          ON o.o_custkey = c.c_custkey
-        GROUP BY 1
-    """
     o["j3_broadcast_join_agg"] = """
         SELECT p_brand, count(*) AS n, round(sum(l_extendedprice), 2) AS revenue
         FROM lineitem JOIN part ON l_partkey = p_partkey
         GROUP BY p_brand
-    """
-    o["j4_case_pick_join"] = """
-        SELECT l_orderkey, l_linenumber,
-               round(CASE
-                 WHEN l_returnflag = 'R' AND l_linestatus = 'F'
-                   THEN CAST(p_size AS DOUBLE)
-                 WHEN l_returnflag = 'A' AND l_linestatus = 'F' THEN p_retailprice
-                 WHEN l_returnflag = 'N' AND l_linestatus = 'O' THEN l_quantity
-                 WHEN l_returnflag = 'N' AND l_linestatus = 'F' THEN l_discount
-                 ELSE NULL END, 4) AS score
-        FROM lineitem LEFT JOIN part ON l_partkey = p_partkey
-    """
-    o["j5_semi_join"] = """
-        SELECT c_custkey FROM customer
-        WHERE EXISTS (SELECT 1 FROM orders
-                      WHERE o_custkey = c_custkey AND o_totalprice > 250000)
-    """
-    o["j6_anti_join"] = """
-        SELECT c_custkey, c_mktsegment FROM customer
-        WHERE NOT EXISTS (SELECT 1 FROM orders
-                          WHERE o_custkey = c_custkey
-                            AND o_totalprice > 250000)
-    """
-    o["j7_range_join"] = """
-        SELECT b.label, count(*) AS n, round(avg(p_retailprice), 4) AS avg_price
-        FROM part p
-        LEFT JOIN (VALUES (0, 10, 'small'), (11, 25, 'medium'),
-                          (26, 50, 'large')) b(lo, hi, label)
-          ON p.p_size >= b.lo AND p.p_size <= b.hi
-        GROUP BY b.label
-    """
-    o["a1_collect_set_nest"] = """
-        SELECT l_orderkey,
-               array_to_string(list_sort(list(DISTINCT l_linenumber)), ',')
-                 AS line_numbers,
-               count(*) AS n_lines
-        FROM lineitem GROUP BY l_orderkey
     """
     o["a2_two_level_nest"] = """
         WITH lvl1 AS (
@@ -10743,12 +8629,6 @@ def _oracles() -> dict[str, str]:
                CAST(sum(coalesce(n_items, 0)) AS BIGINT) AS total_items
         FROM orders LEFT JOIN lvl1 ON o_orderkey = l_orderkey
         GROUP BY o_custkey
-    """
-    o["a3_multi_count_distinct"] = """
-        SELECT count(DISTINCT l_orderkey) AS orders_num,
-               count(DISTINCT (l_orderkey, l_linenumber)) AS lines_num,
-               count(DISTINCT l_suppkey) AS suppliers_num
-        FROM lineitem
     """
     o["a4_pricing_summary"] = """
         SELECT l_returnflag, l_linestatus,
@@ -10762,24 +8642,6 @@ def _oracles() -> dict[str, str]:
         WHERE l_shipdate <= TIMESTAMP '1999-12-31'
         GROUP BY l_returnflag, l_linestatus
     """
-    o["a5_rollup"] = """
-        SELECT r_name, n_name, count(*) AS n_cust,
-               round(sum(c_acctbal), 2) AS sum_bal
-        FROM customer
-        JOIN nation ON c_nationkey = n_nationkey
-        JOIN region ON n_regionkey = r_regionkey
-        GROUP BY ROLLUP (r_name, n_name)
-    """
-    o["a6_cube"] = """
-        SELECT o_orderstatus, o_orderpriority, count(*) AS n
-        FROM orders GROUP BY CUBE (o_orderstatus, o_orderpriority)
-    """
-    o["a7_approx_distinct"] = """
-        SELECT l_returnflag,
-               count(DISTINCT l_orderkey) AS exact_orders,
-               true AS within_tol
-        FROM lineitem GROUP BY l_returnflag
-    """
     o["a13_hll_sketch_rollup"] = """
         SELECT event_type,
                count(DISTINCT user_id) AS exact_users,
@@ -10791,50 +8653,10 @@ def _oracles() -> dict[str, str]:
                true AS within_tol
         FROM events
     """
-    o["status_summary"] = """
-        SELECT count(DISTINCT l_orderkey) AS coordinates_num,
-               count(DISTINCT (l_orderkey, l_linenumber)) AS mutations_num,
-               count(DISTINCT l_suppkey) AS samples_num,
-               true AS has_update_date
-        FROM lineitem
-    """
     o["skew_salted_agg"] = """
         SELECT l_returnflag, l_linestatus, count(*) AS n,
                round(sum(l_quantity), 2) AS sum_l_quantity
         FROM lineitem GROUP BY l_returnflag, l_linestatus
-    """
-    o["a8_stats_aggs"] = """
-        SELECT l_returnflag,
-               min(l_quantity) AS min_qty,
-               max(l_quantity) AS max_qty,
-               median(l_quantity) AS med_qty,
-               round(stddev_samp(l_quantity), 4) AS sd_qty,
-               count(*) AS n
-        FROM lineitem GROUP BY l_returnflag
-    """
-    o["w4_rank_dense"] = """
-        SELECT o_orderkey, o_orderpriority,
-               rank() OVER w AS rnk,
-               dense_rank() OVER w AS drnk
-        FROM orders
-        WINDOW w AS (PARTITION BY o_orderpriority
-                     ORDER BY CAST(floor(o_totalprice / 10000) AS BIGINT) DESC)
-        QUALIFY rnk <= 20
-    """
-    o["sort_topk"] = """
-        SELECT o_orderkey, o_totalprice FROM orders
-        ORDER BY o_totalprice DESC, o_orderkey LIMIT 100
-    """
-    o["set_ops"] = """
-        SELECT c_custkey FROM (
-          SELECT c_custkey FROM customer WHERE c_mktsegment = 'BUILDING'
-          UNION
-          SELECT c_custkey FROM customer WHERE c_mktsegment = 'AUTOMOBILE'
-        )
-        INTERSECT
-        SELECT DISTINCT o_custkey FROM orders WHERE o_totalprice > 200000
-        EXCEPT ALL
-        SELECT c_custkey FROM customer WHERE c_acctbal < 0
     """
     o["w1_window_topk"] = """
         SELECT c_mktsegment,
@@ -11211,14 +9033,6 @@ GROUP BY tb.j_bucket
                CAST(n_regionkey AS INT) AS n_regionkey
         FROM nation
     """
-    o["s16_csv_permissive_corrupt"] = """
-        SELECT CAST(n_nationkey AS INT) AS n_nationkey, n_name,
-               CAST(n_regionkey AS INT) AS n_regionkey,
-               FALSE AS is_corrupt
-        FROM nation
-        UNION ALL SELECT NULL, NULL, NULL, TRUE
-        UNION ALL SELECT NULL, 'BADROW', NULL, TRUE
-    """
     o["shuffle_deterministic"] = f"""
         WITH h AS (
           SELECT doc_id, {portable_hash32_sql('doc_id', 17)} AS hv
@@ -11465,15 +9279,6 @@ GROUP BY tb.j_bucket
                     '\+?[0-9][0-9()\- ]{6,}[0-9]'))) > 0 AS has_pii
         FROM seeded
     """
-    o["obs_quality_metrics"] = """
-        SELECT CAST(count(*) AS BIGINT) AS n_rows,
-               round(sum(l_quantity), 2) AS sum_qty,
-               CAST(count(CASE WHEN l_quantity IS NULL THEN 1 END)
-                    AS BIGINT) AS n_null_qty,
-               min(l_orderkey) AS min_key,
-               max(l_orderkey) AS max_key
-        FROM lineitem
-    """
     o["sample_mixture_plan"] = r"""
         WITH s AS (
           SELECT source,
@@ -11587,72 +9392,6 @@ GROUP BY tb.j_bucket
                CAST(8 AS BIGINT) AS bit_depth
         FROM documents WHERE doc_id % 7 = 0
     """
-    o["x1_explode_unnest"] = """
-        SELECT l_orderkey,
-               row_number() OVER (PARTITION BY l_orderkey
-                                  ORDER BY l_linenumber) - 1 AS idx,
-               l_linenumber
-        FROM (SELECT DISTINCT l_orderkey, l_linenumber FROM lineitem)
-    """
-    o["f5_try_funcs"] = """
-        SELECT n_nationkey,
-               CASE WHEN n_nationkey <> 3
-                    THEN round(10.0 / (n_nationkey - 3), 4) END AS tdiv,
-               TRY_CAST(substring(n_name, 8, 2) AS INTEGER) AS tcast,
-               str_split(n_name, '_')[2] AS tsecond
-        FROM nation
-    """
-    o["x2_set_ops"] = """
-        SELECT 'both' AS tag, o_custkey FROM (
-          SELECT o_custkey FROM orders WHERE o_orderstatus = 'F'
-          INTERSECT
-          SELECT o_custkey FROM orders WHERE o_orderstatus = 'O'
-        )
-        UNION ALL
-        SELECT 'f_only' AS tag, o_custkey FROM (
-          SELECT o_custkey FROM orders WHERE o_orderstatus = 'F'
-          EXCEPT
-          SELECT o_custkey FROM orders WHERE o_orderstatus = 'O'
-        )
-    """
-    o["x3_union_evolution"] = """
-        SELECT p_partkey, p_name,
-               CAST(NULL AS VARCHAR) AS p_brand,
-               CAST(NULL AS DOUBLE) AS p_retailprice
-        FROM part
-        UNION ALL
-        SELECT p_partkey, CAST(NULL AS VARCHAR) AS p_name,
-               p_brand, p_retailprice
-        FROM part
-    """
-    o["f1_string_funcs"] = """
-        SELECT n_nationkey,
-               regexp_replace(n_name, '[AEIOU]', '_', 'g') AS devoweled,
-               lpad(CAST(n_nationkey AS VARCHAR), 4, '0') AS padded,
-               reverse(n_name) AS reversed,
-               lower(n_name) AS lowered,
-               substring(n_name, 2, 3) AS mid3,
-               replace(n_name, 'AN', '**') AS replaced,
-               CAST(length(n_name) AS INT) AS name_len,
-               concat_ws('-', n_name, CAST(n_nationkey AS VARCHAR)) AS tagged,
-               CAST(strpos(n_name, 'A') AS INT) AS first_a
-        FROM nation
-    """
-    o["f2_datetime_funcs"] = """
-        SELECT o_orderkey,
-               CAST(year(o_orderdate) AS INT) AS y,
-               CAST(quarter(o_orderdate) AS INT) AS q,
-               CAST(month(o_orderdate) AS INT) AS m,
-               CAST(day(o_orderdate) AS INT) AS dom,
-               CAST(dayofweek(o_orderdate) AS INT) AS dow,
-               date_trunc('month', o_orderdate) AS month_start
-        FROM orders
-    """
-    o["s19_xml_source"] = """
-        SELECT r_regionkey, r_name FROM region
-    """
-    o["sql_lateral_topk"] = _SQL_LATERAL
-    o["sql_recursive_reach"] = _SQL_RECURSIVE
     o["rollup_incremental"] = """
         SELECT user_id,
                count(*) AS n_events,
@@ -11682,14 +9421,6 @@ GROUP BY tb.j_bucket
             "CAST(l_linenumber AS VARCHAR))", 7
         )} % 20 = 0
     """
-    o["a9_percentiles"] = """
-        SELECT l_linestatus,
-               round(quantile_cont(l_quantity, 0.25), 4) AS p25,
-               round(quantile_cont(l_quantity, 0.5), 4) AS p50,
-               round(quantile_cont(l_quantity, 0.75), 4) AS p75,
-               true AS approx_ok
-        FROM lineitem GROUP BY l_linestatus
-    """
     o["sim_ivf_topk"] = _sim_ivf_oracle()
     o["sim_ivfpq_topk"] = _sim_ivfpq_oracle()
     o["sim_ivf_recall"] = f"""
@@ -11700,81 +9431,6 @@ GROUP BY tb.j_bucket
         FROM bt LEFT JOIN iv
           ON bt.q_id = iv.q_id AND bt.n_id = iv.n_id
         GROUP BY bt.q_id
-    """
-    o["s14_binaryfile_source"] = """
-        SELECT doc_id,
-               CAST(octet_length(encode(text)) AS BIGINT) AS length,
-               md5(text) AS content_md5
-        FROM documents WHERE doc_id < 50
-    """
-    o["a10_grouping_sets"] = """
-        SELECT o_orderstatus, o_orderpriority, count(*) AS n,
-               CAST(grouping(o_orderstatus) AS INT) AS g_status,
-               CAST(grouping(o_orderpriority) AS INT) AS g_prio
-        FROM orders
-        GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority), ())
-    """
-    o["f4_unpivot"] = """
-        SELECT p_partkey, 'p_size' AS measure,
-               CAST(p_size AS DOUBLE) AS val FROM part
-        UNION ALL
-        SELECT p_partkey, 'p_retailprice' AS measure,
-               CAST(p_retailprice AS DOUBLE) AS val FROM part
-    """
-    o["f3_collection_funcs"] = """
-        WITH s AS (
-          SELECT n_nationkey, string_split(n_name, 'A') AS parts FROM nation
-        )
-        SELECT n_nationkey,
-               CAST(len(parts) AS INT) AS n_parts,
-               array_to_string(list_sort(list_distinct(parts)), '|')
-                 AS distinct_parts,
-               list_contains(parts, '') AS has_empty,
-               parts[1] AS first_part,
-               parts[-1] AS last_part
-        FROM s
-    """
-    o["j8_full_outer"] = """
-        WITH c AS (
-          SELECT c_custkey, c_mktsegment FROM customer WHERE c_acctbal > 9000
-        ),
-        o AS (
-          SELECT o_custkey, count(*) AS n_big_orders FROM orders
-          WHERE o_totalprice > 300000 GROUP BY o_custkey
-        )
-        SELECT coalesce(c.c_custkey, o.o_custkey) AS custkey,
-               coalesce(c.c_mktsegment, 'NONE') AS seg,
-               CAST(coalesce(o.n_big_orders, 0) AS BIGINT) AS n_big_orders
-        FROM c FULL OUTER JOIN o ON c.c_custkey = o.o_custkey
-    """
-    o["w6_ntile_pct"] = """
-        SELECT o_orderkey, o_orderpriority,
-               CAST(ntile(4) OVER w AS INT) AS quartile,
-               round(percent_rank() OVER w, 4) AS pct_rank,
-               round(cume_dist() OVER w, 4) AS cume
-        FROM orders
-        WINDOW w AS (PARTITION BY o_orderpriority
-                     ORDER BY floor(o_totalprice / 1000) ASC, o_orderkey ASC)
-    """
-    o["w7_value_functions"] = """
-        SELECT o_orderkey, o_custkey,
-               first_value(o_orderkey) OVER w AS first_key,
-               last_value(o_orderkey) OVER w AS last_key,
-               nth_value(o_orderkey, 2) OVER w AS second_key
-        FROM orders
-        WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderkey ASC
-                     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-    """
-    o["a12_conditional_aggs"] = """
-        SELECT l_linestatus,
-               count(*) FILTER (WHERE l_discount > 0.05) AS n_discounted,
-               bool_and(l_quantity > 0) AS all_positive,
-               bool_or(l_quantity > 49) AS any_large,
-               sum(DISTINCT l_quantity) AS sum_distinct_qty,
-               round(avg(l_quantity) FILTER (WHERE l_discount > 0.05), 4)
-                 AS avg_discounted_qty,
-               count(*) AS n
-        FROM lineitem GROUP BY l_linestatus
     """
     o["text_tfidf"] = f"""
         WITH {_WORDS_CTE.strip()},
@@ -11807,15 +9463,6 @@ GROUP BY tb.j_bucket
         FROM p
         JOIN documents da ON da.doc_id = p.id_a
         JOIN documents db ON db.doc_id = p.id_b
-    """
-    o["a11_corr_stats"] = """
-        SELECT l_returnflag,
-               round(corr(l_quantity, l_extendedprice), 4) AS qp_corr,
-               round(covar_samp(l_quantity, l_extendedprice), 2) AS qp_covar,
-               round(covar_pop(l_quantity, l_extendedprice), 2)
-                 AS qp_covar_pop,
-               count(*) AS n
-        FROM lineitem GROUP BY l_returnflag
     """
     o["dedup_contamination"] = f"""
 WITH {_WORDS_CTE.strip()},
@@ -12151,17 +9798,10 @@ WHERE round(i.inter / CAST(sl.sz + sr.sz - i.inter AS DOUBLE), 4) >= 0.02
         WHERE score > 0
         ORDER BY score DESC, doc_id LIMIT 20
     """
-    o["sql_tpch_q18"] = _SQL_Q18
     o["sql_tpch_q9"] = _SQL_Q9
     o["sql_tpch_q11"] = _SQL_Q11
     o["sql_tpch_q15"] = _SQL_Q15
-    o["sql_tpch_q16"] = _SQL_Q16
-    o["sql_tpch_q17"] = _SQL_Q17
-    o["sql_tpch_q19"] = _SQL_Q19
-    o["sql_tpch_q20"] = _SQL_Q20
     o["sql_tpch_q21"] = _SQL_Q21
-    o["sql_tpch_q2"] = _SQL_Q2_CORR_MIN
-    o["sql_tpch_q12"] = _SQL_Q12
     o["multimodal_decode_mp4"] = """
         SELECT doc_id AS asset_id,
                'mp4' AS format,
@@ -12787,12 +10427,6 @@ WHERE round(i.inter / CAST(sl.sz + sr.sz - i.inter AS DOUBLE), 4) >= 0.02
         SELECT CAST(2 AS BIGINT), count(*),
                CAST(sum(n_nationkey + 100) AS BIGINT)
         FROM nation
-    """
-    o["a20_bitmap_distinct"] = """
-        SELECT l_linestatus,
-               CAST(count(DISTINCT l_partkey) AS BIGINT)
-                 AS n_distinct_parts
-        FROM lineitem GROUP BY l_linestatus
     """
     o["multimodal_jpeg_sa"] = """
         WITH prm AS (
@@ -14051,12 +11685,6 @@ WHERE round(i.inter / CAST(sl.sz + sr.sz - i.inter AS DOUBLE), 4) >= 0.02
                CAST(CASE WHEN doc_id % 6 = 5 THEN 500 ELSE 1000 END
                     AS BIGINT) AS script_milli
         FROM documents WHERE doc_id % 13 = 4
-    """
-    o["orc_sink_roundtrip"] = """
-        SELECT source, lang, CAST(COUNT(*) AS BIGINT) AS n_docs,
-               CAST(SUM(LENGTH(text)) AS BIGINT) AS sum_chars,
-               CAST(MIN(doc_id) AS BIGINT) AS min_doc
-        FROM documents GROUP BY source, lang
     """
     o["sitemap_parse"] = """
         WITH s AS (
@@ -15509,14 +13137,6 @@ WHERE round(i.inter / CAST(sl.sz + sr.sz - i.inter AS DOUBLE), 4) >= 0.02
                           / ((n_old + 1.0) / (tot_o + k))), 4) AS psi
         FROM b, t
     """
-    o["sql_variables_params"] = """
-        SELECT l_returnflag,
-               count(*) AS n_items,
-               round(SUM(l_quantity), 2) AS sum_qty
-        FROM lineitem
-        WHERE l_quantity >= 40.0 AND l_linestatus = 'F'
-        GROUP BY l_returnflag
-    """
     o["obs_drift_ks"] = """
         WITH o AS (
           -- NULL values are excluded on both sides (mirrors
@@ -15575,12 +13195,6 @@ WHERE round(i.inter / CAST(sl.sz + sr.sz - i.inter AS DOUBLE), 4) >= 0.02
                      / CAST(count(*) AS DOUBLE), 4) AS uniq_ratio
         FROM documents GROUP BY source
     """
-    o["sql_exists_late"] = _SQL_EXISTS_LATE
-    o["sql_scalar_anti"] = _SQL_SCALAR_ANTI
-    o["sql_tpch_q14"] = _SQL_Q14
-    o["sql_tpch_q7"] = _SQL_Q7
-    o["sql_tpch_q8"] = _SQL_Q8
-    o["sql_tpch_q13"] = _SQL_Q13
     o["split_leakage_safe"] = f"""
 WITH RECURSIVE p AS ({_jaccard_oracle()}),
 und AS (
@@ -15632,49 +13246,6 @@ FROM g
                true AS within_tol
         FROM x GROUP BY w_start_us
     """
-    o["f9_pandas_api"] = """
-        SELECT o_orderstatus, count(o_orderkey) AS n,
-               round(sum(o_totalprice), 2) AS total
-        FROM orders GROUP BY o_orderstatus
-    """
-    o["sql_pivot"] = """
-        SELECT o_orderstatus,
-               CAST(sum(CASE WHEN o_orderpriority = '1-URGENT'
-                        THEN 1 ELSE 0 END) AS BIGINT) AS urgent,
-               CAST(sum(CASE WHEN o_orderpriority = '2-HIGH'
-                        THEN 1 ELSE 0 END) AS BIGINT) AS high,
-               CAST(sum(CASE WHEN o_orderpriority = '3-MEDIUM'
-                        THEN 1 ELSE 0 END) AS BIGINT) AS medium,
-               CAST(sum(CASE WHEN o_orderpriority = '4-NOT SPECIFIED'
-                        THEN 1 ELSE 0 END) AS BIGINT) AS unspecified,
-               CAST(sum(CASE WHEN o_orderpriority = '5-LOW'
-                        THEN 1 ELSE 0 END) AS BIGINT) AS low
-        FROM orders GROUP BY o_orderstatus
-    """
-    o["x5_set_ops_all"] = """
-        WITH a AS (
-          SELECT l_orderkey % 50 AS k FROM lineitem
-          WHERE l_orderkey % 3 = 0
-        ),
-        b AS (
-          SELECT l_orderkey % 50 AS k FROM lineitem
-          WHERE l_orderkey % 2 = 0
-        ),
-        i AS (
-          SELECT k, count(*) AS n_inter
-          FROM (SELECT k FROM a INTERSECT ALL SELECT k FROM b)
-          GROUP BY k
-        ),
-        e AS (
-          SELECT k, count(*) AS n_except
-          FROM (SELECT k FROM a EXCEPT ALL SELECT k FROM b)
-          GROUP BY k
-        )
-        SELECT coalesce(i.k, e.k) AS k,
-               coalesce(n_inter, 0) AS n_inter,
-               coalesce(n_except, 0) AS n_except
-        FROM i FULL OUTER JOIN e ON i.k = e.k
-    """
     o["stream_sliding"] = f"""
         WITH e AS (SELECT {_EVENT_US} AS t, value FROM events),
         x AS (
@@ -15685,26 +13256,6 @@ FROM g
         SELECT w_start_us, count(*) AS n_events,
                round(sum(value), 2) AS sum_value
         FROM x GROUP BY w_start_us
-    """
-    o["a17_equidepth"] = """
-        WITH c AS (
-          SELECT CAST(round(o_totalprice * 100) AS BIGINT) AS cents
-          FROM orders
-        ),
-        q AS (
-          SELECT CAST(round(quantile_cont(cents, 0.25)) AS BIGINT) AS q1,
-                 CAST(round(quantile_cont(cents, 0.50)) AS BIGINT) AS q2,
-                 CAST(round(quantile_cont(cents, 0.75)) AS BIGINT) AS q3
-          FROM c
-        )
-        SELECT CAST((cents > q1) AS BIGINT)
-                 + CAST((cents > q2) AS BIGINT)
-                 + CAST((cents > q3) AS BIGINT) AS bucket,
-               count(*) AS n_rows,
-               min(cents) AS min_cents,
-               max(cents) AS max_cents
-        FROM c, q
-        GROUP BY 1
     """
     o["text_bigram_lm"] = r"""
         WITH tok AS (
@@ -15724,26 +13275,6 @@ FROM g
                ) AS BIGINT) AS rnk
         FROM pairs p JOIN t USING (word)
         QUALIFY rnk <= 3
-    """
-    o["lake_file_census"] = """
-        SELECT o_orderstatus,
-               CAST((count(*) + 6999) // 7000 AS BIGINT) AS n_files,
-               count(*) AS n_rows,
-               CAST(CASE WHEN count(*) % 7000 = 0
-                    THEN least(count(*), 7000)
-                    ELSE count(*) % 7000 END AS BIGINT)
-                 AS min_file_rows,
-               CAST(least(count(*), 7000) AS BIGINT) AS max_file_rows
-        FROM orders GROUP BY o_orderstatus
-    """
-    o["text_url_domains"] = """
-        SELECT source || '.example.com' AS host,
-               count(*) AS n_docs,
-               CAST(count(DISTINCT doc_id) AS BIGINT) AS n_paths,
-               CAST(count(DISTINCT lang) AS BIGINT) AS n_langs,
-               '/docs/' || CAST(min(CAST(doc_id AS VARCHAR)) AS VARCHAR)
-                 AS min_path
-        FROM documents GROUP BY source
     """
     o["text_perplexity"] = r"""
         WITH tok AS (
@@ -15802,44 +13333,6 @@ FROM g
         SELECT l, r, n, round(s / 10000.0, 4) AS pmi
         FROM s ORDER BY s DESC, l, r LIMIT 20
     """
-    o["a15_decimal_money"] = """
-        SELECT o_orderstatus,
-               CAST(CAST(sum(CAST(o_totalprice AS DECIMAL(18,2)))
-                 AS DECIMAL(18,2)) AS VARCHAR) AS total,
-               count(*) AS n
-        FROM orders GROUP BY o_orderstatus
-    """
-    o["x4_explode_outer"] = """
-        WITH a AS (
-          SELECT n_nationkey,
-                 CASE WHEN n_nationkey % 5 = 0 THEN []
-                      ELSE [n_nationkey * 10, n_nationkey * 10 + 1]
-                 END AS arr
-          FROM nation
-        )
-        SELECT n_nationkey, CAST(unnest(arr) AS BIGINT) AS v
-        FROM a WHERE len(arr) > 0
-        UNION ALL
-        SELECT n_nationkey, NULL AS v FROM a WHERE len(arr) = 0
-    """
-    o["a16_yoy"] = """
-        WITH m AS (
-          SELECT CAST(year(o_orderdate) * 100 + month(o_orderdate)
-                   AS BIGINT) AS ym,
-                 round(sum(o_totalprice), 2) AS rev
-          FROM orders GROUP BY 1
-        )
-        SELECT cur.ym, cur.rev, prev.rev AS rev_prev_year,
-               round(cur.rev - prev.rev, 2) AS yoy_delta
-        FROM m cur LEFT JOIN m prev ON prev.ym = cur.ym - 100
-    """
-    o["f8_sql_pandas_udf"] = """
-        SELECT o_orderpriority,
-               CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT))
-                 AS BIGINT) AS cents,
-               count(*) AS n
-        FROM orders GROUP BY o_orderpriority
-    """
     o["lake_upsert_latest"] = f"""
         WITH e AS (
           SELECT event_id, user_id, {_EVENT_US} AS ts_us, event_type
@@ -15871,10 +13364,6 @@ FROM g
                  RANGE BETWEEN 3600000000 PRECEDING AND CURRENT ROW
                ) AS n_last_hour
         FROM events
-    """
-    o["f7_parse_kv"] = """
-        SELECT doc_id, lang AS lang_parsed, source AS src_parsed
-        FROM documents
     """
     o["pipeline_user_features"] = f"""
         WITH e AS (
@@ -15916,23 +13405,6 @@ FROM g
                s.n_sessions, x.n_debounced
         FROM base b JOIN sess s USING (user_id)
         JOIN deb x USING (user_id)
-    """
-    o["s20_csv_quoted_multiline"] = """
-        SELECT n_nationkey,
-               n_name || ', "x"' || chr(10) || 'second line' AS note
-        FROM nation
-    """
-    o["s21_json_nested_flatten"] = """
-        SELECT o_orderkey AS k, o_custkey AS cust_id,
-               o_orderstatus AS cust_status
-        FROM orders
-    """
-    o["a14_grouped_percentiles"] = """
-        SELECT o_orderpriority,
-               round(quantile_cont(o_totalprice, 0.5), 2) AS p50,
-               round(quantile_cont(o_totalprice, 0.9), 2) AS p90,
-               count(*) AS n
-        FROM orders GROUP BY o_orderpriority
     """
     o["events_debounce"] = f"""
         WITH e AS (
@@ -16111,18 +13583,6 @@ FROM g
                  AS avg_dwell_us
         FROM spans WHERE dwell_us IS NOT NULL
         GROUP BY event_type
-    """
-    o["f6_ordered_aggs"] = """
-        SELECT o_orderpriority,
-               max_by(o_orderkey,
-                      CAST(round(o_totalprice * 100) AS BIGINT)
-                        * 10000000000 + o_orderkey) AS dearest_key,
-               min_by(o_orderkey,
-                      CAST(round(o_totalprice * 100) AS BIGINT)
-                        * 10000000000 + o_orderkey) AS cheapest_key,
-               round(median(o_totalprice), 2) AS median_price,
-               count(*) AS n
-        FROM orders GROUP BY o_orderpriority
     """
     # the oracle states the interval-containment predicate directly
     # (a range join — fine at oracle scale); the Spark side's
@@ -16504,18 +13964,9 @@ FROM g
     return o
 
 
-# Ordering note (driver harness): the driver records only the FIRST
-# ~50 entries of this dict per round (observed: exactly 50). Round-12
-# ordering, regenerated from CORRECTNESS_r01..r11 latest-record
-# rounds: r12-NEW lanes are inserted at the very top as they are
-# built (never-recorded outranks stale), then all existing lanes
-# stalest-driver-record-first (ties keep r11 order) — the window
-# therefore re-proves the 6 r4-recorded lanes (set_ops,
-# w1_window_topk, events_pivot, events_json_props, events_from_json,
-# dedup_exact_stats — the VERDICT r11 ask #5) and then the oldest r5
-# block. After r12 no lane's record is older than r5. All entries
-# are selfcheck-green at sf0.001+sf0.01 and ansi-swept regardless of
-# the window.
+# Registry order is grouped by family and driver-record round; the
+# driver's correctness window reads the rotation view in
+# __spark_entry__.queries() (stalest record first), not this order.
 SPARK_QUERIES = {
     # --- r13-new lanes (never driver-recorded; the rotation view in
     # __spark_entry__ orders these first automatically) ---
@@ -16547,7 +13998,6 @@ SPARK_QUERIES = {
     "multimodal_mp3_id3": q_multimodal_mp3_id3,
     "multimodal_ogg_tags": q_multimodal_ogg_tags,
     "sitemap_parse": q_sitemap_parse,
-    "orc_sink_roundtrip": q_orc_sink_roundtrip,
     "text_script_profile": q_text_script_profile,
     "subtitles_parse": q_subtitles_parse,
     "sim_maxsim_topk": q_sim_maxsim_topk,
@@ -16612,8 +14062,6 @@ SPARK_QUERIES = {
     "snap_delete_dv": q_snap_delete_dv,
     "multimodal_tga": q_multimodal_tga,
     # --- latest driver record: r4 ---
-    "set_ops": q_set_ops,
-    "w1_window_topk": q_w1_window_topk,
     "events_pivot": q_events_pivot,
     "events_json_props": q_events_json_props,
     "events_from_json": q_events_from_json,
@@ -16634,35 +14082,12 @@ SPARK_QUERIES = {
     "w3_lag_gap": q_w3_lag_gap,
     "shuffle_deterministic": q_shuffle_deterministic,
     "dedup_incremental": q_dedup_incremental,
-    "s16_csv_permissive_corrupt": q_s16_csv_permissive_corrupt,
     "events_asof_tolerance": q_events_asof_tolerance,
     "pack_efficiency": q_pack_efficiency,
-    "sql_tpch_q5": q_sql_tpch_q5,
     "s17_fixed_width": q_s17_fixed_width,
     "events_gap_fill": q_events_gap_fill,
     "events_retention": q_events_retention,
-    "p1_rename": q_p1_rename,
-    "p3_drop": q_p3_drop,
-    "p4_select_reorder": q_p4_select_reorder,
-    "p5_sql_predicate": q_p5_sql_predicate,
     "dedup_exact_keep": q_dedup_exact_keep,
-    "s14_binaryfile_source": q_s14_binaryfile_source,
-    "s15_schema_evolution": q_s15_schema_evolution,
-    "a1_collect_set_nest": q_a1_collect_set_nest,
-    "a2_two_level_nest": q_a2_two_level_nest,
-    "a7_approx_distinct": q_a7_approx_distinct,
-    "f1_string_funcs": q_f1_string_funcs,
-    "f2_datetime_funcs": q_f2_datetime_funcs,
-    "x1_explode_unnest": q_x1_explode_unnest,
-    "f3_collection_funcs": q_f3_collection_funcs,
-    "f4_unpivot": q_f4_unpivot,
-    "j8_full_outer": q_j8_full_outer,
-    "w6_ntile_pct": q_w6_ntile_pct,
-    "w7_value_functions": q_w7_value_functions,
-    "a9_percentiles": q_a9_percentiles,
-    "a10_grouping_sets": q_a10_grouping_sets,
-    "a11_corr_stats": q_a11_corr_stats,
-    "a12_conditional_aggs": q_a12_conditional_aggs,
     "p7_hash_sample": q_p7_hash_sample,
     "lake_upsert": q_lake_upsert,
     "profile_table": q_profile_table,
@@ -16673,34 +14098,23 @@ SPARK_QUERIES = {
     "table_diff": q_table_diff,
     "text_bm25": q_text_bm25,
     "events_transition": q_events_transition,
-    "sql_tpch_q18": q_sql_tpch_q18,
     "dedup_lsh_recall": q_dedup_lsh_recall,
     "multimodal_decode_jpeg": q_multimodal_decode_jpeg,
     "text_pii": q_text_pii,
     "pipeline_chunk_pack": q_pipeline_chunk_pack,
-    "obs_quality_metrics": q_obs_quality_metrics,
     "dedup_repeated_spans": q_dedup_repeated_spans,
     "multimodal_extract_arrow": q_multimodal_extract_arrow,
     "events_variant": q_events_variant,
     "s18_python_datasource": q_s18_python_datasource,
     "udtf_topk": q_udtf_topk,
-    "sql_tpch_q6": q_sql_tpch_q6,
-    "sql_tpch_q10": q_sql_tpch_q10,
     "a13_hll_sketch_rollup": q_a13_hll_sketch_rollup,
     "rollup_incremental": q_rollup_incremental,
-    "s19_xml_source": q_s19_xml_source,
-    "sql_lateral_topk": q_sql_lateral_topk,
-    "sql_recursive_reach": q_sql_recursive_reach,
     "multimodal_decode_avi": q_multimodal_decode_avi,
-    "x2_set_ops": q_x2_set_ops,
-    "x3_union_evolution": q_x3_union_evolution,
     "pipeline_corpus_build": q_pipeline_corpus_build,
     "events_anomaly": q_events_anomaly,
-    "f5_try_funcs": q_f5_try_funcs,
     "sim_int8_recall": q_sim_int8_recall,
     "sample_weighted": q_sample_weighted,
     "stream_rollup": q_stream_rollup,
-    "flagship_lake_nest": q_flagship_lake_nest,
     "text_stats": q_text_stats,
     "text_tokens": q_text_tokens,
     "text_ngram_topk": q_text_ngram_topk,
@@ -16716,52 +14130,25 @@ SPARK_QUERIES = {
     # --- latest driver record: r7 ---
     "events_attribution": q_events_attribution,
     "profile_histogram": q_profile_histogram,
-    "sql_exists_late": q_sql_exists_late,
-    "sql_scalar_anti": q_sql_scalar_anti,
     "j9_nullsafe_join": q_j9_nullsafe_join,
     "scd2_point_in_time": q_scd2_point_in_time,
-    "sql_tpch_q14": q_sql_tpch_q14,
     "scd2_incremental": q_scd2_incremental,
     "events_dwell": q_events_dwell,
-    "f6_ordered_aggs": q_f6_ordered_aggs,
     "stream_scd2": q_stream_scd2,
-    "sql_tpch_q7": q_sql_tpch_q7,
-    "sql_tpch_q8": q_sql_tpch_q8,
-    "sql_tpch_q13": q_sql_tpch_q13,
     "split_leakage_safe": q_split_leakage_safe,
     "text_word_entropy": q_text_word_entropy,
     "events_debounce": q_events_debounce,
     "sample_per_group": q_sample_per_group,
     "text_feature_hash": q_text_feature_hash,
-    "s20_csv_quoted_multiline": q_s20_csv_quoted_multiline,
-    "s21_json_nested_flatten": q_s21_json_nested_flatten,
-    "a14_grouped_percentiles": q_a14_grouped_percentiles,
     "pipeline_user_features": q_pipeline_user_features,
     "events_asof_cogroup": q_events_asof_cogroup,
     "w8_time_range_frame": q_w8_time_range_frame,
-    "f7_parse_kv": q_f7_parse_kv,
-    "f8_sql_pandas_udf": q_f8_sql_pandas_udf,
     "lake_upsert_latest": q_lake_upsert_latest,
     "text_bpe_merges": q_text_bpe_merges,
-    "a15_decimal_money": q_a15_decimal_money,
-    "x4_explode_outer": q_x4_explode_outer,
-    "a16_yoy": q_a16_yoy,
     "text_bigram_lm": q_text_bigram_lm,
     "stream_sliding": q_stream_sliding,
-    "a17_equidepth": q_a17_equidepth,
-    "sql_pivot": q_sql_pivot,
-    "x5_set_ops_all": q_x5_set_ops_all,
-    "f9_pandas_api": q_f9_pandas_api,
-    "sql_tpch_q2": q_sql_tpch_q2,
-    "sql_tpch_q9": q_sql_tpch_q9,
     "sql_tpch_q11": q_sql_tpch_q11,
-    "sql_tpch_q12": q_sql_tpch_q12,
     "sql_tpch_q15": q_sql_tpch_q15,
-    "sql_tpch_q16": q_sql_tpch_q16,
-    "sql_tpch_q17": q_sql_tpch_q17,
-    "sql_tpch_q19": q_sql_tpch_q19,
-    "sql_tpch_q20": q_sql_tpch_q20,
-    "sql_tpch_q21": q_sql_tpch_q21,
     "graph_pagerank": q_graph_pagerank,
     "obs_drift_psi": q_obs_drift_psi,
     # --- latest driver record: r8 ---
@@ -16769,7 +14156,6 @@ SPARK_QUERIES = {
     "text_quality_classifier": q_text_quality_classifier,
     "events_ewma": q_events_ewma,
     "pipeline_web_curation": q_pipeline_web_curation,
-    "a20_bitmap_distinct": q_a20_bitmap_distinct,
     "text_url_canonical": q_text_url_canonical,
     "multimodal_tiff_pixels": q_multimodal_tiff_pixels,
     "sim_mmr_rerank": q_sim_mmr_rerank,
@@ -16812,9 +14198,6 @@ SPARK_QUERIES = {
     "multimodal_decode_flac": q_multimodal_decode_flac,
     "multimodal_decode_ogg": q_multimodal_decode_ogg,
     "pipeline_corpus_card": q_pipeline_corpus_card,
-    "lake_file_census": q_lake_file_census,
-    "text_url_domains": q_text_url_domains,
-    "sql_variables_params": q_sql_variables_params,
     "multimodal_jpeg_sa": q_multimodal_jpeg_sa,
     "multimodal_flac_stereo": q_multimodal_flac_stereo,
     "multimodal_flac_lpc": q_multimodal_flac_lpc,
@@ -16866,43 +14249,26 @@ SPARK_QUERIES = {
     "pack_windows": q_pack_windows,
     "lake_zorder_key": q_lake_zorder_key,
     "sample_mixture_plan": q_sample_mixture_plan,
-    "sql_tpch_q3": q_sql_tpch_q3,
     "p8_keep_latest": q_p8_keep_latest,
     "dedup_contamination": q_dedup_contamination,
     "dedup_simhash": q_dedup_simhash,
     "dedup_minhash_lsh": q_dedup_minhash_lsh,
     "dedup_clusters": q_dedup_clusters,
     "multimodal_decode_wav": q_multimodal_decode_wav,
-    "s1_s3_text_csv_scan": q_s1_s3_text_csv_scan,
-    "s4_csv_header_roundtrip": q_s4_csv_header_roundtrip,
-    "s5_csv_noheader_roundtrip": q_s5_csv_noheader_roundtrip,
-    "s6_parquet_explicit_schema": q_s6_parquet_explicit_schema,
-    "s7_parquet_inferred": q_s7_parquet_inferred,
-    "s8_input_file_name": q_s8_input_file_name,
-    "s9_partitioned_write_roundtrip": q_s9_partitioned_write_roundtrip,
-    "s10_json_sink_roundtrip": q_s10_json_sink_roundtrip,
     "s11_lake_range_read": q_s11_lake_range_read,
-    "s12_orc_roundtrip": q_s12_orc_roundtrip,
-    "s13_csv_dropmalformed": q_s13_csv_dropmalformed,
-    "p2_derive": q_p2_derive,
-    "p6_dropdup_subset": q_p6_dropdup_subset,
-    "j1_multikey_left_join": q_j1_multikey_left_join,
-    "j2_left_join_nulls": q_j2_left_join_nulls,
-    "j3_broadcast_join_agg": q_j3_broadcast_join_agg,
-    "j4_case_pick_join": q_j4_case_pick_join,
-    "j5_semi_join": q_j5_semi_join,
-    "j6_anti_join": q_j6_anti_join,
-    "j7_range_join": q_j7_range_join,
-    "a3_multi_count_distinct": q_a3_multi_count_distinct,
-    "a4_pricing_summary": q_a4_pricing_summary,
-    "a5_rollup": q_a5_rollup,
-    "a6_cube": q_a6_cube,
-    "a8_stats_aggs": q_a8_stats_aggs,
-    "w4_rank_dense": q_w4_rank_dense,
-    "w5_range_frame": q_w5_range_frame,
     "skew_salted_agg": q_skew_salted_agg,
-    "status_summary": q_status_summary,
-    "sort_topk": q_sort_topk,
+    # --- Spark-baseline controls: these 7 lanes call no package code.
+    # They stay because bench.py times them directly (its BENCH_BASELINE
+    # floors are keyed by them), giving the engine-only yardstick the
+    # package lanes are read against; flagship_lake_nest is also the
+    # entry() smoke query. ---
+    "flagship_lake_nest": q_flagship_lake_nest,
+    "a4_pricing_summary": q_a4_pricing_summary,
+    "j3_broadcast_join_agg": q_j3_broadcast_join_agg,
+    "w1_window_topk": q_w1_window_topk,
+    "a2_two_level_nest": q_a2_two_level_nest,
+    "sql_tpch_q9": q_sql_tpch_q9,
+    "sql_tpch_q21": q_sql_tpch_q21,
 }
 
 

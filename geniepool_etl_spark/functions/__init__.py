@@ -129,17 +129,20 @@ def _materialize(df: DataFrame, eager: bool) -> DataFrame:
     ``df.transform(ckpt_lazy)`` / ``df.transform(ckpt_eager)``.
     Eagerness only applies to the checkpoint mode; ``persist`` is
     inherently lazy and populates at the first action either way.
+    Any other value raises ``ValueError`` (the match is exact, so
+    ``Persist`` is rejected too).
     """
-    mode = "localCheckpoint"
-    try:
-        mode = df.sparkSession.conf.get(MATERIALIZE_CONF, mode)
-    except Exception:  # noqa: BLE001 — conf probe must not break plans
-        pass
+    mode = df.sparkSession.conf.get(MATERIALIZE_CONF, "localCheckpoint")
     if mode == "off":
         return df
     if mode == "persist":
         return df.persist()
-    return df.localCheckpoint(eager=eager)
+    if mode == "localCheckpoint":
+        return df.localCheckpoint(eager=eager)
+    raise ValueError(
+        f"{MATERIALIZE_CONF}={mode!r}: expected one of "
+        "'localCheckpoint', 'persist', 'off'"
+    )
 
 
 def ckpt_lazy(df: DataFrame) -> DataFrame:
@@ -186,12 +189,13 @@ def fan_out_if_narrow(df: DataFrame) -> DataFrame:
             return df
         if len(files) >= target:
             return df
-        max_pb = int(
-            df.sparkSession.conf.get(
-                "spark.sql.files.maxPartitionBytes", "134217728"
-            ).rstrip("b")
-        )
         jvm = sc._jvm
+        # Spark's own byte-string parser: accepts '134217728b', '128m',
+        # '1g', ... exactly as the scan planner does
+        java_utils = jvm.org.apache.spark.network.util.JavaUtils
+        max_pb = java_utils.byteStringAsBytes(
+            df.sparkSession.conf.get("spark.sql.files.maxPartitionBytes")
+        )
         conf = sc._jsc.hadoopConfiguration()
         splits = 0
         for f in files:

@@ -19,28 +19,12 @@ def test_broadcast_join_is_broadcast(spark):
     assert "BroadcastHashJoin" in plan
 
 
-def test_dim_chain_joins_broadcast(spark):
-    # nation/region are tiny: Catalyst (or our hint) must broadcast
-    # them, never shuffle the fact side for a 25-row dim.
-    plan = _plan(C.q_a5_rollup(spark, SF_SMALL))
-    assert "BroadcastHashJoin" in plan
-    assert "SortMergeJoin" not in plan
-
-
 def test_pricing_summary_scan_is_pruned(spark):
     # Column pruning: the q1-shaped aggregate must not read join keys
     # it never touches; filter must be pushed to the parquet scan.
     df = C.q_a4_pricing_summary(spark, SF_SMALL)
     P.assert_column_pruned(df, "l_partkey")
     assert "l_shipdate" in P.pushed_filters(df)
-
-
-def test_projection_scan_prunes_columns(spark):
-    plan = _plan(C.q_s7_parquet_inferred(spark, SF_SMALL))
-    scan = plan[plan.index("FileScan"):]
-    read_schema = scan[: scan.index("\n")]
-    assert "p_partkey" in read_schema and "p_name" in read_schema
-    assert "p_retailprice" not in read_schema
 
 
 def test_flagship_exchange_budget(spark):
@@ -63,13 +47,6 @@ def test_whole_stage_codegen_covers_hot_path(spark):
     # stages; both the scan→filter→partial-agg stage and the final agg
     # must be codegen'd.
     assert "*(1)" in plan and "*(2)" in plan
-
-
-def test_semi_and_anti_join_physical(spark):
-    semi = _plan(C.q_j5_semi_join(spark, SF_SMALL))
-    anti = _plan(C.q_j6_anti_join(spark, SF_SMALL))
-    assert "LeftSemi" in semi
-    assert "LeftAnti" in anti
 
 
 def test_asof_join_is_window_not_range_join(spark):
@@ -210,13 +187,10 @@ _INTENDED_CROSS = {
     "sim_lsh_recall",  # brute-force baseline side: 8 queries broadcast
     "sim_ivf_recall",  # same: the exact side is the 8-query broadcast
     "sim_int8_recall",  # same: quantized + exact sides both broadcast 8 queries
-    "j7_range_join",
     "text_tfidf",
     "text_bm25",  # 1-row global stats frame broadcast (tfidf pattern)
-    "sql_scalar_anti",  # scalar subqueries = 1-row broadcast joins
     "sql_tpch_q11",  # 1-row globals-of-the-grouped-frame broadcast (r16)
     "text_bpe_merges",  # per-round 1-row argmax winner broadcast
-    "a17_equidepth",  # 1-row quartile-boundary frame broadcast
     "obs_drift_psi",  # 1-row totals frame broadcast (tfidf pattern)
     "obs_drift_ks",  # same: 1-row totals frame broadcast
     "text_lang_id",  # |languages|-row candidate frame broadcast
@@ -255,19 +229,8 @@ def test_no_unintended_cartesian_in_any_contract_entry(spark):
     skip = {
         # side-effecting / streaming / iterative entries are exercised
         # by their own tests; planning them here re-runs jobs
-        "s9_partitioned_write_roundtrip",
-        "s10_json_sink_roundtrip",
         "s11_lake_range_read",
-        "s12_orc_roundtrip",
-        "s13_csv_dropmalformed",
-        "s4_csv_header_roundtrip",
-        "s5_csv_noheader_roundtrip",
-        "s1_s3_text_csv_scan",
-        "s14_binaryfile_source",
-        "s16_csv_permissive_corrupt",
         "s17_fixed_width",
-        "s20_csv_quoted_multiline",
-        "s21_json_nested_flatten",
         "stream_tumbling",
         "stream_session",
         "stream_dedup",
@@ -422,36 +385,6 @@ def test_runtime_bloom_filter_prunes_shuffle_join(spark):
                 spark.conf.set(k, v)
 
 
-def test_sql_surface_broadcasts_dims(spark):
-    # SQL text goes through the same Catalyst planning as the
-    # DataFrame API: the small dim sides broadcast, the fact side
-    # never shuffles for the joins
-    df = C.q_sql_tpch_q3(spark, SF_SMALL)
-    df.collect()
-    P.assert_broadcast_join(df)
-
-
-def test_q6_filters_push_to_scan(spark):
-    # Q6 is the pushdown probe: all three predicates must reach the
-    # parquet reader, and the projection must prune to the 4 touched
-    # columns — at 100 TB this query's cost is the scan, nothing else.
-    df = C.q_sql_tpch_q6(spark, SF_SMALL)
-    pushed = P.pushed_filters(df)
-    for col in ("l_shipdate", "l_discount", "l_quantity"):
-        assert col in pushed, (col, pushed)
-    P.assert_column_pruned(df, "l_orderkey")
-    P.assert_column_pruned(df, "l_partkey")
-
-
-def test_q10_broadcasts_dim_and_takes_ordered(spark):
-    # nation must broadcast; the LIMIT 20 over ORDER BY must be
-    # TakeOrderedAndProject (per-partition top-k + driver merge),
-    # never a materialized global Sort.
-    plan = _plan(C.q_sql_tpch_q10(spark, SF_SMALL))
-    assert "BroadcastHashJoin" in plan
-    assert "TakeOrderedAndProject" in plan
-
-
 def test_tpch_tail_decorrelates_to_hash_joins(spark):
     """The round-7 TPC-H tail's subquery shapes must all decorrelate
     to keyed hash joins — a per-row subquery loop or nested-loop join
@@ -465,33 +398,10 @@ def test_tpch_tail_decorrelates_to_hash_joins(spark):
     assert p.count("Scan parquet") == 3, p.count("Scan parquet")
     assert "BroadcastNestedLoopJoin" not in p
     assert "CartesianProduct" not in p
-    # Q16: NOT IN -> (null-aware) anti join against the broadcast set
-    p = _plan(C.q_sql_tpch_q16(spark, SF_SMALL))
-    assert "LeftAnti" in p and "CartesianProduct" not in p
-    # Q17: the correlated per-part avg decorrelates to one aggregate
-    # joined back on the part key
-    p = _plan(C.q_sql_tpch_q17(spark, SF_SMALL))
-    assert "BroadcastHashJoin" in p
-    assert "BroadcastNestedLoopJoin" not in p
-    # Q20: the nested-IN chain stacks two semi joins
-    p = _plan(C.q_sql_tpch_q20(spark, SF_SMALL))
-    assert p.count("LeftSemi") >= 2
-    # Q15/Q19: scalar-max equality and the disjunctive multi-range
-    # both stay broadcast hash equi-joins
-    for q in (C.q_sql_tpch_q15, C.q_sql_tpch_q19):
-        df = q(spark, SF_SMALL)
-        P.assert_no_cartesian(df)
-        assert "BroadcastHashJoin" in _plan(df)
-    # Q19's cross-table OR-of-ANDs: Catalyst factors each side's
-    # disjunct union down to its scan — the lineitem DataFilters must
-    # carry the quantity ranges so row groups skip on min/max stats
-    p = _plan(C.q_sql_tpch_q19(spark, SF_SMALL))
-    scan_lines = [
-        ln for ln in p.splitlines()
-        if "FileScan" in ln and "l_quantity" in ln
-    ]
-    assert any("DataFilters: [" in ln and "l_quantity" in ln.split(
-        "DataFilters: [", 1)[1] for ln in scan_lines), scan_lines
+    # Q15: the scalar-max equality stays a broadcast hash equi-join
+    df = C.q_sql_tpch_q15(spark, SF_SMALL)
+    P.assert_no_cartesian(df)
+    assert "BroadcastHashJoin" in _plan(df)
 
 
 def test_interval_join_is_keyed_equi_join(spark):
@@ -508,16 +418,6 @@ def test_udtf_partitions_once_on_key(spark):
     # Python lane must not add extra exchanges.
     df = C.q_udtf_topk(spark, SF_SMALL)
     assert P.count_exchanges(df) <= 1
-
-
-def test_lateral_topk_decorrelates(spark):
-    # The correlated LATERAL LIMIT must decorrelate into a per-key
-    # window/rank plan — never a per-outer-row re-execution (which
-    # would surface as a nested-loop join at scale).
-    df = C.q_sql_lateral_topk(spark, SF_SMALL)
-    P.assert_no_cartesian(df)
-    plan = _plan(df)
-    assert "Window" in plan or "WindowGroupLimit" in plan, plan[:800]
 
 
 def test_corpus_build_pipeline_is_three_exchanges(spark):

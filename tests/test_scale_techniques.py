@@ -391,3 +391,49 @@ def test_int8_topk_large_query_fallback(spark, monkeypatch):
     monkeypatch.setattr(DataFrame, "collect", real_collect)
     got = fb.orderBy("q_id", "n_id").collect()
     assert [tuple(r) for r in got] == [tuple(r) for r in base]
+
+
+def test_materialize_rejects_unknown_mode(spark):
+    # a mistyped mode must fail loudly, not fall back to localCheckpoint
+    import pytest
+
+    from geniepool_etl_spark.functions import MATERIALIZE_CONF, ckpt_lazy
+
+    saved = spark.conf.get(MATERIALIZE_CONF, None)
+    spark.conf.set(MATERIALIZE_CONF, "Persist")
+    try:
+        with pytest.raises(ValueError, match="'Persist'"):
+            spark.range(3).transform(ckpt_lazy)
+    finally:
+        if saved is None:
+            spark.conf.unset(MATERIALIZE_CONF)
+        else:
+            spark.conf.set(MATERIALIZE_CONF, saved)
+
+
+def test_fan_out_parses_spark_byte_strings(spark, caplog):
+    # maxPartitionBytes in any form Spark accepts ('128m', '1k') must
+    # give the same fan-out decision as the plain byte form, without
+    # the split estimate failing into a warning + no-op
+    import logging
+
+    from geniepool_etl_spark.functions import fan_out_if_narrow
+
+    key = "spark.sql.files.maxPartitionBytes"
+    docs = spark.read.parquet(f"{SF_SMALL}/documents.parquet")  # 1 file
+    saved = spark.conf.get(key)
+    fanned = {}
+    try:
+        with caplog.at_level(logging.WARNING):
+            for value in ("134217728b", "128m", "1024b", "1k"):
+                spark.conf.set(key, value)
+                fanned[value] = fan_out_if_narrow(docs) is not docs
+    finally:
+        spark.conf.set(key, saved)
+    assert not [r for r in caplog.records if "fan_out_if_narrow" in r.message]
+    assert fanned["128m"] == fanned["134217728b"]
+    assert fanned["1k"] == fanned["1024b"]
+    if spark.sparkContext.defaultParallelism > 1:
+        # one 64 KiB file: one split at 128 MiB (narrow → fan out),
+        # dozens at 1 KiB (already wide → unchanged)
+        assert fanned["128m"] and not fanned["1k"]

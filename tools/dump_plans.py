@@ -30,18 +30,6 @@ SHOWCASE = [
         "ObjectHashAggregate collect_set levels; <=4 exchanges.",
     ),
     (
-        "sql_tpch_q6",
-        C.q_sql_tpch_q6,
-        "All three predicates in PushedFilters; ReadSchema pruned to 4 "
-        "columns; the whole query is one scan + partial agg.",
-    ),
-    (
-        "sql_tpch_q10",
-        C.q_sql_tpch_q10,
-        "Fact filters pushed below the orderkey shuffle; nation "
-        "broadcast; TakeOrderedAndProject (no global sort).",
-    ),
-    (
         "events_interval_join",
         C.q_events_interval_join,
         "Bucketed range join: equi-join on (user_id, _bucket), refine "

@@ -1,6 +1,6 @@
 """Dump .explain('formatted') for bench lanes into plans/r17/ (current round).
 
-Usage: python tools/plan_r16.py <suffix> [lane ...]
+Usage: python tools/plan_bench.py <suffix> [lane ...]
     suffix: 'before' or 'after'
     lanes: default = every headline bench lane + the sf1/sf10 heavy
            builds (prefixed sf1_/sf10_).
