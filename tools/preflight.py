@@ -1,10 +1,11 @@
 """One-command end-of-round battery: the full driver-gate replica.
 
 Runs, in order: full oracle selfcheck at sf0.001 and sf0.01, the
-vanilla-ANSI sweep, pytest, and bench — each as a subprocess so one
-failure cannot poison the next session — and prints a single PASS/FAIL
-line per stage plus a final verdict. Exit code 0 iff everything is
-green.
+vanilla-ANSI sweep, pytest (tests/, then perfbench/tests), and bench —
+each as a subprocess so one failure cannot poison the next session — and
+prints a single PASS/FAIL line per stage plus a final verdict. Exit code
+0 iff everything is green. To time, plan or profile single lanes, use
+tools/lane.py.
 
 Usage: python tools/preflight.py [--skip-bench] [--skip-pytest]
 """
@@ -92,13 +93,12 @@ def main() -> int:
         ),
     ]
     if not skip_pytest:
-        stages.append(
-            (
-                "pytest",
-                [py, "-m", "pytest", "tests/", "-q"],
-                r"\b\d+ passed",
+        # two processes: perfbench's tests start sessions with their own
+        # static confs (event log), which a shared session would not have
+        for suite in ("tests/", "perfbench/tests"):
+            stages.append(
+                (f"pytest {suite}", [py, "-m", "pytest", suite, "-q"], r"\b\d+ passed")
             )
-        )
     if not skip_bench:
         stages.append(
             (
