@@ -195,9 +195,6 @@ def bench_queries(spark, sf_dir):
         "sim_lsh_topk": lambda: S.lsh_bucket_topk(emb, k=5, n_planes=None, n_rows=n_emb),
         "dedup_repeated_spans": lambda: D.repeated_ngram_spans(docs, n=5),
         "text_pii": lambda: TX.with_pii_counts(docs),
-        # materialize=True: the best-of-3 repeats the same frame
-        "text_perplexity": lambda: TX.bigram_surprisal_scores(
-            C._t(spark, sf_dir, "documents"), materialize=True),
         # micro_* lanes are graded but left out of the headline total
         "micro_event_us_long": lambda: micro_event_us("long"),
         "micro_event_us_ntz": lambda: micro_event_us("ntz"),
@@ -206,7 +203,7 @@ def bench_queries(spark, sf_dir):
     })
 
 
-def staged_queries(spark, sf_dir: str, order: str, materialize: bool) -> dict:
+def staged_queries(spark, sf_dir: str, order: str) -> dict:
     emb = C._t(spark, sf_dir, "embeddings")
     n_emb = emb.count()
     # None + n_rows engages the corpus-sized centroid / plane count: a fixed one
@@ -215,26 +212,19 @@ def staged_queries(spark, sf_dir: str, order: str, materialize: bool) -> dict:
         "dedup_semantic": lambda: S.semantic_dedup_keep(
             emb, threshold=0.3, n_centroids=None, n_rows=n_emb),
         "sim_lsh_topk": lambda: S.lsh_bucket_topk(emb, k=5, n_planes=None, n_rows=n_emb),
-        # materialize pays only across repeats; at sf10's single run its
-        # corpus-scale cache would only slow every later lane
-        "text_perplexity": lambda: TX.bigram_surprisal_scores(
-            C._t(spark, sf_dir, "documents"), materialize=materialize),
     })
 
 
 # prefix: of the tier's error, detail and baseline keys; runs: timed runs per
 # lane (warm = their best); lanes: spark -> {lane: build}; stage: spark -> None
-Tier = namedtuple("Tier", "name prefix runs lanes stage fresh_session enabled",
-                  defaults=(None, False, True))
-# One run per sf10 lane: tens of seconds each, so noise is small. sf10 starts a
-# fresh JVM: by then ~50 queries' heap state (eager localCheckpoint blocks are
-# never released) OOMed the 8g driver at the 60M-row flagship.
+Tier = namedtuple("Tier", "name prefix runs lanes stage enabled", defaults=(None, True))
+# One run per sf10 lane: tens of seconds each, so noise is small.
 TIERS = (
     Tier("sf0.1", "", 3, lambda spark: bench_queries(spark, SF_DIR)),
-    Tier("sf1", "sf1_", 2, lambda spark: staged_queries(spark, SF1_DIR, SF1_LANES, True),
+    Tier("sf1", "sf1_", 2, lambda spark: staged_queries(spark, SF1_DIR, SF1_LANES),
          stage_sf1, enabled=SF1_ENABLED),
-    Tier("sf10", "sf10_", 1, lambda spark: staged_queries(spark, SF10_DIR, SF10_LANES, False),
-         stage_sf10, fresh_session=True, enabled=SF1_ENABLED and SF10_ENABLED),
+    Tier("sf10", "sf10_", 1, lambda spark: staged_queries(spark, SF10_DIR, SF10_LANES),
+         stage_sf10, enabled=SF1_ENABLED and SF10_ENABLED),
 )
 
 
@@ -247,18 +237,26 @@ def session(app: str, extra_conf: dict | None = None):
 
 def time_noop(spark, name: str, build, runs: int, warm: int = 0):
     """Build once, ``warm`` untimed runs, then ``runs`` timed noop-sink runs;
-    ``(build s, [s per timed run])``. Jobs: ``<name> build|warm <i>|run <i>``."""
+    ``(build s, [s per timed run])``. Jobs: ``<name> build|warm <i>|run <i>``.
+    The RDDs the lane persists (its local checkpoints) are released when it
+    ends, so no lane's blocks crowd the heap of the lanes after it."""
     sc = spark.sparkContext
-    sc.setJobDescription(f"{name} build")
-    t0 = time.perf_counter()
-    df = build()
-    build_s, secs = time.perf_counter() - t0, []
-    for i in range(warm + runs):
-        sc.setJobDescription(f"{name} warm {i}" if i < warm else f"{name} run {i - warm}")
+    before = set(sc._jsc.getPersistentRDDs().keys())
+    try:
+        sc.setJobDescription(f"{name} build")
         t0 = time.perf_counter()
-        df.write.format("noop").mode("overwrite").save()
-        secs.append(time.perf_counter() - t0)
-    sc.setJobDescription(None)
+        df = build()
+        build_s, secs = time.perf_counter() - t0, []
+        for i in range(warm + runs):
+            sc.setJobDescription(f"{name} warm {i}" if i < warm else f"{name} run {i - warm}")
+            t0 = time.perf_counter()
+            df.write.format("noop").mode("overwrite").save()
+            secs.append(time.perf_counter() - t0)
+    finally:
+        sc.setJobDescription(None)
+        for rdd_id, rdd in sc._jsc.getPersistentRDDs().items():
+            if rdd_id not in before:
+                rdd.unpersist(True)  # blocking: freed before the next lane starts
     return build_s, secs[warm:]
 
 
@@ -269,21 +267,6 @@ def _control(spark, tag: str, control: dict) -> None:
         control[f"{tag}_load1m"] = (_loadavg() or [None])[0]
     except Exception:  # noqa: BLE001 — telemetry must not gate
         pass
-
-
-def _fresh_session(spark, app: str):
-    # logging off around the restart: the dying context's listener drain
-    # prints a harmless ERROR stack that would eat the stdout tail
-    spark.sparkContext.setLogLevel("OFF")
-    spark.stop()
-    spark = session(app)
-    try:
-        jvm = spark.sparkContext._jvm
-        jvm.org.apache.logging.log4j.core.config.Configurator.setLevel(
-            "org.apache.spark.scheduler.DAGScheduler", jvm.org.apache.logging.log4j.Level.OFF)
-    except Exception:  # noqa: BLE001 — log4j2 API drift
-        pass
-    return spark
 
 
 def _err(exc: Exception) -> str:
@@ -349,9 +332,6 @@ def main() -> None:
         try:
             if tier.stage:
                 tier.stage(spark)
-            if tier.fresh_session:
-                spark = _fresh_session(spark, f"geniepool-bench-{tier.name}")
-            if tier.stage:
                 _control(spark, f"pre_{tier.name}", control)
             qs = tier.lanes(spark)
         except Exception as exc:  # noqa: BLE001 — staging failure

@@ -9,8 +9,9 @@ The primary job mirrors the reference's spark-submit ``main``
 
 (The bare 8-positional-args form without ``etl`` is accepted too, for
 drop-in parity with the reference invocation.) ``t2t`` is
-``true``/``false`` — selects the parquet (T2T) vs TSV dbSNP reader,
-exactly like the reference's flag (M:28, M:159-199).
+``true``/``false`` (or ``1``/``0``, ``yes``/``no``, any case) — selects
+the parquet (T2T) vs TSV dbSNP reader, exactly like the reference's
+flag (M:28, M:159-199); any other value is a usage error.
 
 The LLM-pipeline operator families are runnable as subcommands, each
 reading parquet in and writing parquet out:
@@ -51,6 +52,11 @@ from geniepool_etl_spark.lake import write_datalake, write_status
 from geniepool_etl_spark.pipeline import convert_vcfs_to_datalake, get_status
 from geniepool_etl_spark.session import get_spark
 
+_T2T = {
+    "true": True, "1": True, "yes": True,
+    "false": False, "0": False, "no": False,
+}
+
 
 def _run_etl(args: list[str]) -> int:
     if len(args) != 8:
@@ -66,7 +72,14 @@ def _run_etl(args: list[str]) -> int:
         gnomad_path,
         alpha_path,
     ) = args
-    t2t = t2t_raw.strip().lower() in ("true", "1", "yes")
+    t2t = _T2T.get(t2t_raw.strip().lower())
+    if t2t is None:  # a typo must not silently pick the TSV dbSNP reader
+        print(
+            f"etl: t2t must be one of {'/'.join(_T2T)}, got {t2t_raw!r}",
+            file=sys.stderr,
+        )
+        print(__doc__, file=sys.stderr)
+        return 2
 
     spark = get_spark("geniepool-etl")
     lake_df = convert_vcfs_to_datalake(

@@ -36,8 +36,6 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from geniepool_etl_spark import functions as GPF
-
 from geniepool_etl_spark.functions import (
     enable_nanos_as_long,
     event_micros,
@@ -681,7 +679,7 @@ def q_a13_hll_sketch_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.hll_sketch_agg("user_id").alias("sk"),
             F.count_distinct("user_id").alias("exact_users"),
         )
-        .transform(GPF.ckpt_lazy)
+        .localCheckpoint(eager=False)
     )
     tol = lambda est, exact: (  # noqa: E731
         F.abs(est - exact) <= 0.05 * exact
@@ -1471,7 +1469,7 @@ def q_dedup_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         "id_a",
         "id_b",
         F.floor(F.col("jaccard") * 10).cast("long").alias("j_bucket"),
-    ).transform(GPF.ckpt_eager)
+    ).localCheckpoint()
     hit = (
         t.join(cand, ["id_a", "id_b"], "left_semi")
         .groupBy("j_bucket")
@@ -4663,7 +4661,7 @@ def q_pipeline_warc_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .where(F.col("keep"))
         .select("page_id", "site", "text", "n_words")
-        .transform(GPF.ckpt_lazy)
+        .localCheckpoint(eager=False)
     )
     pairs = D.minhash_lsh_pairs(
         kept.select(F.col("page_id").alias("doc_id"), "text"),
@@ -5504,7 +5502,7 @@ def q_obs_expectations(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # both key rules read ONLY o_orderkey — share one materialized
     # column frame so orders is scanned once, not twice (r16)
-    okeys = o.select("o_orderkey").transform(GPF.ckpt_lazy)
+    okeys = o.select("o_orderkey").localCheckpoint(eager=False)
     u = uniqueness_check(okeys, "o_orderkey", "o_orderkey_unique")
     r = referential_check(
         li, "l_orderkey", okeys, "o_orderkey", "li_orderkey_in_orders"
@@ -5515,7 +5513,7 @@ def q_obs_expectations(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the lazy checkpoint, so the feed is scanned once (r16)
     ev_us = ev.select(
         event_micros(ev, "ts").alias("ts_us")
-    ).transform(GPF.ckpt_lazy)
+    ).localCheckpoint(eager=False)
     mx = ev_us.agg(F.max("ts_us")).collect()[0][0]
     hour = 3_600_000_000
     f1 = freshness_check(
@@ -7868,7 +7866,7 @@ def q_sql_tpch_q11(spark: SparkSession, sf_dir: str) -> DataFrame:
     summation order nor BIGINT overflow can flip a borderline group
     at any supported scale."""
     _t(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
-    g = spark.sql(_SQL_Q11_GROUPED).transform(GPF.ckpt_lazy)
+    g = spark.sql(_SQL_Q11_GROUPED).localCheckpoint(eager=False)
     s = g.agg(
         F.count("l_partkey").alias("n_parts"),
         F.sum(F.col("value_cents").cast("decimal(38,0)")).alias(
@@ -7936,7 +7934,7 @@ def q_sql_tpch_q15(spark: SparkSession, sf_dir: str) -> DataFrame:
     produced for it (max over an empty quarter is NULL ⇒ no rows,
     unchanged)."""
     _t(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
-    rev = spark.sql(_SQL_Q15_REVENUE).transform(GPF.ckpt_lazy)
+    rev = spark.sql(_SQL_Q15_REVENUE).localCheckpoint(eager=False)
     mx = rev.agg(F.max("total_cents").alias("_mx"))
     sup = _t(spark, sf_dir, "supplier")
     return (
@@ -8096,7 +8094,7 @@ def q_pipeline_web_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     # four INDEPENDENT consumers (gates, classifier, dedup group-by,
     # the final join spine) — eager materialization, per the SCALE.md
     # consumer-topology rule: lazy only dedupes sequential consumers
-    cleaned = cleaned.transform(GPF.ckpt_eager)
+    cleaned = cleaned.localCheckpoint()
     gates = TX.gopher_quality_gates(cleaned).select(
         "doc_id", F.col("keep").alias("g_keep"), "n_words"
     )

@@ -17,6 +17,10 @@ TIMESTAMP_NTZ (TIMESTAMP(MICROS, isAdjustedToUTC=false)), or a plain
 UTC-adjusted TIMESTAMP — keeping all downstream event-time arithmetic
 timezone-proof integer math. The dtype branch lives in ONE place
 (:func:`event_micros`); everything else consumes ``ts_us``.
+
+Operators materialize multi-consumer intermediates with Spark's
+``localCheckpoint``, which a lost executor cannot recompute, so they
+are not safe under dynamic allocation.
 """
 
 from __future__ import annotations
@@ -105,54 +109,6 @@ def event_micros(df: DataFrame, ts_col: str = "ts") -> Column:
         f"event_micros: unsupported dtype {dt} for column {ts_col!r}; "
         "expected LONG (nanos), TIMESTAMP, or TIMESTAMP_NTZ"
     )
-
-
-MATERIALIZE_CONF = "spark.geniepool.materialize"
-
-
-def _materialize(df: DataFrame, eager: bool) -> DataFrame:
-    """Materialization barrier for a multi-consumer intermediate
-    frame, gated by the session conf ``spark.geniepool.materialize``
-    (r17, ADVICE):
-
-    - ``localCheckpoint`` (default): the library's measured-fastest
-      local mode — truncates lineage, blocks live in executor
-      storage. The documented trade: an executor loss makes the job
-      unrecoverable, so it is NOT safe under dynamic allocation.
-    - ``persist``: ``MEMORY_AND_DISK`` cache that KEEPS lineage —
-      the production setting for clusters where executors come and
-      go; consumers still compute the frame once.
-    - ``off``: no barrier at all (every consumer replays the
-      lineage — the pre-materialization plan, for A/B measurement).
-
-    Used via ``DataFrame.transform`` so call sites stay chainable:
-    ``df.transform(ckpt_lazy)`` / ``df.transform(ckpt_eager)``.
-    Eagerness only applies to the checkpoint mode; ``persist`` is
-    inherently lazy and populates at the first action either way.
-    Any other value raises ``ValueError`` (the match is exact, so
-    ``Persist`` is rejected too).
-    """
-    mode = df.sparkSession.conf.get(MATERIALIZE_CONF, "localCheckpoint")
-    if mode == "off":
-        return df
-    if mode == "persist":
-        return df.persist()
-    if mode == "localCheckpoint":
-        return df.localCheckpoint(eager=eager)
-    raise ValueError(
-        f"{MATERIALIZE_CONF}={mode!r}: expected one of "
-        "'localCheckpoint', 'persist', 'off'"
-    )
-
-
-def ckpt_lazy(df: DataFrame) -> DataFrame:
-    """Lazy materialization barrier (see :func:`_materialize`)."""
-    return _materialize(df, eager=False)
-
-
-def ckpt_eager(df: DataFrame) -> DataFrame:
-    """Eager materialization barrier (see :func:`_materialize`)."""
-    return _materialize(df, eager=True)
 
 
 def fan_out_if_narrow(df: DataFrame) -> DataFrame:

@@ -28,8 +28,6 @@ from collections.abc import Callable
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from geniepool_etl_spark import functions as GPF
-
 from geniepool_etl_spark.functions import fast_hash64, portable_hash32
 
 HashFn = Callable[[Column, int], Column]
@@ -216,7 +214,7 @@ def repeated_ngram_spans(
     # (2.59 s vs 0.66 s). Same lineage-truncation pattern as the
     # minhash signature frame; on a multi-executor cluster swap for
     # persist(MEMORY_AND_DISK) if executor loss matters.
-    g = g.select("id", "pos", key.alias("gk")).transform(GPF.ckpt_lazy)
+    g = g.select("id", "pos", key.alias("gk")).localCheckpoint(eager=False)
     freq = g.groupBy("gk").agg(
         F.countDistinct("id").alias("n_docs"),
         F.count(F.lit(1)).alias("n_occ"),
@@ -281,12 +279,12 @@ def jaccard_pairs(
     one shingling pass, one cap-window exchange; everything computes
     inside the first execution from the parquet inputs.
     """
-    sh = word_shingles(df, n, text_col, id_col).transform(GPF.ckpt_lazy)
+    sh = word_shingles(df, n, text_col, id_col).localCheckpoint(eager=False)
     # |docs|-sized, consumed twice (size_a and size_b re-attach)
     sizes = (
         sh.groupBy("id")
         .agg(F.count(F.lit(1)).alias("sz"))
-        .transform(GPF.ckpt_lazy)
+        .localCheckpoint(eager=False)
     )
 
     # Frequency cap as a window count over the shingle key: one pass
@@ -300,7 +298,7 @@ def jaccard_pairs(
         )
         .where(F.col("_f") <= max_shingle_freq)
         .drop("_f")
-        .transform(GPF.ckpt_lazy)
+        .localCheckpoint(eager=False)
     )
 
     a = capped.select(F.col("id").alias("id_a"), "shingle")
@@ -463,7 +461,7 @@ def minhash_index(
     assert num_perm % bands == 0
     sigs = minhash_signatures(
         df, num_perm, n, text_col, id_col, hash_fn
-    ).transform(GPF.ckpt_eager)
+    ).localCheckpoint()
     return _banded_keys(sigs, num_perm, bands, max_bucket, hash_fn).join(
         sigs, "id"
     )
@@ -494,7 +492,7 @@ def incremental_minhash_candidates(
     assert num_perm % bands == 0
     b_sigs = minhash_signatures(
         batch, num_perm, n, text_col, id_col, hash_fn
-    ).transform(GPF.ckpt_lazy)
+    ).localCheckpoint(eager=False)
     b_keys = _banded_keys(b_sigs, num_perm, bands, max_bucket, hash_fn)
     pairs = (
         b_keys.select(F.col("id").alias("batch_id"), "band", "key")
@@ -559,7 +557,7 @@ def minhash_lsh_pairs(
     # persist(MEMORY_AND_DISK) if executor loss matters.
     sigs = minhash_signatures(
         df, num_perm, n, text_col, id_col, hash_fn
-    ).transform(GPF.ckpt_lazy)
+    ).localCheckpoint(eager=False)
     banded = _banded_keys(sigs, num_perm, bands, max_bucket, hash_fn)
 
     a = banded.select(F.col("id").alias("id_a"), "band", "key")
@@ -623,12 +621,12 @@ def cross_jaccard(
     sh_l = (
         word_shingles(left, n, text_col, id_col)
         .withColumnRenamed("id", "id_l")
-        .transform(GPF.ckpt_lazy)
+        .localCheckpoint(eager=False)
     )
     sh_r = (
         word_shingles(right, n, text_col, id_col)
         .withColumnRenamed("id", "id_r")
-        .transform(GPF.ckpt_lazy)
+        .localCheckpoint(eager=False)
     )
     sizes_l = sh_l.groupBy("id_l").agg(F.count(F.lit(1)).alias("size_l"))
     sizes_r = sh_r.groupBy("id_r").agg(F.count(F.lit(1)).alias("size_r"))
@@ -745,7 +743,7 @@ def _alternating_star(
         pairs.select(F.col("id_a").alias("id"))
         .unionByName(pairs.select(F.col("id_b").alias("id")))
         .distinct()
-        .transform(GPF.ckpt_eager)
+        .localCheckpoint()
     )
     # canonical orientation: u > v (min-wards), self-pairs dropped
     edges = (
@@ -755,7 +753,7 @@ def _alternating_star(
         )
         .where(F.col("u") != F.col("v"))
         .distinct()
-        .transform(GPF.ckpt_eager)
+        .localCheckpoint()
     )
     rounds = 0
     for it in range(max_iter):
@@ -785,7 +783,7 @@ def _alternating_star(
             .select(F.col("v").alias("u"), F.col("_m").alias("v"))
             .unionByName(ss.select("u", F.col("_m").alias("v")))
             .distinct()
-            .transform(GPF.ckpt_eager)
+            .localCheckpoint()
         )
         if (it + 1) % check_every == 0 or it == max_iter - 1:
             changed = not (
@@ -952,7 +950,7 @@ def hash_band_pairs(
         df.select(
             F.col(id_col).alias("id"), F.col(hash_col).alias("h")
         )
-        .transform(GPF.ckpt_lazy)
+        .localCheckpoint(eager=False)
         .select("id", "h", F.explode(band_arr).alias("bk"))
         .select(
             "id", "h",

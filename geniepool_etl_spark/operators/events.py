@@ -20,8 +20,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from geniepool_etl_spark import functions as GPF
-
 from geniepool_etl_spark.functions import event_micros
 
 US_PER_SEC = 1_000_000
@@ -577,7 +575,7 @@ def transition_counts(df: DataFrame) -> DataFrame:
     counts = (
         seq.groupBy("prev_type", F.col("event_type").alias("next_type"))
         .agg(F.count(F.lit(1)).alias("n"))
-        .transform(GPF.ckpt_lazy)
+        .localCheckpoint(eager=False)
     )
     totals = counts.groupBy("prev_type").agg(F.sum("n").alias("_total"))
     return (
@@ -814,7 +812,7 @@ def funnel_stages(
         reached = (
             ev.groupBy("user")
             .agg(F.min("_ts").alias("_t_prev"))
-            .transform(GPF.ckpt_lazy)
+            .localCheckpoint(eager=False)
         )
         stage_frames.append(
             reached.select("user", F.lit(i + 1).alias("_stage"))
@@ -945,7 +943,7 @@ def gap_fill_hourly(df: DataFrame, user_mod: int = 15) -> DataFrame:
     # tiny next to the event stream — so eager materialization is the
     # cheap side of the consumer-topology rule (SCALE.md), and the
     # span aggregate then reads user×hour rows, not events.
-    obs = obs.transform(GPF.ckpt_eager)
+    obs = obs.localCheckpoint()
     span = obs.groupBy("user_id").agg(
         F.min("h").alias("_h0"), F.max("h").alias("_h1")
     )
@@ -995,7 +993,7 @@ def rfm_segments(df: DataFrame) -> DataFrame:
     # map) — unchecked, each replays the full event scan (audited: 4
     # FileScans). The per-user frame is the small side by definition;
     # eager materialization per the consumer-topology rule.
-    per_user = per_user.transform(GPF.ckpt_eager)
+    per_user = per_user.localCheckpoint()
     gmax = per_user.agg(F.max("_last_us").alias("_gmax"))
     metrics = per_user.crossJoin(F.broadcast(gmax)).select(
         "user_id",

@@ -22,8 +22,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from geniepool_etl_spark import functions as GPF
-
 
 def cooccurrence_edges(
     df: DataFrame,
@@ -94,7 +92,7 @@ def triangle_counts(
         # replays the whole upstream projection per site — the same
         # lineage-replay trap dedup's signature frame hits. Lazy
         # localCheckpoint materializes it once at first action.
-        .transform(GPF.ckpt_lazy)
+        .localCheckpoint(eager=False)
     )
     deg = (
         und.select(F.col("a").alias("node"))
@@ -121,7 +119,7 @@ def triangle_counts(
     o = e.select(
         F.when(a_first, F.col("a")).otherwise(F.col("b")).alias("lo"),
         F.when(a_first, F.col("b")).otherwise(F.col("a")).alias("hi"),
-    ).transform(GPF.ckpt_lazy)
+    ).localCheckpoint(eager=False)
     wedges = (
         o.alias("e1")
         .join(
@@ -179,7 +177,7 @@ def common_neighbor_links(
         .where(F.col("a") != F.col("b"))
         .distinct()
         # feeds adjacency (twice), the anti join, and degree counts
-        .transform(GPF.ckpt_lazy)
+        .localCheckpoint(eager=False)
     )
     adj = und.select(F.col("a").alias("node"), F.col("b").alias("nb")).unionAll(
         und.select(F.col("b").alias("node"), F.col("a").alias("nb"))
@@ -274,14 +272,14 @@ def pagerank_fixedpoint(
         F.col(src_col).cast("long").alias("src"),
         F.col(dst_col).cast("long").alias("dst"),
     )
-    e = e.transform(GPF.ckpt_lazy)
+    e = e.localCheckpoint(eager=False)
     deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-    ed = e.join(deg, "src").transform(GPF.ckpt_lazy)
+    ed = e.join(deg, "src").localCheckpoint(eager=False)
     nodes = (
         e.select(F.col("src").alias("node"))
         .union(e.select(F.col("dst").alias("node")))
         .distinct()
-        .transform(GPF.ckpt_lazy)
+        .localCheckpoint(eager=False)
     )
     tot = nodes.agg(F.count(F.lit(1)).alias("_n"))
     base = F.expr(f"CAST({(100 - damping_pct) * scale} AS BIGINT) div (100 * _n)")

@@ -28,8 +28,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from geniepool_etl_spark import functions as GPF
-
 from geniepool_etl_spark.functions import portable_hash32
 from geniepool_etl_spark.operators.text import words_col
 
@@ -271,7 +269,7 @@ def flatten_chat_trees(
         F.col(parent_col).alias("_parent"),
         F.col(role_col).alias("_role"),
         F.col(text_col).alias("_text"),
-    ).transform(GPF.ckpt_lazy)
+    ).localCheckpoint(eager=False)
     # msg ids are only unique PER CONVERSATION in real chat-tree
     # dumps (ShareGPT-style restarting counters), so every probe must
     # carry the conversation key or paths splice across conversations
@@ -282,7 +280,7 @@ def flatten_chat_trees(
             F.col("_parent").alias("_has_kids_id"),
         )
         .distinct()
-        .transform(GPF.ckpt_lazy)
+        .localCheckpoint(eager=False)
     )
     live = (
         m.where(F.col("_parent").isNull())

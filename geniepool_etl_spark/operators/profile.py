@@ -14,8 +14,6 @@ from functools import reduce
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from geniepool_etl_spark import functions as GPF
-
 
 def profile_columns(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
     """(column, n_rows, n_nulls, n_distinct, min_v, max_v) per column.
@@ -36,7 +34,7 @@ def profile_columns(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
     # the 1-row wide aggregate is consumed once PER COLUMN by the
     # union legs below — lazy-materialize it so the full-table
     # profiling scan runs once, not |cols| times.
-    wide = df.agg(*aggs).transform(GPF.ckpt_lazy)
+    wide = df.agg(*aggs).localCheckpoint(eager=False)
     parts = [
         wide.select(
             F.lit(c).alias("column"),
@@ -153,7 +151,7 @@ def psi_by_key(
             F.coalesce("n_old", F.lit(0)).alias("n_old"),
             F.coalesce("n_new", F.lit(0)).alias("n_new"),
         )
-        .transform(GPF.ckpt_lazy)
+        .localCheckpoint(eager=False)
     )
     # 1-row totals (count of keys + grand totals) broadcast back —
     # the |keys|-sized frame never re-shuffles
@@ -214,7 +212,7 @@ def expectations(
     # the 1-row wide aggregate is consumed once PER RULE by the
     # union legs below — lazy-materialize it so the gated table is
     # scanned once, not |rules| times.
-    wide = df.agg(*aggs).transform(GPF.ckpt_lazy)
+    wide = df.agg(*aggs).localCheckpoint(eager=False)
     parts = [
         wide.select(
             F.lit(name).alias("rule"),
@@ -377,7 +375,7 @@ def ks_statistic(
             F.coalesce("d_old", F.lit(0)).alias("d_old"),
             F.coalesce("d_new", F.lit(0)).alias("d_new"),
         )
-        .transform(GPF.ckpt_lazy)
+        .localCheckpoint(eager=False)
     )
     w = Window.orderBy("v").rowsBetween(Window.unboundedPreceding, 0)
     cum = merged.select(

@@ -14,8 +14,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from geniepool_etl_spark import functions as GPF
-
 from geniepool_etl_spark.functions import portable_hash32
 
 MOD = 10_000  # fraction resolution: 0.01%
@@ -347,7 +345,7 @@ def cohen_kappa(
     cells = (
         pair.groupBy("a", "b")
         .agg(F.count(F.lit(1)).alias("n"))
-        .transform(GPF.ckpt_lazy)
+        .localCheckpoint(eager=False)
     )
     a_marg = cells.groupBy("a").agg(F.sum("n").alias("na"))
     b_marg = cells.groupBy("b").agg(F.sum("n").alias("nb"))
@@ -446,7 +444,7 @@ def bradley_terry(
             (F.col("raw") / F.col("_s") * F.lit(float(n_items)))
             .alias("r"),
         )
-        r = r.transform(GPF.ckpt_lazy)
+        r = r.localCheckpoint(eager=False)
     return r.select(
         F.col("i").alias("item"), F.round("r", 4).alias("rating")
     )

@@ -44,8 +44,6 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window
-
-from geniepool_etl_spark import functions as GPF
 from pyspark.sql.types import DoubleType
 
 
@@ -623,7 +621,7 @@ def ivf_kmeans_centroids(
                 F.coalesce(F.col("cvec"), F.col("_old_v")).alias("cvec"),
                 F.coalesce(F.col("cnorm"), F.col("_old_n")).alias("cnorm"),
             )
-            .transform(GPF.ckpt_eager)
+            .localCheckpoint()
         )
     return cents
 
@@ -1794,7 +1792,7 @@ def mmr_rerank(
     # the pairwise self-join — unchecked, every consumer replays the
     # corpus-wide scoring pass (audited: 8 FileScans). Eager, per the
     # consumer-topology rule; the frame is tiny by construction.
-    cands = cands.transform(GPF.ckpt_eager)
+    cands = cands.localCheckpoint()
     rel = cands.select(
         "q_id",
         "n_id",
@@ -1809,7 +1807,7 @@ def mmr_rerank(
     cv = (
         cands.select("q_id", "n_id")
         .join(c, "n_id")
-        .transform(GPF.ckpt_eager)
+        .localCheckpoint()
     )
     # q_id-keyed candidate self-join (alias-qualified: both sides are
     # the same frame) — O(pool²) rows per query by construction
@@ -1984,7 +1982,7 @@ def pca_power_component(
                 F.col("_s"), lambda s: s / F.col("_n")
             ).alias("v")
         )
-        v = v.transform(GPF.ckpt_lazy)
+        v = v.localCheckpoint(eager=False)
     return v.select(
         F.posexplode("v").alias("pos", "loading")
     ).select("pos", F.round("loading", 4).alias("loading"))

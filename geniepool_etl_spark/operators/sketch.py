@@ -22,8 +22,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from geniepool_etl_spark import functions as GPF
-
 from geniepool_etl_spark.functions import portable_hash32
 
 
@@ -198,7 +196,7 @@ def loghist_quantiles_from_sketch(
     # once so the data-scale pass that BUILT it does not replay per
     # consumer (registry plan audit: 4 scans in the a19/stream
     # loghist plans).
-    h = h.transform(GPF.ckpt_lazy)
+    h = h.localCheckpoint(eager=False)
     # unpartitioned Window is safe HERE: the input is the SKETCH, not
     # data — ≤ 16 + 8·55 rows by construction (one per occupied
     # bucket), the deliberate small-frame pattern. The WindowExec

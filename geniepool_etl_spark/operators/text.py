@@ -20,8 +20,6 @@ import re
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from geniepool_etl_spark import functions as GPF
-
 from geniepool_etl_spark.functions import PORTABLE_HASH_MOD, portable_hash32
 
 # Tokens that match "word-ish" runs: letters, digits, or a single other
@@ -357,7 +355,7 @@ def with_lang_id_trigram(
     # ``trigram_lang_profiles`` each consumer would otherwise replay
     # that full corpus explode+aggregate+window pass (registry plan
     # audit: 2 extra corpus scans). Tiny — lazy-materialize once.
-    profiles = profiles.transform(GPF.ckpt_lazy)
+    profiles = profiles.localCheckpoint(eager=False)
     langs = profiles.select("lang").distinct()
     # tiny broadcast fan-out: every doc profile row scores against
     # every candidate language (|languages| copies), then the
@@ -415,7 +413,7 @@ def tfidf_top_terms(
     tf = (
         tokens.groupBy("id", "term")
         .agg(F.count(F.lit(1)).alias("tf"))
-        .transform(GPF.ckpt_lazy)
+        .localCheckpoint(eager=False)
     )
     dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     n_docs = df.select(
@@ -835,18 +833,18 @@ def dsir_importance_weights(
     pb = (
         raw_b.groupBy(id_col, "bucket")
         .agg(F.count(F.lit(1)).alias("n"))
-        .transform(GPF.ckpt_lazy)
+        .localCheckpoint(eager=False)
     )
     cq = (
         pb.groupBy("bucket")
         .agg(F.sum("n").cast("long").alias("cq"))
-        .transform(GPF.ckpt_lazy)
+        .localCheckpoint(eager=False)
     )
     cp = (
         buckets(target)
         .groupBy("bucket")
         .agg(F.count(F.lit(1)).alias("cp"))
-        .transform(GPF.ckpt_lazy)
+        .localCheckpoint(eager=False)
     )
     ratio = (
         cq.join(cp, "bucket", "full_outer")
@@ -950,7 +948,7 @@ def dsir_resample(
         # |docs|-sized, two consumers (the top-k cut and the join
         # back) — without materialization the whole importance-weight
         # pipeline replayed twice (r16)
-    ).transform(GPF.ckpt_lazy)
+    ).localCheckpoint(eager=False)
     topk = (
         keyed.orderBy(
             F.col("gumbel_key").desc(), F.col(id_col).asc()
@@ -1052,7 +1050,7 @@ def bpe_learn_merges(
         # replayed the full scan+explode corpus pass (7 scans in one
         # plan). The ROUND chain itself stays un-checkpointed (the
         # measured ~15% regression below).
-        .transform(GPF.ckpt_lazy)
+        .localCheckpoint(eager=False)
     )
     vocab = words.select(
         F.concat(
@@ -1181,7 +1179,7 @@ def bpe_token_counts(
         # sf10 decade). Checkpointing the tiny aggregate pins the
         # whole query to exactly TWO corpus passes: this count and
         # the billing probe below.
-        .transform(GPF.ckpt_lazy)
+        .localCheckpoint(eager=False)
     )
     for _step in range(1, k + 1):
         # same shape as bpe_learn_merges: doubled-space reps across
@@ -1313,7 +1311,7 @@ def bpe_token_counts_byte_fallback(
         _occ(learn_df)
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("freq_learn"))
-        .transform(GPF.ckpt_lazy)
+        .localCheckpoint(eager=False)
     )
     # learn-corpus character inventory: one row, broadcast — the
     # in-vocabulary test for the fallback CASE (tiny: |distinct
@@ -1348,7 +1346,7 @@ def bpe_token_counts_byte_fallback(
         # same |vocab|-row barrier as bpe_token_counts: the rounds and
         # the word_tok branch otherwise each replay the distinct-word
         # corpus pass (and through it the learn-corpus join subtree)
-        .transform(GPF.ckpt_lazy)
+        .localCheckpoint(eager=False)
     )
     for _step in range(1, k + 1):
         arred = vocab.select(
@@ -1416,7 +1414,6 @@ def bigram_surprisal_scores(
     text_col: str = "text",
     id_col: str = "doc_id",
     scale: int = 10_000,
-    materialize: bool = False,
 ) -> DataFrame:
     """Per-document mean bigram surprisal under the corpus's own
     bigram LM — the CCNet-style perplexity quality signal: templated
@@ -1489,7 +1486,7 @@ def bigram_surprisal_scores(
     counts = (
         occ.groupBy("l", "r")
         .agg(F.count(F.lit(1)).alias("n"))
-        .transform(GPF.ckpt_lazy)
+        .localCheckpoint(eager=False)
     )
     # corpus bigram total N = Σ n over the counts frame (identical
     # BIGINT to the former direct Σ max(|words|−1, 0) corpus scan)
@@ -1515,14 +1512,6 @@ def bigram_surprisal_scores(
             .alias("s"),
         )
     )
-    if materialize:
-        # opt-in: pays only across REPEAT executions of the same frame
-        # (the plan has a single consumer, so one-shot runs gain
-        # nothing) — default False (r12) because the cache is never
-        # unpersisted and a lingering corpus-sized block set is
-        # exactly the heap co-tenancy that inflates whatever runs
-        # next in the session (the r11 lesson, see SCALE.md)
-        scored = scored.persist()
     return scored.groupBy(id_col).agg(
         F.count(F.lit(1)).cast("long").alias("n_bigrams"),
         F.round(
@@ -1570,7 +1559,7 @@ def bigram_next_words(
         df.select(F.explode(bigrams).alias("p"))
         .groupBy(F.col("p.l").alias("word"), F.col("p.r").alias("next"))
         .agg(F.count(F.lit(1)).alias("n"))
-        .transform(GPF.ckpt_lazy)
+        .localCheckpoint(eager=False)
     )
     totals = counts.groupBy("word").agg(F.sum("n").alias("_total"))
     ranked = (
@@ -1654,7 +1643,7 @@ def pmi_collocations(
     # consumer-topology rule (SCALE.md; same call as rfm_segments /
     # gap_fill_hourly): ONE tokenize pass, margins become aggregates
     # over the materialized |vocab|²-bounded frame.
-    counts = counts.transform(GPF.ckpt_eager)
+    counts = counts.localCheckpoint()
     left = counts.groupBy("l").agg(F.sum("n").alias("_cl"))
     right = counts.groupBy("r").agg(F.sum("n").alias("_cr"))
     tot = counts.agg(F.sum("n").alias("_N"))
@@ -2140,7 +2129,7 @@ def _unigram_train(
     wfreq = (
         occ.groupBy("w")
         .agg(F.count(F.lit(1)).cast("long").alias("freq"))
-        .transform(GPF.ckpt_lazy)
+        .localCheckpoint(eager=False)
     )
     pieces_expr = (
         "flatten(transform(sequence(1, length(w)), i -> "
@@ -2152,7 +2141,7 @@ def _unigram_train(
         wfreq.select(F.explode(F.expr(pieces_expr)).alias("p"), "freq")
         .groupBy("p")
         .agg(F.sum("freq").cast("long").alias("f"))
-        .transform(GPF.ckpt_lazy)
+        .localCheckpoint(eager=False)
     )
     chars = pf.where(F.length("p") == 1)
     multi = (
@@ -2305,7 +2294,7 @@ def wordpiece_token_counts(
     wfreq = (
         occ.groupBy("w")
         .agg(F.count(F.lit(1)).cast("long").alias("freq"))
-        .transform(GPF.ckpt_lazy)
+        .localCheckpoint(eager=False)
     )
     # piece candidates with the continuation distinction: position 1
     # emits the raw substring, positions > 1 emit '##' || substring
@@ -2596,7 +2585,7 @@ def kneser_ney_bigram(
         df.select(F.explode(bigrams).alias("p"))
         .groupBy(F.col("p.l").alias("word"), F.col("p.r").alias("next"))
         .agg(F.count(F.lit(1)).alias("n"))
-        .transform(GPF.ckpt_lazy)
+        .localCheckpoint(eager=False)
     )
     fwd = counts.groupBy("word").agg(
         F.sum("n").alias("c1"), F.count(F.lit(1)).alias("fwd_types")
@@ -2730,7 +2719,7 @@ def ccnet_perplexity_buckets(
         lang_bigrams(df)
         .groupBy("lang", "l", "r")
         .agg(F.count(F.lit(1)).alias("n"))
-        .transform(GPF.ckpt_lazy)
+        .localCheckpoint(eager=False)
     )
     fwd = counts.groupBy("lang", "l").agg(
         F.sum("n").alias("c1"), F.count(F.lit(1)).alias("fwd_types")
@@ -2773,7 +2762,7 @@ def ccnet_perplexity_buckets(
             .alias("ppl_milli"),
         )
         # |docs|-sized, three consumers (hist, nl, the output spine)
-        .transform(GPF.ckpt_lazy)
+        .localCheckpoint(eager=False)
     )
     # count-based thresholds over the per-language score HISTOGRAM
     hist = docv.groupBy("lang", "ppl_milli").agg(

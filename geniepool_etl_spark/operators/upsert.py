@@ -21,8 +21,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from geniepool_etl_spark import functions as GPF
-
 
 def merge_upsert(
     base: DataFrame, updates: DataFrame, keys: list[str]
@@ -68,7 +66,7 @@ def upsert_partitioned_lake(
     # (With a table format — Delta/Iceberg — MERGE INTO does this
     # transactionally; on raw parquet the materialize-then-overwrite is
     # the price of the format.)
-    merged = merge_upsert(base, updates, keys).transform(GPF.ckpt_eager)
+    merged = merge_upsert(base, updates, keys).localCheckpoint()
     (
         merged.repartition(*[F.col(c) for c in partition_cols])
         .write.mode("overwrite")
@@ -293,7 +291,7 @@ def scd2_apply_batch(
         # batch-sized (one row per touched key): both consumers (the
         # seed rows and the version bases) read the materialized
         # slice instead of re-scanning the standing history
-        .transform(GPF.ckpt_lazy)
+        .localCheckpoint(eager=False)
     )
     seed = cur.select(
         F.col(key),

@@ -1,4 +1,5 @@
-"""bench.py's grading pass and stdout line: pure functions, no Spark."""
+"""bench.py's grading pass and stdout line (pure functions), and the
+checkpoint release at the end of each lane."""
 
 from __future__ import annotations
 
@@ -127,3 +128,22 @@ def test_compact_line_drops_control_then_load_then_queries():
         assert kept["cpus"] == 4 and "control" in out
         seen.add(dropped)
     assert len(seen) == 4
+
+
+def test_time_noop_releases_lane_checkpoints(spark):
+    """A lane's lazy and eager local checkpoints are released when it ends:
+    the persistent-RDD ids and storage memory return to their pre-lane state."""
+    sc = spark.sparkContext
+    memory = sc._jvm.org.apache.spark.SparkEnv.get().memoryManager()
+
+    def build():
+        lazy = spark.range(10**5).localCheckpoint(eager=False)
+        eager = spark.range(10**5).selectExpr("id * 2 AS id").localCheckpoint()
+        return lazy.union(eager)
+
+    ids_before = set(sc._jsc.getPersistentRDDs().keys())
+    used_before = memory.storageMemoryUsed()
+    _, secs = bench.time_noop(spark, "release_probe", build, runs=2, warm=1)
+    assert len(secs) == 2
+    assert set(sc._jsc.getPersistentRDDs().keys()) == ids_before
+    assert abs(memory.storageMemoryUsed() - used_before) < 1 << 20

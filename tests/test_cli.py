@@ -53,6 +53,23 @@ def test_cli_etl_wrong_arity_returns_usage():
     assert main(["etl", "a", "b"]) == 2
 
 
+def test_cli_etl_rejects_unknown_t2t_before_spark(monkeypatch, capsys):
+    import geniepool_etl_spark.cli as cli
+
+    def no_session(*_a, **_k):
+        raise AssertionError("a Spark session started")
+
+    monkeypatch.setattr(cli, "get_spark", no_session)
+    for bad in ("ture", "t2t", "", "2"):
+        args = ["in", "out", "status", "impact", "dbsnp", bad, "gnomad", "alpha"]
+        assert main(["etl", *args]) == 2
+        assert main(args) == 2  # the bare reference form
+        assert "t2t must be one of true/1/yes/false/0/no" in capsys.readouterr().err
+    for good in ("TRUE", " No ", "1", "0", "yes", "false"):  # valid: reaches the session
+        with pytest.raises(AssertionError, match="session started"):
+            main(["etl", "in", "out", "status", "impact", "dbsnp", good, "gnomad", "alpha"])
+
+
 def test_cli_pack(spark, tmp_path):
     out = str(tmp_path / "pack")
     assert (

@@ -393,24 +393,6 @@ def test_int8_topk_large_query_fallback(spark, monkeypatch):
     assert [tuple(r) for r in got] == [tuple(r) for r in base]
 
 
-def test_materialize_rejects_unknown_mode(spark):
-    # a mistyped mode must fail loudly, not fall back to localCheckpoint
-    import pytest
-
-    from geniepool_etl_spark.functions import MATERIALIZE_CONF, ckpt_lazy
-
-    saved = spark.conf.get(MATERIALIZE_CONF, None)
-    spark.conf.set(MATERIALIZE_CONF, "Persist")
-    try:
-        with pytest.raises(ValueError, match="'Persist'"):
-            spark.range(3).transform(ckpt_lazy)
-    finally:
-        if saved is None:
-            spark.conf.unset(MATERIALIZE_CONF)
-        else:
-            spark.conf.set(MATERIALIZE_CONF, saved)
-
-
 def test_fan_out_parses_spark_byte_strings(spark, caplog):
     # maxPartitionBytes in any form Spark accepts ('128m', '1k') must
     # give the same fan-out decision as the plain byte form, without
