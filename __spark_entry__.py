@@ -50,7 +50,7 @@ def _rotation_order(names) -> list[str]:
     proven the round it lands), then ascending last-green round from
     the CORRECTNESS_r*.json history (stalest external record
     re-proven first), registry order as the tiebreak. The registry
-    itself stays grouped by family; rotation is a view. With 286
+    itself stays grouped by family; rotation is a view. With 279
     lanes and a 50-lane window this bounds every lane's external
     re-proof cycle at ~6 rounds (r12 verdict, process nit #1)."""
     import glob

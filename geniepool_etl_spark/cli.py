@@ -429,17 +429,32 @@ def _run_table(ns: argparse.Namespace) -> int:
     return 0
 
 
+_COMMANDS = {
+    "dedup": _run_dedup,
+    "profile": _run_profile,
+    "text-stats": _run_text_stats,
+    "sim-topk": _run_sim_topk,
+    "pack": _run_pack,
+    "chunk": _run_chunk,
+    "shuffle": _run_shuffle,
+    "pii": _run_pii,
+    "compact": _run_compact,
+    "recover": _run_recover,
+    "corpus-build": _run_corpus_build,
+    "diff": _run_diff,
+    "scd2": _run_scd2,
+    "dq": _run_dq,
+    "table": _run_table,
+}
+
+
 def main(argv: list[str] | None = None) -> int:
     args = list(sys.argv[1:] if argv is None else argv)
-    # reference-compatible bare form: 8 positional args = the ETL job
-    if len(args) == 8 and args[0] not in (
-        "etl", "dedup", "profile", "text-stats", "sim-topk", "pack",
-        "chunk", "shuffle", "pii", "compact", "recover", "corpus-build",
-        "diff", "scd2", "dq", "table",
-    ):
-        return _run_etl(args)
     if args and args[0] == "etl":
         return _run_etl(args[1:])
+    # reference-compatible bare form: 8 positional args = the ETL job
+    if len(args) == 8 and args[0] not in _COMMANDS:
+        return _run_etl(args)
 
     p = argparse.ArgumentParser(prog="geniepool_etl_spark")
     sub = p.add_subparsers(dest="cmd", required=True)
@@ -538,23 +553,7 @@ def main(argv: list[str] | None = None) -> int:
     s.add_argument("--keep-versions", type=int, default=2)
     s.add_argument("--min-age-seconds", type=int, default=3600)
     ns = p.parse_args(args)
-    return {
-        "dedup": _run_dedup,
-        "profile": _run_profile,
-        "text-stats": _run_text_stats,
-        "sim-topk": _run_sim_topk,
-        "pack": _run_pack,
-        "chunk": _run_chunk,
-        "shuffle": _run_shuffle,
-        "pii": _run_pii,
-        "compact": _run_compact,
-        "recover": _run_recover,
-        "corpus-build": _run_corpus_build,
-        "diff": _run_diff,
-        "scd2": _run_scd2,
-        "dq": _run_dq,
-        "table": _run_table,
-    }[ns.cmd](ns)
+    return _COMMANDS[ns.cmd](ns)
 
 
 if __name__ == "__main__":

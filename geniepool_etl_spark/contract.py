@@ -658,65 +658,6 @@ def q_skew_salted_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_a13_hll_sketch_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Mergeable-sketch rollup (Datasketches HLL): per-type sketches
-    via ``hll_sketch_agg``, then the GLOBAL distinct estimated by
-    MERGING the per-type sketches (``hll_union_agg``) — never
-    rescanning the fact table. This is the 100 TB pattern
-    approx_count_distinct (a7) can't do: its estimate is final, while
-    sketches persist per partition/day and roll up to any grouping
-    later. Checkable output follows the a7 convention: exact counts +
-    a within-5% boolean per row (exact cardinalities here are ~150,
-    where HLL at default lgConfigK is in its exact-mode regime, so the
-    bound is loose)."""
-    ev = _t(spark, sf_dir, "events")
-    # |types|-sized sketch frame consumed by BOTH the per-type readout
-    # and the union-merge — lazy-materialize once so the events
-    # scan+sketch aggregate does not replay per consumer (r16).
-    sk = (
-        ev.groupBy("event_type")
-        .agg(
-            F.hll_sketch_agg("user_id").alias("sk"),
-            F.count_distinct("user_id").alias("exact_users"),
-        )
-        .localCheckpoint(eager=False)
-    )
-    tol = lambda est, exact: (  # noqa: E731
-        F.abs(est - exact) <= 0.05 * exact
-    )
-    per_type = sk.select(
-        "event_type",
-        "exact_users",
-        tol(
-            F.hll_sketch_estimate("sk"), F.col("exact_users")
-        ).alias("within_tol"),
-    )
-    # the two single-row frames (merged estimate, global exact) meet
-    # via union + max-agg, not a constant-key join — Catalyst folds a
-    # lit-key equi-join to a trivially-true condition and plans a
-    # nested loop, which the repo's cartesian sweep rightly rejects
-    merged = sk.agg(F.hll_union_agg("sk").alias("msk")).select(
-        F.hll_sketch_estimate("msk").alias("est"),
-        F.lit(None).cast("long").alias("exact_users"),
-    )
-    g_exact = ev.agg(
-        F.count_distinct("user_id").alias("exact_users")
-    ).select(F.lit(None).cast("long").alias("est"), "exact_users")
-    total = (
-        merged.unionByName(g_exact)
-        .agg(
-            F.max("est").alias("est"),
-            F.max("exact_users").alias("exact_users"),
-        )
-        .select(
-            F.lit("ALL").alias("event_type"),
-            "exact_users",
-            tol(F.col("est"), F.col("exact_users")).alias("within_tol"),
-        )
-    )
-    return per_type.unionByName(total)
-
-
 # =====================================================================
 # Sort / limit / set ops / window functions (SURVEY §2.6)
 # =====================================================================
@@ -777,11 +718,10 @@ def q_events_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_events_session(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gap sessionization via the native ``session_window`` — kept as
     the lane implementation after the r14 two-phase attempt MEASURED
-    SLOWER at every scale and density (see
-    operators/events.session_agg_two_phase and SCALE.md): the
-    codegen sort's per-row constant beats the interpreted fold by
-    5-10×, and this corpus's 1.05 events/session voids the
-    volume-reduction premise."""
+    SLOWER at every scale and density (SCALE.md): the codegen sort's
+    per-row constant beats the interpreted fold by 5-10×, and this
+    corpus's 1.05 events/session voids the volume-reduction
+    premise."""
     return E.session_agg(_events(spark, sf_dir))
 
 
@@ -1763,11 +1703,6 @@ def q_sim_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return S.lsh_bucket_topk(_t(spark, sf_dir, "embeddings"), k=5)
 
 
-def q_sim_pandas_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = _t(spark, sf_dir, "embeddings")
-    return S.cosine_topk_pandas(emb, emb.where("vec_id < 8"), k=5)
-
-
 def q_sim_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN quality gate: recall@5 of the LSH candidate path against
     the exact brute-force ranking, per query — the instrument
@@ -2228,42 +2163,6 @@ def q_multimodal_png_pixels(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     return M.decode_image_pixel_stats(M.synth_png_gradient_assets(params))
-
-
-def q_multimodal_image_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cross-family composition: IMAGE near-dup via decoded pixel
-    statistics. Synth PNGs whose (width, height) collide across
-    asset ids decode to identical exact channel sums; grouping on the
-    full pixel signature (n_pixels, sum_r, sum_g, sum_b) — decoded
-    from the BYTES, not trusted metadata — yields duplicate clusters
-    with the deterministic keep-lowest-id rule. The shape at 100 TB:
-    the mapInPandas decode is narrow, and the groupBy key is a
-    16-byte signature, so payloads never shuffle. Output: one row per
-    duplicate GROUP (signature cardinality ≥ 1) with its size and
-    keeper."""
-    params = (
-        _t(spark, sf_dir, "documents")
-        .where(F.col("doc_id") % 5 == 1)
-        .select(
-            F.col("doc_id").alias("asset_id"),
-            # deliberately COARSE param space (3 x 2 combos) → real
-            # signature collisions across asset ids
-            (F.lit(8) + (F.col("doc_id") % 3) * 4)
-            .cast("long")
-            .alias("width"),
-            (F.lit(6) + (F.col("doc_id") % 2) * 5)
-            .cast("long")
-            .alias("height"),
-        )
-    )
-    stats = M.decode_image_pixel_stats(M.synth_png_gradient_assets(params))
-    return (
-        stats.groupBy("n_pixels", "sum_r", "sum_g", "sum_b")
-        .agg(
-            F.count(F.lit(1)).alias("n_dups"),
-            F.min("asset_id").alias("keep_id"),
-        )
-    )
 
 
 def q_multimodal_jpeg_sa(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5595,16 +5494,6 @@ def q_multimodal_decode_mp3(spark: SparkSession, sf_dir: str) -> DataFrame:
     return M.decode_audio_features(M.synth_mp3_assets(params))
 
 
-def q_multimodal_extract_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The mapInArrow lane (multimodal.extract_features_arrow): same
-    byte/char features as ``multimodal_extract`` computed on raw
-    pyarrow RecordBatches — no pandas boxing of binary cells. Same
-    oracle as the pandas lane; matching both proves the two
-    Python-integration tiers agree."""
-    assets = M.documents_as_assets(_t(spark, sf_dir, "documents"))
-    return M.extract_features_arrow(assets)
-
-
 def q_multimodal_decode_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Real JPEG round-trip through the stdlib SOF marker walk: per-
     document image dimensions derived JVM-side (so the oracle
@@ -7057,18 +6946,6 @@ def q_text_dsir_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_events_asof_cogroup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cogrouped-pandas as-of join (operators/events.
-    asof_join_cogroup): pandas ``merge_asof`` per user key over
-    Arrow cogroup — same semantics, same oracle as the JVM
-    union-carry ``events_asof_join``, cross-validating both lanes."""
-    ev = E.with_event_time(_events(spark, sf_dir))
-    return E.asof_join_cogroup(
-        ev.where("event_type = 'purchase'"),
-        ev.where("event_type = 'click'"),
-    )
-
-
 def q_w8_time_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W8: event-time RANGE frame — per event, how many of the same
     user's events fall in the trailing hour (RANGE BETWEEN 3.6e9 µs
@@ -7353,7 +7230,7 @@ def q_a19_loghist_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mergeable quantile sketch (operators/sketch.loghist_quantiles):
     log₂-octave histogram with 8 sub-buckets per octave in EXACT bit
     arithmetic (bin-length/shift/mask — no float log whose ulp wobble
-    flips buckets), completing the sketch triad: distinct (HLL, a13),
+    flips buckets), completing the sketch triad: distinct (HLL),
     frequency (count-min, a18), quantiles (this). p50/p90/p99 of the
     order-price cents as guaranteed [lo, hi] enclosures with ≤12.5%
     relative width; the oracle rebuilds the identical sketch."""
@@ -7805,144 +7682,6 @@ def q_sql_tpch_q9(spark: SparkSession, sf_dir: str) -> DataFrame:
     for t in ("part", "lineitem", "supplier", "orders", "nation"):
         _t(spark, sf_dir, t).createOrReplaceTempView(t)
     return spark.sql(_SQL_Q9)
-
-
-# Oracle-side formulation: the literal scalar-subqueries-in-HAVING
-# SQL (DuckDB recomputes the globals from lineitem independently, so
-# the Spark side's derive-from-the-grouped-frame rewrite is genuinely
-# cross-checked).
-_SQL_Q11 = """
-    SELECT l_partkey,
-           CAST(SUM(CAST(round(l_extendedprice * (1 - l_discount)
-                               * 100) AS BIGINT)) AS BIGINT)
-             AS value_cents
-    FROM lineitem
-    GROUP BY l_partkey
-    HAVING CAST(SUM(CAST(round(l_extendedprice * (1 - l_discount)
-                               * 100) AS BIGINT)) AS DECIMAL(38, 0))
-           * (SELECT count(DISTINCT l_partkey) FROM lineitem) * 5 > (
-      SELECT CAST(SUM(CAST(round(l_extendedprice * (1 - l_discount)
-                                 * 100) AS BIGINT)) AS DECIMAL(38, 0))
-      FROM lineitem
-    ) * 6
-"""
-
-_SQL_Q11_GROUPED = """
-    SELECT l_partkey,
-           CAST(SUM(CAST(round(l_extendedprice * (1 - l_discount)
-                               * 100) AS BIGINT)) AS BIGINT)
-             AS value_cents
-    FROM lineitem
-    GROUP BY l_partkey
-"""
-
-# gate expressed as DataFrame ops on the checkpointed grouped frame
-# (r17, ADVICE): the previous q11_grouped temp view was a
-# session-global side effect a concurrent build could clobber between
-# registration and spark.sql() analysis; DataFrame composition binds
-# the frame directly. Same analyzed expressions:
-#   count(l_partkey), SUM(CAST(value_cents AS DECIMAL(38,0))),
-#   CAST(value_cents AS DECIMAL(38,0)) * n_parts * 5 > total_cents * 6
-
-
-def q_sql_tpch_q11(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q11-shaped (important stock, adapted to lineitem revenue
-    share since this schema has no partsupp): grouped totals gated by
-    1-row global aggregates. r16: the original HAVING's two scalar
-    subqueries each rescanned lineitem (3 lineitem scans in the
-    plan); both globals are exact functions of the grouped frame
-    itself — count of groups ≡ count(DISTINCT l_partkey) (partkey is
-    non-null; count(l_partkey) over the group rows preserves the
-    NULL-skipping semantics) and the DECIMAL(38,0) sum of group sums
-    ≡ the global sum (integer cents, no overflow at DECIMAL(38)) —
-    so the grouped frame is lazily materialized once and the gate
-    reads IT. One lineitem pass instead of three; the DuckDB oracle
-    keeps the literal scalar-subquery HAVING and the results are
-    row-identical. The "important" test is SCALE-FREE (a part
-    matters if its revenue exceeds 1.2× the mean part's — Q11's
-    fixed 0.01% of total would pass everything at SF 0.001 and
-    nothing at SF 100) and exact: cents cross-multiplied in
-    DECIMAL(38,0), ``5·group·n > 6·total``, so neither float
-    summation order nor BIGINT overflow can flip a borderline group
-    at any supported scale."""
-    _t(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
-    g = spark.sql(_SQL_Q11_GROUPED).localCheckpoint(eager=False)
-    s = g.agg(
-        F.count("l_partkey").alias("n_parts"),
-        F.sum(F.col("value_cents").cast("decimal(38,0)")).alias(
-            "total_cents"
-        ),
-    )
-    return (
-        g.crossJoin(s)
-        .where(
-            F.col("value_cents").cast("decimal(38,0)")
-            * F.col("n_parts")
-            * 5
-            > F.col("total_cents") * 6
-        )
-        .select("l_partkey", "value_cents")
-    )
-
-
-_SQL_Q15 = """
-    WITH revenue AS (
-      SELECT l_suppkey AS supplier_no,
-             CAST(SUM(CAST(round(l_extendedprice * (1 - l_discount)
-                                 * 100) AS BIGINT)) AS BIGINT)
-               AS total_cents
-      FROM lineitem
-      WHERE l_shipdate >= TIMESTAMP '1996-01-01'
-        AND l_shipdate < TIMESTAMP '1996-04-01'
-      GROUP BY l_suppkey
-    )
-    SELECT s.s_suppkey, s.s_name, r.total_cents
-    FROM supplier s
-    JOIN revenue r ON s.s_suppkey = r.supplier_no
-    WHERE r.total_cents = (SELECT max(total_cents) FROM revenue)
-"""
-
-
-# Spark-side split of Q15 (r16): Spark inlines a CTE per reference,
-# so the twice-referenced revenue CTE aggregated the quarter's
-# lineitem TWICE; the |suppliers|-sized revenue frame is lazily
-# materialized once and both consumers (dim join + scalar max) read
-# it. The oracle keeps the literal twice-referenced CTE above.
-_SQL_Q15_REVENUE = """
-    SELECT l_suppkey AS supplier_no,
-           CAST(SUM(CAST(round(l_extendedprice * (1 - l_discount)
-                               * 100) AS BIGINT)) AS BIGINT)
-             AS total_cents
-    FROM lineitem
-    WHERE l_shipdate >= TIMESTAMP '1996-01-01'
-      AND l_shipdate < TIMESTAMP '1996-04-01'
-    GROUP BY l_suppkey
-"""
-
-def q_sql_tpch_q15(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q15 (top supplier): a quarter's per-supplier revenue CTE
-    referenced twice — once joined to the dim, once reduced to a
-    scalar max — with the winner selected by exact-cents equality
-    (ties surface as multiple rows instead of an arbitrary pick).
-    r16: the revenue frame is computed ONCE (lazy localCheckpoint)
-    instead of per CTE reference — lineitem passes 2 → 1; the DuckDB
-    oracle keeps the literal twice-referenced CTE. r17 (ADVICE): the
-    gate composes DataFrame ops on the checkpointed frame directly —
-    the previous q15_revenue temp view was a session-global side
-    effect a concurrent build could clobber. The scalar-max subquery
-    becomes the same 1-row cross join + equality the analyzer
-    produced for it (max over an empty quarter is NULL ⇒ no rows,
-    unchanged)."""
-    _t(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
-    rev = spark.sql(_SQL_Q15_REVENUE).localCheckpoint(eager=False)
-    mx = rev.agg(F.max("total_cents").alias("_mx"))
-    sup = _t(spark, sf_dir, "supplier")
-    return (
-        sup.join(rev, sup["s_suppkey"] == rev["supplier_no"])
-        .crossJoin(mx)
-        .where(F.col("total_cents") == F.col("_mx"))
-        .select("s_suppkey", "s_name", "total_cents")
-    )
 
 
 _SQL_Q21 = """
@@ -8639,17 +8378,6 @@ def _oracles() -> dict[str, str]:
         FROM lineitem
         WHERE l_shipdate <= TIMESTAMP '1999-12-31'
         GROUP BY l_returnflag, l_linestatus
-    """
-    o["a13_hll_sketch_rollup"] = """
-        SELECT event_type,
-               count(DISTINCT user_id) AS exact_users,
-               true AS within_tol
-        FROM events GROUP BY event_type
-        UNION ALL
-        SELECT 'ALL' AS event_type,
-               count(DISTINCT user_id) AS exact_users,
-               true AS within_tol
-        FROM events
     """
     o["skew_salted_agg"] = """
         SELECT l_returnflag, l_linestatus, count(*) AS n,
@@ -9351,7 +9079,6 @@ GROUP BY tb.j_bucket
     """
     o["sim_brute_topk"] = _sim_brute_oracle()
     o["sim_mmr_rerank"] = _sim_mmr_oracle()
-    o["sim_pandas_topk"] = _sim_brute_oracle()
     o["sim_lsh_topk"] = _sim_lsh_oracle()
     o["dedup_embedding"] = _dedup_embedding_oracle()
     o["multimodal_extract"] = """
@@ -9370,7 +9097,6 @@ GROUP BY tb.j_bucket
                     // (8000 * (1 + doc_id % 3)) AS BIGINT) AS duration_ms
         FROM documents WHERE doc_id % 5 = 0
     """
-    o["multimodal_extract_arrow"] = o["multimodal_extract"]
     o["multimodal_decode_avi"] = """
         SELECT doc_id AS asset_id,
                'avi' AS format,
@@ -9797,8 +9523,6 @@ WHERE round(i.inter / CAST(sl.sz + sr.sz - i.inter AS DOUBLE), 4) >= 0.02
         ORDER BY score DESC, doc_id LIMIT 20
     """
     o["sql_tpch_q9"] = _SQL_Q9
-    o["sql_tpch_q11"] = _SQL_Q11
-    o["sql_tpch_q15"] = _SQL_Q15
     o["sql_tpch_q21"] = _SQL_Q21
     o["multimodal_decode_mp4"] = """
         SELECT doc_id AS asset_id,
@@ -10389,28 +10113,6 @@ WHERE round(i.inter / CAST(sl.sz + sr.sz - i.inter AS DOUBLE), 4) >= 0.02
         SELECT prm.asset_id, CAST(w * h AS BIGINT) AS n_pixels,
                px.sum_r, px.sum_g, px.sum_b
         FROM prm JOIN px USING (asset_id)
-    """
-    o["multimodal_image_dedup"] = """
-        WITH prm AS (
-          SELECT doc_id AS asset_id,
-                 8 + (doc_id % 3) * 4 AS w,
-                 6 + (doc_id % 2) * 5 AS h
-          FROM documents WHERE doc_id % 5 = 1
-        ),
-        px AS (
-          SELECT asset_id, CAST(w * h AS BIGINT) AS n_pixels,
-                 CAST(sum((i % w + 2 * (i // w)) % 256) AS BIGINT)
-                   AS sum_r,
-                 CAST(sum((2 * (i % w) + i // w) % 256) AS BIGINT)
-                   AS sum_g,
-                 CAST(sum((i % w + i // w) % 256) AS BIGINT) AS sum_b
-          FROM prm, UNNEST(range(w * h)) AS u(i)
-          GROUP BY asset_id, w, h
-        )
-        SELECT n_pixels, sum_r, sum_g, sum_b,
-               count(*) AS n_dups,
-               CAST(min(asset_id) AS BIGINT) AS keep_id
-        FROM px GROUP BY 1, 2, 3, 4
     """
     o["s23_snap_change_stream"] = """
         SELECT CAST(0 AS BIGINT) AS _commit_version,
@@ -13221,7 +12923,6 @@ SELECT doc_id, split_unit,
             ELSE 'test' END AS split
 FROM g
 """
-    o["events_asof_cogroup"] = o["events_asof_join"]
     o["text_bpe_merges"] = _bpe_oracle(_BPE_K)
     o["text_bpe_encode"] = _bpe_encode_oracle(_BPE_K)
     o["text_bpe_byte_fallback"] = _bpe_byte_fallback_oracle(_BPE_K)
@@ -14101,11 +13802,9 @@ SPARK_QUERIES = {
     "text_pii": q_text_pii,
     "pipeline_chunk_pack": q_pipeline_chunk_pack,
     "dedup_repeated_spans": q_dedup_repeated_spans,
-    "multimodal_extract_arrow": q_multimodal_extract_arrow,
     "events_variant": q_events_variant,
     "s18_python_datasource": q_s18_python_datasource,
     "udtf_topk": q_udtf_topk,
-    "a13_hll_sketch_rollup": q_a13_hll_sketch_rollup,
     "rollup_incremental": q_rollup_incremental,
     "multimodal_decode_avi": q_multimodal_decode_avi,
     "pipeline_corpus_build": q_pipeline_corpus_build,
@@ -14124,7 +13823,6 @@ SPARK_QUERIES = {
     "text_zscore_pandas": q_text_zscore_pandas,
     "text_repetition": q_text_repetition,
     "sim_brute_topk": q_sim_brute_topk,
-    "sim_pandas_topk": q_sim_pandas_topk,
     # --- latest driver record: r7 ---
     "events_attribution": q_events_attribution,
     "profile_histogram": q_profile_histogram,
@@ -14139,14 +13837,11 @@ SPARK_QUERIES = {
     "sample_per_group": q_sample_per_group,
     "text_feature_hash": q_text_feature_hash,
     "pipeline_user_features": q_pipeline_user_features,
-    "events_asof_cogroup": q_events_asof_cogroup,
     "w8_time_range_frame": q_w8_time_range_frame,
     "lake_upsert_latest": q_lake_upsert_latest,
     "text_bpe_merges": q_text_bpe_merges,
     "text_bigram_lm": q_text_bigram_lm,
     "stream_sliding": q_stream_sliding,
-    "sql_tpch_q11": q_sql_tpch_q11,
-    "sql_tpch_q15": q_sql_tpch_q15,
     "graph_pagerank": q_graph_pagerank,
     "obs_drift_psi": q_obs_drift_psi,
     # --- latest driver record: r8 ---
@@ -14168,7 +13863,6 @@ SPARK_QUERIES = {
     "snap_time_travel": q_snap_time_travel,
     "stream_snap_ingest": q_stream_snap_ingest,
     "s22_python_stream_source": q_s22_python_stream_source,
-    "multimodal_image_dedup": q_multimodal_image_dedup,
     "multimodal_ppm_pixels": q_multimodal_ppm_pixels,
     "multimodal_gif_pixels": q_multimodal_gif_pixels,
     "text_perplexity": q_text_perplexity,

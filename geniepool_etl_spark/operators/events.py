@@ -123,125 +123,6 @@ def session_agg(
     )
 
 
-def session_agg_two_phase(
-    df: DataFrame,
-    gap_us: int = 30 * US_PER_MIN,
-    key_col: str = "user_id",
-    bucket_factor: int = 8,
-) -> DataFrame:
-    """Gap-based sessionization, two-phase formulation (r14 — same
-    result as :func:`session_agg`, inclusive-gap boundary and all,
-    pinned identical by pytest at bucket_factor 2 and 8).
-
-    Phase 1 hash-aggregates events into (user, bucket_factor·gap
-    bucket) groups and folds each group's sorted array into partial
-    sessions — no partition-wide sort. Phase 2 merges only
-    boundary-open partial sessions (with bucket ≥ 2·gap,
-    non-adjacent buckets are > gap apart, and any interior session
-    between two merge candidates would have merged in phase 1, so
-    the candidate-only per-user chain window is exact and bounded
-    by users × active buckets).
-
-    MEASURED NEGATIVE RESULT (r14, SCALE.md): on this box the
-    interpreted per-event fold loses to the native path's
-    whole-stage-codegen sort by 5-10× at every probed scale and
-    density — sf10 10.3/11.0/4.7 s (K=2/8/32) and dense-stream
-    (5.8 ev/session) 9.6/8.2 s vs native 1.6-2.2 s; sf100 126 s vs
-    42 s. This corpus's 1.05 events/session also voids the premise
-    that phase 1 collapses volume. The lane therefore runs
-    :func:`session_agg`; this implementation stays as the
-    equivalence-pinned alternative for engines/regimes where the
-    sort, not expression eval, is the binding constraint.
-    """
-    if bucket_factor < 2:
-        raise ValueError("bucket_factor must be >= 2 (non-adjacent "
-                         "buckets must be > gap apart)")
-    bucket_us = bucket_factor * gap_us
-    e = with_event_time(df).select(
-        F.col(key_col),
-        "ts_us",
-        "value",
-        (F.floor(F.col("ts_us") / bucket_us)).alias("_bkt"),
-    )
-    # phase 1: per-(user, bucket) partial sessions from a cache-local
-    # array fold — acc is array<struct<start, end, n, mx>>; the last
-    # element either extends (inclusive gap) or a new session appends
-    fold = (
-        "aggregate(sort_array(collect_list(struct(ts_us, value))), "
-        "CAST(array() AS ARRAY<STRUCT<st: BIGINT, en: BIGINT, "
-        "n: BIGINT, mx: DOUBLE>>), "
-        "(acc, ev) -> CASE WHEN size(acc) > 0 "
-        f"AND ev.ts_us - element_at(acc, -1).en <= {gap_us} "
-        "THEN concat(slice(acc, 1, size(acc) - 1), array(named_struct("
-        "'st', element_at(acc, -1).st, 'en', ev.ts_us, "
-        "'n', element_at(acc, -1).n + 1, "
-        "'mx', greatest(element_at(acc, -1).mx, ev.value)))) "
-        "ELSE concat(acc, array(named_struct('st', ev.ts_us, "
-        "'en', ev.ts_us, 'n', CAST(1 AS BIGINT), 'mx', ev.value))) "
-        "END)"
-    )
-    partial = (
-        e.groupBy(key_col, "_bkt")
-        .agg(F.expr(fold).alias("_sess"))
-        .select(
-            key_col,
-            "_bkt",
-            F.explode("_sess").alias("s"),
-        )
-        .select(
-            key_col,
-            F.col("s.st").alias("start"),
-            F.col("s.en").alias("end"),
-            F.col("s.n").alias("n"),
-            F.col("s.mx").alias("mx"),
-            (
-                ((F.col("_bkt") + 1) * bucket_us - F.col("s.en"))
-                <= gap_us
-            ).alias("_open_top"),
-            (
-                (F.col("s.st") - F.col("_bkt") * bucket_us)
-                <= gap_us
-            ).alias("_open_bottom"),
-        )
-    )
-    boundary = partial.where(F.col("_open_top") | F.col("_open_bottom"))
-    interior = partial.where(
-        ~(F.col("_open_top") | F.col("_open_bottom"))
-    )
-    w = Window.partitionBy(key_col).orderBy("start", "end")
-    chained = (
-        boundary.withColumn(
-            "_new",
-            F.when(
-                F.col("start") - F.lag("end").over(w) > gap_us, 1
-            ).otherwise(
-                F.when(F.lag("end").over(w).isNull(), 1).otherwise(0)
-            ),
-        )
-        .withColumn(
-            "_chain",
-            F.sum("_new").over(
-                w.rowsBetween(Window.unboundedPreceding, 0)
-            ),
-        )
-        .groupBy(key_col, "_chain")
-        .agg(
-            F.min("start").alias("start"),
-            F.sum("n").alias("n"),
-            F.max("mx").alias("mx"),
-        )
-    )
-    out_cols = [
-        F.col(key_col),
-        F.col("start").alias("session_start_us"),
-        F.col("n").cast("long").alias("n_events"),
-        F.round(F.col("mx"), 4).alias("max_value"),
-    ]
-    return chained.select(*out_cols).unionByName(
-        interior.select(*out_cols)
-    )
-
-
 def with_prev_event(df: DataFrame) -> DataFrame:
     """Per-user sequence features: previous event type and gap (µs)
     since the previous event, via ``lag`` over a (user_id) partition
@@ -322,68 +203,6 @@ def asof_join_latest_prior(
             F.when(within, F.col("asof_event_id")).alias("asof_event_id"),
         )
     return out
-
-
-def asof_join_cogroup(
-    left: DataFrame,
-    right: DataFrame,
-    key: str = "user_id",
-    ts: str = "ts_us",
-    id_col: str = "event_id",
-) -> DataFrame:
-    """As-of join via ``cogroup().applyInPandas`` — the Arrow lane
-    for per-key alignment logic too imperative for SQL, instantiated
-    on the one alignment with a canonical pandas primitive
-    (``merge_asof``) so it cross-validates
-    :func:`asof_join_latest_prior` against the SAME oracle.
-
-    Each key's (left, right) slices arrive as pandas frames in one
-    Arrow batch; the merge is backward-looking with exact matches
-    allowed and same-timestamp ties resolved to the highest id —
-    bit-identical semantics to the union-carry formulation. One
-    co-shuffle of both sides on the key; the production path stays
-    the JVM union-carry (this lane exists for logic that genuinely
-    needs pandas, and as the template for it).
-    """
-    import pandas as pd
-
-    out_schema = (
-        f"{key} long, {ts} long, {id_col} long, "
-        "asof_ts_us long, asof_event_id long"
-    )
-
-    def _slice(pdf: pd.DataFrame, cols: list[str]) -> pd.DataFrame:
-        # a side with no rows for this key can arrive as a frame with
-        # NO columns at all (observed under a vanilla ANSI session) —
-        # normalize to an empty, correctly-typed frame
-        if not set(cols).issubset(pdf.columns):
-            return pd.DataFrame(
-                {c: pd.Series(dtype="int64") for c in cols}
-            )
-        return pdf[cols]
-
-    def merge(l: pd.DataFrame, r: pd.DataFrame) -> pd.DataFrame:
-        l = _slice(l, [key, ts, id_col]).sort_values([ts, id_col])
-        r = (
-            _slice(r, [ts, id_col])
-            .sort_values([ts, id_col])
-            .rename(
-                columns={ts: "asof_ts_us", id_col: "asof_event_id"}
-            )
-        )
-        out = pd.merge_asof(
-            l, r, left_on=ts, right_on="asof_ts_us",
-            direction="backward", allow_exact_matches=True,
-        )
-        out["asof_ts_us"] = out["asof_ts_us"].astype("Int64")
-        out["asof_event_id"] = out["asof_event_id"].astype("Int64")
-        return out
-
-    return (
-        left.groupBy(key)
-        .cogroup(right.groupBy(key))
-        .applyInPandas(merge, schema=out_schema)
-    )
 
 
 def with_anomaly_flags(

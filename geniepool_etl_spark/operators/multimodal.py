@@ -6654,91 +6654,15 @@ def decode_image_features(assets: DataFrame) -> DataFrame:
     return assets.mapInPandas(batches, IMAGE_META_SCHEMA)
 
 
-RESIZED_SCHEMA = StructType(
-    [
-        StructField("asset_id", LongType(), False),
-        StructField("width", LongType(), True),
-        StructField("height", LongType(), True),
-        StructField("payload", BinaryType(), True),
-    ]
-)
-
-FRAME_SCHEMA = StructType(
-    [
-        StructField("asset_id", LongType(), False),
-        StructField("frame_idx", LongType(), False),
-        StructField("frame", BinaryType(), True),
-    ]
-)
-
-
-def resize_images(assets: DataFrame, width: int, height: int) -> DataFrame:
-    """Image resize over Arrow batches (1 row in → 1 row out). The
-    pixel work is a deterministic stand-in (payload truncated to
-    width·height bytes — PIL/OpenCV are unavailable here; a real
-    decoder replaces the inner lambda only), but the contract a real
-    resize needs — schema, batch shape, binary handling — is exercised
-    for real.
-    """
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        n = width * height
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf["asset_id"],
-                    "width": width,
-                    "height": height,
-                    "payload": pdf["payload"].map(
-                        lambda b: b[:n] if b is not None else None
-                    ),
-                }
-            )
-
-    return assets.mapInPandas(batches, RESIZED_SCHEMA)
-
-
-def sample_frames(
-    assets: DataFrame, frame_bytes: int = 1024, every_n: int = 2
-) -> DataFrame:
-    """Video frame sampling over Arrow batches — the one-to-MANY
-    mapInPandas shape (each asset row expands to its sampled frames).
-    Frames are deterministic fixed-width byte windows standing in for
-    a real ffmpeg decode; the explode-style output contract is real.
-    """
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, idxs, frames = [], [], []
-            for asset_id, payload in zip(pdf["asset_id"], pdf["payload"]):
-                if payload is None:
-                    continue
-                n_frames = max(1, len(payload) // frame_bytes)
-                for i in range(0, n_frames, every_n):
-                    ids.append(asset_id)
-                    idxs.append(i)
-                    frames.append(
-                        bytes(payload[i * frame_bytes : (i + 1) * frame_bytes])
-                    )
-            yield pd.DataFrame(
-                {"asset_id": ids, "frame_idx": idxs, "frame": frames}
-            )
-
-    return assets.mapInPandas(batches, FRAME_SCHEMA)
-
-
-def extract_features_arrow(assets: DataFrame) -> DataFrame:
-    """The :func:`extract_features` lane on ``mapInArrow`` — the third
-    Python-integration tier after row-UDF (never) and Pandas
-    (``mapInPandas``): the function receives raw ``pyarrow``
-    RecordBatches, skipping the Arrow→pandas→Arrow conversion
-    entirely. For byte-dominated payloads that conversion is pure
-    copy overhead (pandas boxes each binary cell as a Python bytes
-    object); Arrow-native compute touches the buffers in place
-    (measured 1.3× vs the pandas lane at sf0.1: 0.196 s vs 0.253 s —
-    the gap widens with payload size). Same schema contract and narrow
-    per-partition execution as the pandas lane — and the same oracle
-    checks both."""
+def extract_features(assets: DataFrame) -> DataFrame:
+    """Byte-level features per asset over raw ``pyarrow``
+    RecordBatches via ``mapInArrow``: ``n_bytes`` and ``n_chars``
+    (UTF-8 codepoints), deterministic so correctness is externally
+    checkable. Arrow-native compute reads the binary buffers in place,
+    skipping the Arrow→pandas→Arrow round-trip that boxes each cell as
+    a Python ``bytes`` (measured 1.3× faster than ``mapInPandas`` at
+    sf0.1: 0.196 s vs 0.253 s; the gap widens with payload size).
+    Narrow, per-partition; payloads never shuffle."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
@@ -6746,10 +6670,8 @@ def extract_features_arrow(assets: DataFrame) -> DataFrame:
         for rb in it:
             payload = rb.column(rb.schema.get_field_index("payload"))
             n_bytes = pc.binary_length(payload)
-            # decoded char count: cast binary→string (validates utf-8;
-            # the synthetic payloads are utf-8 text) and count
-            # codepoints. A real pipeline would pc.if_else over a
-            # validity mask for non-utf8 assets.
+            # the binary→string cast validates UTF-8, so a non-UTF-8
+            # payload fails the batch instead of miscounting
             n_chars = pc.utf8_length(payload.cast(pa.string()))
             yield pa.RecordBatch.from_arrays(
                 [
@@ -6762,34 +6684,6 @@ def extract_features_arrow(assets: DataFrame) -> DataFrame:
             )
 
     return assets.mapInArrow(batches, FEATURE_SCHEMA)
-
-
-def extract_features(assets: DataFrame) -> DataFrame:
-    """Byte-level feature extraction over Arrow batches via
-    ``mapInPandas`` (the slot where a real decoder plugs in — see the
-    ``decode_*`` stubs). Features here are deterministic byte/char
-    counts so correctness is externally checkable.
-    """
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = pdf["payload"]
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf["asset_id"],
-                    "media_type": pdf["media_type"],
-                    "n_bytes": payloads.map(
-                        lambda b: len(b) if b is not None else None
-                    ).astype("Int64"),
-                    "n_chars": payloads.map(
-                        lambda b: len(b.decode("utf-8", errors="replace"))
-                        if b is not None
-                        else None
-                    ).astype("Int64"),
-                }
-            )
-
-    return assets.mapInPandas(batches, FEATURE_SCHEMA)
 
 
 # --------------------------------------------------------------- video
@@ -11147,12 +11041,12 @@ def synth_webp_alpha_assets(
 
 # --------------------------------------------------------------------------
 # Exact box resize (r15): the production resize-then-X step as REAL pixel
-# work over arbitrary (non-divisible) dimensions — the upgrade of the
-# declared ``resize_images`` stand-in. Area-average with exact integer
-# rational weights: in coordinates scaled by the output dimension, output
-# pixel j spans [j*W1, (j+1)*W1) and input pixel x spans [x*W2, (x+1)*W2),
-# so the overlap weight wx(j,x) = max(0, min((j+1)*W1,(x+1)*W2)
-# - max(j*W1, x*W2)) is an integer, the row/column weights always sum to
+# work over arbitrary (non-divisible) dimensions. Area-average with exact
+# integer rational weights: in coordinates scaled by the output
+# dimension, output pixel j spans [j*W1, (j+1)*W1) and input pixel x
+# spans [x*W2, (x+1)*W2), so the overlap weight wx(j,x) = max(0,
+# min((j+1)*W1,(x+1)*W2) - max(j*W1, x*W2)) is an integer, the
+# row/column weights always sum to
 # W1/H1, and out[i,j] = floor((Σ p·wx·wy + (W1·H1)//2) / (W1·H1)) is a
 # half-up-rounded exact average — identical in numpy and in the oracle's
 # integer SQL. The 2-D sum is separable, so the kernel is two integer

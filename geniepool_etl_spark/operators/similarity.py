@@ -44,7 +44,6 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window
-from pyspark.sql.types import DoubleType
 
 
 def _as_double(col: Column) -> Column:
@@ -1120,54 +1119,6 @@ def semantic_dedup_keep(
         F.col(id_col).alias("id"), F.col(vec_col).alias("vec")
     ).mapInArrow(assign, asg_schema)
     return asg.groupBy("cid").applyInArrow(keep_group, out_schema)
-
-
-def cosine_topk_pandas(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Arrow-vectorized variant of :func:`cosine_topk`: the dot-product
-    scoring runs in a scalar ``pandas_udf`` over numpy batches (the
-    pattern to swap in a real scoring model). Same output contract.
-    """
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf(DoubleType())
-    def cos_batch(a: pd.Series, b: pd.Series) -> pd.Series:
-        out = np.empty(len(a))
-        for i in range(len(a)):
-            x = np.asarray(a.iloc[i], dtype=np.float64)
-            y = np.asarray(b.iloc[i], dtype=np.float64)
-            out[i] = float(x @ y) / (float(np.sqrt(x @ x)) * float(np.sqrt(y @ y)))
-        return pd.Series(out)
-
-    q = queries.select(
-        F.col(id_col).alias("q_id"), _as_double(F.col(vec_col)).alias("q_vec")
-    )
-    c = corpus.select(
-        F.col(id_col).alias("n_id"), _as_double(F.col(vec_col)).alias("n_vec")
-    )
-    scored = (
-        c.crossJoin(F.broadcast(q))
-        .where(F.col("q_id") != F.col("n_id"))
-        .select(
-            "q_id",
-            "n_id",
-            F.round(cos_batch(F.col("q_vec"), F.col("n_vec")), 4).alias("cos_sim"),
-        )
-    )
-    w = Window.partitionBy("q_id").orderBy(
-        F.col("cos_sim").desc(), F.col("n_id").asc()
-    )
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= k)
-        .drop("rnk")
-    )
 
 
 def quantize_int8(

@@ -56,69 +56,3 @@ def running_user_counts(stream: DataFrame) -> DataFrame:
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-
-
-def running_user_counts_tws(stream: DataFrame) -> DataFrame:
-    """The same running per-user accumulator on Spark 4's
-    ``transformWithStateInPandas`` — the successor API to
-    ``applyInPandasWithState``: named state variables behind a handle
-    (``ValueState``/``ListState``/``MapState``), per-variable TTLs,
-    timers, and an init/close lifecycle, over the RocksDB state store
-    (set ``spark.sql.streaming.stateStore.providerClass`` to
-    ``...state.RocksDBStateStoreProvider`` — TWS requires it).
-
-    Environment boundary (documented, same convention as the JPEG
-    pixel-decode stub): the TWS driver worker imports ``protobuf``,
-    which is not installed in this container, so this lane cannot
-    EXECUTE here (tests skip on missing protobuf) — the
-    ``applyInPandasWithState`` twin above is the oracle-checked lane.
-    The plan wiring (grouping, schemas, output/time modes) is real and
-    identical in shape.
-
-    Resolution attempt (r13, closing the verdict's task): no
-    ``google.protobuf`` anywhere on the box (only typeshed stubs and
-    shaded JVM jars), no cached wheels, and installs are out of
-    bounds. Vendoring a runtime shim is not honest either: the
-    generated ``pyspark.sql.streaming.proto.StateMessage_pb2`` loads
-    a SERIALIZED FileDescriptorProto through the descriptor-pool /
-    builder machinery (``google.protobuf.internal.builder``), i.e. it
-    needs the real wire-format runtime, not a few dataclasses — a
-    reimplementation deep enough to run it would be a protobuf fork,
-    and a shallow fake would execute state RPCs with silently wrong
-    encodings. The skip therefore stands as the documented boundary.
-    """
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class RunningCounts(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState("counts", "n LONG, total DOUBLE")
-
-        def handleInputRows(
-            self, key: tuple[Any, ...], rows: Iterable[pd.DataFrame], timerValues: Any
-        ) -> Iterable[pd.DataFrame]:
-            prev = self._state.get() if self._state.exists() else None
-            n, total = (int(prev[0]), float(prev[1])) if prev else (0, 0.0)
-            for pdf in rows:
-                n += len(pdf)
-                total += float(pdf["value"].sum())
-            self._state.update((n, total))
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "n_events": [n],
-                    "sum_value": [round(total, 2)],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    return stream.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=RunningCounts(),
-        outputStructType="user_id LONG, n_events LONG, sum_value DOUBLE",
-        outputMode="Update",
-        timeMode="None",
-    )

@@ -258,18 +258,6 @@ def test_cosine_topk_ranks_correctly(vectors):
     assert ranked[0] == 2 and ranked[-1] == 4
 
 
-def test_cosine_pandas_matches_jvm(vectors):
-    jvm = {
-        (r.q_id, r.n_id): r.cos_sim
-        for r in S.cosine_topk(vectors, vectors, k=3).collect()
-    }
-    pd_ = {
-        (r.q_id, r.n_id): r.cos_sim
-        for r in S.cosine_topk_pandas(vectors, vectors, k=3).collect()
-    }
-    assert jvm == pd_
-
-
 def test_lsh_same_vector_same_bucket(spark):
     rows = [(1, [0.5] * 8), (2, [0.5] * 8), (3, [-0.5] * 8)]
     df = spark.createDataFrame(rows, "vec_id LONG, embedding ARRAY<FLOAT>")
@@ -400,33 +388,6 @@ def test_multimodal_features(spark):
     assert feats.n_chars == 5
     assert feats.n_bytes == 6  # é is 2 bytes in utf-8
     assert feats.media_type == "text/plain"
-
-
-def test_multimodal_resize_contract(spark):
-    df = spark.createDataFrame(
-        [(1, "x" * 100), (2, "y" * 5)], "doc_id LONG, text STRING"
-    )
-    out = {
-        r.asset_id: r
-        for r in M.resize_images(
-            M.documents_as_assets(df), width=4, height=4
-        ).collect()
-    }
-    assert len(out[1].payload) == 16  # truncated to width*height
-    assert len(out[2].payload) == 5  # shorter payloads pass through
-    assert out[1].width == 4 and out[1].height == 4
-
-
-def test_multimodal_frame_sampling_one_to_many(spark):
-    df = spark.createDataFrame(
-        [(1, "z" * 5000)], "doc_id LONG, text STRING"
-    )
-    frames = M.sample_frames(
-        M.documents_as_assets(df), frame_bytes=1024, every_n=2
-    ).collect()
-    # 4 full frames → sampled at stride 2 → frames 0 and 2
-    assert [(f.asset_id, f.frame_idx) for f in frames] == [(1, 0), (1, 2)]
-    assert all(len(f.frame) == 1024 for f in frames)
 
 
 def test_decode_rejects_short_payloads():
@@ -2058,9 +2019,9 @@ def test_dsir_resample_topk_plan_and_determinism(spark):
 
 
 def test_asof_cogroup_matches_union_carry(spark):
-    """The pandas merge_asof lane and the JVM union-carry lane must
-    produce identical rows — including a user with left rows but no
-    right rows (the empty-cogroup-side edge)."""
+    """Union-carry as-of join: a right row at the left row's exact
+    timestamp matches (≤ semantics), and a user with left rows but no
+    right rows is still emitted with null matches."""
     ns = 1000
     rows = [
         (1, 1, 0, "click", 0.0, None),
@@ -2077,18 +2038,9 @@ def test_asof_cogroup_matches_union_carry(spark):
     e = E.with_event_time(df)
     left = e.where("event_type = 'purchase'")
     right = e.where("event_type = 'click'")
-
-    def snap(frame):
-        return sorted(
-            (r.user_id, r.ts_us, r.event_id, r.asof_ts_us,
-             r.asof_event_id)
-            for r in frame.collect()
-        )
-
-    a = snap(E.asof_join_latest_prior(left, right))
-    b = snap(E.asof_join_cogroup(left, right))
-    assert a == b
-    got = {r[2]: (r[3], r[4]) for r in b}
+    out = E.asof_join_latest_prior(left, right).collect()
+    got = {r.event_id: (r.asof_ts_us, r.asof_event_id) for r in out}
+    assert len(out) == 3 and sorted(got) == [2, 4, 5]
     assert got[2] == (10, 3)    # tie at same ts matches (≤ semantics)
     assert got[4] == (10, 3)
     assert got[5] == (None, None)  # clickless user still emitted
@@ -6668,18 +6620,16 @@ def test_unigram_lm_token_counts(spark):
 
 
 def test_session_two_phase_matches_native(spark):
-    """r14: the two-phase sessionization (bucketed array folds +
-    boundary-only chain merge) is pinned IDENTICAL to the native
-    session_window reference on adversarial data: exact-gap edges,
-    events on exact bucket boundaries, chains spanning several
-    buckets, and single-event sessions."""
+    """Native ``session_window`` sessionization (session_agg) equals a
+    plain-Python sessionizer on adversarial data: gaps at exactly the
+    gap and one µs either side of it (inclusive boundary), events on
+    exact multiples of 2·gap, chains spanning many such multiples, and
+    single-event sessions. ``ts`` is nanos-long with sub-µs jitter, so
+    the reference must floor to µs exactly as ``with_event_time``
+    does."""
     import random
 
-    from geniepool_etl_spark.operators.events import (
-        US_PER_MIN,
-        session_agg,
-        session_agg_two_phase,
-    )
+    from geniepool_etl_spark.operators.events import US_PER_MIN, session_agg
 
     rng = random.Random(42)
     GAP = 30 * US_PER_MIN
@@ -6692,25 +6642,38 @@ def test_session_two_phase_matches_native(spark):
                 [0, 1, GAP, GAP + 1, GAP - 1, B - 1, B, B + 1,
                  rng.randint(1, 3 * GAP)]
             )
-            rows.append((eid, u, t, round(rng.uniform(0, 100), 2)))
+            ns = t * 1000 + rng.randint(0, 999)
+            rows.append((eid, u, ns, round(rng.uniform(0, 100), 2)))
             eid += 1
     for u in range(40, 44):  # exact boundary hits + long chains
         for k in range(6):
-            rows.append((eid, u, k * B, 1.0))
+            rows.append((eid, u, k * B * 1000, 1.0))
             eid += 1
-            rows.append((eid, u, k * B + GAP, 2.0))
+            rows.append((eid, u, (k * B + GAP) * 1000, 2.0))
             eid += 1
+
+    exp, by_user = [], {}
+    for _eid, u, ns, v in rows:
+        by_user.setdefault(u, []).append((ns // 1000, v))
+    for u, evs in by_user.items():
+        sess = None
+        for t_us, v in sorted(evs):
+            if sess is not None and t_us - sess[3] <= GAP:
+                sess[1] += 1
+                sess[2] = max(sess[2], v)
+                sess[3] = t_us
+            else:
+                if sess is not None:
+                    exp.append((u, sess[0], sess[1], round(sess[2], 4)))
+                sess = [t_us, 1, v, t_us]
+        exp.append((u, sess[0], sess[1], round(sess[2], 4)))
+
     df = spark.createDataFrame(
         rows, "event_id long, user_id long, ts long, value double"
     )
-    a = sorted(tuple(r) for r in session_agg(df).collect())
-    for k in (2, 8):
-        b = sorted(
-            tuple(r)
-            for r in session_agg_two_phase(df, bucket_factor=k).collect()
-        )
-        assert a == b, k
-    assert len(a) >= 44
+    got = sorted(tuple(r) for r in session_agg(df).collect())
+    assert got == sorted(exp)
+    assert len(got) >= 44
 
 
 def _wordpiece_ref(docs, maxw=12, maxp=4, v=64):

@@ -175,13 +175,89 @@ def test_multi_probe_recovers_straddling_neighbors(spark):
     assert probed.count() >= exact.count()
 
 
+# The labelled Spark-baseline controls closing SPARK_QUERIES: bench.py
+# times them directly as the engine-only yardstick.
+_CONTROLS = [
+    "flagship_lake_nest",
+    "a4_pricing_summary",
+    "j3_broadcast_join_agg",
+    "w1_window_topk",
+    "a2_two_level_nest",
+    "sql_tpch_q9",
+    "sql_tpch_q21",
+]
+
+
+def _lanes_without_package_code() -> set[str]:
+    """Lanes whose SPARK_QUERIES function references no name imported
+    from ``geniepool_etl_spark`` (module-level or function-local
+    imports), following references into contract.py's own module-level
+    functions."""
+    import ast
+    import inspect
+
+    tree = ast.parse(inspect.getsource(C))
+
+    def pkg_names(node: ast.AST) -> set[str]:
+        out = set()
+        for n in ast.walk(node):
+            if isinstance(n, ast.ImportFrom) and (n.module or "").startswith(
+                "geniepool_etl_spark"
+            ):
+                out.update(a.asname or a.name for a in n.names)
+            elif isinstance(n, ast.Import):
+                out.update(
+                    (a.asname or a.name).split(".")[0]
+                    for a in n.names
+                    if a.name.startswith("geniepool_etl_spark")
+                )
+        return out
+
+    top = set()
+    for n in tree.body:
+        if isinstance(n, (ast.Import, ast.ImportFrom)):
+            top |= pkg_names(n)
+    defs = {n.name: n for n in tree.body if isinstance(n, ast.FunctionDef)}
+
+    def uses_pkg(name: str, seen: set[str]) -> bool:
+        if name in seen:
+            return False
+        seen.add(name)
+        fn = defs[name]
+        pkg = top | pkg_names(fn)
+        for n in ast.walk(fn):
+            if isinstance(n, ast.Name) and (
+                n.id in pkg or (n.id in defs and uses_pkg(n.id, seen))
+            ):
+                return True
+        return False
+
+    return {
+        lane
+        for lane, fn in C.SPARK_QUERIES.items()
+        if not uses_pkg(fn.__name__, set())
+    }
+
+
+def test_registry_lanes_run_package_code():
+    """Registry rule: a lane stays only if it runs package code; the
+    only exceptions are the labelled controls at the end of the
+    registry. Every lane has an oracle, and no oracle outlives its
+    lane."""
+    import __spark_entry__ as entry
+
+    assert list(C.SPARK_QUERIES)[-len(_CONTROLS):] == _CONTROLS
+    assert _lanes_without_package_code() == set(_CONTROLS)
+    assert list(entry.oracle_sql()) == list(entry.queries())
+    assert set(C.ORACLE_SQL) == set(C.SPARK_QUERIES)
+
+
 # Entries whose plans INTENTIONALLY contain a broadcast nested-loop /
 # cross join: a tiny broadcast side (query set, centroid set, 1-row
 # corpus count, literal range bounds) crossed against the corpus — the
 # correct shape, not a scale hazard.
 _INTENDED_CROSS = {
     "sim_brute_topk",
-    "sim_pandas_topk",
     "sim_ivf_topk",
     "sim_ivfpq_topk",  # 1-row centroid fold + 16-row codebook broadcasts
     "sim_lsh_recall",  # brute-force baseline side: 8 queries broadcast
@@ -189,7 +265,6 @@ _INTENDED_CROSS = {
     "sim_int8_recall",  # same: quantized + exact sides both broadcast 8 queries
     "text_tfidf",
     "text_bm25",  # 1-row global stats frame broadcast (tfidf pattern)
-    "sql_tpch_q11",  # 1-row globals-of-the-grouped-frame broadcast (r16)
     "text_bpe_merges",  # per-round 1-row argmax winner broadcast
     "obs_drift_psi",  # 1-row totals frame broadcast (tfidf pattern)
     "obs_drift_ks",  # same: 1-row totals frame broadcast
@@ -398,10 +473,6 @@ def test_tpch_tail_decorrelates_to_hash_joins(spark):
     assert p.count("Scan parquet") == 3, p.count("Scan parquet")
     assert "BroadcastNestedLoopJoin" not in p
     assert "CartesianProduct" not in p
-    # Q15: the scalar-max equality stays a broadcast hash equi-join
-    df = C.q_sql_tpch_q15(spark, SF_SMALL)
-    P.assert_no_cartesian(df)
-    assert "BroadcastHashJoin" in _plan(df)
 
 
 def test_interval_join_is_keyed_equi_join(spark):

@@ -436,61 +436,6 @@ def test_compaction_is_idempotent_and_clean(spark, tmp_path):
     assert not _g.glob(os.path.join(lake, "_compact", "*", "*"))
 
 
-def test_transform_with_state_lane(spark, tmp_path):
-    """transformWithStateInPandas twin of the applyInPandasWithState
-    accumulator — must produce the per-user batch groupBy answer.
-    Skips where the TWS driver worker's protobuf dependency is absent
-    (this container); runs for real on a full Spark installation."""
-    pytest.importorskip("google.protobuf")
-
-    from geniepool_etl_spark.streaming import (
-        _stage_events_src,
-        read_event_stream,
-    )
-    from geniepool_etl_spark.streaming.stateful import running_user_counts_tws
-
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    try:
-        src = _stage_events_src(SF_SMALL)
-        out = running_user_counts_tws(read_event_stream(spark, src))
-        q = (
-            out.writeStream.format("memory")
-            .queryName("tws_counts")
-            .outputMode("update")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        got = {
-            r.user_id: (r.n_events, r.sum_value)
-            for r in spark.table("tws_counts").collect()
-        }
-        from pyspark.sql import functions as F
-
-        exp = {
-            r.user_id: (r.n, round(r.s, 2))
-            for r in spark.read.parquet(f"{SF_SMALL}/events.parquet")
-            .groupBy("user_id")
-            .agg(F.count("*").alias("n"), F.sum("value").alias("s"))
-            .collect()
-        }
-        assert got == exp
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", prev
-            )
-
-
 def test_streaming_rollup_maintenance_equals_batch(spark, tmp_path):
     """foreachBatch rollup maintenance must converge to the batch
     recompute over all data, across multiple micro-batches; replaying

@@ -69,13 +69,6 @@ SHOWCASE = [
         "supplier/orders joins; no nested-loop join anywhere.",
     ),
     (
-        "sql_tpch_q11",
-        C.q_sql_tpch_q11,
-        "Both HAVING scalar subqueries are 1-row aggregates broadcast "
-        "into the grouped aggregate's filter; lineitem shuffles once "
-        "on l_partkey; DECIMAL(38,0) cross-multiply (no division).",
-    ),
-    (
         "multimodal_decode_mp3",
         C.q_multimodal_decode_mp3,
         "Two narrow mapInPandas stages (synth, decode) with zero "
