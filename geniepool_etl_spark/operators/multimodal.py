@@ -90,6 +90,29 @@ def documents_as_assets(docs: DataFrame) -> DataFrame:
     )
 
 
+def _synth_assets(
+    df: DataFrame, id_col: str, media_type: str, one, *cols: str
+) -> DataFrame:
+    """The one Arrow wrapper every ``synth_*`` encoder shares: each row
+    becomes the asset ``(id_col, one(*int values of cols),
+    media_type)``. A narrow ``mapInPandas`` — payloads never shuffle."""
+
+    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in it:
+            yield pd.DataFrame(
+                {
+                    "asset_id": pdf[id_col],
+                    "payload": [
+                        one(*map(int, row))
+                        for row in zip(*(pdf[c] for c in cols))
+                    ],
+                    "media_type": media_type,
+                }
+            )
+
+    return df.mapInPandas(batches, ASSET_SCHEMA)
+
+
 def _jpeg_dimensions(payload: bytes) -> dict:
     """Width/height/precision from a JPEG's SOF marker — pure stdlib.
 
@@ -704,28 +727,18 @@ def synth_wav_assets(
     import io
     import wave
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = []
-            for rate, ch, frames in zip(
-                pdf[rate_col], pdf[channels_col], pdf[frames_col]
-            ):
-                buf = io.BytesIO()
-                with wave.open(buf, "wb") as w:
-                    w.setnchannels(int(ch))
-                    w.setsampwidth(2)
-                    w.setframerate(int(rate))
-                    w.writeframes(b"\x00" * (2 * int(ch) * int(frames)))
-                payloads.append(buf.getvalue())
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf[id_col],
-                    "payload": payloads,
-                    "media_type": "audio/wav",
-                }
-            )
+    def one(rate: int, ch: int, frames: int) -> bytes:
+        buf = io.BytesIO()
+        with wave.open(buf, "wb") as w:
+            w.setnchannels(ch)
+            w.setsampwidth(2)
+            w.setframerate(rate)
+            w.writeframes(b"\x00" * (2 * ch * frames))
+        return buf.getvalue()
 
-    return df.mapInPandas(batches, ASSET_SCHEMA)
+    return _synth_assets(
+        df, id_col, "audio/wav", one, rate_col, channels_col, frames_col
+    )
 
 
 def synth_wav_tone_assets(
@@ -750,40 +763,29 @@ def synth_wav_tone_assets(
 
     import numpy as np
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = []
-            for rate, ch, frames, period, step in zip(
-                pdf[rate_col], pdf[channels_col], pdf[frames_col],
-                pdf[period_col], pdf[step_col],
-            ):
-                p, s, f, c = int(period), int(step), int(frames), int(ch)
-                off = ((p - 1) * s) // 2
-                if (p - 1) * s - off > 32767 or -off < -32768:
-                    # astype('<i2') would WRAP silently, breaking the
-                    # oracle-recomputable-waveform contract — fail loud
-                    raise ValueError(
-                        "synth_wav_tone_assets: sawtooth peak "
-                        f"(period={p}, step={s}) exceeds int16 range"
-                    )
-                vals = (np.arange(f, dtype=np.int64) % p) * s - off
-                pcm = np.repeat(vals, c).astype("<i2").tobytes()
-                buf = io.BytesIO()
-                with wave.open(buf, "wb") as w:
-                    w.setnchannels(c)
-                    w.setsampwidth(2)
-                    w.setframerate(int(rate))
-                    w.writeframes(pcm)
-                payloads.append(buf.getvalue())
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf[id_col],
-                    "payload": payloads,
-                    "media_type": "audio/wav",
-                }
+    def one(rate: int, c: int, f: int, p: int, s: int) -> bytes:
+        off = ((p - 1) * s) // 2
+        if (p - 1) * s - off > 32767 or -off < -32768:
+            # astype('<i2') would WRAP silently, breaking the
+            # oracle-recomputable-waveform contract — fail loud
+            raise ValueError(
+                "synth_wav_tone_assets: sawtooth peak "
+                f"(period={p}, step={s}) exceeds int16 range"
             )
+        vals = (np.arange(f, dtype=np.int64) % p) * s - off
+        pcm = np.repeat(vals, c).astype("<i2").tobytes()
+        buf = io.BytesIO()
+        with wave.open(buf, "wb") as w:
+            w.setnchannels(c)
+            w.setsampwidth(2)
+            w.setframerate(rate)
+            w.writeframes(pcm)
+        return buf.getvalue()
 
-    return df.mapInPandas(batches, ASSET_SCHEMA)
+    return _synth_assets(
+        df, id_col, "audio/wav", one,
+        rate_col, channels_col, frames_col, period_col, step_col,
+    )
 
 
 def _wav_container(fmt_tag: int, n_ch: int, rate: int,
@@ -825,29 +827,19 @@ def synth_wav_g711_assets(
     narrow."""
     import numpy as np
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = []
-            for aid, rate, frames, law in zip(
-                pdf[id_col], pdf[rate_col], pdf[frames_col],
-                pdf[law_col],
-            ):
-                i = np.arange(int(frames), dtype=np.int64)
-                data = ((5 * i + int(aid)) % 256).astype(np.uint8)
-                tag = 7 if law == "ulaw" else 6
-                payloads.append(
-                    _wav_container(tag, 1, int(rate), 1, 8,
-                                   data.tobytes())
-                )
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf[id_col],
-                    "payload": payloads,
-                    "media_type": "audio/wav",
-                }
-            )
+    def one(aid: int, rate: int, frames: int, tag: int) -> bytes:
+        i = np.arange(frames, dtype=np.int64)
+        data = ((5 * i + aid) % 256).astype(np.uint8)
+        return _wav_container(tag, 1, rate, 1, 8, data.tobytes())
 
-    return df.mapInPandas(batches, ASSET_SCHEMA)
+    # the wrapper passes ints only, so the law maps to its tag JVM-side
+    tagged = df.withColumn(
+        "_g711_tag", F.when(F.col(law_col) == "ulaw", 7).otherwise(6)
+    )
+    return _synth_assets(
+        tagged, id_col, "audio/wav", one,
+        id_col, rate_col, frames_col, "_g711_tag",
+    )
 
 
 def synth_wav_ima_adpcm_assets(
@@ -876,7 +868,7 @@ def synth_wav_ima_adpcm_assets(
 
     nch = n_channels
 
-    def one(aid: int, blocks: int, align: int) -> bytes:
+    def one(aid: int, rate: int, blocks: int, align: int) -> bytes:
         out = bytearray()
         nwords = (align - 4 * nch) // 4  # total 4-byte nibble words
         for b_ in range(blocks):
@@ -896,29 +888,12 @@ def synth_wav_ima_adpcm_assets(
             for w in range(nwords):
                 c, wc = w % nch, w // nch
                 out += ch_bytes[c][wc * 4 : wc * 4 + 4].tobytes()
-        return bytes(out)
+        return _wav_container(0x11, nch, rate, align, 4, bytes(out))
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = [
-                _wav_container(
-                    0x11, nch, int(rate), int(align), 4,
-                    one(int(aid), int(blocks), int(align)),
-                )
-                for aid, rate, blocks, align in zip(
-                    pdf[id_col], pdf[rate_col], pdf[blocks_col],
-                    pdf[align_col],
-                )
-            ]
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf[id_col],
-                    "payload": payloads,
-                    "media_type": "audio/wav",
-                }
-            )
-
-    return df.mapInPandas(batches, ASSET_SCHEMA)
+    return _synth_assets(
+        df, id_col, "audio/wav", one,
+        id_col, rate_col, blocks_col, align_col,
+    )
 
 
 def synth_wav_ms_adpcm_assets(
@@ -949,7 +924,11 @@ def synth_wav_ms_adpcm_assets(
 
     nch = n_channels
 
-    def one(aid: int, blocks: int, align: int) -> bytes:
+    coef_ext = b"".join(
+        struct.pack("<hh", c1, c2) for c1, c2 in _MS_COEFS
+    )
+
+    def one(aid: int, rate: int, blocks: int, align: int) -> bytes:
         out = bytearray()
         body_bytes = align - 7 * nch
         nnib = body_bytes * 2  # flat nibble count, k % nch = channel
@@ -977,38 +956,16 @@ def synth_wav_ms_adpcm_assets(
             out += (
                 (nib[0::2] << 4) | nib[1::2]
             ).astype(np.uint8).tobytes()
-        return bytes(out)
+        spb = nnib // nch + 2  # samples per block
+        ext = struct.pack(
+            "<HHH", 4 + 4 * len(_MS_COEFS), spb, len(_MS_COEFS)
+        ) + coef_ext
+        return _wav_container(2, nch, rate, align, 4, bytes(out), ext=ext)
 
-    spb_of = lambda align: (align - 7 * nch) * 2 // nch + 2  # noqa: E731
-    coef_ext = b"".join(
-        struct.pack("<hh", c1, c2) for c1, c2 in _MS_COEFS
+    return _synth_assets(
+        df, id_col, "audio/wav", one,
+        id_col, rate_col, blocks_col, align_col,
     )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = [
-                _wav_container(
-                    2, nch, int(rate), int(align), 4,
-                    one(int(aid), int(blocks), int(align)),
-                    ext=struct.pack(
-                        "<HHH", 4 + 4 * len(_MS_COEFS),
-                        spb_of(int(align)), len(_MS_COEFS),
-                    ) + coef_ext,
-                )
-                for aid, rate, blocks, align in zip(
-                    pdf[id_col], pdf[rate_col], pdf[blocks_col],
-                    pdf[align_col],
-                )
-            ]
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf[id_col],
-                    "payload": payloads,
-                    "media_type": "audio/wav",
-                }
-            )
-
-    return df.mapInPandas(batches, ASSET_SCHEMA)
 
 
 def synth_au_assets(
@@ -1043,24 +1000,9 @@ def synth_au_assets(
             + data
         )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = [
-                one(int(aid), int(rate), int(frames), int(enc))
-                for aid, rate, frames, enc in zip(
-                    pdf[id_col], pdf[rate_col], pdf[frames_col],
-                    pdf[enc_col],
-                )
-            ]
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf[id_col],
-                    "payload": payloads,
-                    "media_type": "audio/basic",
-                }
-            )
-
-    return df.mapInPandas(batches, ASSET_SCHEMA)
+    return _synth_assets(
+        df, id_col, "audio/basic", one, id_col, rate_col, frames_col, enc_col
+    )
 
 
 def synth_aiff_assets(
@@ -1093,23 +1035,9 @@ def synth_aiff_assets(
         )
         return b"FORM" + struct.pack(">I", len(body)) + body
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = [
-                one(int(aid), int(rate), int(frames))
-                for aid, rate, frames in zip(
-                    pdf[id_col], pdf[rate_col], pdf[frames_col]
-                )
-            ]
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf[id_col],
-                    "payload": payloads,
-                    "media_type": "audio/aiff",
-                }
-            )
-
-    return df.mapInPandas(batches, ASSET_SCHEMA)
+    return _synth_assets(
+        df, id_col, "audio/aiff", one, id_col, rate_col, frames_col
+    )
 
 
 PCM_STATS_SCHEMA = StructType(
@@ -1181,23 +1109,9 @@ def synth_wav_segments_assets(
             w.writeframes(pcm)
         return buf.getvalue()
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf[id_col],
-                    "payload": [
-                        one(int(a), int(t), int(s), int(c))
-                        for a, t, s, c in zip(
-                            pdf[amp_col], pdf[tone_col],
-                            pdf[sil_col], pdf[clip_col],
-                        )
-                    ],
-                    "media_type": "audio/wav",
-                }
-            )
-
-    return df.mapInPandas(batches, ASSET_SCHEMA)
+    return _synth_assets(
+        df, id_col, "audio/wav", one, amp_col, tone_col, sil_col, clip_col
+    )
 
 
 def audio_quality_gates(
@@ -1737,24 +1651,10 @@ def synth_mp3_assets(
         id3 = b"ID3" + bytes([4, 0, 0]) + b"\x00\x00\x00\x00"
         return id3 + frame * int(frames)
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = [
-                one(int(r), int(c), int(n), int(k))
-                for r, c, n, k in zip(
-                    pdf[rate_col], pdf[channels_col],
-                    pdf[frames_col], pdf[bitrate_col],
-                )
-            ]
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf[id_col],
-                    "payload": payloads,
-                    "media_type": "audio/mpeg",
-                }
-            )
-
-    return df.mapInPandas(batches, ASSET_SCHEMA)
+    return _synth_assets(
+        df, id_col, "audio/mpeg", one,
+        rate_col, channels_col, frames_col, bitrate_col,
+    )
 
 
 def synth_flac_assets(
@@ -1780,23 +1680,9 @@ def synth_flac_assets(
         )
         return b"fLaC" + streaminfo
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = [
-                one(int(r), int(c), int(n))
-                for r, c, n in zip(
-                    pdf[rate_col], pdf[channels_col], pdf[frames_col]
-                )
-            ]
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf[id_col],
-                    "payload": payloads,
-                    "media_type": "audio/flac",
-                }
-            )
-
-    return df.mapInPandas(batches, ASSET_SCHEMA)
+    return _synth_assets(
+        df, id_col, "audio/flac", one, rate_col, channels_col, frames_col
+    )
 
 
 def synth_ogg_opus_assets(
@@ -1832,23 +1718,9 @@ def synth_ogg_opus_assets(
             preskip + frames, b"\x00", 0x04
         )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = [
-                one(int(r), int(c), int(n))
-                for r, c, n in zip(
-                    pdf[rate_col], pdf[channels_col], pdf[frames_col]
-                )
-            ]
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf[id_col],
-                    "payload": payloads,
-                    "media_type": "audio/ogg",
-                }
-            )
-
-    return df.mapInPandas(batches, ASSET_SCHEMA)
+    return _synth_assets(
+        df, id_col, "audio/ogg", one, rate_col, channels_col, frames_col
+    )
 
 
 def decode_audio_features(assets: DataFrame) -> DataFrame:
@@ -1928,21 +1800,7 @@ def synth_bmp_gradient_assets(
         )
         return hdr + body
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = [
-                one(int(w), int(h))
-                for w, h in zip(pdf[width_col], pdf[height_col])
-            ]
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf[id_col],
-                    "payload": payloads,
-                    "media_type": "image/bmp",
-                }
-            )
-
-    return df.mapInPandas(batches, ASSET_SCHEMA)
+    return _synth_assets(df, id_col, "image/bmp", one, width_col, height_col)
 
 
 def _png_chunk(ctype: bytes, data: bytes) -> bytes:
@@ -2023,21 +1881,7 @@ def synth_png_gradient_assets(
             + _png_chunk(b"IEND", b"")
         )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = [
-                one(int(w), int(h))
-                for w, h in zip(pdf[width_col], pdf[height_col])
-            ]
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf[id_col],
-                    "payload": payloads,
-                    "media_type": "image/png",
-                }
-            )
-
-    return df.mapInPandas(batches, ASSET_SCHEMA)
+    return _synth_assets(df, id_col, "image/png", one, width_col, height_col)
 
 
 def synth_png16_gradient_assets(
@@ -2109,37 +1953,14 @@ def synth_png16_gradient_assets(
             lines.extend((filt % 256).astype(np.uint8).tobytes())
         ihdr = struct.pack(">IIBBBBB", w, h, 16, 2, 0, 0, 0)
 
-        def chunk(tag: bytes, body: bytes) -> bytes:
-            return (
-                struct.pack(">I", len(body))
-                + tag
-                + body
-                + struct.pack(
-                    ">I", zlib.crc32(tag + body) & 0xFFFFFFFF
-                )
-            )
-
         return (
             b"\x89PNG\r\n\x1a\n"
-            + chunk(b"IHDR", ihdr)
-            + chunk(b"IDAT", zlib.compress(bytes(lines)))
-            + chunk(b"IEND", b"")
+            + _png_chunk(b"IHDR", ihdr)
+            + _png_chunk(b"IDAT", zlib.compress(bytes(lines)))
+            + _png_chunk(b"IEND", b"")
         )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf[id_col],
-                    "payload": [
-                        one(int(w), int(h))
-                        for w, h in zip(pdf[width_col], pdf[height_col])
-                    ],
-                    "media_type": "image/png",
-                }
-            )
-
-    return df.mapInPandas(batches, ASSET_SCHEMA)
+    return _synth_assets(df, id_col, "image/png", one, width_col, height_col)
 
 
 def synth_png_palette_assets(
@@ -2214,42 +2035,17 @@ def synth_png_palette_assets(
         ).astype(np.uint8).tobytes()
         ihdr = struct.pack(">IIBBBBB", w, h, depth, 3, 0, 0, 0)
 
-        def chunk(tag: bytes, body: bytes) -> bytes:
-            return (
-                struct.pack(">I", len(body))
-                + tag
-                + body
-                + struct.pack(
-                    ">I", zlib.crc32(tag + body) & 0xFFFFFFFF
-                )
-            )
-
         return (
             b"\x89PNG\r\n\x1a\n"
-            + chunk(b"IHDR", ihdr)
-            + chunk(b"PLTE", plte)
-            + chunk(b"IDAT", zlib.compress(bytes(lines)))
-            + chunk(b"IEND", b"")
+            + _png_chunk(b"IHDR", ihdr)
+            + _png_chunk(b"PLTE", plte)
+            + _png_chunk(b"IDAT", zlib.compress(bytes(lines)))
+            + _png_chunk(b"IEND", b"")
         )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf[id_col],
-                    "payload": [
-                        one(int(w), int(h), int(d))
-                        for w, h, d in zip(
-                            pdf[width_col],
-                            pdf[height_col],
-                            pdf[depth_col],
-                        )
-                    ],
-                    "media_type": "image/png",
-                }
-            )
-
-    return df.mapInPandas(batches, ASSET_SCHEMA)
+    return _synth_assets(
+        df, id_col, "image/png", one, width_col, height_col, depth_col
+    )
 
 
 def synth_png_interlaced_assets(
@@ -2327,20 +2123,7 @@ def synth_png_interlaced_assets(
             + _png_chunk(b"IEND", b"")
         )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf[id_col],
-                    "payload": [
-                        one(int(w), int(h))
-                        for w, h in zip(pdf[width_col], pdf[height_col])
-                    ],
-                    "media_type": "image/png",
-                }
-            )
-
-    return df.mapInPandas(batches, ASSET_SCHEMA)
+    return _synth_assets(df, id_col, "image/png", one, width_col, height_col)
 
 
 def _gif_lzw_encode(data: bytes, min_code_size: int = 8) -> bytes:
@@ -2521,21 +2304,7 @@ def synth_gif_gradient_assets(
             + b"\x3b"
         )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = [
-                one(int(w), int(h))
-                for w, h in zip(pdf[width_col], pdf[height_col])
-            ]
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf[id_col],
-                    "payload": payloads,
-                    "media_type": "image/gif",
-                }
-            )
-
-    return df.mapInPandas(batches, ASSET_SCHEMA)
+    return _synth_assets(df, id_col, "image/gif", one, width_col, height_col)
 
 
 def _gif_decode(raw: bytes) -> tuple:
@@ -2658,21 +2427,9 @@ def synth_ppm_gradient_assets(
         header = b"P6\n# synthetic gradient\n%d %d\n255\n" % (w, h)
         return header + rgb.tobytes()
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = [
-                one(int(w), int(h))
-                for w, h in zip(pdf[width_col], pdf[height_col])
-            ]
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf[id_col],
-                    "payload": payloads,
-                    "media_type": "image/x-portable-pixmap",
-                }
-            )
-
-    return df.mapInPandas(batches, ASSET_SCHEMA)
+    return _synth_assets(
+        df, id_col, "image/x-portable-pixmap", one, width_col, height_col
+    )
 
 
 def synth_ppm16_gradient_assets(
@@ -2707,21 +2464,9 @@ def synth_ppm16_gradient_assets(
         )
         return header + rgb.tobytes()
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = [
-                one(int(w), int(h))
-                for w, h in zip(pdf[width_col], pdf[height_col])
-            ]
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf[id_col],
-                    "payload": payloads,
-                    "media_type": "image/x-portable-pixmap",
-                }
-            )
-
-    return df.mapInPandas(batches, ASSET_SCHEMA)
+    return _synth_assets(
+        df, id_col, "image/x-portable-pixmap", one, width_col, height_col
+    )
 
 
 def synth_bmp_palette_assets(
@@ -2770,23 +2515,9 @@ def synth_bmp_palette_assets(
         )
         return hdr + pal.tobytes() + body
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = [
-                one(int(w), int(h), int(n))
-                for w, h, n in zip(
-                    pdf[width_col], pdf[height_col], pdf[colors_col]
-                )
-            ]
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf[id_col],
-                    "payload": payloads,
-                    "media_type": "image/bmp",
-                }
-            )
-
-    return df.mapInPandas(batches, ASSET_SCHEMA)
+    return _synth_assets(
+        df, id_col, "image/bmp", one, width_col, height_col, colors_col
+    )
 
 
 def _pnm_header(raw: bytes) -> tuple:
@@ -3262,6 +2993,17 @@ def _vp8l_write_huffman(wr: "_Vp8lBitWriter", lengths: dict):
     return enc
 
 
+def _vp8l_balanced(symbols, space: int = 256) -> dict:
+    """Flat code lengths for the distinct ``symbols``: each gets the
+    same ``bits`` (at least 1), and the lowest unused symbols below
+    ``space`` pad the code to a complete ``2**bits`` leaves."""
+    syms = sorted(set(symbols))
+    bits = max(1, (len(syms) - 1).bit_length())
+    taken = set(syms)
+    spare = [s for s in range(space) if s not in taken]
+    return {s: bits for s in syms + spare[: (1 << bits) - len(syms)]}
+
+
 def _vp8l_prefix_decode(rd: "_Vp8lBitReader", sym: int) -> int:
     """Length/distance prefix decoding (spec 4.2.2): symbols 0-3 are
     the values 1-4; above that, (2 + (s&1)) << ((s-2)>>1) plus
@@ -3302,33 +3044,21 @@ def synth_webp_vp8_assets(
     ``mapInPandas``; narrow."""
     from geniepool_etl_spark.operators import vp8 as _vp8
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = []
-            for aid, w, h in zip(
-                pdf[id_col], pdf[width_col], pdf[height_col]
-            ):
-                a = int(aid) % 7
+    def one(aid: int, w: int, h: int) -> bytes:
+        a = aid % 7
 
-                def mb(mx, my, _a=a):
-                    return (
-                        (37 * mx + 71 * my + 29 * _a) % 256,
-                        (23 * mx + 41 * my + 17 * _a) % 256,
-                        (53 * mx + 13 * my + 11 * _a) % 256,
-                    )
-
-                payloads.append(
-                    _vp8.build_webp_vp8(int(w), int(h), mb)
-                )
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf[id_col],
-                    "payload": payloads,
-                    "media_type": "image/webp",
-                }
+        def mb(mx, my):
+            return (
+                (37 * mx + 71 * my + 29 * a) % 256,
+                (23 * mx + 41 * my + 17 * a) % 256,
+                (53 * mx + 13 * my + 11 * a) % 256,
             )
 
-    return df.mapInPandas(batches, ASSET_SCHEMA)
+        return _vp8.build_webp_vp8(w, h, mb)
+
+    return _synth_assets(
+        df, id_col, "image/webp", one, id_col, width_col, height_col
+    )
 
 
 def synth_webp_vp8_bpred_assets(
@@ -3349,40 +3079,26 @@ def synth_webp_vp8_bpred_assets(
     reconstruction. Arrow ``mapInPandas``; narrow."""
     from geniepool_etl_spark.operators import vp8 as _vp8
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = []
-            for aid, w, h in zip(
-                pdf[id_col], pdf[width_col], pdf[height_col]
-            ):
-                a = int(aid) % 7
+    def one(aid: int, w: int, h: int) -> bytes:
+        a = aid % 7
 
-                def mb(mx, my, _a=a):
-                    return (
-                        (37 * mx + 71 * my + 29 * _a) % 256,
-                        (23 * mx + 41 * my + 17 * _a) % 256,
-                        (53 * mx + 13 * my + 11 * _a) % 256,
-                    )
-
-                def ym(mx, my):
-                    return (
-                        _vp8._B_PRED
-                        if (mx + my) % 2 == 0
-                        else _vp8._DC_PRED
-                    )
-
-                payloads.append(
-                    _vp8.build_webp_vp8(int(w), int(h), mb, ymode=ym)
-                )
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf[id_col],
-                    "payload": payloads,
-                    "media_type": "image/webp",
-                }
+        def mb(mx, my):
+            return (
+                (37 * mx + 71 * my + 29 * a) % 256,
+                (23 * mx + 41 * my + 17 * a) % 256,
+                (53 * mx + 13 * my + 11 * a) % 256,
             )
 
-    return df.mapInPandas(batches, ASSET_SCHEMA)
+        def ym(mx, my):
+            return (
+                _vp8._B_PRED if (mx + my) % 2 == 0 else _vp8._DC_PRED
+            )
+
+        return _vp8.build_webp_vp8(w, h, mb, ymode=ym)
+
+    return _synth_assets(
+        df, id_col, "image/webp", one, id_col, width_col, height_col
+    )
 
 
 def synth_webp_vp8_seg_assets(
@@ -3403,36 +3119,23 @@ def synth_webp_vp8_seg_assets(
     ``mapInPandas``; narrow."""
     from geniepool_etl_spark.operators import vp8 as _vp8
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = []
-            for aid, w, h in zip(
-                pdf[id_col], pdf[width_col], pdf[height_col]
-            ):
-                a = int(aid) % 7
+    def one(aid: int, w: int, h: int) -> bytes:
+        a = aid % 7
 
-                def mb(mx, my, _a=a):
-                    return ((37 * mx + 71 * my + 29 * _a) % 256,
-                            128, 128)
+        def mb(mx, my):
+            return ((37 * mx + 71 * my + 29 * a) % 256, 128, 128)
 
-                payloads.append(
-                    _vp8.build_webp_vp8(
-                        int(w), int(h), mb,
-                        segments={
-                            "map": lambda mx, my: (mx + 2 * my) % 4,
-                            "q_abs": [4, 10, 20, 28],
-                        },
-                    )
-                )
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf[id_col],
-                    "payload": payloads,
-                    "media_type": "image/webp",
-                }
-            )
+        return _vp8.build_webp_vp8(
+            w, h, mb,
+            segments={
+                "map": lambda mx, my: (mx + 2 * my) % 4,
+                "q_abs": [4, 10, 20, 28],
+            },
+        )
 
-    return df.mapInPandas(batches, ASSET_SCHEMA)
+    return _synth_assets(
+        df, id_col, "image/webp", one, id_col, width_col, height_col
+    )
 
 
 def synth_webp_vp8_lfdelta_assets(
@@ -3452,40 +3155,25 @@ def synth_webp_vp8_lfdelta_assets(
     [0,3,1,2][my%4]``, chroma 128. Arrow ``mapInPandas``; narrow."""
     from geniepool_etl_spark.operators import vp8 as _vp8
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = []
-            for aid, w, h in zip(
-                pdf[id_col], pdf[width_col], pdf[height_col]
-            ):
-                base = 90 + int(aid) % 40
-                pat = (0, 3, 1, 2)
+    def one(aid: int, w: int, h: int) -> bytes:
+        base = 90 + aid % 40
+        pat = (0, 3, 1, 2)
 
-                def mb(mx, my, _b=base, _p=pat):
-                    return (_b + _p[my % 4], 128, 128)
+        def mb(mx, my):
+            return (base + pat[my % 4], 128, 128)
 
-                def ym(mx, my):
-                    return (
-                        _vp8._B_PRED if my % 2 == 1 else _vp8._DC_PRED
-                    )
+        def ym(mx, my):
+            return _vp8._B_PRED if my % 2 == 1 else _vp8._DC_PRED
 
-                payloads.append(
-                    _vp8.build_webp_vp8(
-                        int(w), int(h), mb, ymode=ym,
-                        filter_level=20, filter_type=0,
-                        lf_deltas={"ref": [-20, 0, 0, 0],
-                                   "mode": [20, 0, 0, 0]},
-                    )
-                )
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf[id_col],
-                    "payload": payloads,
-                    "media_type": "image/webp",
-                }
-            )
+        return _vp8.build_webp_vp8(
+            w, h, mb, ymode=ym,
+            filter_level=20, filter_type=0,
+            lf_deltas={"ref": [-20, 0, 0, 0], "mode": [20, 0, 0, 0]},
+        )
 
-    return df.mapInPandas(batches, ASSET_SCHEMA)
+    return _synth_assets(
+        df, id_col, "image/webp", one, id_col, width_col, height_col
+    )
 
 
 def synth_webp_vp8_nf_assets(
@@ -3508,33 +3196,20 @@ def synth_webp_vp8_nf_assets(
     visible. Arrow ``mapInPandas``; narrow."""
     from geniepool_etl_spark.operators import vp8 as _vp8
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = []
-            for aid, w, h in zip(
-                pdf[id_col], pdf[width_col], pdf[height_col]
-            ):
-                base = 90 + int(aid) % 40
-                pat = (0, 3, 1, 2)
+    def one(aid: int, w: int, h: int) -> bytes:
+        base = 90 + aid % 40
+        pat = (0, 3, 1, 2)
 
-                def mb(mx, my, _b=base, _p=pat):
-                    return (_b + _p[my % 4], 128, 128)
+        def mb(mx, my):
+            return (base + pat[my % 4], 128, 128)
 
-                payloads.append(
-                    _vp8.build_webp_vp8(
-                        int(w), int(h), mb,
-                        filter_level=20, filter_type=0,
-                    )
-                )
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf[id_col],
-                    "payload": payloads,
-                    "media_type": "image/webp",
-                }
-            )
+        return _vp8.build_webp_vp8(
+            w, h, mb, filter_level=20, filter_type=0
+        )
 
-    return df.mapInPandas(batches, ASSET_SCHEMA)
+    return _synth_assets(
+        df, id_col, "image/webp", one, id_col, width_col, height_col
+    )
 
 
 def _vp8l_distance_map() -> tuple:
@@ -4032,14 +3707,6 @@ def synth_webp_lossless_assets(
             )
         )
 
-        def _balanced(symbols: list) -> dict:
-            bits = max(1, (len(symbols) - 1).bit_length())
-            pad = (1 << bits) - len(symbols)
-            spare = [
-                s for s in range(256) if s not in set(symbols)
-            ][:pad]
-            return {s: bits for s in list(symbols) + spare}
-
         wr = _Vp8lBitWriter()
         wr.write(w - 1, 14)
         wr.write(h - 1, 14)
@@ -4055,9 +3722,9 @@ def synth_webp_lossless_assets(
         else:
             wr.write(0, 1)  # no color cache
         wr.write(0, 1)  # no meta-huffman
-        green_enc = _vp8l_write_huffman(wr, _balanced(green_syms))
-        red_enc = _vp8l_write_huffman(wr, _balanced(reds))
-        blue_enc = _vp8l_write_huffman(wr, _balanced(blues))
+        green_enc = _vp8l_write_huffman(wr, _vp8l_balanced(green_syms))
+        red_enc = _vp8l_write_huffman(wr, _vp8l_balanced(reds))
+        blue_enc = _vp8l_write_huffman(wr, _vp8l_balanced(blues))
         # alpha: single value 255 → SIMPLE code, zero bits per use
         wr.write(1, 1)  # simple
         wr.write(0, 1)  # one symbol
@@ -4101,21 +3768,7 @@ def synth_webp_lossless_assets(
         body = b"WEBP" + chunk
         return b"RIFF" + struct.pack("<I", len(body)) + body
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf[id_col],
-                    "payload": [
-                        one(int(w), int(h))
-                        for w, h in zip(pdf[width_col], pdf[height_col])
-                    ],
-                    "media_type": "image/webp",
-                    # (subtract_green / cache_bits are closed over)
-                }
-            )
-
-    return df.mapInPandas(batches, ASSET_SCHEMA)
+    return _synth_assets(df, id_col, "image/webp", one, width_col, height_col)
 
 
 def synth_webp_vp8l_predictor_assets(
@@ -4183,13 +3836,6 @@ def synth_webp_vp8l_predictor_assets(
                 )
                 out.append(tgt)
 
-        def balanced(symbols) -> dict:
-            syms = sorted(set(symbols))
-            bits = max(1, (len(syms) - 1).bit_length())
-            pad = (1 << bits) - len(syms)
-            spare = [s for s in range(256) if s not in set(syms)][:pad]
-            return {s: bits for s in syms + spare}
-
         wr = _Vp8lBitWriter()
         wr.write(w - 1, 14)
         wr.write(h - 1, 14)
@@ -4206,9 +3852,9 @@ def synth_webp_vp8l_predictor_assets(
             for ty in range(tiles_h)
             for tx in range(tiles_w)
         ]
-        mode_enc = _vp8l_write_huffman(wr, balanced(modes))
-        zero_enc = _vp8l_write_huffman(wr, balanced([0]))
-        zero_enc_b = _vp8l_write_huffman(wr, balanced([0]))
+        mode_enc = _vp8l_write_huffman(wr, _vp8l_balanced(modes))
+        zero_enc = _vp8l_write_huffman(wr, _vp8l_balanced([0]))
+        zero_enc_b = _vp8l_write_huffman(wr, _vp8l_balanced([0]))
         # alpha: single 255 → SIMPLE code, zero bits per use
         wr.write(1, 1)
         wr.write(0, 1)
@@ -4233,9 +3879,9 @@ def synth_webp_vp8l_predictor_assets(
         # --- main image: residual literals, no cache, no meta
         wr.write(0, 1)  # no color cache
         wr.write(0, 1)  # no meta-huffman
-        g_enc = _vp8l_write_huffman(wr, balanced([p[2] for p in res]))
-        r_enc = _vp8l_write_huffman(wr, balanced([p[1] for p in res]))
-        b_enc = _vp8l_write_huffman(wr, balanced([p[3] for p in res]))
+        g_enc = _vp8l_write_huffman(wr, _vp8l_balanced([p[2] for p in res]))
+        r_enc = _vp8l_write_huffman(wr, _vp8l_balanced([p[1] for p in res]))
+        b_enc = _vp8l_write_huffman(wr, _vp8l_balanced([p[3] for p in res]))
         # alpha residual is ALWAYS 0 → simple single-symbol code
         wr.write(1, 1)
         wr.write(0, 1)
@@ -4257,23 +3903,9 @@ def synth_webp_vp8l_predictor_assets(
         body = b"WEBP" + chunk
         return b"RIFF" + struct.pack("<I", len(body)) + body
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf[id_col],
-                    "payload": [
-                        one(int(aid), int(w), int(h))
-                        for aid, w, h in zip(
-                            pdf[id_col], pdf[width_col],
-                            pdf[height_col],
-                        )
-                    ],
-                    "media_type": "image/webp",
-                }
-            )
-
-    return df.mapInPandas(batches, ASSET_SCHEMA)
+    return _synth_assets(
+        df, id_col, "image/webp", one, id_col, width_col, height_col
+    )
 
 
 def synth_webp_vp8l_color_assets(
@@ -4330,13 +3962,6 @@ def synth_webp_vp8l_color_assets(
                 ) & 0xFF
                 res.append((a, rr, g, rb))
 
-        def balanced(symbols) -> dict:
-            syms = sorted(set(symbols))
-            bits = max(1, (len(syms) - 1).bit_length())
-            pad = (1 << bits) - len(syms)
-            spare = [s for s in range(256) if s not in set(syms)][:pad]
-            return {s: bits for s in syms + spare}
-
         wr = _Vp8lBitWriter()
         wr.write(w - 1, 14)
         wr.write(h - 1, 14)
@@ -4352,9 +3977,9 @@ def synth_webp_vp8l_color_assets(
             for ty in range(tiles_h)
             for tx in range(tiles_w)
         ]
-        eg_enc = _vp8l_write_huffman(wr, balanced([e[2] for e in elems]))
-        er_enc = _vp8l_write_huffman(wr, balanced([e[1] for e in elems]))
-        eb_enc = _vp8l_write_huffman(wr, balanced([e[3] for e in elems]))
+        eg_enc = _vp8l_write_huffman(wr, _vp8l_balanced([e[2] for e in elems]))
+        er_enc = _vp8l_write_huffman(wr, _vp8l_balanced([e[1] for e in elems]))
+        eb_enc = _vp8l_write_huffman(wr, _vp8l_balanced([e[3] for e in elems]))
         wr.write(1, 1)  # alpha: simple single 255
         wr.write(0, 1)
         wr.write(1, 1)
@@ -4376,9 +4001,9 @@ def synth_webp_vp8l_color_assets(
         wr.write(0, 1)  # end of transform list
         wr.write(0, 1)  # no color cache
         wr.write(0, 1)  # no meta-huffman
-        g_enc = _vp8l_write_huffman(wr, balanced([p[2] for p in res]))
-        r_enc = _vp8l_write_huffman(wr, balanced([p[1] for p in res]))
-        b_enc = _vp8l_write_huffman(wr, balanced([p[3] for p in res]))
+        g_enc = _vp8l_write_huffman(wr, _vp8l_balanced([p[2] for p in res]))
+        r_enc = _vp8l_write_huffman(wr, _vp8l_balanced([p[1] for p in res]))
+        b_enc = _vp8l_write_huffman(wr, _vp8l_balanced([p[3] for p in res]))
         wr.write(1, 1)  # alpha: simple single 255
         wr.write(0, 1)
         wr.write(1, 1)
@@ -4398,23 +4023,9 @@ def synth_webp_vp8l_color_assets(
         body = b"WEBP" + chunk
         return b"RIFF" + struct.pack("<I", len(body)) + body
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf[id_col],
-                    "payload": [
-                        one(int(aid), int(w), int(h))
-                        for aid, w, h in zip(
-                            pdf[id_col], pdf[width_col],
-                            pdf[height_col],
-                        )
-                    ],
-                    "media_type": "image/webp",
-                }
-            )
-
-    return df.mapInPandas(batches, ASSET_SCHEMA)
+    return _synth_assets(
+        df, id_col, "image/webp", one, id_col, width_col, height_col
+    )
 
 
 def synth_webp_vp8l_palette_assets(
@@ -4458,13 +4069,6 @@ def synth_webp_vp8l_palette_assets(
             )
             prev = e
 
-        def balanced(symbols) -> dict:
-            syms = sorted(set(symbols))
-            bits = max(1, (len(syms) - 1).bit_length())
-            pad = (1 << bits) - len(syms)
-            spare = [s for s in range(256) if s not in set(syms)][:pad]
-            return {s: bits for s in syms + spare}
-
         wr = _Vp8lBitWriter()
         wr.write(w - 1, 14)
         wr.write(h - 1, 14)
@@ -4476,10 +4080,10 @@ def synth_webp_vp8l_palette_assets(
         # palette sub-image: literal delta pixels (alpha delta of
         # entry 0 is 255, later ones 0 — a real two-symbol code)
         wr.write(0, 1)  # no color cache
-        pg = _vp8l_write_huffman(wr, balanced([d[2] for d in deltas]))
-        pr = _vp8l_write_huffman(wr, balanced([d[1] for d in deltas]))
-        pb = _vp8l_write_huffman(wr, balanced([d[3] for d in deltas]))
-        pa = _vp8l_write_huffman(wr, balanced([d[0] for d in deltas]))
+        pg = _vp8l_write_huffman(wr, _vp8l_balanced([d[2] for d in deltas]))
+        pr = _vp8l_write_huffman(wr, _vp8l_balanced([d[1] for d in deltas]))
+        pb = _vp8l_write_huffman(wr, _vp8l_balanced([d[3] for d in deltas]))
+        pa = _vp8l_write_huffman(wr, _vp8l_balanced([d[0] for d in deltas]))
         wr.write(1, 1)  # distance: simple single 0
         wr.write(0, 1)
         wr.write(0, 1)
@@ -4500,9 +4104,9 @@ def synth_webp_vp8l_palette_assets(
         wr.write(0, 1)  # no color cache
         wr.write(0, 1)  # no meta-huffman
         idxs = [idx(x, y) for y in range(h) for x in range(w)]
-        g_enc = _vp8l_write_huffman(wr, balanced(idxs))
-        r_enc = _vp8l_write_huffman(wr, balanced([0]))
-        b_enc = _vp8l_write_huffman(wr, balanced([0]))
+        g_enc = _vp8l_write_huffman(wr, _vp8l_balanced(idxs))
+        r_enc = _vp8l_write_huffman(wr, _vp8l_balanced([0]))
+        b_enc = _vp8l_write_huffman(wr, _vp8l_balanced([0]))
         wr.write(1, 1)  # alpha: simple single 255
         wr.write(0, 1)
         wr.write(1, 1)
@@ -4522,23 +4126,9 @@ def synth_webp_vp8l_palette_assets(
         body = b"WEBP" + chunk
         return b"RIFF" + struct.pack("<I", len(body)) + body
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf[id_col],
-                    "payload": [
-                        one(int(aid), int(w), int(h))
-                        for aid, w, h in zip(
-                            pdf[id_col], pdf[width_col],
-                            pdf[height_col],
-                        )
-                    ],
-                    "media_type": "image/webp",
-                }
-            )
-
-    return df.mapInPandas(batches, ASSET_SCHEMA)
+    return _synth_assets(
+        df, id_col, "image/webp", one, id_col, width_col, height_col
+    )
 
 
 def synth_webp_vp8l_meta_assets(
@@ -4578,13 +4168,6 @@ def synth_webp_vp8l_meta_assets(
                 (9 * x + y + a7) % 256,
             )
 
-        def balanced(symbols) -> dict:
-            syms = sorted(set(symbols))
-            bits = max(1, (len(syms) - 1).bit_length())
-            pad = (1 << bits) - len(syms)
-            spare = [s for s in range(256) if s not in set(syms)][:pad]
-            return {s: bits for s in syms + spare}
-
         wr = _Vp8lBitWriter()
         wr.write(w - 1, 14)
         wr.write(h - 1, 14)
@@ -4601,9 +4184,9 @@ def synth_webp_vp8l_meta_assets(
             for _ty in range(tiles_h)
             for tx in range(tiles_w)
         ]
-        mg = _vp8l_write_huffman(wr, balanced(gids))
-        mr = _vp8l_write_huffman(wr, balanced([0]))
-        mb = _vp8l_write_huffman(wr, balanced([0]))
+        mg = _vp8l_write_huffman(wr, _vp8l_balanced(gids))
+        mr = _vp8l_write_huffman(wr, _vp8l_balanced([0]))
+        mb = _vp8l_write_huffman(wr, _vp8l_balanced([0]))
         wr.write(1, 1)  # alpha: simple single 255
         wr.write(0, 1)
         wr.write(1, 1)
@@ -4643,9 +4226,9 @@ def synth_webp_vp8l_meta_assets(
                 for x in range(w)
                 if group_of(x) == grp
             ] or [0]
-            ge = _vp8l_write_huffman(wr, balanced(greens))
-            re_ = _vp8l_write_huffman(wr, balanced(reds))
-            be = _vp8l_write_huffman(wr, balanced(blues))
+            ge = _vp8l_write_huffman(wr, _vp8l_balanced(greens))
+            re_ = _vp8l_write_huffman(wr, _vp8l_balanced(reds))
+            be = _vp8l_write_huffman(wr, _vp8l_balanced(blues))
             wr.write(1, 1)  # alpha: simple single 255
             wr.write(0, 1)
             wr.write(1, 1)
@@ -4669,23 +4252,9 @@ def synth_webp_vp8l_meta_assets(
         body = b"WEBP" + chunk
         return b"RIFF" + struct.pack("<I", len(body)) + body
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf[id_col],
-                    "payload": [
-                        one(int(aid), int(w), int(h))
-                        for aid, w, h in zip(
-                            pdf[id_col], pdf[width_col],
-                            pdf[height_col],
-                        )
-                    ],
-                    "media_type": "image/webp",
-                }
-            )
-
-    return df.mapInPandas(batches, ASSET_SCHEMA)
+    return _synth_assets(
+        df, id_col, "image/webp", one, id_col, width_col, height_col
+    )
 
 
 def synth_webp_vp8l_bundled_assets(
@@ -4740,13 +4309,6 @@ def synth_webp_vp8l_bundled_assets(
                         v |= idx(x, y) << (j * wb)
                 packed.append(v)
 
-        def balanced(symbols) -> dict:
-            syms = sorted(set(symbols))
-            bits = max(1, (len(syms) - 1).bit_length())
-            pad = (1 << bits) - len(syms)
-            spare = [s for s in range(256) if s not in set(syms)][:pad]
-            return {s: bits for s in syms + spare}
-
         wr = _Vp8lBitWriter()
         wr.write(w - 1, 14)
         wr.write(h - 1, 14)
@@ -4756,10 +4318,10 @@ def synth_webp_vp8l_bundled_assets(
         wr.write(3, 2)  # COLOR-INDEXING transform
         wr.write(K - 1, 8)
         wr.write(0, 1)  # palette sub-image: no color cache
-        pg = _vp8l_write_huffman(wr, balanced([d[2] for d in deltas]))
-        pr = _vp8l_write_huffman(wr, balanced([d[1] for d in deltas]))
-        pb = _vp8l_write_huffman(wr, balanced([d[3] for d in deltas]))
-        pa = _vp8l_write_huffman(wr, balanced([d[0] for d in deltas]))
+        pg = _vp8l_write_huffman(wr, _vp8l_balanced([d[2] for d in deltas]))
+        pr = _vp8l_write_huffman(wr, _vp8l_balanced([d[1] for d in deltas]))
+        pb = _vp8l_write_huffman(wr, _vp8l_balanced([d[3] for d in deltas]))
+        pa = _vp8l_write_huffman(wr, _vp8l_balanced([d[0] for d in deltas]))
         wr.write(1, 1)  # distance: simple single 0
         wr.write(0, 1)
         wr.write(0, 1)
@@ -4778,9 +4340,9 @@ def synth_webp_vp8l_bundled_assets(
         wr.write(0, 1)  # end of transform list
         wr.write(0, 1)  # no color cache
         wr.write(0, 1)  # no meta-huffman
-        g_enc = _vp8l_write_huffman(wr, balanced(packed))
-        r_enc = _vp8l_write_huffman(wr, balanced([0]))
-        b_enc = _vp8l_write_huffman(wr, balanced([0]))
+        g_enc = _vp8l_write_huffman(wr, _vp8l_balanced(packed))
+        r_enc = _vp8l_write_huffman(wr, _vp8l_balanced([0]))
+        b_enc = _vp8l_write_huffman(wr, _vp8l_balanced([0]))
         wr.write(1, 1)  # alpha: simple single 255
         wr.write(0, 1)
         wr.write(1, 1)
@@ -4800,23 +4362,9 @@ def synth_webp_vp8l_bundled_assets(
         body = b"WEBP" + chunk
         return b"RIFF" + struct.pack("<I", len(body)) + body
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf[id_col],
-                    "payload": [
-                        one(int(aid), int(w), int(h))
-                        for aid, w, h in zip(
-                            pdf[id_col], pdf[width_col],
-                            pdf[height_col],
-                        )
-                    ],
-                    "media_type": "image/webp",
-                }
-            )
-
-    return df.mapInPandas(batches, ASSET_SCHEMA)
+    return _synth_assets(
+        df, id_col, "image/webp", one, id_col, width_col, height_col
+    )
 
 
 def synth_webp_vp8l_dist_assets(
@@ -4874,15 +4422,6 @@ def synth_webp_vp8l_dist_assets(
             dx, dy = valid[(y + a7) % len(valid)]
             refs.append((w, code_of[(dx, dy)]))
 
-        def balanced(symbols, space=256) -> dict:
-            syms = sorted(set(symbols))
-            bits = max(1, (len(syms) - 1).bit_length())
-            pad = (1 << bits) - len(syms)
-            spare = [
-                s for s in range(space) if s not in set(syms)
-            ][:pad]
-            return {s: bits for s in syms + spare}
-
         lits = [entry(j) for j in range(4)]
         len_events = [_vp8l_prefix_encode(ln) for ln, _ in refs]
         dist_events = [_vp8l_prefix_encode(c) for _, c in refs]
@@ -4897,15 +4436,15 @@ def synth_webp_vp8l_dist_assets(
         wr.write(0, 1)  # no transforms
         wr.write(0, 1)  # no color cache
         wr.write(0, 1)  # no meta-huffman
-        g_enc = _vp8l_write_huffman(wr, balanced(green_syms))
-        r_enc = _vp8l_write_huffman(wr, balanced([p[1] for p in lits]))
-        b_enc = _vp8l_write_huffman(wr, balanced([p[3] for p in lits]))
+        g_enc = _vp8l_write_huffman(wr, _vp8l_balanced(green_syms))
+        r_enc = _vp8l_write_huffman(wr, _vp8l_balanced([p[1] for p in lits]))
+        b_enc = _vp8l_write_huffman(wr, _vp8l_balanced([p[3] for p in lits]))
         wr.write(1, 1)  # alpha: simple single 255
         wr.write(0, 1)
         wr.write(1, 1)
         wr.write(255, 8)
         d_enc = _vp8l_write_huffman(
-            wr, balanced([s for s, _, _ in dist_events], space=40)
+            wr, _vp8l_balanced([s for s, _, _ in dist_events], space=40)
         )
 
         def put(enc, sym):
@@ -4933,23 +4472,9 @@ def synth_webp_vp8l_dist_assets(
         body = b"WEBP" + chunk
         return b"RIFF" + struct.pack("<I", len(body)) + body
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf[id_col],
-                    "payload": [
-                        one(int(aid), int(w), int(h))
-                        for aid, w, h in zip(
-                            pdf[id_col], pdf[width_col],
-                            pdf[height_col],
-                        )
-                    ],
-                    "media_type": "image/webp",
-                }
-            )
-
-    return df.mapInPandas(batches, ASSET_SCHEMA)
+    return _synth_assets(
+        df, id_col, "image/webp", one, id_col, width_col, height_col
+    )
 
 
 def synth_webp_vp8l_bundled_palette_assets(
@@ -5039,13 +4564,6 @@ def synth_webp_vp8l_bundled_palette_assets(
                 )
                 out.append(tgt)
 
-        def balanced(symbols) -> dict:
-            syms = sorted(set(symbols))
-            bits = max(1, (len(syms) - 1).bit_length())
-            pad = (1 << bits) - len(syms)
-            spare = [s for s in range(256) if s not in set(syms)][:pad]
-            return {s: bits for s in syms + spare}
-
         wr = _Vp8lBitWriter()
         wr.write(w - 1, 14)
         wr.write(h - 1, 14)
@@ -5056,10 +4574,10 @@ def synth_webp_vp8l_bundled_palette_assets(
         wr.write(3, 2)
         wr.write(K - 1, 8)
         wr.write(0, 1)  # palette sub-image: no color cache
-        pg = _vp8l_write_huffman(wr, balanced([d[2] for d in deltas]))
-        pr = _vp8l_write_huffman(wr, balanced([d[1] for d in deltas]))
-        pb = _vp8l_write_huffman(wr, balanced([d[3] for d in deltas]))
-        pa = _vp8l_write_huffman(wr, balanced([d[0] for d in deltas]))
+        pg = _vp8l_write_huffman(wr, _vp8l_balanced([d[2] for d in deltas]))
+        pr = _vp8l_write_huffman(wr, _vp8l_balanced([d[1] for d in deltas]))
+        pb = _vp8l_write_huffman(wr, _vp8l_balanced([d[3] for d in deltas]))
+        pa = _vp8l_write_huffman(wr, _vp8l_balanced([d[0] for d in deltas]))
         wr.write(1, 1)  # distance: simple single 0
         wr.write(0, 1)
         wr.write(0, 1)
@@ -5085,9 +4603,9 @@ def synth_webp_vp8l_bundled_palette_assets(
             for ty in range(tiles_h)
             for tx in range(tiles_w)
         ]
-        mg = _vp8l_write_huffman(wr, balanced([m[2] for m in modes]))
-        mr = _vp8l_write_huffman(wr, balanced([0]))
-        mb_ = _vp8l_write_huffman(wr, balanced([0]))
+        mg = _vp8l_write_huffman(wr, _vp8l_balanced([m[2] for m in modes]))
+        mr = _vp8l_write_huffman(wr, _vp8l_balanced([0]))
+        mb_ = _vp8l_write_huffman(wr, _vp8l_balanced([0]))
         wr.write(1, 1)  # alpha: simple single 255
         wr.write(0, 1)
         wr.write(1, 1)
@@ -5104,9 +4622,9 @@ def synth_webp_vp8l_bundled_palette_assets(
         # --- level-0: predictor residuals of the packed image
         wr.write(0, 1)  # no color cache
         wr.write(0, 1)  # no meta-huffman
-        g_enc = _vp8l_write_huffman(wr, balanced([r[2] for r in res]))
-        r_enc = _vp8l_write_huffman(wr, balanced([r[1] for r in res]))
-        b_enc = _vp8l_write_huffman(wr, balanced([r[3] for r in res]))
+        g_enc = _vp8l_write_huffman(wr, _vp8l_balanced([r[2] for r in res]))
+        r_enc = _vp8l_write_huffman(wr, _vp8l_balanced([r[1] for r in res]))
+        b_enc = _vp8l_write_huffman(wr, _vp8l_balanced([r[3] for r in res]))
         a_syms = sorted({r[0] for r in res})
         if len(a_syms) == 1:
             wr.write(1, 1)  # alpha: simple single symbol
@@ -5116,7 +4634,7 @@ def synth_webp_vp8l_bundled_palette_assets(
             a_enc = None
         else:
             a_enc = _vp8l_write_huffman(
-                wr, balanced([r[0] for r in res])
+                wr, _vp8l_balanced([r[0] for r in res])
             )
         wr.write(1, 1)  # distance: simple single 0
         wr.write(0, 1)
@@ -5135,23 +4653,9 @@ def synth_webp_vp8l_bundled_palette_assets(
         body = b"WEBP" + chunk
         return b"RIFF" + struct.pack("<I", len(body)) + body
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf[id_col],
-                    "payload": [
-                        one(int(aid), int(w), int(h))
-                        for aid, w, h in zip(
-                            pdf[id_col], pdf[width_col],
-                            pdf[height_col],
-                        )
-                    ],
-                    "media_type": "image/webp",
-                }
-            )
-
-    return df.mapInPandas(batches, ASSET_SCHEMA)
+    return _synth_assets(
+        df, id_col, "image/webp", one, id_col, width_col, height_col
+    )
 
 
 def _webp_anim_pixel_sums(raw: bytes) -> tuple:
@@ -5389,23 +4893,9 @@ def synth_webp_anim_lossy_assets(
         body = b"WEBP" + b"".join(chunks)
         return b"RIFF" + struct.pack("<I", len(body)) + body
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf[id_col],
-                    "payload": [
-                        one(int(aid), int(w), int(h))
-                        for aid, w, h in zip(
-                            pdf[id_col], pdf[width_col],
-                            pdf[height_col],
-                        )
-                    ],
-                    "media_type": "image/webp",
-                }
-            )
-
-    return df.mapInPandas(batches, ASSET_SCHEMA)
+    return _synth_assets(
+        df, id_col, "image/webp", one, id_col, width_col, height_col
+    )
 
 
 def _vp8l_literal_chunk(w: int, h: int, pix) -> bytes:
@@ -5418,13 +4908,6 @@ def _vp8l_literal_chunk(w: int, h: int, pix) -> bytes:
 
     px = [pix(x, y) for y in range(h) for x in range(w)]
 
-    def balanced(symbols) -> dict:
-        syms = sorted(set(symbols))
-        bits = max(1, (len(syms) - 1).bit_length())
-        pad = (1 << bits) - len(syms)
-        spare = [s for s in range(256) if s not in set(syms)][:pad]
-        return {s: bits for s in syms + spare}
-
     wr = _Vp8lBitWriter()
     wr.write(w - 1, 14)
     wr.write(h - 1, 14)
@@ -5433,10 +4916,10 @@ def _vp8l_literal_chunk(w: int, h: int, pix) -> bytes:
     wr.write(0, 1)  # no transforms
     wr.write(0, 1)  # no color cache
     wr.write(0, 1)  # no meta-huffman
-    g_enc = _vp8l_write_huffman(wr, balanced([p[2] for p in px]))
-    r_enc = _vp8l_write_huffman(wr, balanced([p[1] for p in px]))
-    b_enc = _vp8l_write_huffman(wr, balanced([p[3] for p in px]))
-    a_enc = _vp8l_write_huffman(wr, balanced([p[0] for p in px]))
+    g_enc = _vp8l_write_huffman(wr, _vp8l_balanced([p[2] for p in px]))
+    r_enc = _vp8l_write_huffman(wr, _vp8l_balanced([p[1] for p in px]))
+    b_enc = _vp8l_write_huffman(wr, _vp8l_balanced([p[3] for p in px]))
+    a_enc = _vp8l_write_huffman(wr, _vp8l_balanced([p[0] for p in px]))
     wr.write(1, 1)  # distance: simple single 0
     wr.write(0, 1)
     wr.write(0, 1)
@@ -5521,23 +5004,9 @@ def synth_webp_anim_assets(
         body = b"WEBP" + b"".join(chunks)
         return b"RIFF" + struct.pack("<I", len(body)) + body
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf[id_col],
-                    "payload": [
-                        one(int(aid), int(w), int(h))
-                        for aid, w, h in zip(
-                            pdf[id_col], pdf[width_col],
-                            pdf[height_col],
-                        )
-                    ],
-                    "media_type": "image/webp",
-                }
-            )
-
-    return df.mapInPandas(batches, ASSET_SCHEMA)
+    return _synth_assets(
+        df, id_col, "image/webp", one, id_col, width_col, height_col
+    )
 
 
 def _tga_pixel_sums(raw: bytes) -> tuple:
@@ -5625,7 +5094,7 @@ def synth_tga_assets(
 
     import numpy as np
 
-    def one(aid: int, w: int, h: int, rle: bool) -> bytes:
+    def one(aid: int, w: int, h: int, rle: int) -> bytes:
         if not 2 <= w <= 256:
             # enforce the documented bound: w > 256 would wrap the
             # run-packet length byte (0x80 | (half-1)) and silently
@@ -5662,24 +5131,10 @@ def synth_tga_assets(
         )
         return hdr + bytes(body) + footer
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = [
-                one(int(aid), int(w), int(h), bool(r))
-                for aid, w, h, r in zip(
-                    pdf[id_col], pdf[width_col], pdf[height_col],
-                    pdf[rle_col],
-                )
-            ]
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf[id_col],
-                    "payload": payloads,
-                    "media_type": "image/tga",
-                }
-            )
-
-    return df.mapInPandas(batches, ASSET_SCHEMA)
+    return _synth_assets(
+        df, id_col, "image/tga", one,
+        id_col, width_col, height_col, rle_col,
+    )
 
 
 def decode_image_pixel_stats(assets: DataFrame) -> DataFrame:
@@ -5892,20 +5347,7 @@ def synth_jpeg_assets(
             ]
         )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf[id_col],
-                    "payload": [
-                        one(int(w), int(h))
-                        for w, h in zip(pdf[width_col], pdf[height_col])
-                    ],
-                    "media_type": "image/jpeg",
-                }
-            )
-
-    return df.mapInPandas(batches, ASSET_SCHEMA)
+    return _synth_assets(df, id_col, "image/jpeg", one, width_col, height_col)
 
 
 # Baseline-JPEG constants (ITU T.81 Annex K — public spec tables).
@@ -6162,20 +5604,7 @@ def synth_jpeg_gradient_assets(
             ]
         )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf[id_col],
-                    "payload": [
-                        one(int(w), int(h))
-                        for w, h in zip(pdf[width_col], pdf[height_col])
-                    ],
-                    "media_type": "image/jpeg",
-                }
-            )
-
-    return df.mapInPandas(batches, ASSET_SCHEMA)
+    return _synth_assets(df, id_col, "image/jpeg", one, width_col, height_col)
 
 
 def synth_jpeg_restart_assets(
@@ -6253,24 +5682,9 @@ def synth_jpeg_restart_assets(
             ]
         )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf[id_col],
-                    "payload": [
-                        one(int(w), int(h), int(ri))
-                        for w, h, ri in zip(
-                            pdf[width_col],
-                            pdf[height_col],
-                            pdf[interval_col],
-                        )
-                    ],
-                    "media_type": "image/jpeg",
-                }
-            )
-
-    return df.mapInPandas(batches, ASSET_SCHEMA)
+    return _synth_assets(
+        df, id_col, "image/jpeg", one, width_col, height_col, interval_col
+    )
 
 
 def _jpeg_color_bytes(
@@ -6381,22 +5795,11 @@ def synth_jpeg_color_assets(
     synth)."""
     if sampling is None:
         sampling = "420" if subsample else "444"
-    smp = sampling
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf[id_col],
-                    "payload": [
-                        _jpeg_color_bytes(int(w), int(h), smp)
-                        for w, h in zip(pdf[width_col], pdf[height_col])
-                    ],
-                    "media_type": "image/jpeg",
-                }
-            )
+    def one(w: int, h: int) -> bytes:
+        return _jpeg_color_bytes(w, h, sampling)
 
-    return df.mapInPandas(batches, ASSET_SCHEMA)
+    return _synth_assets(df, id_col, "image/jpeg", one, width_col, height_col)
 
 
 def _jpeg_pixel_sums(raw: bytes) -> tuple:
@@ -6954,24 +6357,10 @@ def synth_avi_assets(
         body = b"AVI " + lst
         return b"RIFF" + struct.pack("<I", len(body)) + body
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = [
-                one(int(w), int(h), int(n), int(r))
-                for w, h, n, r in zip(
-                    pdf[width_col], pdf[height_col],
-                    pdf[frames_col], pdf[fps_col],
-                )
-            ]
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf[id_col],
-                    "payload": payloads,
-                    "media_type": "video/avi",
-                }
-            )
-
-    return df.mapInPandas(batches, ASSET_SCHEMA)
+    return _synth_assets(
+        df, id_col, "video/avi", one,
+        width_col, height_col, frames_col, fps_col,
+    )
 
 
 def synth_avi_mjpeg_assets(
@@ -7040,24 +6429,10 @@ def synth_avi_mjpeg_assets(
         body = b"AVI " + hdrl + movi
         return b"RIFF" + struct.pack("<I", len(body)) + body
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = [
-                one(int(w), int(h), int(n), int(r))
-                for w, h, n, r in zip(
-                    pdf[width_col], pdf[height_col],
-                    pdf[frames_col], pdf[fps_col],
-                )
-            ]
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf[id_col],
-                    "payload": payloads,
-                    "media_type": "video/avi",
-                }
-            )
-
-    return df.mapInPandas(batches, ASSET_SCHEMA)
+    return _synth_assets(
+        df, id_col, "video/avi", one,
+        width_col, height_col, frames_col, fps_col,
+    )
 
 
 def synth_avi_msrle_assets(
@@ -7152,24 +6527,10 @@ def synth_avi_msrle_assets(
         body = b"AVI " + hdrl + movi
         return b"RIFF" + struct.pack("<I", len(body)) + body
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = [
-                one(int(w), int(h), int(n), int(rh))
-                for w, h, n, rh in zip(
-                    pdf[width_col], pdf[height_col],
-                    pdf[frames_col], pdf[rect_col],
-                )
-            ]
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf[id_col],
-                    "payload": payloads,
-                    "media_type": "video/avi",
-                }
-            )
-
-    return df.mapInPandas(batches, ASSET_SCHEMA)
+    return _synth_assets(
+        df, id_col, "video/avi", one,
+        width_col, height_col, frames_col, rect_col,
+    )
 
 
 def _avi_mjpeg_frames(payload: bytes):
@@ -7532,22 +6893,7 @@ def synth_avi_dib_phash_assets(
         body = b"AVI " + hdrl + movi
         return b"RIFF" + struct.pack("<I", len(body)) + body
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf[id_col],
-                    "payload": [
-                        one(int(a), int(n))
-                        for a, n in zip(
-                            pdf[id_col], pdf[frames_col]
-                        )
-                    ],
-                    "media_type": "video/avi",
-                }
-            )
-
-    return df.mapInPandas(batches, ASSET_SCHEMA)
+    return _synth_assets(df, id_col, "video/avi", one, id_col, frames_col)
 
 
 def synth_mp4_assets(
@@ -7608,24 +6954,10 @@ def synth_mp4_assets(
         moov = box(b"moov", mvhd + trak)
         return ftyp + moov
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = [
-                one(int(w), int(h), int(n), int(r))
-                for w, h, n, r in zip(
-                    pdf[width_col], pdf[height_col],
-                    pdf[frames_col], pdf[fps_col],
-                )
-            ]
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf[id_col],
-                    "payload": payloads,
-                    "media_type": "video/mp4",
-                }
-            )
-
-    return df.mapInPandas(batches, ASSET_SCHEMA)
+    return _synth_assets(
+        df, id_col, "video/mp4", one,
+        width_col, height_col, frames_col, fps_col,
+    )
 
 
 def decode_video_features(assets: DataFrame) -> DataFrame:
@@ -7922,26 +7254,15 @@ def synth_tiff_gradient_assets(
     the closed-form oracle is unchanged. Arrow ``mapInPandas``;
     narrow."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = [
-                _tiff_bytes(
-                    int(w), int(h), big_endian=bool(int(a) % 2),
-                    compression=compression, predictor=predictor,
-                )
-                for a, w, h in zip(
-                    pdf[id_col], pdf[width_col], pdf[height_col]
-                )
-            ]
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf[id_col],
-                    "payload": payloads,
-                    "media_type": "image/tiff",
-                }
-            )
+    def one(aid: int, w: int, h: int) -> bytes:
+        return _tiff_bytes(
+            w, h, big_endian=bool(aid % 2),
+            compression=compression, predictor=predictor,
+        )
 
-    return df.mapInPandas(batches, ASSET_SCHEMA)
+    return _synth_assets(
+        df, id_col, "image/tiff", one, id_col, width_col, height_col
+    )
 
 
 def _tiff_pixel_sums(raw: bytes) -> tuple:
@@ -8076,25 +7397,12 @@ def synth_flac_pcm_assets(
     external oracle recomputes every sample statistic without
     touching bytes."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = []
-            for nf, ch, base in zip(
-                pdf[frames_col], pdf[channels_col], pdf[base_col]
-            ):
-                vals = [int(base) + 37 * f for f in range(int(nf))]
-                payloads.append(
-                    _flac_bytes(vals, channels=int(ch))
-                )
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf[id_col],
-                    "payload": payloads,
-                    "media_type": "audio/flac",
-                }
-            )
+    def one(nf: int, ch: int, base: int) -> bytes:
+        return _flac_bytes([base + 37 * f for f in range(nf)], channels=ch)
 
-    return df.mapInPandas(batches, ASSET_SCHEMA)
+    return _synth_assets(
+        df, id_col, "audio/flac", one, frames_col, channels_col, base_col
+    )
 
 
 def synth_flac_fixed_assets(
@@ -8111,28 +7419,13 @@ def synth_flac_fixed_assets(
     ``f % 3`` — pure functions of plain parameter columns, so an
     external oracle recomputes every sample. Arrow ``mapInPandas``."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = []
-            for nf, ch, base in zip(
-                pdf[frames_col], pdf[channels_col], pdf[base_col]
-            ):
-                specs = [
-                    (f % 3, int(base) + 11 * f, (f % 9) - 4)
-                    for f in range(int(nf))
-                ]
-                payloads.append(
-                    _flac_bytes_fixed(specs, channels=int(ch))
-                )
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf[id_col],
-                    "payload": payloads,
-                    "media_type": "audio/flac",
-                }
-            )
+    def one(nf: int, ch: int, base: int) -> bytes:
+        specs = [(f % 3, base + 11 * f, (f % 9) - 4) for f in range(nf)]
+        return _flac_bytes_fixed(specs, channels=ch)
 
-    return df.mapInPandas(batches, ASSET_SCHEMA)
+    return _synth_assets(
+        df, id_col, "audio/flac", one, frames_col, channels_col, base_col
+    )
 
 
 def _flac_crc8(data: bytes) -> int:
@@ -8655,17 +7948,7 @@ def synth_flac_fp_assets(
                 w += 1 if _audio_fp_sig_bit(aid, i) else -1
         return _flac_bytes(amps, block_size=256)
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf[id_col],
-                    "payload": [one(int(a)) for a in pdf[id_col]],
-                    "media_type": "audio/flac",
-                }
-            )
-
-    return df.mapInPandas(batches, ASSET_SCHEMA)
+    return _synth_assets(df, id_col, "audio/flac", one, id_col)
 
 
 def synth_jpeg_progressive_assets(
@@ -8798,20 +8081,7 @@ def synth_jpeg_progressive_assets(
         out.append(b"\xff\xd9")
         return b"".join(out)
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf[id_col],
-                    "payload": [
-                        one(int(w), int(h))
-                        for w, h in zip(pdf[width_col], pdf[height_col])
-                    ],
-                    "media_type": "image/jpeg",
-                }
-            )
-
-    return df.mapInPandas(batches, ASSET_SCHEMA)
+    return _synth_assets(df, id_col, "image/jpeg", one, width_col, height_col)
 
 
 def synth_jpeg_sa_assets(
@@ -8823,7 +8093,7 @@ def synth_jpeg_sa_assets(
     sampling: str = "444",
 ) -> DataFrame:
     """Synthesize progressive JPEGs with SUCCESSIVE APPROXIMATION and
-    (when ``interval_col`` is present) RESTART INTERVALS — the
+    (unless ``interval_col`` is None) RESTART INTERVALS — the
     gnarliest scan structure real encoders emit, combined: a first DC
     scan at point transform Al=1 (diffs of dc>>1, arithmetic shift),
     a DC refinement scan (Ah=1, Al=0 — one raw low bit per block per
@@ -8856,7 +8126,7 @@ def synth_jpeg_sa_assets(
     enc_eob, _ = _jpeg_huff_tables(_EOB_BITS, _EOB_VALS)
     tmat = _jpeg_dct_matrix()
 
-    def one(w: int, h: int, ri: int) -> bytes:
+    def one(w: int, h: int, ri: int = 0) -> bytes:
         n_mcux = (w + yh_f * 8 - 1) // (yh_f * 8)
         n_mcuy = (h + yv_f * 8 - 1) // (yv_f * 8)
         grads = (
@@ -8998,28 +8268,10 @@ def synth_jpeg_sa_assets(
         out.append(b"\xff\xd9")
         return b"".join(out)
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            have_ri = interval_col is not None and interval_col in pdf
-            ris = (
-                pdf[interval_col]
-                if have_ri
-                else [0] * len(pdf)
-            )
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf[id_col],
-                    "payload": [
-                        one(int(w), int(h), int(ri))
-                        for w, h, ri in zip(
-                            pdf[width_col], pdf[height_col], ris
-                        )
-                    ],
-                    "media_type": "image/jpeg",
-                }
-            )
-
-    return df.mapInPandas(batches, ASSET_SCHEMA)
+    ri_cols = [] if interval_col is None else [interval_col]
+    return _synth_assets(
+        df, id_col, "image/jpeg", one, width_col, height_col, *ri_cols
+    )
 
 
 def _jpeg_progressive_pixel_sums(raw: bytes) -> tuple:
@@ -9780,32 +9032,16 @@ def synth_flac_stereo_assets(
     parameter columns, so an external oracle recomputes every sample
     of both reconstructed channels. Arrow ``mapInPandas``."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = []
-            for nf, base, base2 in zip(
-                pdf[frames_col], pdf[base_col], pdf[base2_col]
-            ):
-                specs = [
-                    (
-                        8 + f % 3,
-                        int(base) + 11 * f,
-                        (f % 9) - 4,
-                        int(base2) + 7 * f,
-                        (f % 5) - 2,
-                    )
-                    for f in range(int(nf))
-                ]
-                payloads.append(_flac_bytes_stereo(specs))
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf[id_col],
-                    "payload": payloads,
-                    "media_type": "audio/flac",
-                }
-            )
+    def one(nf: int, base: int, base2: int) -> bytes:
+        return _flac_bytes_stereo([
+            (8 + f % 3, base + 11 * f, (f % 9) - 4,
+             base2 + 7 * f, (f % 5) - 2)
+            for f in range(nf)
+        ])
 
-    return df.mapInPandas(batches, ASSET_SCHEMA)
+    return _synth_assets(
+        df, id_col, "audio/flac", one, frames_col, base_col, base2_col
+    )
 
 
 def synth_flac_lpc_assets(
@@ -9823,28 +9059,13 @@ def synth_flac_lpc_assets(
     so an external oracle recomputes every sample. Arrow
     ``mapInPandas``."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = []
-            for nf, ch, base in zip(
-                pdf[frames_col], pdf[channels_col], pdf[base_col]
-            ):
-                specs = [
-                    (f % 3, int(base) + 11 * f, (f % 9) - 4)
-                    for f in range(int(nf))
-                ]
-                payloads.append(
-                    _flac_bytes_lpc(specs, channels=int(ch))
-                )
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf[id_col],
-                    "payload": payloads,
-                    "media_type": "audio/flac",
-                }
-            )
+    def one(nf: int, ch: int, base: int) -> bytes:
+        specs = [(f % 3, base + 11 * f, (f % 9) - 4) for f in range(nf)]
+        return _flac_bytes_lpc(specs, channels=ch)
 
-    return df.mapInPandas(batches, ASSET_SCHEMA)
+    return _synth_assets(
+        df, id_col, "audio/flac", one, frames_col, channels_col, base_col
+    )
 
 
 def _exif_fields(raw: bytes) -> dict:
@@ -10083,23 +9304,9 @@ def synth_jpeg_exif_assets(
             b"\xff\xd9",
         ])
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf[id_col],
-                    "payload": [
-                        one(int(aid), int(w), int(h))
-                        for aid, w, h in zip(
-                            pdf[id_col], pdf[width_col],
-                            pdf[height_col],
-                        )
-                    ],
-                    "media_type": "image/jpeg",
-                }
-            )
-
-    return df.mapInPandas(batches, ASSET_SCHEMA)
+    return _synth_assets(
+        df, id_col, "image/jpeg", one, id_col, width_col, height_col
+    )
 
 
 def _exif_orient(a, o: int):
@@ -10269,23 +9476,9 @@ def synth_jpeg_exif_oriented_assets(
             ]
         )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf[id_col],
-                    "payload": [
-                        one(int(a), int(w), int(h))
-                        for a, w, h in zip(
-                            pdf[id_col], pdf[width_col],
-                            pdf[height_col],
-                        )
-                    ],
-                    "media_type": "image/jpeg",
-                }
-            )
-
-    return df.mapInPandas(batches, ASSET_SCHEMA)
+    return _synth_assets(
+        df, id_col, "image/jpeg", one, id_col, width_col, height_col
+    )
 
 
 def _phash_basis():
@@ -10441,17 +9634,7 @@ def synth_pgm_phash_assets(
         return (f"P5\n{d} {d}\n255\n".encode("ascii")
                 + px.astype(np.uint8).tobytes())
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf[id_col],
-                    "payload": [one(int(a)) for a in pdf[id_col]],
-                    "media_type": "image/x-portable-graymap",
-                }
-            )
-
-    return df.mapInPandas(batches, ASSET_SCHEMA)
+    return _synth_assets(df, id_col, "image/x-portable-graymap", one, id_col)
 
 
 IMAGE_GATES_SCHEMA = StructType(
@@ -10508,22 +9691,9 @@ def synth_pgm_pattern_assets(
             )
         return b"P5\n32 32\n255\n" + img.astype(np.uint8).tobytes()
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf[id_col],
-                    "payload": [
-                        one(int(k), int(a), int(b))
-                        for k, a, b in zip(
-                            pdf[kind_col], pdf[a_col], pdf[b_col]
-                        )
-                    ],
-                    "media_type": "image/x-portable-graymap",
-                }
-            )
-
-    return df.mapInPandas(batches, ASSET_SCHEMA)
+    return _synth_assets(
+        df, id_col, "image/x-portable-graymap", one, kind_col, a_col, b_col
+    )
 
 
 def image_quality_gates(
@@ -10786,17 +9956,7 @@ def synth_jpeg_exif_gps_assets(
             b"\xff\xd9",
         ])
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf[id_col],
-                    "payload": [one(int(a)) for a in pdf[id_col]],
-                    "media_type": "image/jpeg",
-                }
-            )
-
-    return df.mapInPandas(batches, ASSET_SCHEMA)
+    return _synth_assets(df, id_col, "image/jpeg", one, id_col)
 
 
 def _build_alph_payload(
@@ -10832,22 +9992,15 @@ def _build_alph_payload(
     if comp == 0:
         return head + bytes(res)
 
-    def balanced(symbols) -> dict:
-        syms = sorted(set(symbols))
-        bits = max(1, (len(syms) - 1).bit_length())
-        pad = (1 << bits) - len(syms)
-        spare = [s for s in range(256) if s not in set(syms)][:pad]
-        return {s: bits for s in syms + spare}
-
     wr = _Vp8lBitWriter()
     # RFC 9649: the size-headerless alpha stream still begins with
     # the transform list — terminate it (r15 fix)
     wr.write(0, 1)  # empty transform list
     wr.write(0, 1)  # no color cache
     wr.write(0, 1)  # no meta-huffman
-    g_enc = _vp8l_write_huffman(wr, balanced(res))
-    r_enc = _vp8l_write_huffman(wr, balanced([0]))
-    b_enc = _vp8l_write_huffman(wr, balanced([0]))
+    g_enc = _vp8l_write_huffman(wr, _vp8l_balanced(res))
+    r_enc = _vp8l_write_huffman(wr, _vp8l_balanced([0]))
+    b_enc = _vp8l_write_huffman(wr, _vp8l_balanced([0]))
     wr.write(1, 1)  # alpha: simple single 255
     wr.write(0, 1)
     wr.write(1, 1)
@@ -11020,23 +10173,9 @@ def synth_webp_alpha_assets(
         body = b"WEBP" + b"".join(chunks)
         return b"RIFF" + struct.pack("<I", len(body)) + body
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf[id_col],
-                    "payload": [
-                        one(int(aid), int(w), int(h))
-                        for aid, w, h in zip(
-                            pdf[id_col], pdf[width_col],
-                            pdf[height_col],
-                        )
-                    ],
-                    "media_type": "image/webp",
-                }
-            )
-
-    return df.mapInPandas(batches, ASSET_SCHEMA)
+    return _synth_assets(
+        df, id_col, "image/webp", one, id_col, width_col, height_col
+    )
 
 
 # --------------------------------------------------------------------------
@@ -11207,17 +10346,7 @@ def synth_pgm_linear_assets(df: DataFrame, id_col: str = "asset_id"):
             + px.astype(np.uint8).tobytes()
         )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf[id_col],
-                    "payload": [one(int(a)) for a in pdf[id_col]],
-                    "media_type": "image/x-portable-graymap",
-                }
-            )
-
-    return df.mapInPandas(batches, ASSET_SCHEMA)
+    return _synth_assets(df, id_col, "image/x-portable-graymap", one, id_col)
 
 
 # --------------------------------------------------------------------------
@@ -11276,17 +10405,7 @@ def synth_flac_tagged_assets(
         padding = b"\x81" + (4).to_bytes(3, "big") + b"\x00" * 4
         return b"fLaC" + streaminfo + vc + padding
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf[id_col],
-                    "payload": [one(int(a)) for a in pdf[id_col]],
-                    "media_type": "audio/flac",
-                }
-            )
-
-    return df.mapInPandas(batches, ASSET_SCHEMA)
+    return _synth_assets(df, id_col, "audio/flac", one, id_col)
 
 
 def _flac_vorbis_tags(payload: bytes) -> dict:
@@ -11429,17 +10548,7 @@ def synth_mp3_tagged_assets(
         mp3_frame = hdr + b"\x00" * (144 * 128 * 1000 // 44100 - 4)
         return tag + mp3_frame * (2 + aid % 4)
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf[id_col],
-                    "payload": [one(int(a)) for a in pdf[id_col]],
-                    "media_type": "audio/mpeg",
-                }
-            )
-
-    return df.mapInPandas(batches, ASSET_SCHEMA)
+    return _synth_assets(df, id_col, "audio/mpeg", one, id_col)
 
 
 def _id3_frames(payload: bytes) -> tuple:
@@ -11640,17 +10749,7 @@ def synth_ogg_opus_tagged_assets(
             + page(312 + frames, b"\x00", 0x04, 2)
         )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf[id_col],
-                    "payload": [one(int(a)) for a in pdf[id_col]],
-                    "media_type": "audio/ogg",
-                }
-            )
-
-    return df.mapInPandas(batches, ASSET_SCHEMA)
+    return _synth_assets(df, id_col, "audio/ogg", one, id_col)
 
 
 def decode_ogg_tags(assets: DataFrame) -> DataFrame:
@@ -11912,12 +11011,4 @@ def synth_gif_anim_assets(
         out += b"\x3b"
         return bytes(out)
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame({
-                "asset_id": pdf[id_col],
-                "payload": [one(int(a)) for a in pdf[id_col]],
-                "media_type": "image/gif",
-            })
-
-    return df.mapInPandas(batches, ASSET_SCHEMA)
+    return _synth_assets(df, id_col, "image/gif", one, id_col)

@@ -146,17 +146,28 @@ def stream_events_to_lake(
         "day_bucket", F.expr("ts_us div 86400000000")
     )
 
-    query = (
+    _drain(
         enriched.writeStream.foreachBatch(
             lambda df, bid: _write_ingest_batch(df, bid, lake_path)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+        ).option("checkpointLocation", checkpoint_dir)
     )
+
+
+def _drain(writer) -> None:
+    """Start ``writer``'s query, run it until every available input is
+    processed, and stop it even if a batch fails."""
+    query = writer.start()
     try:
         query.processAllAvailable()
     finally:
         query.stop()
+
+
+def _drain_to_memory(out: DataFrame, name: str, mode: str) -> DataFrame:
+    """Drain ``out`` into the memory sink table ``name`` under output
+    ``mode`` and return that table."""
+    _drain(out.writeStream.format("memory").queryName(name).outputMode(mode))
+    return out.sparkSession.table(name)
 
 
 def _hadoop_fs(spark: SparkSession, path: str):
@@ -489,17 +500,7 @@ def run_dedup_stream(
     out = dedup_stream(read_event_stream(spark, src)).select(
         "event_id", "user_id", "event_type", "value"
     )
-    query = (
-        out.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .start()
-    )
-    try:
-        query.processAllAvailable()
-    finally:
-        query.stop()
-    return spark.table(name)
+    return _drain_to_memory(out, name, "append")
 
 
 def run_stateful_counts_stream(
@@ -515,17 +516,7 @@ def run_stateful_counts_stream(
 
     src = _stage_events_src(sf_dir)
     out = running_user_counts(read_event_stream(spark, src))
-    query = (
-        out.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .start()
-    )
-    try:
-        query.processAllAvailable()
-    finally:
-        query.stop()
-    return spark.table(name)
+    return _drain_to_memory(out, name, "update")
 
 
 def run_attribution_stream(
@@ -539,17 +530,7 @@ def run_attribution_stream(
     not to gate output."""
     src = _stage_events_src(sf_dir)
     out = clicks_to_purchases_stream(read_event_stream(spark, src))
-    query = (
-        out.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .start()
-    )
-    try:
-        query.processAllAvailable()
-    finally:
-        query.stop()
-    return spark.table(name)
+    return _drain_to_memory(out, name, "append")
 
 
 def run_tumbling_stream(
@@ -562,17 +543,7 @@ def run_tumbling_stream(
     src = _stage_events_src(sf_dir)
     stream = read_event_stream(spark, src)
     out = E.tumbling_agg(stream)
-    query = (
-        out.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .start()
-    )
-    try:
-        query.processAllAvailable()
-    finally:
-        query.stop()
-    return spark.table(name)
+    return _drain_to_memory(out, name, "complete")
 
 
 def maintain_rollup_stream(
@@ -603,23 +574,37 @@ def maintain_rollup_stream(
     Listing/pruning go through the Hadoop FS API, not ``os`` — the
     standing table lives wherever the lake lives (HDFS/S3A/GCS).
     """
-    stream = read_event_stream(spark, src_dir, max_files_per_trigger)
-    query = (
-        stream.writeStream.foreachBatch(
-            lambda df, bid: merge_rollup_version(
-                df, bid, standing_path, keep_versions=keep_versions
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+    return _maintain_versions(
+        spark, src_dir, standing_path, checkpoint_dir,
+        max_files_per_trigger, "rollup",
+        lambda df, bid: merge_rollup_version(
+            df, bid, standing_path, keep_versions=keep_versions
+        ),
     )
-    try:
-        query.processAllAvailable()
-    finally:
-        query.stop()
+
+
+def _maintain_versions(
+    spark: SparkSession,
+    src_dir: str,
+    standing_path: str,
+    checkpoint_dir: str,
+    max_files_per_trigger: int | None,
+    what: str,
+    step,
+) -> DataFrame:
+    """The path every versioned maintainer shares: drain the event
+    stream through ``foreachBatch(step)`` (``step`` writes
+    ``v=<epoch_id>``, see :func:`_version_step`) and read the latest
+    standing version."""
+    stream = read_event_stream(spark, src_dir, max_files_per_trigger)
+    _drain(
+        stream.writeStream.foreachBatch(step).option(
+            "checkpointLocation", checkpoint_dir
+        )
+    )
     vs = _rollup_versions(spark, standing_path)
     if not vs:
-        raise ValueError(f"no rollup versions produced in {standing_path}")
+        raise ValueError(f"no {what} versions produced in {standing_path}")
     return spark.read.parquet(f"{standing_path}/v={vs[-1]}")
 
 
@@ -634,6 +619,35 @@ def _rollup_versions(spark: SparkSession, standing_path: str) -> list[int]:
         if name.startswith("v="):
             out.append(int(name[2:]))
     return sorted(out)
+
+
+def _version_step(
+    spark: SparkSession,
+    epoch_id: int,
+    standing_path: str,
+    keep_versions: int,
+    build,
+) -> None:
+    """One step of a batch-id-versioned standing table: ``build`` the
+    new version from the latest version < ``epoch_id`` (or from
+    ``None`` when there is none — the bootstrap), overwrite
+    ``v=<epoch_id>``, and prune all but the newest ``keep_versions``.
+    A pure function of (predecessor version, batch), so a redelivered
+    epoch rewrites identical bytes."""
+    fs, mkpath = _hadoop_fs(spark, standing_path)
+    prior = [
+        v for v in _rollup_versions(spark, standing_path) if v < epoch_id
+    ]
+    standing = (
+        spark.read.parquet(f"{standing_path}/v={prior[-1]}")
+        if prior
+        else None
+    )
+    build(standing).write.mode("overwrite").parquet(
+        f"{standing_path}/v={epoch_id}"
+    )
+    for v in _rollup_versions(spark, standing_path)[:-keep_versions]:
+        fs.delete(mkpath(f"{standing_path}/v={v}"), True)
 
 
 def merge_rollup_version(
@@ -652,8 +666,6 @@ def merge_rollup_version(
 
     from geniepool_etl_spark.operators.upsert import merge_rollup
 
-    spark = batch_df.sparkSession
-    fs, mkpath = _hadoop_fs(spark, standing_path)
     cents = F.round(F.col("value") * 100).cast("long")
     p = E.with_event_time(batch_df).groupBy("user_id").agg(
         F.count(F.lit(1)).alias("n_events"),
@@ -661,12 +673,9 @@ def merge_rollup_version(
         F.min("value").alias("min_value"),
         F.max("value").alias("max_value"),
     )
-    prior = [
-        v for v in _rollup_versions(spark, standing_path) if v < epoch_id
-    ]
-    if prior:
-        standing = spark.read.parquet(f"{standing_path}/v={prior[-1]}")
-        merged = merge_rollup(
+    _version_step(
+        batch_df.sparkSession, epoch_id, standing_path, keep_versions,
+        lambda standing: p if standing is None else merge_rollup(
             standing,
             p,
             ["user_id"],
@@ -674,12 +683,8 @@ def merge_rollup_version(
             sum_cols=["sum_cents"],
             min_cols=["min_value"],
             max_cols=["max_value"],
-        )
-    else:
-        merged = p
-    merged.write.mode("overwrite").parquet(f"{standing_path}/v={epoch_id}")
-    for v in _rollup_versions(spark, standing_path)[:-keep_versions]:
-        fs.delete(mkpath(f"{standing_path}/v={v}"), True)
+        ),
+    )
 
 
 def run_rollup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -689,10 +694,7 @@ def run_rollup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     versioned merges, not a single batch), and return the final
     rollup. Fresh source/standing/checkpoint dirs per invocation —
     re-invocable in one session."""
-    src = tempfile.mkdtemp(prefix="gp_rollup_src_")
-    for f in glob.glob(os.path.join(sf_dir, "events.parquet")):
-        shutil.copy(f, os.path.join(src, "a.parquet"))
-        shutil.copy(f, os.path.join(src, "b.parquet"))
+    src = _stage_events_src(sf_dir, copies=2)
     standing = tempfile.mkdtemp(prefix="gp_rollup_standing_")
     ckpt = tempfile.mkdtemp(prefix="gp_rollup_ckpt_")
     return maintain_rollup_stream(
@@ -776,17 +778,11 @@ def maintain_snap_ingest_stream(
     from geniepool_etl_spark import snaptable as T
 
     stream = read_event_stream(spark, src_dir, max_files_per_trigger)
-    query = (
+    _drain(
         stream.writeStream.foreachBatch(
             lambda df, bid: ingest_snap_batch(df, bid, table_path)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+        ).option("checkpointLocation", checkpoint_dir)
     )
-    try:
-        query.processAllAvailable()
-    finally:
-        query.stop()
     if T.current_version(spark, table_path) is None:
         raise ValueError(f"no snapshot versions produced in {table_path}")
     return T.read_table(spark, table_path)
@@ -838,28 +834,17 @@ def merge_scd2_version(
         scd2_apply_batch, scd2_from_changelog,
     )
 
-    spark = batch_df.sparkSession
-    fs, mkpath = _hadoop_fs(spark, standing_path)
     log = E.with_event_time(batch_df).select(
         "user_id", "ts_us", "event_type", "event_id"
     )
-    prior = [
-        v for v in _rollup_versions(spark, standing_path) if v < epoch_id
-    ]
-    if prior:
-        standing = spark.read.parquet(f"{standing_path}/v={prior[-1]}")
-        merged = scd2_apply_batch(
-            standing, log, key="user_id", ts_col="ts_us",
-            attr="event_type", id_col="event_id",
-        )
-    else:
-        merged = scd2_from_changelog(
-            log, key="user_id", ts_col="ts_us", attr="event_type",
-            id_col="event_id",
-        )
-    merged.write.mode("overwrite").parquet(f"{standing_path}/v={epoch_id}")
-    for v in _rollup_versions(spark, standing_path)[:-keep_versions]:
-        fs.delete(mkpath(f"{standing_path}/v={v}"), True)
+    cols = dict(key="user_id", ts_col="ts_us", attr="event_type",
+                id_col="event_id")
+    _version_step(
+        batch_df.sparkSession, epoch_id, standing_path, keep_versions,
+        lambda standing: scd2_from_changelog(log, **cols)
+        if standing is None
+        else scd2_apply_batch(standing, log, **cols),
+    )
 
 
 def maintain_scd2_stream(
@@ -875,22 +860,11 @@ def maintain_scd2_stream(
     past) holds by construction for a time-ordered file stream —
     Spark's file source drains oldest-modified first, so slices apply
     in event-time order. Returns the final standing history."""
-    stream = read_event_stream(spark, src_dir, max_files_per_trigger)
-    query = (
-        stream.writeStream.foreachBatch(
-            lambda df, bid: merge_scd2_version(df, bid, standing_path)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+    return _maintain_versions(
+        spark, src_dir, standing_path, checkpoint_dir,
+        max_files_per_trigger, "scd2",
+        lambda df, bid: merge_scd2_version(df, bid, standing_path),
     )
-    try:
-        query.processAllAvailable()
-    finally:
-        query.stop()
-    vs = _rollup_versions(spark, standing_path)
-    if not vs:
-        raise ValueError(f"no scd2 versions produced in {standing_path}")
-    return spark.read.parquet(f"{standing_path}/v={vs[-1]}")
 
 
 def run_scd2_stream(
@@ -958,17 +932,7 @@ def run_sliding_stream(
             "sum_value",
         )
     )
-    query = (
-        out.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .start()
-    )
-    try:
-        query.processAllAvailable()
-    finally:
-        query.stop()
-    return spark.table(name)
+    return _drain_to_memory(out, name, "complete")
 
 
 def merge_countmin_version(
@@ -993,29 +957,20 @@ def merge_countmin_version(
 
     from geniepool_etl_spark.operators.sketch import countmin_partial
 
-    spark = batch_df.sparkSession
-    fs, mkpath = _hadoop_fs(spark, standing_path)
     p = countmin_partial(
         batch_df.select(F.expr(key_expr).alias("key")),
         "key",
         depth=depth,
         width=width,
     )
-    prior = [
-        v for v in _rollup_versions(spark, standing_path) if v < epoch_id
-    ]
-    if prior:
-        standing = spark.read.parquet(f"{standing_path}/v={prior[-1]}")
-        merged = (
+    _version_step(
+        batch_df.sparkSession, epoch_id, standing_path, keep_versions,
+        lambda standing: p if standing is None else (
             standing.unionByName(p)
             .groupBy("d", "b")
             .agg(F.sum("c").alias("c"))
-        )
-    else:
-        merged = p
-    merged.write.mode("overwrite").parquet(f"{standing_path}/v={epoch_id}")
-    for v in _rollup_versions(spark, standing_path)[:-keep_versions]:
-        fs.delete(mkpath(f"{standing_path}/v={v}"), True)
+        ),
+    )
 
 
 def maintain_countmin_stream(
@@ -1034,25 +989,14 @@ def maintain_countmin_stream(
     size no matter how much data streams through — which is the whole
     reason a sketch is the right standing aggregate for heavy-hitter
     serving at 100 TB. Returns the final standing sketch (d, b, c)."""
-    stream = read_event_stream(spark, src_dir, max_files_per_trigger)
-    query = (
-        stream.writeStream.foreachBatch(
-            lambda df, bid: merge_countmin_version(
-                df, bid, standing_path,
-                key_expr=key_expr, depth=depth, width=width,
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+    return _maintain_versions(
+        spark, src_dir, standing_path, checkpoint_dir,
+        max_files_per_trigger, "sketch",
+        lambda df, bid: merge_countmin_version(
+            df, bid, standing_path,
+            key_expr=key_expr, depth=depth, width=width,
+        ),
     )
-    try:
-        query.processAllAvailable()
-    finally:
-        query.stop()
-    vs = _rollup_versions(spark, standing_path)
-    if not vs:
-        raise ValueError(f"no sketch versions in {standing_path}")
-    return spark.read.parquet(f"{standing_path}/v={vs[-1]}")
 
 
 def run_countmin_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1063,10 +1007,7 @@ def run_countmin_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     the result must equal the one-shot sketch of the doubled log,
     which is exactly what the oracle computes. Fresh dirs per
     invocation — re-invocable in one session."""
-    src = tempfile.mkdtemp(prefix="gp_cm_src_")
-    for f in glob.glob(os.path.join(sf_dir, "events.parquet")):
-        shutil.copy(f, os.path.join(src, "a.parquet"))
-        shutil.copy(f, os.path.join(src, "b.parquet"))
+    src = _stage_events_src(sf_dir, copies=2)
     standing = tempfile.mkdtemp(prefix="gp_cm_standing_")
     ckpt = tempfile.mkdtemp(prefix="gp_cm_ckpt_")
     return maintain_countmin_stream(spark, src, standing, ckpt)
@@ -1107,17 +1048,7 @@ def run_sliding_hll_stream(
             "approx_users",
         )
     )
-    query = (
-        out.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .start()
-    )
-    try:
-        query.processAllAvailable()
-    finally:
-        query.stop()
-    streamed = spark.table(name)
+    streamed = _drain_to_memory(out, name, "complete")
     ev = E.with_event_time(
         spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
     )
@@ -1164,26 +1095,15 @@ def merge_loghist_version(
 
     from geniepool_etl_spark.operators.sketch import loghist_partial
 
-    spark = batch_df.sparkSession
-    fs, mkpath = _hadoop_fs(spark, standing_path)
     p = loghist_partial(
         batch_df.select(F.expr(cents_expr).alias("cents")), "cents"
     )
-    prior = [
-        v for v in _rollup_versions(spark, standing_path) if v < epoch_id
-    ]
-    if prior:
-        standing = spark.read.parquet(f"{standing_path}/v={prior[-1]}")
-        merged = (
-            standing.unionByName(p)
-            .groupBy("idx")
-            .agg(F.sum("n").alias("n"))
-        )
-    else:
-        merged = p
-    merged.write.mode("overwrite").parquet(f"{standing_path}/v={epoch_id}")
-    for v in _rollup_versions(spark, standing_path)[:-keep_versions]:
-        fs.delete(mkpath(f"{standing_path}/v={v}"), True)
+    _version_step(
+        batch_df.sparkSession, epoch_id, standing_path, keep_versions,
+        lambda standing: p if standing is None else (
+            standing.unionByName(p).groupBy("idx").agg(F.sum("n").alias("n"))
+        ),
+    )
 
 
 def run_loghist_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1193,32 +1113,17 @@ def run_loghist_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     the standing sketch equals the one-shot sketch of the doubled
     log, so the quantile answers are exactly what the oracle computes
     from the doubled value distribution. Fresh dirs per invocation."""
-    src = tempfile.mkdtemp(prefix="gp_lh_src_")
-    for f in glob.glob(os.path.join(sf_dir, "events.parquet")):
-        shutil.copy(f, os.path.join(src, "a.parquet"))
-        shutil.copy(f, os.path.join(src, "b.parquet"))
+    src = _stage_events_src(sf_dir, copies=2)
     standing = tempfile.mkdtemp(prefix="gp_lh_standing_")
     ckpt = tempfile.mkdtemp(prefix="gp_lh_ckpt_")
-    stream = read_event_stream(spark, src, 1)
-    query = (
-        stream.writeStream.foreachBatch(
-            lambda df, bid: merge_loghist_version(df, bid, standing)
-        )
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    try:
-        query.processAllAvailable()
-    finally:
-        query.stop()
-    vs = _rollup_versions(spark, standing)
-    if not vs:
-        raise ValueError(f"no sketch versions in {standing}")
     from geniepool_etl_spark.operators.sketch import (
         loghist_quantiles_from_sketch,
     )
 
     return loghist_quantiles_from_sketch(
-        spark.read.parquet(f"{standing}/v={vs[-1]}")
+        _maintain_versions(
+            spark, src, standing, ckpt, 1, "sketch",
+            lambda df, bid: merge_loghist_version(df, bid, standing),
+        )
     )
 

@@ -252,6 +252,42 @@ def test_registry_lanes_run_package_code():
     assert set(C.ORACLE_SQL) == set(C.SPARK_QUERIES)
 
 
+def test_synthesizers_share_one_arrow_wrapper():
+    """Every ``multimodal.synth_*`` encoder maps rows through the one
+    ``_synth_assets`` wrapper: none defines its own ``batches``
+    closure or calls ``mapInPandas``, and the VP8L flat-code builder
+    ``_vp8l_balanced`` is not re-defined inside any function."""
+    import ast
+    import inspect
+
+    from geniepool_etl_spark.operators import multimodal as M
+
+    tree = ast.parse(inspect.getsource(M))
+    synths = [
+        fn for fn in tree.body
+        if isinstance(fn, ast.FunctionDef) and fn.name.startswith("synth_")
+    ]
+    assert synths
+    own_wrapper = sorted(
+        fn.name
+        for fn in synths
+        for node in ast.walk(fn)
+        if (isinstance(node, ast.FunctionDef) and node.name == "batches")
+        or (isinstance(node, ast.Attribute) and node.attr == "mapInPandas")
+    )
+    assert own_wrapper == []
+    nested_balanced = [
+        node.lineno
+        for fn in tree.body
+        if isinstance(fn, ast.FunctionDef)
+        for node in ast.walk(fn)
+        if node is not fn
+        and isinstance(node, ast.FunctionDef)
+        and node.name.lstrip("_") == "balanced"
+    ]
+    assert nested_balanced == []
+
+
 # Entries whose plans INTENTIONALLY contain a broadcast nested-loop /
 # cross join: a tiny broadcast side (query set, centroid set, 1-row
 # corpus count, literal range bounds) crossed against the corpus — the

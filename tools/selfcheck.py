@@ -72,18 +72,11 @@ def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     only = set(sys.argv[2:])
 
-    import duckdb
-
     import __spark_entry__ as entry_mod
     from geniepool_etl_spark.session import get_spark
 
     spark = get_spark("selfcheck")
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{sf_dir}/{t}.parquet')"
-        )
+    con = oracle_db(sf_dir)
 
     qs = entry_mod.queries()
     oracles = entry_mod.oracle_sql()
@@ -93,7 +86,6 @@ def main() -> int:
             continue
         try:
             sdf = fn(spark, sf_dir)
-            scols = sdf.columns
             srows = [tuple(r) for r in sdf.collect()]
         except Exception:
             print(f"FAIL  {name}: SPARK ERROR")
@@ -113,34 +105,9 @@ def main() -> int:
             print(f"FAIL  {name}: ORACLE ERROR {str(e).splitlines()[0]}")
             n_fail += 1
             continue
-        if sorted(scols) != sorted(ocols):
-            print(f"FAIL  {name}: cols spark={sorted(scols)} oracle={sorted(ocols)}")
-            n_fail += 1
-            continue
-        stypes = {c: canon_type(t, SPARK_TO_CANON) for c, t in sdf.dtypes}
-        otypes = {
-            c: canon_type(t, DUCK_TO_CANON)
-            for c, t in zip(ocols, otypes_raw)
-        }
-        mismatched = {
-            c: (stypes[c], otypes[c])
-            for c in stypes
-            if c in otypes and stypes[c] != otypes[c]
-        }
-        if mismatched:
-            print(f"FAIL  {name}: dtypes differ: {mismatched}")
-            n_fail += 1
-            continue
-        if len(srows) != len(orows):
-            print(f"FAIL  {name}: rows spark={len(srows)} oracle={len(orows)}")
-            n_fail += 1
-            continue
-        sset, oset = rowset(scols, srows), rowset(ocols, orows)
-        if sset != oset:
-            diffs = [
-                (a, b) for a, b in zip(sset, oset) if a != b
-            ][:3]
-            print(f"FAIL  {name}: values differ; first diffs: {diffs}")
+        why = mismatch(sdf, srows, ocols, otypes_raw, orows)
+        if why:
+            print(f"FAIL  {name}: {why}")
             n_fail += 1
             continue
         print(f"ok    {name} ({len(srows)} rows)")
@@ -148,6 +115,50 @@ def main() -> int:
 
     print(f"\n{n_pass} ok, {n_fail} fail, {n_noracle} no-oracle")
     return 1 if n_fail else 0
+
+
+def oracle_db(sf_dir: str):
+    """DuckDB connection with one view per testdata table under sf_dir."""
+    import duckdb
+
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(
+            f"CREATE VIEW {t} AS SELECT * FROM "
+            f"read_parquet('{sf_dir}/{t}.parquet')"
+        )
+    return con
+
+
+def mismatch(sdf, srows, ocols, otypes_raw, orows) -> str | None:
+    """Why a Spark result (frame + collected rows) differs from its
+    oracle's columns, DuckDB type names and rows, or None if it does
+    not: sorted column names, canonical dtypes, row count, then
+    order-insensitive values."""
+    scols = sdf.columns
+    if sorted(scols) != sorted(ocols):
+        return f"cols spark={sorted(scols)} oracle={sorted(ocols)}"
+    stypes = {c: canon_type(t, SPARK_TO_CANON) for c, t in sdf.dtypes}
+    otypes = {
+        c: canon_type(t, DUCK_TO_CANON)
+        for c, t in zip(ocols, otypes_raw)
+    }
+    mismatched = {
+        c: (stypes[c], otypes[c])
+        for c in stypes
+        if c in otypes and stypes[c] != otypes[c]
+    }
+    if mismatched:
+        return f"dtypes differ: {mismatched}"
+    if len(srows) != len(orows):
+        return f"rows spark={len(srows)} oracle={len(orows)}"
+    sset, oset = rowset(scols, srows), rowset(ocols, orows)
+    if sset != oset:
+        diffs = [
+            (a, b) for a, b in zip(sset, oset) if a != b
+        ][:3]
+        return f"values differ; first diffs: {diffs}"
+    return None
 
 
 if __name__ == "__main__":
