@@ -44,26 +44,19 @@ def entry(spark: SparkSession) -> DataFrame:
     return q_flagship_lake_nest(spark, SMOKE_SF_DIR)
 
 
-def _rotation_order(names) -> list[str]:
-    """Order lanes for the driver's rotating ~50-lane correctness
-    window: NEVER-recorded lanes first (new work gets externally
-    proven the round it lands), then ascending last-green round from
-    the CORRECTNESS_r*.json history (stalest external record
-    re-proven first), registry order as the tiebreak. The registry
-    itself stays grouped by family; rotation is a view. With 279
-    lanes and a 50-lane window this bounds every lane's external
-    re-proof cycle at ~6 rounds (r12 verdict, process nit #1)."""
+def _recordings() -> list[tuple[int, str, bool]]:
+    """Every driver recording in the CORRECTNESS_r*.json history as
+    ``(round, lane, green)``, oldest round first. Green means rows,
+    schema and value hash all matched with no error."""
     import glob
     import json
 
-    last: dict[str, int] = {}
-    for path in sorted(glob.glob(os.path.join(_HERE, "CORRECTNESS_r*.json"))):
+    out = []
+    for path in glob.glob(os.path.join(_HERE, "CORRECTNESS_r*.json")):
         try:
             rnd = int(path.rsplit("_r", 1)[1].split(".")[0])
             with open(path) as f:
                 rec = json.load(f)
-            for k in rec:
-                last[k] = max(last.get(k, 0), rnd)
         except (ValueError, OSError, json.JSONDecodeError) as exc:
             # a dropped round would silently skew staleness ordering —
             # surface it instead of pretending the history is complete
@@ -73,8 +66,30 @@ def _rotation_order(names) -> list[str]:
                 f"rotation: unreadable correctness record {path}: {exc}"
             )
             continue
+        for k, row in rec.items():
+            green = bool(
+                row.get("rows_match")
+                and row.get("schema_match")
+                and row.get("hash_match")
+                and not row.get("err")
+            )
+            out.append((rnd, k, green))
+    return sorted(out)
+
+
+def _rotation_order(names) -> list[str]:
+    """Order lanes for the driver's rotating ~50-lane correctness
+    window: lanes never recorded green first (new work gets
+    externally proven the round it lands), then ascending last-green
+    round from the CORRECTNESS_r*.json history (stalest external
+    proof re-proven first), registry order as the tiebreak. A red
+    record does not count as proof. The registry itself stays
+    grouped by family; rotation is a view. With 279 lanes and a
+    50-lane window this bounds every lane's external re-proof cycle
+    at ~6 rounds (r12 verdict, process nit #1)."""
+    last_green = {k: rnd for rnd, k, green in _recordings() if green}
     order = {n: i for i, n in enumerate(names)}
-    return sorted(names, key=lambda n: (last.get(n, -1), order[n]))
+    return sorted(names, key=lambda n: (last_green.get(n, -1), order[n]))
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

@@ -17,51 +17,23 @@ listing time (SURVEY.md §4 "partition pruning").
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from geniepool_etl_spark.config import MAX_RECORDS_PER_FILE, PARTITION_SIZE
 
 
-def write_datalake(
-    df: DataFrame,
-    output_path: str,
-    max_records_per_file: int = MAX_RECORDS_PER_FILE,
-    mode: str = "overwrite",
-    sort_within: bool = False,
-) -> None:
-    """Partitioned lake write (reference M:127-138).
-
-    ``sort_within`` additionally sorts rows by ``pos`` inside each
-    partition's task before writing: parquet row-group min/max stats
-    then become disjoint pos ranges, so a ``pos BETWEEN`` predicate
-    skips whole row groups at read time (data skipping *below* the
-    directory-level partition pruning ``read_range`` already gets).
-    Costs one in-task sort at write; changes no results.
-
-    Gotcha (verified empirically): Spark's planned-write optimization
-    (``spark.sql.optimizer.plannedWrite.enabled``, default on since
-    3.4) REPLACES user ordering before a V1 file write with its own
-    partition-column-only sort, silently discarding the pos order —
-    the conf is disabled around the write when ``sort_within`` is set.
-    """
-    out = df.repartition(F.col("chrom"), F.col("pos_bucket"))
-    conf = df.sparkSession.conf
-    planned = conf.get("spark.sql.optimizer.plannedWrite.enabled", "true")
-    try:
-        if sort_within:
-            out = out.sortWithinPartitions("chrom", "pos_bucket", "pos")
-            conf.set("spark.sql.optimizer.plannedWrite.enabled", "false")
-        (
-            out.write.option("maxRecordsPerFile", max_records_per_file)
-            .mode(mode)
-            .partitionBy("chrom", "pos_bucket")
-            .parquet(output_path)
-        )
-    finally:
-        conf.set("spark.sql.optimizer.plannedWrite.enabled", planned)
+def write_datalake(df: DataFrame, output_path: str) -> None:
+    """Partitioned lake write (reference M:127-138): overwrite
+    ``output_path`` with ``df`` partitioned on ``(chrom, pos_bucket)``,
+    at most ``MAX_RECORDS_PER_FILE`` rows per file."""
+    (
+        df.repartition(F.col("chrom"), F.col("pos_bucket"))
+        .write.option("maxRecordsPerFile", MAX_RECORDS_PER_FILE)
+        .mode("overwrite")
+        .partitionBy("chrom", "pos_bucket")
+        .parquet(output_path)
+    )
 
 
 def read_datalake(spark: SparkSession, lake_path: str) -> DataFrame:
@@ -108,59 +80,6 @@ def read_range(
     return out.orderBy("pos") if order_by_pos else out
 
 
-def write_bucketed_table(
-    df: DataFrame,
-    table: str,
-    bucket_cols: list[str],
-    n_buckets: int = 32,
-    sort_cols: list[str] | None = None,
-) -> None:
-    """Persist as a bucketed (and optionally sort-ordered) managed
-    parquet table. Two tables bucketed identically on their join key
-    sort-merge-join with ZERO exchanges — the pre-shuffled layout that
-    amortizes one shuffle across every future join/aggregation on that
-    key (the 100 TB co-location strategy; verified by a no-Exchange
-    plan assertion in tests/test_plans.py).
-    """
-    spark = df.sparkSession
-    # Resolve the managed location from the catalog BEFORE dropping
-    # (correct for database-qualified names, whose location is
-    # <warehouse>/<db>.db/<tbl>, not <warehouse>/<db>.<tbl>); for a
-    # table absent from the catalog (an earlier run aborted between
-    # write and commit) derive the default layout instead.
-    loc: str | None = None
-    if spark.catalog.tableExists(table):
-        rows = (
-            spark.sql(f"DESCRIBE TABLE EXTENDED {table}")
-            .where("col_name = 'Location'")
-            .collect()
-        )
-        if rows:
-            loc = rows[0]["data_type"]
-    else:
-        warehouse = spark.conf.get("spark.sql.warehouse.dir", "")
-        parts = table.lower().split(".")
-        if warehouse and len(parts) <= 2:
-            rel = parts[-1] if len(parts) == 1 else f"{parts[0]}.db/{parts[1]}"
-            loc = os.path.join(warehouse, rel)
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
-    if loc and loc.removeprefix("file:").startswith("/"):
-        import shutil
-
-        path = loc.removeprefix("file:")
-        if os.path.isdir(path):
-            shutil.rmtree(path, ignore_errors=True)
-
-    writer = (
-        df.write.mode("overwrite")
-        .format("parquet")
-        .bucketBy(n_buckets, *bucket_cols)
-    )
-    if sort_cols:
-        writer = writer.sortBy(*sort_cols)
-    writer.saveAsTable(table)
-
-
 def write_status(df: DataFrame, status_path: str) -> None:
     """Append the 1-row status record as JSON (reference M:155-157).
 
@@ -180,11 +99,10 @@ def zorder_key(cols: list, bits: int = 16) -> "F.Column":
     columns: bit b of column i lands at key bit ``b·len(cols)+i``.
 
     Sorting a write by this ONE key clusters the file layout in EVERY
-    participating dimension at once, so parquet min/max stats skip
-    files/row groups for predicates on any of the columns — the
-    multi-column generalization of ``write_datalake(sort_within=True)``
-    (which buys skipping on ``pos`` only). Pure shift/mask expressions:
-    codegen'd, deterministic, reproducible in any engine.
+    participating dimension at once, so min/max stats skip files for
+    predicates on any of the columns (``snaptable.compact`` lays its
+    files out this way). Pure shift/mask expressions: codegen'd,
+    deterministic, reproducible in any engine.
 
     Callers must map each dimension to a non-negative int < 2^bits
     (e.g. ``col % 2**bits``, a day number, a bucketed float); with
@@ -199,33 +117,3 @@ def zorder_key(cols: list, bits: int = 16) -> "F.Column":
             bit = F.shiftright(c.cast("long"), b).bitwiseAND(F.lit(1))
             key = key.bitwiseOR(F.shiftleft(bit, b * n + i))
     return key
-
-
-def write_zordered(
-    df: DataFrame,
-    output_path: str,
-    zcols: list,
-    bits: int = 16,
-    n_files: int = 8,
-    mode: str = "overwrite",
-) -> None:
-    """Write ``df`` as ``n_files`` parquet files clustered by the
-    Z-order key of ``zcols``: range-partition on the key (contiguous,
-    non-overlapping key ranges per file — one shuffle), sort within
-    each task, drop the key from the stored schema. plannedWrite is
-    disabled around the write for the same reason as
-    :func:`write_datalake`: V1 planned-write would silently replace
-    the user sort.
-    """
-    out = (
-        df.withColumn("_zkey", zorder_key(zcols, bits))
-        .repartitionByRange(n_files, "_zkey")
-        .sortWithinPartitions("_zkey")
-    )
-    conf = df.sparkSession.conf
-    planned = conf.get("spark.sql.optimizer.plannedWrite.enabled", "true")
-    try:
-        conf.set("spark.sql.optimizer.plannedWrite.enabled", "false")
-        out.drop("_zkey").write.mode(mode).parquet(output_path)
-    finally:
-        conf.set("spark.sql.optimizer.plannedWrite.enabled", planned)

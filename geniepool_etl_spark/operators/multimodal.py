@@ -60,6 +60,9 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from geniepool_etl_spark.operators import vp8 as _vp8
+from geniepool_etl_spark.operators.vp8 import _riff_chunk
+
 # Contract for an ingested media asset: payload + typed metadata.
 ASSET_SCHEMA = StructType(
     [
@@ -111,6 +114,49 @@ def _synth_assets(
             )
 
     return df.mapInPandas(batches, ASSET_SCHEMA)
+
+
+# pandas dtypes that keep a null-bearing result column typed: a None
+# among plain ints would turn the column float64 and round 63-bit hashes
+_NULLABLE_DTYPES = {
+    "long": "Int64", "bigint": "Int64", "int": "Int64",
+    "boolean": "boolean", "double": "Float64",
+}
+
+
+def _decode_assets(
+    assets: DataFrame, schema, rows_of, poison, null_row=None
+) -> DataFrame:
+    """The one Arrow wrapper every ``mapInPandas`` decoder shares: each
+    asset's payload bytes map to ``rows_of(raw)`` — one tuple of the
+    ``schema`` columns after ``asset_id``, or a list of such tuples
+    for a one-to-many (per-frame) decoder. A payload on which
+    ``rows_of`` raises one of ``poison`` yields the single
+    ``null_row`` (all nulls by default) instead of a dead stage. A
+    narrow ``mapInPandas`` — payloads never shuffle."""
+    if isinstance(schema, str):
+        fields = [f.split() for f in schema.split(",")]
+    else:
+        fields = [(f.name, f.dataType.simpleString()) for f in schema]
+    names = [name for name, _ in fields]
+    dtypes = {n: _NULLABLE_DTYPES[t] for n, t in fields
+              if t in _NULLABLE_DTYPES}
+    if null_row is None:
+        null_row = (None,) * (len(names) - 1)
+
+    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in it:
+            rows = []
+            for aid, b in zip(pdf["asset_id"], pdf["payload"]):
+                try:
+                    got = rows_of(bytes(b))
+                except poison:
+                    got = null_row
+                for r in got if isinstance(got, list) else [got]:
+                    rows.append((aid, *r))
+            yield pd.DataFrame(rows, columns=names).astype(dtypes)
+
+    return assets.mapInPandas(batches, schema)
 
 
 def _jpeg_dimensions(payload: bytes) -> dict:
@@ -802,13 +848,10 @@ def _wav_container(fmt_tag: int, n_ch: int, rate: int,
         "<HHIIHH", fmt_tag, n_ch, rate,
         rate * block_align, block_align, bits,
     ) + ext
-    body = (
-        b"WAVE"
-        + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-        + b"data" + struct.pack("<I", len(data)) + data
-        + (b"\x00" if len(data) % 2 else b"")
+    return _riff_chunk(
+        b"RIFF",
+        b"WAVE" + _riff_chunk(b"fmt ", fmt) + _riff_chunk(b"data", data),
     )
-    return b"RIFF" + struct.pack("<I", len(body)) + body
 
 
 def synth_wav_g711_assets(
@@ -1173,45 +1216,23 @@ def audio_quality_gates(
         return int((np.flatnonzero(d == -1)
                     - np.flatnonzero(d == 1)).max())
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows: dict = {
-                k: []
-                for k in ("n_samples", "mean_sq", "longest_silence",
-                          "clip_milli", "keep")
-            }
-            for b in pdf["payload"]:
-                try:
-                    a = samples(bytes(b))
-                    n = len(a)
-                    if n == 0:
-                        raise ValueError("audio gates: empty stream")
-                    ab = np.abs(a)
-                    mean_sq = int((a * a).sum()) // n
-                    sil = longest_run(ab <= silence_thresh)
-                    clip_milli = 1000 * int(
-                        (ab >= clip_level).sum()
-                    ) // n
-                    rows["n_samples"].append(n)
-                    rows["mean_sq"].append(mean_sq)
-                    rows["longest_silence"].append(sil)
-                    rows["clip_milli"].append(clip_milli)
-                    rows["keep"].append(
-                        mean_sq >= min_mean_sq
-                        and sil <= max_silence_run
-                        and clip_milli <= max_clip_milli
-                    )
-                except Exception:
-                    for k in rows:
-                        rows[k].append(None)
-            out = pd.DataFrame({"asset_id": pdf["asset_id"], **rows})
-            for c in ("n_samples", "mean_sq", "longest_silence",
-                      "clip_milli"):
-                out[c] = out[c].astype("Int64")
-            out["keep"] = out["keep"].astype("boolean")
-            yield out
+    def one(raw: bytes) -> tuple:
+        a = samples(raw)
+        n = len(a)
+        if n == 0:
+            raise ValueError("audio gates: empty stream")
+        ab = np.abs(a)
+        mean_sq = int((a * a).sum()) // n
+        sil = longest_run(ab <= silence_thresh)
+        clip_milli = 1000 * int((ab >= clip_level).sum()) // n
+        keep = (
+            mean_sq >= min_mean_sq
+            and sil <= max_silence_run
+            and clip_milli <= max_clip_milli
+        )
+        return (n, mean_sq, sil, clip_milli, keep)
 
-    return assets.mapInPandas(batches, AUDIO_GATES_SCHEMA)
+    return _decode_assets(assets, AUDIO_GATES_SCHEMA, one, Exception)
 
 
 def _wav_fmt_data(raw: bytes) -> tuple:
@@ -1468,153 +1489,75 @@ def decode_audio_pcm_stats(assets: DataFrame) -> DataFrame:
     and signed linear PCM) and AIFF (16-bit BE) containers. MP3/Ogg
     audio frames remain the entropy-codec boundary."""
     import io
+    import struct
     import wave
 
     import numpy as np
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = {k: [] for k in ("n_samples", "sum_amp", "sum_sq", "peak")}
-            for b in pdf["payload"]:
-                try:
-                    raw0 = bytes(b)
-                    if raw0[:4] == b"fLaC":
-                        n_, s_, s2_, pk_ = _flac_pcm_sums(raw0)
-                        rows["n_samples"].append(n_)
-                        rows["sum_amp"].append(s_)
-                        rows["sum_sq"].append(s2_)
-                        rows["peak"].append(pk_)
-                        continue
-                    if raw0[:4] == b".snd":
-                        import struct as _st
+    def samples(raw: bytes) -> "np.ndarray":
+        if raw[:4] == b".snd":
+            off, dsz, enc = struct.unpack_from(">III", raw, 4)
+            if enc not in _AU_ENCODINGS or off < 24:
+                raise ValueError("au: unsupported")
+            avail = len(raw) - off
+            data = raw[off : off + (
+                avail if dsz == 0xFFFFFFFF else min(dsz, avail)
+            )]
+            if enc in (1, 27):
+                lut = _g711_lut("ulaw" if enc == 1 else "alaw")
+                return lut[np.frombuffer(data, np.uint8)]
+            if enc == 2:  # AU linear-8 is SIGNED
+                return np.frombuffer(data, np.int8).astype(np.int64)
+            # linear-16 big-endian
+            return np.frombuffer(
+                data[: len(data) // 2 * 2], ">i2"
+            ).astype(np.int64)
+        if raw[:4] == b"FORM" and raw[8:12] == b"AIFF":
+            width = _parse_aiff(raw)["sample_width"]
+            data = _aiff_ssnd(raw)
+            if width == 1:  # AIFF 8-bit PCM is SIGNED
+                return np.frombuffer(data, np.int8).astype(np.int64)
+            if width == 2:
+                return np.frombuffer(
+                    data[: len(data) // 2 * 2], ">i2"
+                ).astype(np.int64)
+            raise ValueError("aiff: unsupported sample width")
+        if raw[:4] == b"RIFF" and raw[8:12] == b"WAVE":
+            tag, ch, _rate, align, _bits, ext, data = _wav_fmt_data(raw)
+            if tag == 2:  # MS-ADPCM
+                return _ms_adpcm_pcm(
+                    data, ch, align, _ms_adpcm_coefs(ext)
+                )
+            if tag in (6, 7):  # G.711 a-law / µ-law
+                lut = _g711_lut("ulaw" if tag == 7 else "alaw")
+                return lut[np.frombuffer(data, dtype=np.uint8)]
+            if tag == 0x11:  # IMA/DVI ADPCM
+                return _ima_adpcm_pcm(data, ch, align)
+        with wave.open(io.BytesIO(raw)) as w:
+            width = w.getsampwidth()
+            if width not in (1, 2, 3):
+                raise ValueError("unsupported PCM width")
+            data = w.readframes(w.getnframes())
+        if width == 2:
+            return np.frombuffer(data, dtype="<i2").astype(np.int64)
+        if width == 1:
+            # 8-bit WAV is UNSIGNED, midpoint 128
+            u8 = np.frombuffer(data, dtype=np.uint8)
+            return u8.astype(np.int64) - 128
+        t = np.frombuffer(data, dtype=np.uint8).reshape(-1, 3).astype(
+            np.int64
+        )
+        a = t[:, 0] | (t[:, 1] << 8) | (t[:, 2] << 16)
+        return a - (a >= 1 << 23) * (1 << 24)
 
-                        off_, dsz_, enc_ = _st.unpack_from(
-                            ">III", raw0, 4
-                        )
-                        if enc_ not in _AU_ENCODINGS or off_ < 24:
-                            raise ValueError("au: unsupported")
-                        avail_ = len(raw0) - off_
-                        n_ = (avail_ if dsz_ == 0xFFFFFFFF
-                              else min(dsz_, avail_))
-                        data_ = raw0[off_ : off_ + n_]
-                        if enc_ in (1, 27):
-                            lut = _g711_lut(
-                                "ulaw" if enc_ == 1 else "alaw"
-                            )
-                            a = lut[np.frombuffer(data_, np.uint8)]
-                        elif enc_ == 2:  # AU linear-8 is SIGNED
-                            a = np.frombuffer(data_, np.int8).astype(
-                                np.int64
-                            )
-                        else:  # linear-16 big-endian
-                            a = np.frombuffer(
-                                data_[: len(data_) // 2 * 2], ">i2"
-                            ).astype(np.int64)
-                        rows["n_samples"].append(len(a))
-                        rows["sum_amp"].append(int(a.sum()))
-                        rows["sum_sq"].append(int((a * a).sum()))
-                        rows["peak"].append(
-                            int(np.abs(a).max()) if len(a) else 0
-                        )
-                        continue
-                    if (raw0[:4] == b"FORM"
-                            and raw0[8:12] == b"AIFF"):
-                        meta_ = _parse_aiff(raw0)
-                        data_ = _aiff_ssnd(raw0)
-                        wd_ = meta_["sample_width"]
-                        if wd_ == 1:  # AIFF 8-bit PCM is SIGNED
-                            a = np.frombuffer(data_, np.int8).astype(
-                                np.int64
-                            )
-                        elif wd_ == 2:
-                            a = np.frombuffer(
-                                data_[: len(data_) // 2 * 2], ">i2"
-                            ).astype(np.int64)
-                        else:
-                            raise ValueError(
-                                "aiff: unsupported sample width"
-                            )
-                        rows["n_samples"].append(len(a))
-                        rows["sum_amp"].append(int(a.sum()))
-                        rows["sum_sq"].append(int((a * a).sum()))
-                        rows["peak"].append(
-                            int(np.abs(a).max()) if len(a) else 0
-                        )
-                        continue
-                    if raw0[:4] == b"RIFF" and raw0[8:12] == b"WAVE":
-                        (tag_, ch_, _rate, align_, _bits, ext_,
-                         data_) = _wav_fmt_data(raw0)
-                        if tag_ == 2:  # MS-ADPCM
-                            a = _ms_adpcm_pcm(
-                                data_, ch_, align_,
-                                _ms_adpcm_coefs(ext_),
-                            )
-                            rows["n_samples"].append(len(a))
-                            rows["sum_amp"].append(int(a.sum()))
-                            rows["sum_sq"].append(int((a * a).sum()))
-                            rows["peak"].append(
-                                int(np.abs(a).max()) if len(a) else 0
-                            )
-                            continue
-                        if tag_ in (6, 7):  # G.711 a-law / µ-law
-                            lut = _g711_lut(
-                                "ulaw" if tag_ == 7 else "alaw"
-                            )
-                            a = lut[np.frombuffer(data_, dtype=np.uint8)]
-                            rows["n_samples"].append(len(a))
-                            rows["sum_amp"].append(int(a.sum()))
-                            rows["sum_sq"].append(int((a * a).sum()))
-                            rows["peak"].append(
-                                int(np.abs(a).max()) if len(a) else 0
-                            )
-                            continue
-                        if tag_ == 0x11:  # IMA/DVI ADPCM
-                            a = _ima_adpcm_pcm(data_, ch_, align_)
-                            rows["n_samples"].append(len(a))
-                            rows["sum_amp"].append(int(a.sum()))
-                            rows["sum_sq"].append(int((a * a).sum()))
-                            rows["peak"].append(
-                                int(np.abs(a).max()) if len(a) else 0
-                            )
-                            continue
-                    with wave.open(io.BytesIO(raw0)) as w:
-                        width = w.getsampwidth()
-                        if width not in (1, 2, 3):
-                            raise ValueError("unsupported PCM width")
-                        raw = w.readframes(w.getnframes())
-                    if width == 2:
-                        a = np.frombuffer(raw, dtype="<i2").astype(
-                            np.int64
-                        )
-                    elif width == 1:
-                        # 8-bit WAV is UNSIGNED, midpoint 128
-                        a = (
-                            np.frombuffer(raw, dtype=np.uint8).astype(
-                                np.int64
-                            )
-                            - 128
-                        )
-                    else:
-                        t = np.frombuffer(
-                            raw, dtype=np.uint8
-                        ).reshape(-1, 3).astype(np.int64)
-                        a = t[:, 0] | (t[:, 1] << 8) | (t[:, 2] << 16)
-                        a -= (a >= 1 << 23) * (1 << 24)
-                    rows["n_samples"].append(len(a))
-                    rows["sum_amp"].append(int(a.sum()))
-                    rows["sum_sq"].append(int((a * a).sum()))
-                    rows["peak"].append(
-                        int(np.abs(a).max()) if len(a) else 0
-                    )
-                except Exception:
-                    for k in rows:
-                        rows[k].append(None)
-            out = pd.DataFrame({"asset_id": pdf["asset_id"], **rows})
-            for c in rows:
-                out[c] = out[c].astype("Int64")
-            yield out
+    def one(raw: bytes) -> tuple:
+        if raw[:4] == b"fLaC":
+            return _flac_pcm_sums(raw)
+        a = samples(raw)
+        peak = int(np.abs(a).max()) if len(a) else 0
+        return (len(a), int(a.sum()), int((a * a).sum()), peak)
 
-    return assets.mapInPandas(batches, PCM_STATS_SCHEMA)
+    return _decode_assets(assets, PCM_STATS_SCHEMA, one, Exception)
 
 
 def synth_mp3_assets(
@@ -1729,25 +1672,12 @@ def decode_audio_features(assets: DataFrame) -> DataFrame:
     payloads and non-WAV bytes yield null metadata rather than failing
     the batch — at 100 TB a poison payload must not kill the stage."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = {k: [] for k in (
-                "format", "n_channels", "sample_rate", "n_frames",
-                "duration_ms",
-            )}
-            for b in pdf["payload"]:
-                try:
-                    m = decode_audio(b)
-                except Exception:
-                    m = {}
-                for k in rows:
-                    rows[k].append(m.get(k))
-            out = pd.DataFrame({"asset_id": pdf["asset_id"], **rows})
-            for c in ("n_channels", "sample_rate", "n_frames", "duration_ms"):
-                out[c] = out[c].astype("Int64")
-            yield out
-
-    return assets.mapInPandas(batches, AUDIO_META_SCHEMA)
+    keys = AUDIO_META_SCHEMA.fieldNames()[1:]
+    return _decode_assets(
+        assets, AUDIO_META_SCHEMA,
+        lambda raw: tuple(decode_audio(raw).get(k) for k in keys),
+        Exception,
+    )
 
 
 IMAGE_META_SCHEMA = StructType(
@@ -2824,6 +2754,26 @@ class _Vp8lBitWriter:
             self.nbits = 0
         return bytes(self.out)
 
+    def put(self, enc: dict, sym: int) -> None:
+        """Write ``sym``'s canonical code from an encode map, MSB of
+        the code first (the DEFLATE convention)."""
+        code, ln = enc[sym]
+        for i in range(ln - 1, -1, -1):
+            self.write((code >> i) & 1, 1)
+
+    def simple_code(self, sym: int, bits: int) -> None:
+        """A one-symbol SIMPLE Huffman code (zero bits per use);
+        ``bits`` is the width of its symbol field, 1 or 8."""
+        self.write(1, 1)  # simple
+        self.write(0, 1)  # one symbol
+        self.write(int(bits == 8), 1)
+        self.write(sym, bits)
+
+    def vp8l_chunk(self) -> bytes:
+        """Flush into one RIFF ``VP8L`` chunk: the 0x2f signature
+        byte, then the bitstream."""
+        return _riff_chunk(b"VP8L", b"\x2f" + self.flush())
+
 
 # code-length-code transmission order (VP8L spec, same 19-symbol
 # alphabet as DEFLATE but its own order)
@@ -2984,9 +2934,7 @@ def _vp8l_write_huffman(wr: "_Vp8lBitWriter", lengths: dict):
     wr.write(k, 3)
     wr.write(cap, 2 + 2 * k)
     for cl, extra, ebits in tokens:
-        code, ln = cl_enc[cl]
-        for i in range(ln - 1, -1, -1):
-            wr.write((code >> i) & 1, 1)
+        wr.put(cl_enc, cl)
         if ebits:
             wr.write(extra, ebits)
     enc, _ = _vp8l_canonical(lengths)
@@ -3042,7 +2990,6 @@ def synth_webp_vp8_assets(
     pixels are a pure closed form of (asset_id, mb_x, mb_y) and an
     external oracle recomputes every RGB channel sum. Arrow
     ``mapInPandas``; narrow."""
-    from geniepool_etl_spark.operators import vp8 as _vp8
 
     def one(aid: int, w: int, h: int) -> bytes:
         a = aid % 7
@@ -3077,7 +3024,6 @@ def synth_webp_vp8_bpred_assets(
     the bmode tree with context addressing, the implied-submode
     neighbor rule at mode boundaries, and sequential sub-block
     reconstruction. Arrow ``mapInPandas``; narrow."""
-    from geniepool_etl_spark.operators import vp8 as _vp8
 
     def one(aid: int, w: int, h: int) -> bytes:
         a = aid % 7
@@ -3117,7 +3063,6 @@ def synth_webp_vp8_seg_assets(
     per-segment level solver picks each quantizer's exact-landing
     level. One closed form oracles all four quantizers. Arrow
     ``mapInPandas``; narrow."""
-    from geniepool_etl_spark.operators import vp8 as _vp8
 
     def one(aid: int, w: int, h: int) -> bytes:
         a = aid % 7
@@ -3153,7 +3098,6 @@ def synth_webp_vp8_lfdelta_assets(
     BELOW it is B_PRED (odd stripe index), so BOTH delta kinds are
     observable in the oracle. Luma stripes ``90 + (asset%40) +
     [0,3,1,2][my%4]``, chroma 128. Arrow ``mapInPandas``; narrow."""
-    from geniepool_etl_spark.operators import vp8 as _vp8
 
     def one(aid: int, w: int, h: int) -> bytes:
         base = 90 + aid % 40
@@ -3194,7 +3138,6 @@ def synth_webp_vp8_nf_assets(
     floor((36d+63)/128), and every interior/vertical edge is
     value-flat (no-op). Heights ≡ 8 (mod 16) keep all modified rows
     visible. Arrow ``mapInPandas``; narrow."""
-    from geniepool_etl_spark.operators import vp8 as _vp8
 
     def one(aid: int, w: int, h: int) -> bytes:
         base = 90 + aid % 40
@@ -3638,7 +3581,6 @@ def synth_webp_lossless_assets(
     ye = 0 when y≥2 and even, else ye = y —
     a=255, r=(11x+23·ye)%251, g=(7x+31·ye)%253, b=(3x+41·ye)%249.
     Arrow ``mapInPandas``."""
-    import struct
 
     def one(w: int, h: int) -> bytes:
         # pixel generator: rows 0 and 1 literal; from row 2 on, even
@@ -3726,47 +3668,30 @@ def synth_webp_lossless_assets(
         red_enc = _vp8l_write_huffman(wr, _vp8l_balanced(reds))
         blue_enc = _vp8l_write_huffman(wr, _vp8l_balanced(blues))
         # alpha: single value 255 → SIMPLE code, zero bits per use
-        wr.write(1, 1)  # simple
-        wr.write(0, 1)  # one symbol
-        wr.write(1, 1)  # 8-bit first symbol
-        wr.write(255, 8)
+        wr.simple_code(255, 8)
         # distance: single symbol → SIMPLE code
         dist_sym, dist_extra, dist_ebits = _vp8l_prefix_encode(
             2 * w + 120
         )
-        wr.write(1, 1)
-        wr.write(0, 1)
-        wr.write(1, 1)
-        wr.write(dist_sym, 8)
-
-        def put(enc, sym):
-            code, ln = enc[sym]
-            for i in range(ln - 1, -1, -1):
-                wr.write((code >> i) & 1, 1)
-
+        wr.simple_code(dist_sym, 8)
         for kind, payload_e in events:
             if kind == "lit":
                 a, r, g, b = payload_e
-                put(green_enc, g)
-                put(red_enc, r)
-                put(blue_enc, b)
+                wr.put(green_enc, g)
+                wr.put(red_enc, r)
+                wr.put(blue_enc, b)
                 # alpha: single-symbol simple code → zero bits
             elif kind == "hit":
-                put(green_enc, 256 + 24 + payload_e)
+                wr.put(green_enc, 256 + 24 + payload_e)
             else:  # copy
-                put(green_enc, 256 + len_sym)
+                wr.put(green_enc, 256 + len_sym)
                 if len_ebits:
                     wr.write(len_extra, len_ebits)
                 # distance symbol: single-symbol simple code → zero
                 # bits; its extra bits still ride the stream
                 if dist_ebits:
                     wr.write(dist_extra, dist_ebits)
-        payload = b"\x2f" + wr.flush()
-        chunk = b"VP8L" + struct.pack("<I", len(payload)) + payload
-        if len(payload) % 2:
-            chunk += b"\x00"
-        body = b"WEBP" + chunk
-        return b"RIFF" + struct.pack("<I", len(body)) + body
+        return _riff_chunk(b"RIFF", b"WEBP" + wr.vp8l_chunk())
 
     return _synth_assets(df, id_col, "image/webp", one, width_col, height_col)
 
@@ -3789,7 +3714,6 @@ def synth_webp_vp8l_predictor_assets(
     (``a=255, r=(13x+29y+5a')%256, g=(7x+17y+3a')%256,
     b=(11x+23y+7a')%256`` with ``a' = asset_id % 7``), blind to the
     transform. Arrow ``mapInPandas``; narrow."""
-    import struct
 
     def one(aid: int, w: int, h: int) -> bytes:
         a7 = aid % 7
@@ -3856,25 +3780,13 @@ def synth_webp_vp8l_predictor_assets(
         zero_enc = _vp8l_write_huffman(wr, _vp8l_balanced([0]))
         zero_enc_b = _vp8l_write_huffman(wr, _vp8l_balanced([0]))
         # alpha: single 255 → SIMPLE code, zero bits per use
-        wr.write(1, 1)
-        wr.write(0, 1)
-        wr.write(1, 1)
-        wr.write(255, 8)
+        wr.simple_code(255, 8)
         # distance: unused → SIMPLE single-symbol code
-        wr.write(1, 1)
-        wr.write(0, 1)
-        wr.write(0, 1)
-        wr.write(0, 1)
-
-        def put(enc, sym):
-            code, ln = enc[sym]
-            for i in range(ln - 1, -1, -1):
-                wr.write((code >> i) & 1, 1)
-
+        wr.simple_code(0, 1)
         for m in modes:
-            put(mode_enc, m)
-            put(zero_enc, 0)
-            put(zero_enc_b, 0)
+            wr.put(mode_enc, m)
+            wr.put(zero_enc, 0)
+            wr.put(zero_enc_b, 0)
         wr.write(0, 1)  # end of transform list
         # --- main image: residual literals, no cache, no meta
         wr.write(0, 1)  # no color cache
@@ -3883,25 +3795,14 @@ def synth_webp_vp8l_predictor_assets(
         r_enc = _vp8l_write_huffman(wr, _vp8l_balanced([p[1] for p in res]))
         b_enc = _vp8l_write_huffman(wr, _vp8l_balanced([p[3] for p in res]))
         # alpha residual is ALWAYS 0 → simple single-symbol code
-        wr.write(1, 1)
-        wr.write(0, 1)
-        wr.write(0, 1)
-        wr.write(0, 1)
+        wr.simple_code(0, 1)
         # distance: unused → simple single-symbol code
-        wr.write(1, 1)
-        wr.write(0, 1)
-        wr.write(0, 1)
-        wr.write(0, 1)
+        wr.simple_code(0, 1)
         for p in res:
-            put(g_enc, p[2])
-            put(r_enc, p[1])
-            put(b_enc, p[3])
-        payload = b"\x2f" + wr.flush()
-        chunk = b"VP8L" + struct.pack("<I", len(payload)) + payload
-        if len(payload) % 2:
-            chunk += b"\x00"
-        body = b"WEBP" + chunk
-        return b"RIFF" + struct.pack("<I", len(body)) + body
+            wr.put(g_enc, p[2])
+            wr.put(r_enc, p[1])
+            wr.put(b_enc, p[3])
+        return _riff_chunk(b"RIFF", b"WEBP" + wr.vp8l_chunk())
 
     return _synth_assets(
         df, id_col, "image/webp", one, id_col, width_col, height_col
@@ -3923,7 +3824,6 @@ def synth_webp_vp8l_color_assets(
     which is what the inverse reconstructs first). Losslessness
     keeps the oracle the target formula — transform-blind, same as
     the predictor lane. Arrow ``mapInPandas``; narrow."""
-    import struct
 
     def one(aid: int, w: int, h: int) -> bytes:
         a7 = aid % 7
@@ -3980,48 +3880,25 @@ def synth_webp_vp8l_color_assets(
         eg_enc = _vp8l_write_huffman(wr, _vp8l_balanced([e[2] for e in elems]))
         er_enc = _vp8l_write_huffman(wr, _vp8l_balanced([e[1] for e in elems]))
         eb_enc = _vp8l_write_huffman(wr, _vp8l_balanced([e[3] for e in elems]))
-        wr.write(1, 1)  # alpha: simple single 255
-        wr.write(0, 1)
-        wr.write(1, 1)
-        wr.write(255, 8)
-        wr.write(1, 1)  # distance: simple single 0
-        wr.write(0, 1)
-        wr.write(0, 1)
-        wr.write(0, 1)
-
-        def put(enc, sym):
-            code, ln = enc[sym]
-            for i in range(ln - 1, -1, -1):
-                wr.write((code >> i) & 1, 1)
-
+        wr.simple_code(255, 8)  # alpha: simple single 255
+        wr.simple_code(0, 1)  # distance: simple single 0
         for e in elems:
-            put(eg_enc, e[2])
-            put(er_enc, e[1])
-            put(eb_enc, e[3])
+            wr.put(eg_enc, e[2])
+            wr.put(er_enc, e[1])
+            wr.put(eb_enc, e[3])
         wr.write(0, 1)  # end of transform list
         wr.write(0, 1)  # no color cache
         wr.write(0, 1)  # no meta-huffman
         g_enc = _vp8l_write_huffman(wr, _vp8l_balanced([p[2] for p in res]))
         r_enc = _vp8l_write_huffman(wr, _vp8l_balanced([p[1] for p in res]))
         b_enc = _vp8l_write_huffman(wr, _vp8l_balanced([p[3] for p in res]))
-        wr.write(1, 1)  # alpha: simple single 255
-        wr.write(0, 1)
-        wr.write(1, 1)
-        wr.write(255, 8)
-        wr.write(1, 1)  # distance: simple single 0
-        wr.write(0, 1)
-        wr.write(0, 1)
-        wr.write(0, 1)
+        wr.simple_code(255, 8)  # alpha: simple single 255
+        wr.simple_code(0, 1)  # distance: simple single 0
         for p in res:
-            put(g_enc, p[2])
-            put(r_enc, p[1])
-            put(b_enc, p[3])
-        payload = b"\x2f" + wr.flush()
-        chunk = b"VP8L" + struct.pack("<I", len(payload)) + payload
-        if len(payload) % 2:
-            chunk += b"\x00"
-        body = b"WEBP" + chunk
-        return b"RIFF" + struct.pack("<I", len(body)) + body
+            wr.put(g_enc, p[2])
+            wr.put(r_enc, p[1])
+            wr.put(b_enc, p[3])
+        return _riff_chunk(b"RIFF", b"WEBP" + wr.vp8l_chunk())
 
     return _synth_assets(
         df, id_col, "image/webp", one, id_col, width_col, height_col
@@ -4043,7 +3920,6 @@ def synth_webp_vp8l_palette_assets(
     carrying indices in the green channel. Oracle: index
     (x + 2y + a) % K through the closed-form palette. Arrow
     ``mapInPandas``; narrow."""
-    import struct
 
     def one(aid: int, w: int, h: int) -> bytes:
         a7 = aid % 7
@@ -4084,21 +3960,12 @@ def synth_webp_vp8l_palette_assets(
         pr = _vp8l_write_huffman(wr, _vp8l_balanced([d[1] for d in deltas]))
         pb = _vp8l_write_huffman(wr, _vp8l_balanced([d[3] for d in deltas]))
         pa = _vp8l_write_huffman(wr, _vp8l_balanced([d[0] for d in deltas]))
-        wr.write(1, 1)  # distance: simple single 0
-        wr.write(0, 1)
-        wr.write(0, 1)
-        wr.write(0, 1)
-
-        def put(enc, sym):
-            code, ln = enc[sym]
-            for i in range(ln - 1, -1, -1):
-                wr.write((code >> i) & 1, 1)
-
+        wr.simple_code(0, 1)  # distance: simple single 0
         for d in deltas:
-            put(pg, d[2])
-            put(pr, d[1])
-            put(pb, d[3])
-            put(pa, d[0])
+            wr.put(pg, d[2])
+            wr.put(pr, d[1])
+            wr.put(pb, d[3])
+            wr.put(pa, d[0])
         wr.write(0, 1)  # end of transform list
         # main image: literal index pixels
         wr.write(0, 1)  # no color cache
@@ -4107,24 +3974,13 @@ def synth_webp_vp8l_palette_assets(
         g_enc = _vp8l_write_huffman(wr, _vp8l_balanced(idxs))
         r_enc = _vp8l_write_huffman(wr, _vp8l_balanced([0]))
         b_enc = _vp8l_write_huffman(wr, _vp8l_balanced([0]))
-        wr.write(1, 1)  # alpha: simple single 255
-        wr.write(0, 1)
-        wr.write(1, 1)
-        wr.write(255, 8)
-        wr.write(1, 1)  # distance: simple single 0
-        wr.write(0, 1)
-        wr.write(0, 1)
-        wr.write(0, 1)
+        wr.simple_code(255, 8)  # alpha: simple single 255
+        wr.simple_code(0, 1)  # distance: simple single 0
         for i in idxs:
-            put(g_enc, i)
-            put(r_enc, 0)
-            put(b_enc, 0)
-        payload = b"\x2f" + wr.flush()
-        chunk = b"VP8L" + struct.pack("<I", len(payload)) + payload
-        if len(payload) % 2:
-            chunk += b"\x00"
-        body = b"WEBP" + chunk
-        return b"RIFF" + struct.pack("<I", len(body)) + body
+            wr.put(g_enc, i)
+            wr.put(r_enc, 0)
+            wr.put(b_enc, 0)
+        return _riff_chunk(b"RIFF", b"WEBP" + wr.vp8l_chunk())
 
     return _synth_assets(
         df, id_col, "image/webp", one, id_col, width_col, height_col
@@ -4147,7 +4003,6 @@ def synth_webp_vp8l_meta_assets(
     rule (the closed-form oracle): a=255, r=(5x+3y+a')%256,
     b=(9x+y+a')%256, g=(3x+7y+a')%128 + 128·[tile_x ≥ tiles_w//2],
     a' = asset_id % 7. Arrow ``mapInPandas``; narrow."""
-    import struct
 
     def one(aid: int, w: int, h: int) -> bytes:
         a7 = aid % 7
@@ -4187,24 +4042,12 @@ def synth_webp_vp8l_meta_assets(
         mg = _vp8l_write_huffman(wr, _vp8l_balanced(gids))
         mr = _vp8l_write_huffman(wr, _vp8l_balanced([0]))
         mb = _vp8l_write_huffman(wr, _vp8l_balanced([0]))
-        wr.write(1, 1)  # alpha: simple single 255
-        wr.write(0, 1)
-        wr.write(1, 1)
-        wr.write(255, 8)
-        wr.write(1, 1)  # distance: simple single 0
-        wr.write(0, 1)
-        wr.write(0, 1)
-        wr.write(0, 1)
-
-        def put(enc, sym):
-            code, ln = enc[sym]
-            for i in range(ln - 1, -1, -1):
-                wr.write((code >> i) & 1, 1)
-
+        wr.simple_code(255, 8)  # alpha: simple single 255
+        wr.simple_code(0, 1)  # distance: simple single 0
         for gid in gids:
-            put(mg, gid)
-            put(mr, 0)
-            put(mb, 0)
+            wr.put(mg, gid)
+            wr.put(mr, 0)
+            wr.put(mb, 0)
         # two groups, id order, DISJOINT green alphabets
         encs = []
         for grp in (0, 1):
@@ -4229,28 +4072,17 @@ def synth_webp_vp8l_meta_assets(
             ge = _vp8l_write_huffman(wr, _vp8l_balanced(greens))
             re_ = _vp8l_write_huffman(wr, _vp8l_balanced(reds))
             be = _vp8l_write_huffman(wr, _vp8l_balanced(blues))
-            wr.write(1, 1)  # alpha: simple single 255
-            wr.write(0, 1)
-            wr.write(1, 1)
-            wr.write(255, 8)
-            wr.write(1, 1)  # distance: simple single 0
-            wr.write(0, 1)
-            wr.write(0, 1)
-            wr.write(0, 1)
+            wr.simple_code(255, 8)  # alpha: simple single 255
+            wr.simple_code(0, 1)  # distance: simple single 0
             encs.append((ge, re_, be))
         for y in range(h):
             for x in range(w):
                 a, r, g, b = pix(x, y)
                 ge, re_, be = encs[group_of(x)]
-                put(ge, g)
-                put(re_, r)
-                put(be, b)
-        payload = b"\x2f" + wr.flush()
-        chunk = b"VP8L" + struct.pack("<I", len(payload)) + payload
-        if len(payload) % 2:
-            chunk += b"\x00"
-        body = b"WEBP" + chunk
-        return b"RIFF" + struct.pack("<I", len(body)) + body
+                wr.put(ge, g)
+                wr.put(re_, r)
+                wr.put(be, b)
+        return _riff_chunk(b"RIFF", b"WEBP" + wr.vp8l_chunk())
 
     return _synth_assets(
         df, id_col, "image/webp", one, id_col, width_col, height_col
@@ -4271,7 +4103,6 @@ def synth_webp_vp8l_bundled_assets(
     sub-image as in the >16-color lane; oracle = index
     (x + 2y + a) % K through the closed-form palette. Arrow
     ``mapInPandas``; narrow."""
-    import struct
 
     def one(aid: int, w: int, h: int) -> bytes:
         a7 = aid % 7
@@ -4322,45 +4153,25 @@ def synth_webp_vp8l_bundled_assets(
         pr = _vp8l_write_huffman(wr, _vp8l_balanced([d[1] for d in deltas]))
         pb = _vp8l_write_huffman(wr, _vp8l_balanced([d[3] for d in deltas]))
         pa = _vp8l_write_huffman(wr, _vp8l_balanced([d[0] for d in deltas]))
-        wr.write(1, 1)  # distance: simple single 0
-        wr.write(0, 1)
-        wr.write(0, 1)
-        wr.write(0, 1)
-
-        def put(enc, sym):
-            code, ln = enc[sym]
-            for i in range(ln - 1, -1, -1):
-                wr.write((code >> i) & 1, 1)
-
+        wr.simple_code(0, 1)  # distance: simple single 0
         for d in deltas:
-            put(pg, d[2])
-            put(pr, d[1])
-            put(pb, d[3])
-            put(pa, d[0])
+            wr.put(pg, d[2])
+            wr.put(pr, d[1])
+            wr.put(pb, d[3])
+            wr.put(pa, d[0])
         wr.write(0, 1)  # end of transform list
         wr.write(0, 1)  # no color cache
         wr.write(0, 1)  # no meta-huffman
         g_enc = _vp8l_write_huffman(wr, _vp8l_balanced(packed))
         r_enc = _vp8l_write_huffman(wr, _vp8l_balanced([0]))
         b_enc = _vp8l_write_huffman(wr, _vp8l_balanced([0]))
-        wr.write(1, 1)  # alpha: simple single 255
-        wr.write(0, 1)
-        wr.write(1, 1)
-        wr.write(255, 8)
-        wr.write(1, 1)  # distance: simple single 0
-        wr.write(0, 1)
-        wr.write(0, 1)
-        wr.write(0, 1)
+        wr.simple_code(255, 8)  # alpha: simple single 255
+        wr.simple_code(0, 1)  # distance: simple single 0
         for v in packed:
-            put(g_enc, v)
-            put(r_enc, 0)
-            put(b_enc, 0)
-        payload = b"\x2f" + wr.flush()
-        chunk = b"VP8L" + struct.pack("<I", len(payload)) + payload
-        if len(payload) % 2:
-            chunk += b"\x00"
-        body = b"WEBP" + chunk
-        return b"RIFF" + struct.pack("<I", len(body)) + body
+            wr.put(g_enc, v)
+            wr.put(r_enc, 0)
+            wr.put(b_enc, 0)
+        return _riff_chunk(b"RIFF", b"WEBP" + wr.vp8l_chunk())
 
     return _synth_assets(
         df, id_col, "image/webp", one, id_col, width_col, height_col
@@ -4384,7 +4195,6 @@ def synth_webp_vp8l_dist_assets(
     both axes and negative dx. Oracle: pixel (x, y) =
     palette((x % 4)) with the bundled lane's channel formulas.
     Arrow ``mapInPandas``; narrow."""
-    import struct
 
     def one(aid: int, w: int, h: int) -> bytes:
         if w % 4:
@@ -4439,38 +4249,24 @@ def synth_webp_vp8l_dist_assets(
         g_enc = _vp8l_write_huffman(wr, _vp8l_balanced(green_syms))
         r_enc = _vp8l_write_huffman(wr, _vp8l_balanced([p[1] for p in lits]))
         b_enc = _vp8l_write_huffman(wr, _vp8l_balanced([p[3] for p in lits]))
-        wr.write(1, 1)  # alpha: simple single 255
-        wr.write(0, 1)
-        wr.write(1, 1)
-        wr.write(255, 8)
+        wr.simple_code(255, 8)  # alpha: simple single 255
         d_enc = _vp8l_write_huffman(
             wr, _vp8l_balanced([s for s, _, _ in dist_events], space=40)
         )
-
-        def put(enc, sym):
-            code, ln = enc[sym]
-            for i in range(ln - 1, -1, -1):
-                wr.write((code >> i) & 1, 1)
-
         for p in lits:
-            put(g_enc, p[2])
-            put(r_enc, p[1])
-            put(b_enc, p[3])
+            wr.put(g_enc, p[2])
+            wr.put(r_enc, p[1])
+            wr.put(b_enc, p[3])
         for (ls, lx, lb), (ds, dx_, db) in zip(
             len_events, dist_events
         ):
-            put(g_enc, 256 + ls)
+            wr.put(g_enc, 256 + ls)
             if lb:
                 wr.write(lx, lb)
-            put(d_enc, ds)
+            wr.put(d_enc, ds)
             if db:
                 wr.write(dx_, db)
-        payload = b"\x2f" + wr.flush()
-        chunk = b"VP8L" + struct.pack("<I", len(payload)) + payload
-        if len(payload) % 2:
-            chunk += b"\x00"
-        body = b"WEBP" + chunk
-        return b"RIFF" + struct.pack("<I", len(body)) + body
+        return _riff_chunk(b"RIFF", b"WEBP" + wr.vp8l_chunk())
 
     return _synth_assets(
         df, id_col, "image/webp", one, id_col, width_col, height_col
@@ -4493,7 +4289,6 @@ def synth_webp_vp8l_bundled_palette_assets(
     g=packed byte) are residual-coded against the rotating 14-mode
     predictor. Oracle: index (x + 2y + a) % K through the bundled
     lane's closed-form palette. Arrow ``mapInPandas``; narrow."""
-    import struct
 
     def one(aid: int, w: int, h: int) -> bytes:
         a7 = aid % 7
@@ -4578,21 +4373,12 @@ def synth_webp_vp8l_bundled_palette_assets(
         pr = _vp8l_write_huffman(wr, _vp8l_balanced([d[1] for d in deltas]))
         pb = _vp8l_write_huffman(wr, _vp8l_balanced([d[3] for d in deltas]))
         pa = _vp8l_write_huffman(wr, _vp8l_balanced([d[0] for d in deltas]))
-        wr.write(1, 1)  # distance: simple single 0
-        wr.write(0, 1)
-        wr.write(0, 1)
-        wr.write(0, 1)
-
-        def put(enc, sym):
-            code, ln = enc[sym]
-            for i in range(ln - 1, -1, -1):
-                wr.write((code >> i) & 1, 1)
-
+        wr.simple_code(0, 1)  # distance: simple single 0
         for d in deltas:
-            put(pg, d[2])
-            put(pr, d[1])
-            put(pb, d[3])
-            put(pa, d[0])
+            wr.put(pg, d[2])
+            wr.put(pr, d[1])
+            wr.put(pb, d[3])
+            wr.put(pa, d[0])
         # --- transform 2: PREDICTOR sized by the reduced width
         wr.write(1, 1)
         wr.write(0, 2)
@@ -4606,18 +4392,12 @@ def synth_webp_vp8l_bundled_palette_assets(
         mg = _vp8l_write_huffman(wr, _vp8l_balanced([m[2] for m in modes]))
         mr = _vp8l_write_huffman(wr, _vp8l_balanced([0]))
         mb_ = _vp8l_write_huffman(wr, _vp8l_balanced([0]))
-        wr.write(1, 1)  # alpha: simple single 255
-        wr.write(0, 1)
-        wr.write(1, 1)
-        wr.write(255, 8)
-        wr.write(1, 1)  # distance: simple single 0
-        wr.write(0, 1)
-        wr.write(0, 1)
-        wr.write(0, 1)
+        wr.simple_code(255, 8)  # alpha: simple single 255
+        wr.simple_code(0, 1)  # distance: simple single 0
         for m in modes:
-            put(mg, m[2])
-            put(mr, 0)
-            put(mb_, 0)
+            wr.put(mg, m[2])
+            wr.put(mr, 0)
+            wr.put(mb_, 0)
         wr.write(0, 1)  # end of transform list
         # --- level-0: predictor residuals of the packed image
         wr.write(0, 1)  # no color cache
@@ -4627,31 +4407,20 @@ def synth_webp_vp8l_bundled_palette_assets(
         b_enc = _vp8l_write_huffman(wr, _vp8l_balanced([r[3] for r in res]))
         a_syms = sorted({r[0] for r in res})
         if len(a_syms) == 1:
-            wr.write(1, 1)  # alpha: simple single symbol
-            wr.write(0, 1)
-            wr.write(1, 1)
-            wr.write(a_syms[0], 8)
+            wr.simple_code(a_syms[0], 8)  # alpha: simple single symbol
             a_enc = None
         else:
             a_enc = _vp8l_write_huffman(
                 wr, _vp8l_balanced([r[0] for r in res])
             )
-        wr.write(1, 1)  # distance: simple single 0
-        wr.write(0, 1)
-        wr.write(0, 1)
-        wr.write(0, 1)
+        wr.simple_code(0, 1)  # distance: simple single 0
         for rres in res:
-            put(g_enc, rres[2])
-            put(r_enc, rres[1])
-            put(b_enc, rres[3])
+            wr.put(g_enc, rres[2])
+            wr.put(r_enc, rres[1])
+            wr.put(b_enc, rres[3])
             if a_enc is not None:
-                put(a_enc, rres[0])
-        payload = b"\x2f" + wr.flush()
-        chunk = b"VP8L" + struct.pack("<I", len(payload)) + payload
-        if len(payload) % 2:
-            chunk += b"\x00"
-        body = b"WEBP" + chunk
-        return b"RIFF" + struct.pack("<I", len(body)) + body
+                wr.put(a_enc, rres[0])
+        return _riff_chunk(b"RIFF", b"WEBP" + wr.vp8l_chunk())
 
     return _synth_assets(
         df, id_col, "image/webp", one, id_col, width_col, height_col
@@ -4768,8 +4537,6 @@ def _webp_anim_pixel_sums(raw: bytes) -> tuple:
         else:
             # r15: lossy frame — full RFC 6386 color decode, alpha
             # from the ALPH chunk (opaque when absent)
-            from geniepool_etl_spark.operators import vp8 as _vp8
-
             w, h, r_, g_, b_ = _vp8.decode_rgb(vp8c)
             plane = (
                 _alph_plane(alph, w, h)
@@ -4828,8 +4595,6 @@ def synth_webp_anim_lossy_assets(
     ``mapInPandas``; narrow."""
     import struct
 
-    from geniepool_etl_spark.operators import vp8 as _vp8
-
     def one(aid: int, w: int, h: int) -> bytes:
         a7 = aid % 7
         ox, oy = 2 * (aid % 5), 2 * (aid % 3)
@@ -4861,18 +4626,14 @@ def synth_webp_anim_lossy_assets(
                 + le24(fww - 1) + le24(fhh - 1)
                 + le24(40) + bytes([flags])
             )
-            body = hdr + inner
-            chunk = b"ANMF" + struct.pack("<I", len(body)) + body
-            if len(body) % 2:
-                chunk += b"\x00"
-            return chunk
+            return _riff_chunk(b"ANMF", hdr + inner)
 
         chunks = []
         # animation + alpha flag bits
         vp8x = bytes([0x12, 0, 0, 0]) + le24(w - 1) + le24(h - 1)
-        chunks.append(b"VP8X" + struct.pack("<I", len(vp8x)) + vp8x)
+        chunks.append(_riff_chunk(b"VP8X", vp8x))
         anim = bytes([0, 0, 0, 255]) + struct.pack("<H", 0)
-        chunks.append(b"ANIM" + struct.pack("<I", len(anim)) + anim)
+        chunks.append(_riff_chunk(b"ANIM", anim))
         # frame 0: full-canvas opaque lossy, no-blend
         f0 = _vp8.build_webp_vp8(w, h, mb1)[12:]
         chunks.append(anmf(0, 0, w, h, f0, 0x02))
@@ -4883,15 +4644,12 @@ def synth_webp_anim_lossy_assets(
         alph_payload = _build_alph_payload(
             plane, fw, fh, aid % 4, aid % 2
         )
-        alph_chunk = (
-            b"ALPH" + struct.pack("<I", len(alph_payload))
-            + alph_payload
-            + (b"\x00" if len(alph_payload) % 2 else b"")
+        f1 = (
+            _riff_chunk(b"ALPH", alph_payload)
+            + _vp8.build_webp_vp8(fw, fh, mb2)[12:]
         )
-        f1 = alph_chunk + _vp8.build_webp_vp8(fw, fh, mb2)[12:]
         chunks.append(anmf(ox, oy, fw, fh, f1, 0x00))
-        body = b"WEBP" + b"".join(chunks)
-        return b"RIFF" + struct.pack("<I", len(body)) + body
+        return _riff_chunk(b"RIFF", b"WEBP" + b"".join(chunks))
 
     return _synth_assets(
         df, id_col, "image/webp", one, id_col, width_col, height_col
@@ -4904,7 +4662,6 @@ def _vp8l_literal_chunk(w: int, h: int, pix) -> bytes:
     with balanced normal codes per channel — the frame payload
     builder for the animation synth (arbitrary alpha supported for
     the blend tests)."""
-    import struct
 
     px = [pix(x, y) for y in range(h) for x in range(w)]
 
@@ -4920,26 +4677,13 @@ def _vp8l_literal_chunk(w: int, h: int, pix) -> bytes:
     r_enc = _vp8l_write_huffman(wr, _vp8l_balanced([p[1] for p in px]))
     b_enc = _vp8l_write_huffman(wr, _vp8l_balanced([p[3] for p in px]))
     a_enc = _vp8l_write_huffman(wr, _vp8l_balanced([p[0] for p in px]))
-    wr.write(1, 1)  # distance: simple single 0
-    wr.write(0, 1)
-    wr.write(0, 1)
-    wr.write(0, 1)
-
-    def put(enc, sym):
-        code, ln = enc[sym]
-        for i in range(ln - 1, -1, -1):
-            wr.write((code >> i) & 1, 1)
-
+    wr.simple_code(0, 1)  # distance: simple single 0
     for p in px:
-        put(g_enc, p[2])
-        put(r_enc, p[1])
-        put(b_enc, p[3])
-        put(a_enc, p[0])
-    payload = b"\x2f" + wr.flush()
-    chunk = b"VP8L" + struct.pack("<I", len(payload)) + payload
-    if len(payload) % 2:
-        chunk += b"\x00"
-    return chunk
+        wr.put(g_enc, p[2])
+        wr.put(r_enc, p[1])
+        wr.put(b_enc, p[3])
+        wr.put(a_enc, p[0])
+    return wr.vp8l_chunk()
 
 
 def synth_webp_anim_assets(
@@ -4977,9 +4721,9 @@ def synth_webp_anim_assets(
 
         chunks = []
         vp8x = bytes([0x02, 0, 0, 0]) + le24(w - 1) + le24(h - 1)
-        chunks.append(b"VP8X" + struct.pack("<I", len(vp8x)) + vp8x)
+        chunks.append(_riff_chunk(b"VP8X", vp8x))
         anim = bytes([0, 0, 0, 255]) + struct.pack("<H", 0)
-        chunks.append(b"ANIM" + struct.pack("<I", len(anim)) + anim)
+        chunks.append(_riff_chunk(b"ANIM", anim))
         for k in range(K):
             if k == 0:
                 fx, fy, fw, fh = 0, 0, w, h
@@ -4996,13 +4740,8 @@ def synth_webp_anim_assets(
                 + le24(40 + k)
                 + bytes([0x02])  # no-blend, dispose NONE
             )
-            body = hdr + inner
-            chunk = b"ANMF" + struct.pack("<I", len(body)) + body
-            if len(body) % 2:
-                chunk += b"\x00"
-            chunks.append(chunk)
-        body = b"WEBP" + b"".join(chunks)
-        return b"RIFF" + struct.pack("<I", len(body)) + body
+            chunks.append(_riff_chunk(b"ANMF", hdr + inner))
+        return _riff_chunk(b"RIFF", b"WEBP" + b"".join(chunks))
 
     return _synth_assets(
         df, id_col, "image/webp", one, id_col, width_col, height_col
@@ -5161,159 +4900,90 @@ def decode_image_pixel_stats(assets: DataFrame) -> DataFrame:
 
     import numpy as np
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = {k: [] for k in ("n_pixels", "sum_r", "sum_g", "sum_b")}
-            for b in pdf["payload"]:
-                try:
-                    raw = bytes(b)
-                    if raw[:8] == b"\x89PNG\r\n\x1a\n":
-                        n, sr, sg, sb = _png_pixel_sums(raw)
-                        rows["n_pixels"].append(n)
-                        rows["sum_r"].append(sr)
-                        rows["sum_g"].append(sg)
-                        rows["sum_b"].append(sb)
-                        continue
-                    if raw[:6] in (b"GIF87a", b"GIF89a"):
-                        n, sr, sg, sb = _gif_pixel_sums(raw)
-                        rows["n_pixels"].append(n)
-                        rows["sum_r"].append(sr)
-                        rows["sum_g"].append(sg)
-                        rows["sum_b"].append(sb)
-                        continue
-                    if raw[:2] in (b"P5", b"P6"):
-                        n, sr, sg, sb = _ppm_pixel_sums(raw)
-                        rows["n_pixels"].append(n)
-                        rows["sum_r"].append(sr)
-                        rows["sum_g"].append(sg)
-                        rows["sum_b"].append(sb)
-                        continue
-                    if raw[:4] in (b"II*\x00", b"MM\x00*"):
-                        n, sr, sg, sb = _tiff_pixel_sums(raw)
-                        rows["n_pixels"].append(n)
-                        rows["sum_r"].append(sr)
-                        rows["sum_g"].append(sg)
-                        rows["sum_b"].append(sb)
-                        continue
-                    if raw[:2] == b"\xff\xd8":
-                        try:
-                            n, sr, sg, sb = _jpeg_pixel_sums(raw)
-                        except ValueError:
-                            # SOF2 multi-scan path (poison re-raises)
-                            n, sr, sg, sb = (
-                                _jpeg_progressive_pixel_sums(raw)
-                            )
-                        rows["n_pixels"].append(n)
-                        rows["sum_r"].append(sr)
-                        rows["sum_g"].append(sg)
-                        rows["sum_b"].append(sb)
-                        continue
-                    if raw[:4] == b"RIFF" and raw[8:12] == b"WEBP":
-                        # dispatch on the image-bearing chunk's fourcc
-                        at, kind = 12, None
-                        while at + 8 <= len(raw):
-                            fcc = raw[at:at + 4]
-                            (csz,) = struct.unpack_from(
-                                "<I", raw, at + 4
-                            )
-                            if fcc in (b"VP8L", b"VP8 ", b"ANMF"):
-                                kind = fcc
-                                break
-                            at += 8 + csz + (csz & 1)
-                        if kind == b"ANMF":
-                            # animated WebP (r14): composite all
-                            # ANMF frames onto the VP8X canvas
-                            n, sr, sg, sb = _webp_anim_pixel_sums(
-                                raw
-                            )
-                            rows["n_pixels"].append(n)
-                            rows["sum_r"].append(sr)
-                            rows["sum_g"].append(sg)
-                            rows["sum_b"].append(sb)
-                            continue
-                        if kind == b"VP8 ":
-                            # lossy VP8 key frame (r12): full RFC 6386
-                            # key-frame decode — boolean range coder,
-                            # token trees, Y2/WHT + 20091/35468 IDCT,
-                            # 16x16 intra prediction — operators/vp8
-                            from geniepool_etl_spark.operators import (
-                                vp8 as _vp8,
-                            )
+    def one(raw: bytes) -> tuple:
+        if raw[:8] == b"\x89PNG\r\n\x1a\n":
+            return _png_pixel_sums(raw)
+        if raw[:6] in (b"GIF87a", b"GIF89a"):
+            return _gif_pixel_sums(raw)
+        if raw[:2] in (b"P5", b"P6"):
+            return _ppm_pixel_sums(raw)
+        if raw[:4] in (b"II*\x00", b"MM\x00*"):
+            return _tiff_pixel_sums(raw)
+        if raw[:2] == b"\xff\xd8":
+            try:
+                return _jpeg_pixel_sums(raw)
+            except ValueError:
+                # SOF2 multi-scan path (poison re-raises)
+                return _jpeg_progressive_pixel_sums(raw)
+        if raw[:4] == b"RIFF" and raw[8:12] == b"WEBP":
+            # dispatch on the image-bearing chunk's fourcc
+            at, kind = 12, None
+            while at + 8 <= len(raw):
+                fcc = raw[at:at + 4]
+                (csz,) = struct.unpack_from("<I", raw, at + 4)
+                if fcc in (b"VP8L", b"VP8 ", b"ANMF"):
+                    kind = fcc
+                    break
+                at += 8 + csz + (csz & 1)
+            if kind == b"ANMF":
+                # animated WebP (r14): composite all ANMF frames onto
+                # the VP8X canvas
+                return _webp_anim_pixel_sums(raw)
+            if kind == b"VP8 ":
+                # lossy VP8 key frame (r12): full RFC 6386 key-frame
+                # decode — boolean range coder, token trees, Y2/WHT +
+                # 20091/35468 IDCT, 16x16 intra prediction —
+                # operators/vp8
+                return _vp8.vp8_pixel_sums(raw)
+            return _webp_lossless_pixel_sums(raw)
+        if len(raw) >= 44 and raw[-18:] == b"TRUEVISION-XFILE.\x00":
+            # TGA has no magic; the 2.0 footer is the documented
+            # detection path
+            return _tga_pixel_sums(raw)
+        if raw[:2] != b"BM" or len(raw) < 54:
+            raise ValueError("not BMP")
+        off = struct.unpack_from("<I", raw, 10)[0]
+        w, h = struct.unpack_from("<ii", raw, 18)
+        bpp = struct.unpack_from("<H", raw, 28)[0]
+        comp = struct.unpack_from("<I", raw, 30)[0]
+        if bpp not in (8, 24) or comp != 0 or w <= 0 or h == 0:
+            raise ValueError("unsupported BMP variant")
+        flipped = h > 0
+        h = abs(h)
+        if bpp == 8:
+            # paletted BMP: BGRA quads after the 40-byte info header
+            # (biClrUsed, 0 → 256), 1-byte indices at 4-aligned row
+            # stride
+            hdr_sz = struct.unpack_from("<I", raw, 14)[0]
+            n_clr = struct.unpack_from("<I", raw, 46)[0] or 256
+            pal = np.frombuffer(
+                raw, dtype=np.uint8, count=4 * n_clr, offset=14 + hdr_sz,
+            ).reshape(n_clr, 4).astype(np.int64)
+            stride = (w + 3) & ~3
+            idx = np.frombuffer(
+                raw, dtype=np.uint8, count=h * stride, offset=off,
+            ).reshape(h, stride)[:, :w]
+            if flipped:
+                idx = idx[::-1]
+            if int(idx.max(initial=0)) >= n_clr:
+                raise ValueError("bmp: index beyond palette")
+            px = pal[idx.ravel()]
+        else:
+            stride = (w * 3 + 3) & ~3
+            body = np.frombuffer(
+                raw, dtype=np.uint8, count=h * stride, offset=off
+            ).reshape(h, stride)[:, : w * 3]
+            if flipped:
+                body = body[::-1]
+            px = body.reshape(-1, 3).astype(np.int64)
+        return (
+            w * h,
+            int(px[:, 2].sum()),
+            int(px[:, 1].sum()),
+            int(px[:, 0].sum()),
+        )
 
-                            n, sr, sg, sb = _vp8.vp8_pixel_sums(raw)
-                        else:
-                            n, sr, sg, sb = _webp_lossless_pixel_sums(
-                                raw
-                            )
-                        rows["n_pixels"].append(n)
-                        rows["sum_r"].append(sr)
-                        rows["sum_g"].append(sg)
-                        rows["sum_b"].append(sb)
-                        continue
-                    if (
-                        len(raw) >= 44
-                        and raw[-18:] == b"TRUEVISION-XFILE.\x00"
-                    ):
-                        # TGA has no magic; the 2.0 footer is the
-                        # documented detection path
-                        n, sr, sg, sb = _tga_pixel_sums(raw)
-                        rows["n_pixels"].append(n)
-                        rows["sum_r"].append(sr)
-                        rows["sum_g"].append(sg)
-                        rows["sum_b"].append(sb)
-                        continue
-                    if raw[:2] != b"BM" or len(raw) < 54:
-                        raise ValueError("not BMP")
-                    off = struct.unpack_from("<I", raw, 10)[0]
-                    w, h = struct.unpack_from("<ii", raw, 18)
-                    bpp = struct.unpack_from("<H", raw, 28)[0]
-                    comp = struct.unpack_from("<I", raw, 30)[0]
-                    if bpp not in (8, 24) or comp != 0 or w <= 0 or h == 0:
-                        raise ValueError("unsupported BMP variant")
-                    flipped = h > 0
-                    h = abs(h)
-                    if bpp == 8:
-                        # paletted BMP: BGRA quads after the 40-byte
-                        # info header (biClrUsed, 0 → 256), 1-byte
-                        # indices at 4-aligned row stride
-                        hdr_sz = struct.unpack_from("<I", raw, 14)[0]
-                        n_clr = struct.unpack_from("<I", raw, 46)[0] or 256
-                        pal_at = 14 + hdr_sz
-                        pal = np.frombuffer(
-                            raw, dtype=np.uint8,
-                            count=4 * n_clr, offset=pal_at,
-                        ).reshape(n_clr, 4).astype(np.int64)
-                        stride = (w + 3) & ~3
-                        idx = np.frombuffer(
-                            raw, dtype=np.uint8,
-                            count=h * stride, offset=off,
-                        ).reshape(h, stride)[:, :w]
-                        if flipped:
-                            idx = idx[::-1]
-                        if int(idx.max(initial=0)) >= n_clr:
-                            raise ValueError("bmp: index beyond palette")
-                        px = pal[idx.ravel()]
-                    else:
-                        stride = (w * 3 + 3) & ~3
-                        body = np.frombuffer(
-                            raw, dtype=np.uint8, count=h * stride, offset=off
-                        ).reshape(h, stride)[:, : w * 3]
-                        if flipped:
-                            body = body[::-1]
-                        px = body.reshape(-1, 3).astype(np.int64)
-                    rows["n_pixels"].append(w * h)
-                    rows["sum_b"].append(int(px[:, 0].sum()))
-                    rows["sum_g"].append(int(px[:, 1].sum()))
-                    rows["sum_r"].append(int(px[:, 2].sum()))
-                except Exception:
-                    for k in rows:
-                        rows[k].append(None)
-            out = pd.DataFrame({"asset_id": pdf["asset_id"], **rows})
-            for c in rows:
-                out[c] = out[c].astype("Int64")
-            yield out
-
-    return assets.mapInPandas(batches, PIXEL_STATS_SCHEMA)
+    return _decode_assets(assets, PIXEL_STATS_SCHEMA, one, Exception)
 
 
 def synth_jpeg_assets(
@@ -6039,22 +5709,12 @@ def decode_image_features(assets: DataFrame) -> DataFrame:
     unsupported payloads yield null metadata rather than failing the
     batch — at 100 TB one bad file must not kill the stage."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = {k: [] for k in ("format", "width", "height", "bit_depth")}
-            for b in pdf["payload"]:
-                try:
-                    m = decode_image(b)
-                except Exception:
-                    m = {}
-                for k in rows:
-                    rows[k].append(m.get(k))
-            out = pd.DataFrame({"asset_id": pdf["asset_id"], **rows})
-            for c in ("width", "height", "bit_depth"):
-                out[c] = out[c].astype("Int64")
-            yield out
-
-    return assets.mapInPandas(batches, IMAGE_META_SCHEMA)
+    keys = IMAGE_META_SCHEMA.fieldNames()[1:]
+    return _decode_assets(
+        assets, IMAGE_META_SCHEMA,
+        lambda raw: tuple(decode_image(raw).get(k) for k in keys),
+        Exception,
+    )
 
 
 def extract_features(assets: DataFrame) -> DataFrame:
@@ -6341,9 +6001,7 @@ def synth_avi_assets(
     import struct
 
     def one(w: int, h: int, frames: int, fps: int) -> bytes:
-        avih = b"avih" + struct.pack(
-            "<I", 56
-        ) + struct.pack(
+        avih = _riff_chunk(b"avih", struct.pack(
             "<14I",
             1_000_000 // fps,  # dwMicroSecPerFrame
             0, 0, 0,
@@ -6351,11 +6009,9 @@ def synth_avi_assets(
             0, 1, 0,
             w, h,
             0, 0, 0, 0,
-        )
-        hdrl = b"hdrl" + avih
-        lst = b"LIST" + struct.pack("<I", len(hdrl)) + hdrl
-        body = b"AVI " + lst
-        return b"RIFF" + struct.pack("<I", len(body)) + body
+        ))
+        hdrl = _riff_chunk(b"LIST", b"hdrl" + avih)
+        return _riff_chunk(b"RIFF", b"AVI " + hdrl)
 
     return _synth_assets(
         df, id_col, "video/avi", one,
@@ -6384,14 +6040,7 @@ def synth_avi_mjpeg_assets(
     import struct
 
     def one(w: int, h: int, frames: int, fps: int) -> bytes:
-        def chunk(tag: bytes, body: bytes) -> bytes:
-            pad = b"\x00" if len(body) % 2 else b""
-            return tag + struct.pack("<I", len(body)) + body + pad
-
-        def lst(kind: bytes, body: bytes) -> bytes:
-            return chunk(b"LIST", kind + body)
-
-        avih = chunk(
+        avih = _riff_chunk(
             b"avih",
             struct.pack(
                 "<14I",
@@ -6400,34 +6049,29 @@ def synth_avi_mjpeg_assets(
                 w, h, 0, 0, 0, 0,
             ),
         )
-        strh = chunk(
+        strh = _riff_chunk(
             b"strh",
             b"vids" + b"MJPG" + struct.pack(
                 "<I2H8I", 0, 0, 0, 0, 1, fps, 0, frames, 0, 0, 0
             ),
         )
-        strf = chunk(
+        strf = _riff_chunk(
             b"strf",
             struct.pack(
                 "<IiiHH4sIiiII",
                 40, w, h, 1, 24, b"MJPG", w * h * 3, 0, 0, 0, 0,
             ),
         )
-        hdrl = lst(b"hdrl", avih + lst(b"strl", strh + strf))
-        movi = lst(
-            b"movi",
-            b"".join(
-                chunk(
-                    b"00dc",
-                    _jpeg_color_bytes(
-                        w, h, "444", (29 * f, 17 * f, 11 * f)
-                    ),
-                )
-                for f in range(frames)
-            ),
-        )
-        body = b"AVI " + hdrl + movi
-        return b"RIFF" + struct.pack("<I", len(body)) + body
+        strl = _riff_chunk(b"LIST", b"strl" + strh + strf)
+        hdrl = _riff_chunk(b"LIST", b"hdrl" + avih + strl)
+        movi = _riff_chunk(b"LIST", b"movi" + b"".join(
+            _riff_chunk(
+                b"00dc",
+                _jpeg_color_bytes(w, h, "444", (29 * f, 17 * f, 11 * f)),
+            )
+            for f in range(frames)
+        ))
+        return _riff_chunk(b"RIFF", b"AVI " + hdrl + movi)
 
     return _synth_assets(
         df, id_col, "video/avi", one,
@@ -6457,13 +6101,6 @@ def synth_avi_msrle_assets(
     Arrow ``mapInPandas``; narrow."""
     import struct
 
-    def chunk(tag: bytes, body: bytes) -> bytes:
-        pad = b"\x00" if len(body) % 2 else b""
-        return tag + struct.pack("<I", len(body)) + body + pad
-
-    def lst(kind: bytes, body: bytes) -> bytes:
-        return chunk(b"LIST", kind + body)
-
     def one(w: int, h: int, nf: int, rh: int) -> bytes:
         if not 3 <= w <= 255 or not 0 < rh < h:
             # enforce the documented bounds: w > 255 wraps the RLE
@@ -6475,14 +6112,14 @@ def synth_avi_msrle_assets(
                 f"0 < rect_h < h, got w={w} h={h} rect_h={rh}"
             )
         fps = 10
-        avih = chunk(
+        avih = _riff_chunk(
             b"avih",
             struct.pack(
                 "<14I", 1_000_000 // fps, 0, 0, 0, nf, 0, 1, 0,
                 w, h, 0, 0, 0, 0,
             ),
         )
-        strh = chunk(
+        strh = _riff_chunk(
             b"strh",
             b"vids" + b"MRLE" + struct.pack(
                 "<I2H8I", 0, 0, 0, 0, 1, fps, 0, nf, 0, 0, 0
@@ -6494,14 +6131,15 @@ def synth_avi_msrle_assets(
             )
             for i in range(256)
         )
-        strf = chunk(
+        strf = _riff_chunk(
             b"strf",
             struct.pack(
                 "<IiiHHIIiiII",
                 40, w, h, 1, 8, 1, w * h, 0, 0, 0, 0,
             ) + pal,
         )
-        hdrl = lst(b"hdrl", avih + lst(b"strl", strh + strf))
+        strl = _riff_chunk(b"LIST", b"strl" + strh + strf)
+        hdrl = _riff_chunk(b"LIST", b"hdrl" + avih + strl)
         frames = []
         # keyframe: absolute packets cover every pixel
         key = bytearray()
@@ -6521,11 +6159,10 @@ def synth_avi_msrle_assets(
                 d += b"\x00\x00"  # EOL
             d += b"\x00\x01"  # EOI
             frames.append(bytes(d))
-        movi = lst(
-            b"movi", b"".join(chunk(b"00dc", fb) for fb in frames)
-        )
-        body = b"AVI " + hdrl + movi
-        return b"RIFF" + struct.pack("<I", len(body)) + body
+        movi = _riff_chunk(b"LIST", b"movi" + b"".join(
+            _riff_chunk(b"00dc", fb) for fb in frames
+        ))
+        return _riff_chunk(b"RIFF", b"AVI " + hdrl + movi)
 
     return _synth_assets(
         df, id_col, "video/avi", one,
@@ -6699,67 +6336,39 @@ def decode_video_frame_stats(assets: DataFrame) -> DataFrame:
     rather than silently dropping the asset."""
     import numpy as np
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, idxs = [], []
-            stats = {k: [] for k in ("n_pixels", "sum_r", "sum_g", "sum_b")}
-            for asset_id, payload in zip(pdf["asset_id"], pdf["payload"]):
-                try:
-                    frames = list(_avi_mjpeg_frames(payload))
-                    rle_buf = None
-                    rows = []
-                    for fi, (hd, fw, fh, sf_, fb) in enumerate(
-                        frames
-                    ):
-                        if hd == b"MJPG":
-                            rows.append((fi, _jpeg_pixel_sums(fb)))
-                        elif hd == b"MRLE":
-                            if rle_buf is None:
-                                pr, pg, pb = _strf_palette(sf_)
-                                rle_buf = np.zeros(
-                                    (fh, fw), dtype=np.int64
-                                )
-                            _msrle_apply(rle_buf, fb)
-                            if int(rle_buf.max()) >= len(pr):
-                                raise ValueError(
-                                    "msrle: index past palette"
-                                )
-                            rows.append((fi, (
-                                fw * fh,
-                                int(pr[rle_buf].sum()),
-                                int(pg[rle_buf].sum()),
-                                int(pb[rle_buf].sum()),
-                            )))
-                        else:
-                            rows.append(
-                                (fi, _dib_frame_sums(fb, fw, fh))
-                            )
-                    if not rows:
-                        # structurally valid AVI whose movi LIST holds
-                        # zero frame chunks: unusable payload → the
-                        # contract's ONE visible null row, not a
-                        # silent drop of the asset
-                        raise ValueError("no frame chunks")
-                except Exception:
-                    ids.append(asset_id)
-                    idxs.append(-1)
-                    for k in stats:
-                        stats[k].append(None)
-                    continue
-                for fi, (n, sr, sg, sb) in rows:
-                    ids.append(asset_id)
-                    idxs.append(fi)
-                    stats["n_pixels"].append(n)
-                    stats["sum_r"].append(sr)
-                    stats["sum_g"].append(sg)
-                    stats["sum_b"].append(sb)
-            out = pd.DataFrame({"asset_id": ids, "frame_idx": idxs, **stats})
-            out["frame_idx"] = out["frame_idx"].astype("int32")
-            for c in stats:
-                out[c] = out[c].astype("Int64")
-            yield out
+    def frames(raw: bytes) -> list:
+        rle_buf = None
+        rows = []
+        for fi, (hd, fw, fh, sf_, fb) in enumerate(_avi_mjpeg_frames(raw)):
+            if hd == b"MJPG":
+                rows.append((fi, *_jpeg_pixel_sums(fb)))
+            elif hd == b"MRLE":
+                if rle_buf is None:
+                    pr, pg, pb = _strf_palette(sf_)
+                    rle_buf = np.zeros((fh, fw), dtype=np.int64)
+                _msrle_apply(rle_buf, fb)
+                if int(rle_buf.max()) >= len(pr):
+                    raise ValueError("msrle: index past palette")
+                rows.append((
+                    fi,
+                    fw * fh,
+                    int(pr[rle_buf].sum()),
+                    int(pg[rle_buf].sum()),
+                    int(pb[rle_buf].sum()),
+                ))
+            else:
+                rows.append((fi, *_dib_frame_sums(fb, fw, fh)))
+        if not rows:
+            # structurally valid AVI whose movi LIST holds zero frame
+            # chunks: unusable payload → the contract's ONE visible
+            # null row, not a silent drop of the asset
+            raise ValueError("no frame chunks")
+        return rows
 
-    return assets.mapInPandas(batches, VIDEO_FRAME_PIXEL_SCHEMA)
+    return _decode_assets(
+        assets, VIDEO_FRAME_PIXEL_SCHEMA, frames, Exception,
+        null_row=(-1, None, None, None, None),
+    )
 
 
 _VIDEO_PHASH_SCHEMA = "asset_id long, frame_idx int, phash long"
@@ -6778,7 +6387,8 @@ def decode_video_frame_phash(assets: DataFrame) -> DataFrame:
     row."""
     import numpy as np
 
-    def frames_of(raw: bytes):
+    def frames(raw: bytes) -> list:
+        rows = []
         for fi, (hd, fw, fh, _strf, fb) in enumerate(
             _avi_mjpeg_frames(raw)
         ):
@@ -6804,32 +6414,15 @@ def decode_video_frame_phash(assets: DataFrame) -> DataFrame:
                     gray.reshape(32, k, 32, k).sum(axis=(1, 3))
                     // (k * k)
                 )
-            yield fi, _phash_bits(gray.astype(np.float64))
+            rows.append((fi, _phash_bits(gray.astype(np.float64))))
+        if not rows:
+            raise ValueError("no frame chunks")
+        return rows
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, idxs, hs = [], [], []
-            for aid, b in zip(pdf["asset_id"], pdf["payload"]):
-                try:
-                    rows = list(frames_of(bytes(b)))
-                    if not rows:
-                        raise ValueError("no frame chunks")
-                except (ValueError, IndexError):
-                    ids.append(aid)
-                    idxs.append(-1)
-                    hs.append(None)
-                    continue
-                for fi, h in rows:
-                    ids.append(aid)
-                    idxs.append(fi)
-                    hs.append(h)
-            out = pd.DataFrame(
-                {"asset_id": ids, "frame_idx": idxs, "phash": hs}
-            )
-            out["frame_idx"] = out["frame_idx"].astype("int32")
-            yield out
-
-    return assets.mapInPandas(batches, _VIDEO_PHASH_SCHEMA)
+    return _decode_assets(
+        assets, _VIDEO_PHASH_SCHEMA, frames, (ValueError, IndexError),
+        null_row=(-1, None),
+    )
 
 
 def synth_avi_dib_phash_assets(
@@ -6848,28 +6441,21 @@ def synth_avi_dib_phash_assets(
     import numpy as np
 
     def one(aid: int, frames: int) -> bytes:
-        def chunk(tag: bytes, body: bytes) -> bytes:
-            pad = b"\x00" if len(body) % 2 else b""
-            return tag + struct.pack("<I", len(body)) + body + pad
-
-        def lst(kind: bytes, body: bytes) -> bytes:
-            return chunk(b"LIST", kind + body)
-
         w = h = 32
-        avih = chunk(
+        avih = _riff_chunk(
             b"avih",
             struct.pack(
                 "<14I", 100_000, 0, 0, 0, frames, 0, 1, 0,
                 w, h, 0, 0, 0, 0,
             ),
         )
-        strh = chunk(
+        strh = _riff_chunk(
             b"strh",
             b"vids" + b"DIB " + struct.pack(
                 "<I2H8I", 0, 0, 0, 0, 1, 10, 0, frames, 0, 0, 0
             ),
         )
-        strf = chunk(
+        strf = _riff_chunk(
             b"strf",
             struct.pack(
                 "<IiiHH4sIiiII",
@@ -6877,7 +6463,8 @@ def synth_avi_dib_phash_assets(
                 w * h * 3, 0, 0, 0, 0,
             ),
         )
-        hdrl = lst(b"hdrl", avih + lst(b"strl", strh + strf))
+        strl = _riff_chunk(b"LIST", b"strl" + strh + strf)
+        hdrl = _riff_chunk(b"LIST", b"hdrl" + avih + strl)
 
         def dib(f: int) -> bytes:
             g = _phash_design_image(aid * 11 + f).astype(np.uint8)
@@ -6886,12 +6473,10 @@ def synth_avi_dib_phash_assets(
             )  # bottom-up rows, B=G=R
             return bgr.tobytes()
 
-        movi = lst(
-            b"movi",
-            b"".join(chunk(b"00dc", dib(f)) for f in range(frames)),
-        )
-        body = b"AVI " + hdrl + movi
-        return b"RIFF" + struct.pack("<I", len(body)) + body
+        movi = _riff_chunk(b"LIST", b"movi" + b"".join(
+            _riff_chunk(b"00dc", dib(f)) for f in range(frames)
+        ))
+        return _riff_chunk(b"RIFF", b"AVI " + hdrl + movi)
 
     return _synth_assets(df, id_col, "video/avi", one, id_col, frames_col)
 
@@ -6965,28 +6550,12 @@ def decode_video_features(assets: DataFrame) -> DataFrame:
     (narrow — the payload never crosses a shuffle). Poison payloads
     yield null metadata rather than failing the stage."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            cols = {
-                k: []
-                for k in (
-                    "format", "width", "height", "n_frames", "fps",
-                    "duration_ms",
-                )
-            }
-            for b in pdf["payload"]:
-                try:
-                    m = decode_video(b)
-                except Exception:
-                    m = {}
-                for k in cols:
-                    cols[k].append(m.get(k))
-            out = pd.DataFrame({"asset_id": pdf["asset_id"], **cols})
-            for c in ("width", "height", "n_frames", "fps", "duration_ms"):
-                out[c] = out[c].astype("Int64")
-            yield out
-
-    return assets.mapInPandas(batches, VIDEO_META_SCHEMA)
+    keys = VIDEO_META_SCHEMA.fieldNames()[1:]
+    return _decode_assets(
+        assets, VIDEO_META_SCHEMA,
+        lambda raw: tuple(decode_video(raw).get(k) for k in keys),
+        Exception,
+    )
 
 
 def _packbits_encode(data: bytes) -> bytes:
@@ -7898,19 +7467,10 @@ def decode_audio_fingerprint(
                 hval |= 1 << i
         return hval
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            hs = []
-            for b in pdf["payload"]:
-                try:
-                    hs.append(one(bytes(b)))
-                except (ValueError, IndexError):
-                    hs.append(None)
-            yield pd.DataFrame(
-                {"asset_id": pdf["asset_id"], "afp": hs}
-            )
-
-    return assets.mapInPandas(batches, _AUDIO_FP_SCHEMA)
+    return _decode_assets(
+        assets, _AUDIO_FP_SCHEMA, lambda raw: (one(raw),),
+        (ValueError, IndexError),
+    )
 
 
 def _audio_fp_sig_bit(aid: int, j: int) -> int:
@@ -9205,34 +8765,18 @@ def decode_exif_stats(assets: DataFrame) -> DataFrame:
     fields, never a dead stage."""
     from struct import error as struct_error
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            cols = {
-                k: []
-                for k in ("orientation", "iso", "px_w", "px_h",
-                          "year", "make")
-            }
-            for b in pdf["payload"]:
-                try:
-                    f = _exif_fields(bytes(b))
-                    year = None
-                    dt = f.get("datetime")
-                    if dt and len(dt) >= 4 and dt[:4].isdigit():
-                        year = int(dt[:4])
-                    cols["orientation"].append(f["orientation"])
-                    cols["iso"].append(f["iso"])
-                    cols["px_w"].append(f["px_w"])
-                    cols["px_h"].append(f["px_h"])
-                    cols["year"].append(year)
-                    cols["make"].append(f["make"])
-                except (ValueError, IndexError, struct_error):
-                    for k in cols:
-                        cols[k].append(None)
-            out = {"asset_id": pdf["asset_id"]}
-            out.update(cols)
-            yield pd.DataFrame(out)
+    def one(raw: bytes) -> tuple:
+        f = _exif_fields(raw)
+        year = None
+        dt = f.get("datetime")
+        if dt and len(dt) >= 4 and dt[:4].isdigit():
+            year = int(dt[:4])
+        return (f["orientation"], f["iso"], f["px_w"], f["px_h"], year,
+                f["make"])
 
-    return assets.mapInPandas(batches, _EXIF_SCHEMA)
+    return _decode_assets(
+        assets, _EXIF_SCHEMA, one, (ValueError, IndexError, struct_error)
+    )
 
 
 def synth_jpeg_exif_assets(
@@ -9379,24 +8923,9 @@ def decode_image_oriented_stats(assets: DataFrame) -> DataFrame:
         wsum = int((disp * (1 + xs + 2 * ys)).sum())
         return (int(o), dw, dh, int(disp.sum()), wsum)
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            cols = {k: [] for k in
-                    ("orientation", "disp_w", "disp_h", "sum_px",
-                     "wsum")}
-            for b in pdf["payload"]:
-                try:
-                    vals = one(bytes(b))
-                    for k, v in zip(cols, vals):
-                        cols[k].append(v)
-                except (ValueError, IndexError, KeyError):
-                    for k in cols:
-                        cols[k].append(None)
-            out = {"asset_id": pdf["asset_id"]}
-            out.update(cols)
-            yield pd.DataFrame(out)
-
-    return assets.mapInPandas(batches, _ORIENTED_SCHEMA)
+    return _decode_assets(
+        assets, _ORIENTED_SCHEMA, one, (ValueError, IndexError, KeyError)
+    )
 
 
 def synth_jpeg_exif_oriented_assets(
@@ -9557,19 +9086,10 @@ def decode_image_phash(assets: DataFrame) -> DataFrame:
             )
         return _phash_bits(img.astype(np.float64))
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            hs = []
-            for b in pdf["payload"]:
-                try:
-                    hs.append(one(bytes(b)))
-                except (ValueError, IndexError):
-                    hs.append(None)
-            yield pd.DataFrame(
-                {"asset_id": pdf["asset_id"], "phash": hs}
-            )
-
-    return assets.mapInPandas(batches, _PHASH_SCHEMA)
+    return _decode_assets(
+        assets, _PHASH_SCHEMA, lambda raw: (one(raw),),
+        (ValueError, IndexError),
+    )
 
 
 def _phash_sig_bit(aid: int, j: int) -> int:
@@ -9774,31 +9294,7 @@ def image_quality_gates(
         )
         return n, lap_var_milli, entropy, keep
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows: dict = {
-                k: []
-                for k in ("n_pixels", "lap_var_milli",
-                          "entropy_nats", "keep")
-            }
-            for b in pdf["payload"]:
-                try:
-                    n, lv, ent, keep = one(bytes(b))
-                    rows["n_pixels"].append(n)
-                    rows["lap_var_milli"].append(lv)
-                    rows["entropy_nats"].append(ent)
-                    rows["keep"].append(keep)
-                except Exception:
-                    for k in rows:
-                        rows[k].append(None)
-            out = pd.DataFrame({"asset_id": pdf["asset_id"], **rows})
-            for c in ("n_pixels", "lap_var_milli"):
-                out[c] = out[c].astype("Int64")
-            out["entropy_nats"] = out["entropy_nats"].astype("Float64")
-            out["keep"] = out["keep"].astype("boolean")
-            yield out
-
-    return assets.mapInPandas(batches, IMAGE_GATES_SCHEMA)
+    return _decode_assets(assets, IMAGE_GATES_SCHEMA, one, Exception)
 
 
 def _alpha_unfilter(res: list, w: int, h: int, method: int) -> list:
@@ -9864,24 +9360,10 @@ def decode_exif_gps_stats(assets: DataFrame) -> DataFrame:
         fnum = (fn * 100) // fd if fn is not None else None
         return (lat, lon, exp_us, fnum)
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            cols = {k: [] for k in
-                    ("lat_mas", "lon_mas", "exposure_us",
-                     "fnum_x100")}
-            for b in pdf["payload"]:
-                try:
-                    vals = one(bytes(b))
-                    for k, v in zip(cols, vals):
-                        cols[k].append(v)
-                except (ValueError, IndexError, KeyError, TypeError):
-                    for k in cols:
-                        cols[k].append(None)
-            out = {"asset_id": pdf["asset_id"]}
-            out.update(cols)
-            yield pd.DataFrame(out)
-
-    return assets.mapInPandas(batches, _EXIF_GPS_SCHEMA)
+    return _decode_assets(
+        assets, _EXIF_GPS_SCHEMA, one,
+        (ValueError, IndexError, KeyError, TypeError),
+    )
 
 
 def synth_jpeg_exif_gps_assets(
@@ -10001,24 +9483,12 @@ def _build_alph_payload(
     g_enc = _vp8l_write_huffman(wr, _vp8l_balanced(res))
     r_enc = _vp8l_write_huffman(wr, _vp8l_balanced([0]))
     b_enc = _vp8l_write_huffman(wr, _vp8l_balanced([0]))
-    wr.write(1, 1)  # alpha: simple single 255
-    wr.write(0, 1)
-    wr.write(1, 1)
-    wr.write(255, 8)
-    wr.write(1, 1)  # distance: simple single 0
-    wr.write(0, 1)
-    wr.write(0, 1)
-    wr.write(0, 1)
-
-    def put(enc, sym):
-        code, ln = enc[sym]
-        for i in range(ln - 1, -1, -1):
-            wr.write((code >> i) & 1, 1)
-
+    wr.simple_code(255, 8)  # alpha: simple single 255
+    wr.simple_code(0, 1)  # distance: simple single 0
     for v in res:
-        put(g_enc, v)
-        put(r_enc, 0)
-        put(b_enc, 0)
+        wr.put(g_enc, v)
+        wr.put(r_enc, 0)
+        wr.put(b_enc, 0)
     return head + wr.flush()
 
 
@@ -10060,8 +9530,6 @@ def _webp_alpha_pixel_sums(raw: bytes) -> tuple:
     truncation and size mismatches raise."""
     import struct
 
-    from geniepool_etl_spark.operators import vp8 as _vp8
-
     if raw[:4] != b"RIFF" or raw[8:12] != b"WEBP":
         raise ValueError("not WebP")
     at, n = 12, len(raw)
@@ -10098,25 +9566,10 @@ def decode_image_alpha_stats(assets: DataFrame) -> DataFrame:
     (r14): exact integer sums of all four channels. Arrow
     ``mapInPandas``; poison payloads yield null stats."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            cols = {k: [] for k in
-                    ("n_pixels", "sum_a", "sum_r", "sum_g", "sum_b")}
-            for b in pdf["payload"]:
-                try:
-                    n, sa, sr, sg, sb = _webp_alpha_pixel_sums(
-                        bytes(b)
-                    )
-                    for k, v in zip(cols, (n, sa, sr, sg, sb)):
-                        cols[k].append(v)
-                except (ValueError, IndexError):
-                    for k in cols:
-                        cols[k].append(None)
-            out = {"asset_id": pdf["asset_id"]}
-            out.update(cols)
-            yield pd.DataFrame(out)
-
-    return assets.mapInPandas(batches, _ALPHA_STATS_SCHEMA)
+    return _decode_assets(
+        assets, _ALPHA_STATS_SCHEMA, _webp_alpha_pixel_sums,
+        (ValueError, IndexError),
+    )
 
 
 def synth_webp_alpha_assets(
@@ -10134,9 +9587,6 @@ def synth_webp_alpha_assets(
     lands the closed-form plane alpha(x, y) = (13x + 7y + 5a) mod
     256) + the flat-MB VP8 key frame of the lossy lane. Arrow
     ``mapInPandas``; narrow."""
-    import struct
-
-    from geniepool_etl_spark.operators import vp8 as _vp8
 
     def one(aid: int, w: int, h: int) -> bytes:
         a7 = aid % 7
@@ -10163,15 +9613,11 @@ def synth_webp_alpha_assets(
             return v.to_bytes(3, "little")
 
         vp8x = bytes([0x10, 0, 0, 0]) + le24(w - 1) + le24(h - 1)
-        chunks = [
-            b"VP8X" + struct.pack("<I", len(vp8x)) + vp8x,
-            b"ALPH" + struct.pack("<I", len(alph_payload))
-            + alph_payload
-            + (b"\x00" if len(alph_payload) % 2 else b""),
-            vp8_chunks,
-        ]
-        body = b"WEBP" + b"".join(chunks)
-        return b"RIFF" + struct.pack("<I", len(body)) + body
+        return _riff_chunk(
+            b"RIFF",
+            b"WEBP" + _riff_chunk(b"VP8X", vp8x)
+            + _riff_chunk(b"ALPH", alph_payload) + vp8_chunks,
+        )
 
     return _synth_assets(
         df, id_col, "image/webp", one, id_col, width_col, height_col
@@ -10252,31 +9698,15 @@ def decode_image_resize_stats(
         xs = np.arange(out_w, dtype=np.int64)[None, :]
         ys = np.arange(out_h, dtype=np.int64)[:, None]
         return (
-            w, h,
+            w, h, out_w, out_h,
             int(out.sum()),
             int((out * (1 + xs + 2 * ys)).sum()),
         )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for aid, b in zip(pdf["asset_id"], pdf["payload"]):
-                try:
-                    iw, ih, s, c = one(bytes(b))
-                    rows.append((int(aid), iw, ih, out_w, out_h, s, c))
-                except Exception:
-                    rows.append(
-                        (int(aid), None, None, out_w, out_h, None, None)
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "asset_id", "in_width", "in_height", "out_width",
-                    "out_height", "px_sum", "px_checksum",
-                ],
-            )
-
-    return assets.mapInPandas(batches, _RESIZE_STATS_SCHEMA)
+    return _decode_assets(
+        assets, _RESIZE_STATS_SCHEMA, one, Exception,
+        null_row=(None, None, out_w, out_h, None, None),
+    )
 
 
 def resize_images_box(
@@ -10303,23 +9733,11 @@ def resize_images_box(
             + out.tobytes()
         )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = []
-            for b in pdf["payload"]:
-                try:
-                    payloads.append(one(bytes(b)))
-                except Exception:
-                    payloads.append(None)
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf["asset_id"],
-                    "payload": payloads,
-                    "media_type": "image/x-portable-graymap",
-                }
-            )
-
-    return assets.mapInPandas(batches, ASSET_SCHEMA)
+    media_type = "image/x-portable-graymap"
+    return _decode_assets(
+        assets, ASSET_SCHEMA, lambda raw: (one(raw), media_type),
+        Exception, null_row=(None, media_type),
+    )
 
 
 def synth_pgm_linear_assets(df: DataFrame, id_col: str = "asset_id"):
@@ -10457,37 +9875,18 @@ def decode_audio_tags(assets: DataFrame) -> DataFrame:
     duration — the route-by-metadata step before any sample decode.
     Arrow ``mapInPandas``; poison nulls the row."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [
-            "asset_id", "vendor", "title", "artist", "album",
-            "date_year", "track", "language", "n_tags", "duration_ms",
-        ]
-        for pdf in it:
-            rows = []
-            for aid, b in zip(pdf["asset_id"], pdf["payload"]):
-                try:
-                    raw = bytes(b)
-                    tg = _flac_vorbis_tags(raw)
-                    si = _parse_flac(raw)
-                    t = tg["tags"]
-                    rows.append(
-                        (
-                            int(aid), tg["vendor"], t.get("TITLE"),
-                            t.get("ARTIST"), t.get("ALBUM"),
-                            int(t["DATE"]) if "DATE" in t else None,
-                            int(t["TRACKNUMBER"])
-                            if "TRACKNUMBER" in t else None,
-                            t.get("LANGUAGE"), tg["n_tags"],
-                            si["duration_ms"],
-                        )
-                    )
-                except Exception:
-                    rows.append(
-                        (int(aid),) + (None,) * 9
-                    )
-            yield pd.DataFrame(rows, columns=cols)
+    def one(raw: bytes) -> tuple:
+        tg = _flac_vorbis_tags(raw)
+        si = _parse_flac(raw)
+        t = tg["tags"]
+        return (
+            tg["vendor"], t.get("TITLE"), t.get("ARTIST"), t.get("ALBUM"),
+            int(t["DATE"]) if "DATE" in t else None,
+            int(t["TRACKNUMBER"]) if "TRACKNUMBER" in t else None,
+            t.get("LANGUAGE"), tg["n_tags"], si["duration_ms"],
+        )
 
-    return assets.mapInPandas(batches, _FLAC_TAGS_SCHEMA)
+    return _decode_assets(assets, _FLAC_TAGS_SCHEMA, one, Exception)
 
 
 # --------------------------------------------------------------------------
@@ -10604,31 +10003,18 @@ def decode_mp3_id3(assets: DataFrame) -> DataFrame:
     'n/total' form yields the leading n. Arrow ``mapInPandas``;
     poison nulls the row."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["asset_id", "id3_version", "title", "artist", "album",
-                "year", "track", "duration_ms"]
-        for pdf in it:
-            rows = []
-            for aid, b in zip(pdf["asset_id"], pdf["payload"]):
-                try:
-                    raw = bytes(b)
-                    ver, tags, end = _id3_frames(raw)
-                    info = _parse_mp3(raw, end)
-                    trck = tags.get("TRCK")
-                    rows.append(
-                        (
-                            int(aid), ver, tags.get("TIT2"),
-                            tags.get("TPE1"), tags.get("TALB"),
-                            int(tags["TYER"]) if "TYER" in tags else None,
-                            int(trck.split("/")[0]) if trck else None,
-                            info["duration_ms"],
-                        )
-                    )
-                except Exception:
-                    rows.append((int(aid),) + (None,) * 7)
-            yield pd.DataFrame(rows, columns=cols)
+    def one(raw: bytes) -> tuple:
+        ver, tags, end = _id3_frames(raw)
+        info = _parse_mp3(raw, end)
+        trck = tags.get("TRCK")
+        return (
+            ver, tags.get("TIT2"), tags.get("TPE1"), tags.get("TALB"),
+            int(tags["TYER"]) if "TYER" in tags else None,
+            int(trck.split("/")[0]) if trck else None,
+            info["duration_ms"],
+        )
 
-    return assets.mapInPandas(batches, _ID3_TAGS_SCHEMA)
+    return _decode_assets(assets, _ID3_TAGS_SCHEMA, one, Exception)
 
 
 # --------------------------------------------------------------------------
@@ -10760,48 +10146,33 @@ def decode_ogg_tags(assets: DataFrame) -> DataFrame:
     audio-metadata containers now land in the same column shape.
     Poison nulls the row."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["asset_id", "vendor", "title", "artist", "album",
-                "date_year", "track", "language", "desc_len",
-                "duration_ms"]
-        for pdf in it:
-            rows = []
-            for aid, b in zip(pdf["asset_id"], pdf["payload"]):
-                try:
-                    raw = bytes(b)
-                    pkts = _ogg_packets(raw)
-                    if len(pkts) < 2:
-                        raise ValueError("ogg: no tags packet")
-                    p2 = pkts[1]
-                    if p2[:8] == b"OpusTags":
-                        parsed = _parse_comment_tags(p2[8:])
-                    elif p2[:7] == b"\x03vorbis":
-                        if not p2[7 + len(p2[7:]) - 1] & 0x01:
-                            raise ValueError("vorbis: framing bit unset")
-                        parsed = _parse_comment_tags(p2[7:-1])
-                    else:
-                        raise ValueError("ogg: packet 2 is not a "
-                                         "comment header")
-                    t = parsed["tags"]
-                    info = _parse_ogg(raw)
-                    desc = t.get("DESCRIPTION")
-                    rows.append(
-                        (
-                            int(aid), parsed["vendor"], t.get("TITLE"),
-                            t.get("ARTIST"), t.get("ALBUM"),
-                            int(t["DATE"]) if "DATE" in t else None,
-                            int(t["TRACKNUMBER"])
-                            if "TRACKNUMBER" in t else None,
-                            t.get("LANGUAGE"),
-                            len(desc) if desc is not None else None,
-                            info["duration_ms"],
-                        )
-                    )
-                except Exception:
-                    rows.append((int(aid),) + (None,) * 9)
-            yield pd.DataFrame(rows, columns=cols)
+    def one(raw: bytes) -> tuple:
+        pkts = _ogg_packets(raw)
+        if len(pkts) < 2:
+            raise ValueError("ogg: no tags packet")
+        p2 = pkts[1]
+        if p2[:8] == b"OpusTags":
+            parsed = _parse_comment_tags(p2[8:])
+        elif p2[:7] == b"\x03vorbis":
+            if not p2[7 + len(p2[7:]) - 1] & 0x01:
+                raise ValueError("vorbis: framing bit unset")
+            parsed = _parse_comment_tags(p2[7:-1])
+        else:
+            raise ValueError("ogg: packet 2 is not a comment header")
+        t = parsed["tags"]
+        info = _parse_ogg(raw)
+        desc = t.get("DESCRIPTION")
+        return (
+            parsed["vendor"], t.get("TITLE"), t.get("ARTIST"),
+            t.get("ALBUM"),
+            int(t["DATE"]) if "DATE" in t else None,
+            int(t["TRACKNUMBER"]) if "TRACKNUMBER" in t else None,
+            t.get("LANGUAGE"),
+            len(desc) if desc is not None else None,
+            info["duration_ms"],
+        )
 
-    return assets.mapInPandas(batches, _OGG_TAGS_SCHEMA)
+    return _decode_assets(assets, _OGG_TAGS_SCHEMA, one, Exception)
 
 
 # --------------------------------------------------------- animated GIF
@@ -10943,22 +10314,10 @@ def decode_gif_anim_stats(assets: DataFrame) -> DataFrame:
     poison → null row ``frame_idx -1``."""
     from struct import error as struct_error
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["asset_id", "frame_idx", "delay_cs",
-                "sum_r", "sum_g", "sum_b"]
-        for pdf in it:
-            rows = []
-            for aid, b in zip(pdf["asset_id"], pdf["payload"]):
-                try:
-                    for rec in _gif_anim_frames(bytes(b)):
-                        rows.append((int(aid),) + rec)
-                except (ValueError, struct_error):
-                    rows.append(
-                        (int(aid), -1, None, None, None, None)
-                    )
-            yield pd.DataFrame(rows, columns=cols)
-
-    return assets.mapInPandas(batches, GIF_ANIM_SCHEMA)
+    return _decode_assets(
+        assets, GIF_ANIM_SCHEMA, _gif_anim_frames,
+        (ValueError, struct_error), null_row=(-1, None, None, None, None),
+    )
 
 
 def synth_gif_anim_assets(

@@ -58,6 +58,8 @@ extensions), not reference parity.
 
 from __future__ import annotations
 
+import struct
+
 
 # ---------------------------------------------------------------- tables
 
@@ -697,8 +699,6 @@ def decode_frame(chunk: bytes):
     ref/mode deltas, B_PRED sub-block intra); see the module
     docstring for the repo-defined constant tables and border
     conventions."""
-    import struct
-
     import numpy as np
 
     if len(chunk) < 10:
@@ -1127,8 +1127,6 @@ def encode_flat_frame(w: int, h: int, mb_vals, ymode=_DC_PRED,
     targets to quantizers fine enough to reach them (the solver
     fails loud otherwise; chroma beyond q=4 needs residual-0
     targets, i.e. U=V=128 frames). 16x16 DC_PRED only."""
-    import struct
-
     mb_cols, mb_rows = (w + 15) >> 4, (h + 15) >> 4
     if submodes is not None:
         ymode = _B_PRED
@@ -1393,17 +1391,20 @@ def build_webp_vp8(w: int, h: int, mb_vals, ymode=_DC_PRED,
                    submodes=None, segments=None,
                    lf_deltas=None) -> bytes:
     """Wrap :func:`encode_flat_frame` in a RIFF/WEBP container."""
-    import struct
-
     frame = encode_flat_frame(
         w, h, mb_vals, ymode, uvmode, filter_level, sharpness,
         filter_type, submodes, segments, lf_deltas,
     )
-    chunk = b"VP8 " + struct.pack("<I", len(frame)) + frame
-    if len(frame) % 2:
-        chunk += b"\x00"
-    body = b"WEBP" + chunk
-    return b"RIFF" + struct.pack("<I", len(body)) + body
+    return _riff_chunk(b"RIFF", b"WEBP" + _riff_chunk(b"VP8 ", frame))
+
+
+def _riff_chunk(fourcc: bytes, data: bytes) -> bytes:
+    """One RIFF chunk — the one writer for every RIFF format here
+    (WebP, WAV, AVI): fourcc, little-endian data size, the data, and
+    a pad byte after odd-sized data (not counted in the size)."""
+    return fourcc + struct.pack("<I", len(data)) + data + b"\x00" * (
+        len(data) & 1
+    )
 
 
 def vp8_pixel_sums(raw: bytes) -> tuple:
@@ -1414,8 +1415,6 @@ def vp8_pixel_sums(raw: bytes) -> tuple:
     (1402/344/714/1772, floor half-up) — the same convention as the
     JPEG lanes, so one oracle formula family covers both codecs.
     Returns (n_pixels, sum_r, sum_g, sum_b)."""
-    import struct
-
     import numpy as np
 
     if raw[:4] != b"RIFF" or raw[8:12] != b"WEBP":

@@ -252,6 +252,31 @@ def test_registry_lanes_run_package_code():
     assert set(C.ORACLE_SQL) == set(C.SPARK_QUERIES)
 
 
+def test_rotation_ranks_lanes_by_last_green_record(tmp_path, monkeypatch):
+    """A red driver record is not proof: a lane green in r1 and red in
+    r2 ranks before a lane green in r2, and a lane never recorded
+    green ranks first."""
+    import json
+
+    import __spark_entry__ as entry
+
+    def rec(green: bool) -> dict:
+        return {"rows_match": True, "schema_match": True,
+                "hash_match": green, "err": ""}
+
+    (tmp_path / "CORRECTNESS_r01.json").write_text(
+        json.dumps({"fresh": rec(True), "relapsed": rec(True)})
+    )
+    (tmp_path / "CORRECTNESS_r02.json").write_text(
+        json.dumps({"fresh": rec(True), "relapsed": rec(False),
+                    "red": rec(False)})
+    )
+    monkeypatch.setattr(entry, "_HERE", str(tmp_path))
+    assert entry._rotation_order(["fresh", "relapsed", "red", "new"]) == [
+        "red", "new", "relapsed", "fresh"
+    ]
+
+
 def test_synthesizers_share_one_arrow_wrapper():
     """Every ``multimodal.synth_*`` encoder maps rows through the one
     ``_synth_assets`` wrapper: none defines its own ``batches``
@@ -286,6 +311,58 @@ def test_synthesizers_share_one_arrow_wrapper():
         and node.name.lstrip("_") == "balanced"
     ]
     assert nested_balanced == []
+
+
+def test_codecs_share_one_decoder_wrapper_and_writers():
+    """In ``multimodal.py`` only the two Arrow wrappers
+    ``_synth_assets`` and ``_decode_assets`` reference ``mapInPandas``,
+    and no function nests its own VP8L ``put``; in ``multimodal.py``
+    and ``vp8.py`` only ``_riff_chunk`` writes a RIFF chunk size
+    (``struct.pack("<I", len(...))``)."""
+    import ast
+    import inspect
+
+    from geniepool_etl_spark.operators import multimodal as M
+    from geniepool_etl_spark.operators import vp8 as V
+
+    def owners(tree, match) -> set:
+        return {
+            getattr(top, "name", "<module>")
+            for top in tree.body
+            for node in ast.walk(top)
+            if match(node)
+        }
+
+    def riff_size(node) -> bool:
+        return (
+            isinstance(node, ast.Call)
+            and ast.unparse(node.func) == "struct.pack"
+            and len(node.args) == 2
+            and isinstance(node.args[0], ast.Constant)
+            and node.args[0].value == "<I"
+            and isinstance(node.args[1], ast.Call)
+            and ast.unparse(node.args[1].func) == "len"
+        )
+
+    tree = ast.parse(inspect.getsource(M))
+    assert owners(
+        tree,
+        lambda n: isinstance(n, ast.Attribute) and n.attr == "mapInPandas",
+    ) == {"_synth_assets", "_decode_assets"}
+    nested_put = [
+        node.lineno
+        for fn in ast.walk(tree)
+        if isinstance(fn, ast.FunctionDef)
+        for node in ast.walk(fn)
+        if node is not fn
+        and isinstance(node, ast.FunctionDef)
+        and node.name == "put"
+    ]
+    assert nested_put == []
+    assert owners(tree, riff_size) == set()
+    assert owners(ast.parse(inspect.getsource(V)), riff_size) == {
+        "_riff_chunk"
+    }
 
 
 # Entries whose plans INTENTIONALLY contain a broadcast nested-loop /
@@ -395,33 +472,6 @@ def test_join_strategy_hints_are_honored(spark):
     assert "ShuffledHashJoin" in _plan(sh)
     smj = li.join(o.hint("merge"), li.l_orderkey == o.o_orderkey)
     assert "SortMergeJoin" in _plan(smj)
-
-
-def test_sorted_lake_write_yields_skippable_files(spark, tmp_path):
-    # sort_within must leave every parquet file internally pos-sorted
-    # (disjoint row-group min/max ranges → data skipping on pos).
-    import glob as _g
-
-    from pyspark.sql import functions as F
-
-    from geniepool_etl_spark.lake import write_datalake
-
-    df = (
-        spark.range(0, 20000)
-        .select(
-            F.lit("chr1").alias("chrom"),
-            (F.col("id") % 7).alias("pos_bucket"),
-            F.shiftright(F.xxhash64("id"), 40).alias("pos"),
-            F.col("id").alias("payload"),
-        )
-    )
-    out = str(tmp_path / "lake")
-    write_datalake(df, out, sort_within=True)
-    files = _g.glob(f"{out}/chrom=*/pos_bucket=*/*.parquet")
-    assert files
-    for f in files[:3]:
-        pos = [r.pos for r in spark.read.parquet(f).select("pos").collect()]
-        assert pos == sorted(pos)
 
 
 def test_minhash_no_cross_join(spark):

@@ -1,13 +1,12 @@
-"""Skew salting and bucketed co-located joins: the two explicit
-scale techniques. Salting must be answer-preserving; bucketing must
-eliminate the join shuffle (visible in the plan).
+"""Explicit scale techniques: skew salting must be answer-preserving;
+the Z-order key, auto-sizing hints, AQE skew splits and runtime bloom
+filters must show in results or plans.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from geniepool_etl_spark.lake import write_bucketed_table
 from geniepool_etl_spark.operators.skew import salted_agg, salted_skew_join
 from tests.conftest import SF_SMALL
 
@@ -78,41 +77,6 @@ def test_salted_agg_on_hot_key(spark):
     assert plain["HOT"][0] == 60_000
 
 
-def test_bucketed_join_has_no_exchange(spark):
-    li = spark.read.parquet(f"{SF_SMALL}/lineitem.parquet").select(
-        "l_orderkey", "l_linenumber", "l_quantity"
-    )
-    orders = spark.read.parquet(f"{SF_SMALL}/orders.parquet").select(
-        "o_orderkey", "o_totalprice"
-    )
-    write_bucketed_table(li, "t_li_bkt", ["l_orderkey"], 8, ["l_orderkey"])
-    write_bucketed_table(orders, "t_o_bkt", ["o_orderkey"], 8, ["o_orderkey"])
-
-    # Bucketing matters exactly when neither side broadcasts (at these
-    # test sizes the planner would broadcast the dim and skip the
-    # bucketed scan entirely) — force the big-join regime.
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        joined = spark.table("t_li_bkt").join(
-            spark.table("t_o_bkt"),
-            F.col("l_orderkey") == F.col("o_orderkey"),
-        )
-        joined.collect()
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        final = plan.split("Initial Plan")[0]
-        # co-located: the bucketed layout replaces both join exchanges
-        assert "Exchange" not in final, final
-        assert "SortMergeJoin" in final
-
-        # and the answer is the plain join's answer
-        assert joined.count() == li.join(
-            orders, li.l_orderkey == orders.o_orderkey
-        ).count()
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-
-
 # ---------------------------------------------------------- z-order
 
 def test_zorder_key_matches_reference_bit_interleave(spark):
@@ -136,48 +100,6 @@ def test_zorder_key_matches_reference_bit_interleave(spark):
 
     for (x, y), z in got.items():
         assert z == morton(x, y)
-
-
-def test_zordered_write_clusters_both_dimensions(spark, tmp_path):
-    """Z-ordered layout bounds per-file min/max spans in BOTH
-    dimensions; a 1-D sort leaves the second dimension's span at
-    ~full range in every file (no skipping possible on it)."""
-    import glob
-
-    from geniepool_etl_spark.lake import write_zordered, zorder_key  # noqa: F401
-
-    n = 1 << 14
-    df = spark.range(n).select(
-        (F.col("id") % 128).alias("x"),
-        ((F.col("id") * 2654435761) % 128).alias("y"),
-    )
-
-    def per_file_spans(path):
-        spans = []
-        for f in sorted(glob.glob(f"{path}/part-*.parquet")):
-            one = spark.read.parquet(f).agg(
-                (F.max("x") - F.min("x")).alias("sx"),
-                (F.max("y") - F.min("y")).alias("sy"),
-            ).collect()[0]
-            spans.append((one.sx, one.sy))
-        return spans
-
-    zpath = str(tmp_path / "zordered")
-    write_zordered(df, zpath, [F.col("x"), F.col("y")], bits=7, n_files=16)
-    zspans = per_file_spans(zpath)
-    assert len(zspans) >= 8
-
-    lpath = str(tmp_path / "linear")
-    df.repartitionByRange(16, "x").sortWithinPartitions("x").write.parquet(lpath)
-    lspans = per_file_spans(lpath)
-
-    avg = lambda v: sum(v) / len(v)  # noqa: E731
-    z_x, z_y = avg([s[0] for s in zspans]), avg([s[1] for s in zspans])
-    l_y = avg([s[1] for s in lspans])
-    # both dims clustered well below the 127 global span…
-    assert z_x < 64 and z_y < 64
-    # …whereas the 1-D layout can't skip on y at all
-    assert l_y > 100
 
 
 def test_auto_sizing_hints_suppress_eager_jobs(spark, monkeypatch):

@@ -12,10 +12,7 @@ the next window).
 
 from __future__ import annotations
 
-import glob
-import json
 import os
-import re
 import sys
 
 _HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -32,22 +29,8 @@ def main() -> None:
     spec.loader.exec_module(mod)
     registered = list(mod.queries().keys())
 
-    latest: dict[str, tuple[int, bool]] = {}
-    for path in sorted(glob.glob(os.path.join(_HERE, "CORRECTNESS_r*.json"))):
-        m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
-        rnd = int(m.group(1))
-        with open(path) as fh:
-            data = json.load(fh)
-        for name, row in data.items():
-            ok = bool(
-                row.get("rows_match")
-                and row.get("schema_match")
-                and row.get("hash_match")
-                and not row.get("err")
-            )
-            prev = latest.get(name)
-            if prev is None or rnd > prev[0]:
-                latest[name] = (rnd, ok)
+    # rounds come oldest first, so the last write per lane is its latest
+    latest = {name: (rnd, ok) for rnd, name, ok in mod._recordings()}
 
     rows = []
     for name in registered:
