@@ -99,8 +99,8 @@ def event_micros(df: DataFrame, ts_col: str = "ts") -> Column:
             raise ValueError(
                 f"event_micros: TIMESTAMP_NTZ column {ts_col!r} requires "
                 f"spark.sql.session.timeZone=UTC (got {tz!r}); call "
-                "functions.enable_nanos_as_long(spark) or use "
-                "session.get_spark()"
+                "functions.enable_nanos_as_long(spark) or create the "
+                "session with session.get_spark()"
             )
         return F.unix_micros(c.cast("timestamp"))
     if isinstance(dt, T.TimestampType):

@@ -1,24 +1,20 @@
-"""Keyed upsert (merge) into DataFrames and partitioned parquet lakes.
+"""Keyed upsert (merge) and history maintenance over DataFrames.
 
 The reference's lake is append/overwrite-only (M:127-138, M:156); a
 production training-data pipeline additionally needs *merge*: re-ingest
 corrected documents, refresh annotation snapshots, apply late events —
-without rewriting 100 TB. Two layers:
-
-- :func:`merge_upsert` — the pure dataflow: for every key, the update
-  row wins, otherwise the base row survives. One anti-join (no full
-  outer join, no window): the update side is usually ≪ base, so the
-  anti-join broadcasts it and the base side streams through untouched.
-- :func:`upsert_partitioned_lake` — the storage-aware version: only
-  partitions that actually contain updated keys are read, merged, and
-  rewritten via dynamic partition overwrite. At 100 TB with daily
-  partitions, an update batch touching 3 days rewrites 3 directories,
-  not the lake.
+without rewriting 100 TB. :func:`merge_upsert` is the pure dataflow:
+for every key, the update row wins, otherwise the base row survives.
+One anti-join (no full outer join, no window): the update side is
+usually ≪ base, so the anti-join broadcasts it and the base side
+streams through untouched. Merging into STORED files is the snapshot
+table's job (``snaptable.merge_table`` / ``apply_cdc``: a transactional
+copy-on-write MERGE that rewrites only the files holding a batch key).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -37,43 +33,6 @@ def merge_upsert(
     """
     survivors = base.join(updates.select(*keys), keys, "left_anti")
     return survivors.unionByName(updates)
-
-
-def upsert_partitioned_lake(
-    spark: SparkSession,
-    lake_path: str,
-    updates: DataFrame,
-    keys: list[str],
-    partition_cols: list[str],
-) -> None:
-    """Merge ``updates`` into a Hive-partitioned parquet lake, touching
-    only the partitions that contain updated keys.
-
-    Steps: (1) collect the distinct partition values present in the
-    update batch (tiny — one row per touched partition); (2) read the
-    lake pruned to those partitions; (3) :func:`merge_upsert`;
-    (4) rewrite with ``partitionOverwriteMode=dynamic`` so exactly the
-    touched directories are replaced. Updates must stay within their
-    partition (a row whose partition value changed is a delete+insert —
-    handle upstream).
-    """
-    touched = updates.select(*partition_cols).distinct()
-    base = spark.read.parquet(lake_path).join(
-        F.broadcast(touched), partition_cols, "semi"
-    )
-    # localCheckpoint materializes the merge before the write — Spark
-    # refuses to overwrite a path that is also a source of the plan.
-    # (With a table format — Delta/Iceberg — MERGE INTO does this
-    # transactionally; on raw parquet the materialize-then-overwrite is
-    # the price of the format.)
-    merged = merge_upsert(base, updates, keys).localCheckpoint()
-    (
-        merged.repartition(*[F.col(c) for c in partition_cols])
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(*partition_cols)
-        .parquet(lake_path)
-    )
 
 
 def merge_rollup(

@@ -28,12 +28,22 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    """Build (or fetch) a SparkSession with the engine's defaults.
+    """Build a SparkSession with the engine's defaults, or return the
+    running one unchanged.
+
+    The confs apply only when this call creates the session:
+    ``Builder.getOrCreate`` would re-apply them to a live session,
+    silently resetting settings its owner chose (a CLI subcommand run
+    inside a test session would override the test's confs).
 
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` when unset so
     the same entry points work under the driver harness and on a real
     cluster (where ``master`` comes from spark-submit instead).
     """
+    live = SparkSession._instantiatedSession
+    if live is not None and live._sc._jsc is not None:
+        # the same liveness test getOrCreate uses before reusing
+        return live
     builder = SparkSession.builder.appName(app_name)
     if master is None:
         # honor an externally-provided master (e.g. a cluster URL);

@@ -196,8 +196,8 @@ def _stage_files(
     spark: SparkSession,
     df: DataFrame,
     table_path: str,
-    stats_cols: tuple,
-    target_files: int | None,
+    stats_cols: tuple = (),
+    target_files: int | None = None,
     bloom_cols: tuple = (),
     bloom_bits: int = 16384,
     bloom_hashes: int = 4,
@@ -212,7 +212,8 @@ def _stage_files(
     ``bloom_hashes`` ``xxhash64(col, seed)`` probes) for point-lookup
     file skipping where min/max can't discriminate (hash-clustered
     layouts); one extra aggregate per bloom column, bounded at
-    ``min(distinct, bits)`` positions per file."""
+    ``min(distinct, bits)`` positions per file. Rewrites stage their
+    change rows and deletion-vector pairs here too, with no stats."""
     token = uuid.uuid4().hex[:12]
     rel = os.path.join(_DATA_DIR, token)
     out_dir = os.path.join(table_path, rel)
@@ -252,7 +253,7 @@ def _stage_files(
         back = spark.read.option("basePath", out_dir).parquet(out_dir)
     else:
         w.write.mode("error").parquet(out_dir)
-        back = spark.read.parquet(out_dir)
+        back = spark.read.schema(df.schema).parquet(out_dir)
     aggs = [F.count(F.lit(1)).alias("_rows")]
     for c in stats_cols:
         aggs.append(F.min(c).alias(f"_min_{c}"))
@@ -289,6 +290,12 @@ def _stage_files(
                 s: r[f"_pv_{s}"] for s in partition_by
             }
         files.append(entry)
+    fs, P = _hadoop_fs(spark, out_dir)
+    if not files:
+        # no rows: drop the staging dir rather than leave an
+        # unreferenced token for vacuum to age out
+        fs.delete(P(out_dir), True)
+        return []
     blooms: dict[str, dict[str, str]] = {}
     for c in bloom_cols:
         probes = F.array(
@@ -330,7 +337,6 @@ def _stage_files(
     # contents and its manifest entries must be the same set, or
     # vacuum's referenced-file accounting drifts
     seen = {e["path"] for e in files}
-    fs, P = _hadoop_fs(spark, out_dir)
 
     def _sweep(dirpath, relpfx: str) -> None:
         for st in fs.listStatus(dirpath):
@@ -679,19 +685,13 @@ def _resolve(spark, fs, P, table_path: str, version: int | None) -> dict:
 
 # Manifests up to this size are json.loads'ed on the driver (cheap,
 # zero extra jobs). Above it — O(10⁵)+ file entries — the PRUNED read
-# paths switch to the distributed planner below: the file list is
+# paths switch to the distributed half of _plan: the file list is
 # read as a DataFrame, pruning predicates run executor-side, and the
 # driver collects only the post-pruning survivors (the Delta/Iceberg
 # shape; an inline parse of a 10⁶-file manifest is a driver-memory
 # cliff). Maintenance paths (merge/delete/compact/vacuum/changes)
 # still materialize the full list — they rewrite it by definition.
 _MANIFEST_INLINE_MAX = 4 << 20
-
-
-def _manifest_len(fs, P, table_path: str, version: int) -> int:
-    return fs.getFileStatus(
-        P(os.path.join(table_path, _LOG_DIR, f"{version:08d}.json"))
-    ).getLen()
 
 
 def _manifest_meta(spark: SparkSession, table_path: str, version: int) -> dict:
@@ -951,6 +951,62 @@ def _prune_by_stats(files: list, col: str, lo, hi) -> list:
     return out
 
 
+def _plan(
+    spark: SparkSession,
+    table_path: str,
+    version: int | None,
+    eq: dict | None = None,
+    stats: tuple | None = None,
+    bloom: tuple | None = None,
+    count: bool = False,
+):
+    """The pruned-file planner behind every pruned read and its
+    ``*_scan_stats`` twin. Resolves ``version`` and prunes its file
+    list through up to three stages, in order: partition equalities
+    ``eq`` (RAW-column values, mapped through the table's spec),
+    min/max ``stats=(col, lo, hi)``, then the Bloom bits of
+    ``bloom=(col, value)``. Returns ``(manifest, survivors)``, or
+    with ``count=True`` ``(manifest, [files_total, kept after each
+    stage...])``.
+
+    Manifests up to ``_MANIFEST_INLINE_MAX`` are parsed driver-side
+    and pruned by the ``_prune_by_*`` rules. Larger ones plan
+    DISTRIBUTED: the file list stays a DataFrame, the same rules run
+    executor-side as the ``_*_keep_expr`` Column predicates, and the
+    driver holds only the survivors (O(pruned), not O(files)) — or,
+    for counts, no entries at all."""
+    fs, P = _hadoop_fs(spark, table_path)
+    v = _resolve_version(fs, P, table_path, version)
+
+    def stages(m):
+        if eq is not None:
+            yield _prune_by_partition, _partition_keep_expr, (
+                _map_partition_probe(spark, m, eq),
+            )
+        if stats is not None:
+            yield _prune_by_stats, _stats_keep_expr, stats
+        if bloom is not None:
+            col, value = bloom
+            yield _prune_by_bloom, _bloom_keep_expr, (
+                col, _bloom_probe_positions(spark, m, col, value),
+            )
+
+    mpath = os.path.join(table_path, _LOG_DIR, f"{v:08d}.json")
+    if fs.getFileStatus(P(mpath)).getLen() <= _MANIFEST_INLINE_MAX:
+        m = _manifest(spark, fs, P, table_path, v)
+        kept = [m["files"]]
+        for prune, _keep_expr, args in stages(m):
+            kept.append(prune(kept[-1], *args))
+        return m, ([len(k) for k in kept] if count else kept[-1])
+    m = _manifest_meta(spark, table_path, v)
+    fdf = _manifest_files_df(spark, table_path, v)
+    keep, kept = F.lit(True), [fdf]
+    for _prune, keep_expr, args in stages(m):
+        keep = keep & keep_expr(fdf, *args)
+        kept.append(fdf.where(keep))
+    return m, ([k.count() for k in kept] if count else kept[-1].collect())
+
+
 def read_range(
     spark: SparkSession,
     table_path: str,
@@ -965,19 +1021,9 @@ def read_range(
     metadata, not the filesystem listing, and the surviving files
     still carry the pushed-down row filter for parquet row-group
     pruning. Files without stats for ``col`` are conservatively
-    kept. Manifests past ``_MANIFEST_INLINE_MAX`` plan DISTRIBUTED:
-    the file list is pruned executor-side and the driver collects
-    only the surviving entries (O(pruned), not O(files))."""
-    fs, P = _hadoop_fs(spark, table_path)
-    v = _resolve_version(fs, P, table_path, version)
-    if _manifest_len(fs, P, table_path, v) <= _MANIFEST_INLINE_MAX:
-        m = _manifest(spark, fs, P, table_path, v)
-        pruned = _prune_by_stats(m["files"], col, lo, hi)
-    else:
-        m = _manifest_meta(spark, table_path, v)
-        fdf = _manifest_files_df(spark, table_path, v)
-        pruned = fdf.where(_stats_keep_expr(fdf, col, lo, hi)).collect()
-    df = _read_files(spark, table_path, m, pruned)
+    kept. Large manifests prune executor-side (see :func:`_plan`)."""
+    m, files = _plan(spark, table_path, version, stats=(col, lo, hi))
+    df = _read_files(spark, table_path, m, files)
     return df.where((F.col(col) >= F.lit(lo)) & (F.col(col) <= F.lit(hi)))
 
 
@@ -986,17 +1032,9 @@ def scan_stats(
 ) -> tuple[int, int]:
     """(files_total, files_scanned) the pruned read above would touch
     — the observability hook the file-skipping tests assert on."""
-    fs, P = _hadoop_fs(spark, table_path)
-    v = _resolve_version(fs, P, table_path, None)
-    if _manifest_len(fs, P, table_path, v) <= _MANIFEST_INLINE_MAX:
-        m = _manifest(spark, fs, P, table_path, v)
-        return len(m["files"]), len(
-            _prune_by_stats(m["files"], col, lo, hi)
-        )
-    fdf = _manifest_files_df(spark, table_path, v)
-    return fdf.count(), fdf.where(
-        _stats_keep_expr(fdf, col, lo, hi)
-    ).count()
+    return tuple(
+        _plan(spark, table_path, None, stats=(col, lo, hi), count=True)[1]
+    )
 
 
 def _prune_by_partition(files: list, eq: dict) -> list:
@@ -1035,21 +1073,9 @@ def read_partition(
     filesystem. The surviving scan still carries the pushed-down row
     filter (safe under pre-partitioning manifests, where entries
     have no partition metadata and are conservatively kept). Large
-    manifests prune executor-side (see :func:`read_range`)."""
-    fs, P = _hadoop_fs(spark, table_path)
-    ver = _resolve_version(fs, P, table_path, version)
-    if _manifest_len(fs, P, table_path, ver) <= _MANIFEST_INLINE_MAX:
-        m = _manifest(spark, fs, P, table_path, ver)
-        pruned = _prune_by_partition(
-            m["files"], _map_partition_probe(spark, m, eq)
-        )
-    else:
-        m = _manifest_meta(spark, table_path, ver)
-        fdf = _manifest_files_df(spark, table_path, ver)
-        pruned = fdf.where(
-            _partition_keep_expr(fdf, _map_partition_probe(spark, m, eq))
-        ).collect()
-    df = _read_files(spark, table_path, m, pruned)
+    manifests prune executor-side (see :func:`_plan`)."""
+    m, files = _plan(spark, table_path, version, eq=eq)
+    df = _read_files(spark, table_path, m, files)
     for c, v in eq.items():
         df = df.where(F.col(c) == F.lit(v))
     return df
@@ -1087,20 +1113,7 @@ def partition_scan_stats(
     ``eq`` at ``version`` — the observability hook the pruning tests
     assert on (same version default as the read, so the two always
     describe the same snapshot)."""
-    fs, P = _hadoop_fs(spark, table_path)
-    ver = _resolve_version(fs, P, table_path, version)
-    if _manifest_len(fs, P, table_path, ver) <= _MANIFEST_INLINE_MAX:
-        m = _manifest(spark, fs, P, table_path, ver)
-        return len(m["files"]), len(
-            _prune_by_partition(
-                m["files"], _map_partition_probe(spark, m, eq)
-            )
-        )
-    m = _manifest_meta(spark, table_path, ver)
-    fdf = _manifest_files_df(spark, table_path, ver)
-    return fdf.count(), fdf.where(
-        _partition_keep_expr(fdf, _map_partition_probe(spark, m, eq))
-    ).count()
+    return tuple(_plan(spark, table_path, version, eq=eq, count=True)[1])
 
 
 def _bloom_probe_positions(
@@ -1167,26 +1180,13 @@ def read_point(
     the pushed-down equality filter for parquet row-group pruning. At
     100 TB the decision reads kilobytes of manifest, no file
     listings, no data. Large manifests prune executor-side (see
-    :func:`read_range`) — stats AND bloom bits both run as column
+    :func:`_plan`) — stats AND bloom bits both run as column
     predicates over the file-entry frame."""
-    fs, P = _hadoop_fs(spark, table_path)
-    ver = _resolve_version(fs, P, table_path, version)
-    if _manifest_len(fs, P, table_path, ver) <= _MANIFEST_INLINE_MAX:
-        m = _manifest(spark, fs, P, table_path, ver)
-        pruned = _prune_by_stats(m["files"], col, value, value)
-        pruned = _prune_by_bloom(
-            pruned, col, _bloom_probe_positions(spark, m, col, value)
-        )
-    else:
-        m = _manifest_meta(spark, table_path, ver)
-        fdf = _manifest_files_df(spark, table_path, ver)
-        pruned = fdf.where(
-            _stats_keep_expr(fdf, col, value, value)
-            & _bloom_keep_expr(
-                fdf, col, _bloom_probe_positions(spark, m, col, value)
-            )
-        ).collect()
-    df = _read_files(spark, table_path, m, pruned)
+    m, files = _plan(
+        spark, table_path, version,
+        stats=(col, value, value), bloom=(col, value),
+    )
+    df = _read_files(spark, table_path, m, files)
     schema = StructType.fromJson(json.loads(m["schema"]))
     return df.where(F.col(col) == F.lit(value).cast(schema[col].dataType))
 
@@ -1197,51 +1197,69 @@ def point_scan_stats(
     """(files_total, files_after_stats, files_after_bloom) for the
     point lookup above — the observability hook the bloom-skipping
     tests assert on (bloom must beat stats on hash layouts)."""
-    fs, P = _hadoop_fs(spark, table_path)
-    ver = _resolve_version(fs, P, table_path, None)
-    if _manifest_len(fs, P, table_path, ver) <= _MANIFEST_INLINE_MAX:
-        m = _manifest(spark, fs, P, table_path, ver)
-        after_stats = _prune_by_stats(m["files"], col, value, value)
-        after_bloom = _prune_by_bloom(
-            after_stats, col, _bloom_probe_positions(spark, m, col, value)
-        )
-        return len(m["files"]), len(after_stats), len(after_bloom)
-    m = _manifest_meta(spark, table_path, ver)
-    fdf = _manifest_files_df(spark, table_path, ver)
-    stats_keep = _stats_keep_expr(fdf, col, value, value)
-    bloom_keep = _bloom_keep_expr(
-        fdf, col, _bloom_probe_positions(spark, m, col, value)
-    )
-    return (
-        fdf.count(),
-        fdf.where(stats_keep).count(),
-        fdf.where(stats_keep & bloom_keep).count(),
+    return tuple(
+        _plan(
+            spark, table_path, None,
+            stats=(col, value, value), bloom=(col, value), count=True,
+        )[1]
     )
 
 
-def _bloom_params(m: dict) -> tuple:
-    """Parent manifest's bloom contract as ``_stage_files`` kwargs.
-    Rewrite commits (delete/merge/CDC/compact) must CARRY this
-    forward: building the child manifest without ``bloom_cols`` would
-    silently disable point-lookup pruning for the whole table — the
-    manifest no longer declares the contract even though untouched
-    files still carry bitsets (advisor finding) — and staging without
-    the params would leave the rewritten files bitset-less."""
-    return (
+def _stage_rewrite(
+    spark: SparkSession,
+    df: DataFrame,
+    table_path: str,
+    m: dict,
+    target_files: int,
+) -> list[dict]:
+    """Stage a rewrite's data files under parent manifest ``m``'s
+    stats, bloom and partition contract, so the rewritten files stay
+    prunable exactly like the ones they replace (staging without the
+    bloom params would leave them bitset-less)."""
+    return _stage_files(
+        spark,
+        df,
+        table_path,
+        tuple(m.get("stats_cols", [])),
+        target_files,
         tuple(m.get("bloom_cols", [])),
         int(m.get("bloom_bits", 16384)),
         int(m.get("bloom_hashes", 4)),
+        tuple(m.get("partition_by", [])),
     )
 
 
-def _carry_contracts(m: dict, manifest: dict, dv: bool = True) -> dict:
-    """Copy the parent's partition + bloom declarations onto a
-    rewrite commit's manifest (in place; returned for chaining).
-    ``dv=True`` also carries the parent's deletion vectors — every
-    rewrite that keeps untouched files by reference MUST carry them
-    or merge-on-read deletes would resurrect; compaction passes
-    ``dv=False`` because it rewrites every file from the DV-applied
-    read (the MATERIALIZE step)."""
+def _commit_rewrite(
+    spark: SparkSession,
+    table_path: str,
+    m: dict,
+    op: str,
+    action: str,
+    files: list,
+    dv: bool = True,
+    **extra,
+) -> int:
+    """Commit a rewrite of parent manifest ``m`` as the next version
+    and return it: ``files`` under ``m``'s schema, stats, partition
+    and bloom declarations, plus the ``extra`` manifest fields
+    (``change_files``, ``dv_files``). Dropping the bloom declaration
+    would silently disable point-lookup pruning for the whole table
+    even though untouched files still carry bitsets. ``dv=True`` also
+    carries the parent's deletion vectors — every rewrite that keeps
+    untouched files by reference MUST carry them or merge-on-read
+    deletes would resurrect; compaction passes ``dv=False`` because
+    it rewrites every file from the DV-applied read (the MATERIALIZE
+    step). The rewrite was planned against ``m``, so losing the
+    version race fails loud: ``op`` reruns against the new head (its
+    staged files are commit-agnostic, so the retry is safe)."""
+    version = m["version"] + 1
+    manifest = {
+        "version": version,
+        "action": action,
+        "schema": m["schema"],
+        "stats_cols": m.get("stats_cols", []),
+        "files": files,
+    }
     if m.get("partition_by"):
         manifest["partition_by"] = m["partition_by"]
     if m.get("bloom_cols"):
@@ -1250,74 +1268,27 @@ def _carry_contracts(m: dict, manifest: dict, dv: bool = True) -> dict:
         manifest["bloom_hashes"] = int(m.get("bloom_hashes", 4))
     if dv and m.get("dv_files"):
         manifest["dv_files"] = list(m["dv_files"])
-    return manifest
-
-
-def _stage_change_data(
-    spark: SparkSession, cdf: DataFrame, table_path: str
-) -> list[dict]:
-    """Write a commit's CHANGE ROWS (table columns +
-    ``_change_type``) into a fresh ``data/<token>/`` directory —
-    invisible until the committing manifest references them under
-    ``change_files`` — and return ``[{path, rows}]`` entries. This is
-    the write-time change tracking (the Delta CDF shape) that makes
-    :func:`read_changes` a ROW-LEVEL feed across rewrites: the
-    rewriting commit records exactly its net changes while it already
-    holds them, instead of a reader diffing rewritten files after the
-    fact. Change data shares the data-dir lifecycle: vacuum keeps the
-    change files of kept versions and reclaims the rest."""
-    token = uuid.uuid4().hex[:12]
-    rel = os.path.join(_DATA_DIR, token)
-    out_dir = os.path.join(table_path, rel)
-    cdf.write.mode("error").parquet(out_dir)
-    back = spark.read.schema(cdf.schema).parquet(out_dir)
-    per_file = (
-        back.groupBy(F.input_file_name().alias("_f"))
-        .agg(F.count(F.lit(1)).alias("_rows"))
-        .collect()
-    )
-    from urllib.parse import unquote
-
-    files = []
-    for r in per_file:
-        uri = unquote(r["_f"])
-        files.append(
-            {"path": uri[uri.index(rel):], "rows": int(r["_rows"])}
+    manifest.update(extra)
+    if not _try_commit(spark, table_path, version, manifest):
+        raise RuntimeError(
+            f"{op}: concurrent commit landed mid-rewrite; rerun against "
+            "the new head"
         )
-    fs, P = _hadoop_fs(spark, out_dir)
-    if not files:
-        # nothing changed: drop the empty staging dir rather than
-        # leave an unreferenced token for vacuum to age out
-        fs.delete(P(out_dir), True)
-        return []
-    # drop 0-row part files the stats job never sees (same invariant
-    # as _stage_files: committed token dirs and manifest entries must
-    # be the same set)
-    seen = {e["path"] for e in files}
-    for st in fs.listStatus(P(out_dir)):
-        name = st.getPath().getName()
-        if name.endswith(".parquet") and f"{rel}/{name}" not in seen:
-            fs.delete(st.getPath(), False)
-    files.sort(key=lambda e: e["path"])
-    return files
+    return version
+
+
+def _change_rows(df: DataFrame, cols: list, change_type: str) -> DataFrame:
+    """``df``'s table columns tagged with a Delta change type — the
+    rows a rewrite records at write time under ``change_files``, so
+    :func:`read_changes` stays a ROW-LEVEL feed across rewrites (the
+    writer already holds its net changes; no reader diffs rewritten
+    files after the fact)."""
+    return df.select(*cols).withColumn("_change_type", F.lit(change_type))
 
 
 def _change_schema(schema_json: str) -> StructType:
     return StructType.fromJson(json.loads(schema_json)).add(
         "_change_type", "string"
-    )
-
-
-def _stage_dv_data(
-    spark: SparkSession, dv_df: DataFrame, table_path: str
-) -> list[dict]:
-    """Write a DV-delete commit's (file key, row position) pairs into
-    a fresh ``data/<token>/`` directory (same lifecycle as change
-    data: invisible until referenced, vacuumed with its versions) and
-    return ``[{path, rows}]`` entries for the manifest's
-    ``dv_files``."""
-    return _stage_change_data(
-        spark, dv_df.select("_dvf", "_pos"), table_path
     )
 
 
@@ -1379,12 +1350,10 @@ def _delete_where_dv(
             f"deletes — use mode='cow' for bulk deletes, or "
             f"compact() first to materialize the standing vectors"
         )
-    dv_new = _stage_dv_data(spark, matched, table_path)
-    changes = (
-        matched.select(*cols)
-        .withColumn("_change_type", F.lit("delete"))
+    dv_new = _stage_files(spark, matched.select("_dvf", "_pos"), table_path)
+    change_files = _stage_files(
+        spark, _change_rows(matched, cols, "delete"), table_path
     )
-    change_files = _stage_change_data(spark, changes, table_path)
     new_files = []
     for f in m["files"]:
         key = f["path"]
@@ -1395,23 +1364,11 @@ def _delete_where_dv(
             f = dict(f)
             f["dv_rows"] = int(f.get("dv_rows", 0)) + hit
         new_files.append(f)
-    version = m["version"] + 1
-    manifest = _carry_contracts(m, {
-        "version": version,
-        "action": "delete",
-        "schema": m["schema"],
-        "stats_cols": m.get("stats_cols", []),
-        "files": new_files,
-        "change_files": change_files,
-    })
-    manifest["dv_files"] = m.get("dv_files", []) + dv_new
-    if not _try_commit(spark, table_path, version, manifest):
-        raise RuntimeError(
-            "delete_where(dv): concurrent commit landed mid-delete; "
-            "rerun against the new head (the staged vectors are "
-            "commit-agnostic)"
-        )
-    return version
+    return _commit_rewrite(
+        spark, table_path, m, "delete_where(dv)", "delete", new_files,
+        change_files=change_files,
+        dv_files=m.get("dv_files", []) + dv_new,
+    )
 
 
 def delete_where(
@@ -1459,51 +1416,148 @@ def delete_where(
     change_files = []
     cols = [f.name for f in StructType.fromJson(json.loads(m["schema"]))]
     if touched:
+        old = _read_files(spark, table_path, m, touched)
         # standard SQL DELETE semantics: remove rows where the
         # predicate IS TRUE; rows where it evaluates NULL are kept.
         # A bare NOT(pred) filter would also evaluate NULL for them
         # and silently DROP non-matching rows from the rewrite —
         # data loss, not a delete (caught in the null-predicate test)
-        survivors = _read_files(spark, table_path, m, touched).where(
-            f"NOT coalesce(({predicate}), false)"
-        )
-        b_cols, b_bits, b_hashes = _bloom_params(m)
-        new_files = _stage_files(
+        new_files = _stage_rewrite(
             spark,
-            survivors,
+            old.where(f"NOT coalesce(({predicate}), false)"),
             table_path,
-            tuple(m.get("stats_cols", [])),
-            target_files=max(1, len(touched)),
-            bloom_cols=b_cols,
-            bloom_bits=b_bits,
-            bloom_hashes=b_hashes,
-            partition_by=tuple(m.get("partition_by", [])),
+            m,
+            max(1, len(touched)),
         )
         # write-time CDF: the rows this commit removes, recorded by
         # the writer that already scans them (scoped to the touched
         # files — the needle's neighborhood, never the table)
-        deleted = (
-            _read_files(spark, table_path, m, touched)
-            .where(f"coalesce(({predicate}), false)")
-            .select(*cols)
-            .withColumn("_change_type", F.lit("delete"))
+        deleted = old.where(f"coalesce(({predicate}), false)")
+        change_files = _stage_files(
+            spark, _change_rows(deleted, cols, "delete"), table_path
         )
-        change_files = _stage_change_data(spark, deleted, table_path)
-    version = m["version"] + 1
-    manifest = _carry_contracts(m, {
-        "version": version,
-        "action": "delete",
-        "schema": m["schema"],
-        "stats_cols": m.get("stats_cols", []),
-        "files": untouched + new_files,
-        "change_files": change_files,
-    })
-    if not _try_commit(spark, table_path, version, manifest):
-        raise RuntimeError(
-            "delete_where: concurrent commit landed mid-delete; rerun "
-            "against the new head (copy-on-write makes the retry safe)"
+    return _commit_rewrite(
+        spark, table_path, m, "delete_where", "delete",
+        untouched + new_files, change_files=change_files,
+    )
+
+
+# Each keyed merge's batch checks, in its caller's own words:
+# (NULL key, duplicate key) message tails after "<caller>: ".
+_MERGE_REJECTS = {
+    "merge_table": (
+        "{n} update rows have NULL in {keys} — NULL merge keys cannot "
+        "match; clean them upstream",
+        "updates carry {n} duplicate key rows on {keys} — ambiguous "
+        "which should win; dedupe upstream (the Delta MULTIPLE_MATCHES "
+        "rule)",
+    ),
+    "apply_cdc": (
+        "{n} change rows have NULL in {keys} — NULL keys cannot match; "
+        "clean them upstream",
+        "batch carries {n} duplicate key rows on {keys} — ambiguous "
+        "which op wins; collapse the batch to its latest op per key "
+        "upstream",
+    ),
+}
+
+
+def _merge_keyed(
+    spark: SparkSession,
+    table_path: str,
+    m: dict,
+    keys: list,
+    upserts: DataFrame,
+    deletes: DataFrame | None,
+    op: str,
+) -> int:
+    """The one keyed copy-on-write MERGE behind :func:`merge_table`
+    and :func:`apply_cdc`: ``upserts`` (table columns) replace
+    same-key rows of parent ``m`` or insert, ``deletes`` (key
+    columns, or None) remove their keys (no-op if absent). ONLY files
+    that contain a batch key are rewritten; every other file carries
+    into the new manifest by reference. Returns the new version.
+
+    NULL keys reject (they can never equi-match, so such a row would
+    insert on EVERY merge and poison the distinct-count check), and
+    so do duplicate keys across the batch (the Delta
+    MULTIPLE_MATCHES rule). The matched-file probe is one semi-join
+    on ``keys`` that collects FILE NAMES (metadata-sized, the
+    deliberate small driver set); when the single key is a manifest
+    stats column, the probe's file set is first pruned driver-side
+    to the batch's key [min, max], so a needle batch scans only the
+    needle's neighborhood."""
+    cols = [f.name for f in StructType.fromJson(json.loads(m["schema"]))]
+    batch_keys = upserts.select(*keys)
+    if deletes is not None:
+        batch_keys = batch_keys.unionByName(deletes)
+    null_cond = None
+    for k in keys:
+        c = F.col(k).isNull()
+        null_cond = c if null_cond is None else (null_cond | c)
+    n_all, n_nulls, n_keys = batch_keys.agg(
+        F.count(F.lit(1)),
+        F.sum(F.when(null_cond, 1).otherwise(0)),
+        F.count_distinct(*[F.col(k) for k in keys]),
+    ).first()
+    null_msg, dup_msg = _MERGE_REJECTS[op]
+    if n_nulls:
+        raise ValueError(f"{op}: " + null_msg.format(n=n_nulls, keys=keys))
+    if n_all != n_keys:
+        raise ValueError(
+            f"{op}: " + dup_msg.format(n=n_all - n_keys, keys=keys)
         )
-    return version
+    key_frame = batch_keys.dropDuplicates(keys)
+    probe_files = m["files"]
+    if len(keys) == 1 and keys[0] in m.get("stats_cols", []):
+        lo, hi = batch_keys.agg(F.min(keys[0]), F.max(keys[0])).first()
+        probe_files = _prune_by_stats(m["files"], keys[0], lo, hi)
+    full = _read_files(spark, table_path, m, probe_files, with_meta=True)
+    hit = {
+        r["_dvf"]
+        for r in full.join(key_frame, keys, "leftsemi")
+        .select("_dvf")
+        .distinct()
+        .collect()
+    }
+    touched, untouched = _split_by_dvf(m["files"], hit)
+    old = _read_files(spark, table_path, m, touched)
+    survivors = old.join(key_frame, keys, "left_anti").select(*cols)
+    new_files = _stage_rewrite(
+        spark,
+        survivors.unionByName(upserts.select(*cols)),
+        table_path,
+        m,
+        max(1, len(touched)),
+    )
+    # write-time CDF (Delta change-type vocabulary): old rows whose
+    # key an upsert replaces are update_preimage, the replacing rows
+    # update_postimage, unmatched upserts insert, and old rows of a
+    # deleted key delete. Every frame is scoped to the touched files
+    # or the (small) batch — a needle merge records the needle's
+    # changes.
+    old_keys = old.select(*keys).dropDuplicates(keys)
+    up_keys = upserts.select(*keys).dropDuplicates(keys)
+    changes = (
+        _change_rows(
+            old.join(up_keys, keys, "leftsemi"), cols, "update_preimage"
+        )
+        .unionByName(_change_rows(
+            upserts.join(old_keys, keys, "leftsemi"), cols, "update_postimage"
+        ))
+        .unionByName(_change_rows(
+            upserts.join(old_keys, keys, "left_anti"), cols, "insert"
+        ))
+    )
+    if deletes is not None:
+        del_keys = deletes.dropDuplicates(keys)
+        changes = changes.unionByName(_change_rows(
+            old.join(del_keys, keys, "leftsemi"), cols, "delete"
+        ))
+    return _commit_rewrite(
+        spark, table_path, m, op, "merge", untouched + new_files,
+        change_files=_stage_files(spark, changes, table_path),
+    )
 
 
 def merge_table(
@@ -1518,121 +1572,17 @@ def merge_table(
     ONLY the files that contain a matched key are rewritten; every
     other file carries into the new manifest by reference. A needle
     merge rewrites the needle's files, not the table. Returns the
-    new version.
-
-    The matched-file probe is one semi-join keyed on ``keys`` that
-    collects FILE NAMES (metadata-sized, the deliberate small driver
-    set) — the updates frame itself never drives a full-table
-    rewrite. When the (single) merge key is a manifest stats column,
-    the probe pre-prunes its file set driver-side against the
-    updates' key [min, max] — a needle merge on a range-clustered
-    table then scans only the needle's neighborhood, not the table,
-    before any executor reads a row."""
-    m_updates = updates
+    new version. ``updates`` must carry the table's exact schema;
+    the batch checks and the file probe are :func:`_merge_keyed`'s."""
     fs, P = _hadoop_fs(spark, table_path)
     m = _resolve(spark, fs, P, table_path, None)
-    if m_updates.schema.json() != m["schema"]:
+    if updates.schema.json() != m["schema"]:
         raise ValueError(
             "merge_table: updates schema differs from the table's"
         )
-    null_cond = None
-    for k in keys:
-        c = F.col(k).isNull()
-        null_cond = c if null_cond is None else (null_cond | c)
-    n_all, n_nulls, n_keys = m_updates.agg(
-        F.count(F.lit(1)),
-        F.sum(F.when(null_cond, 1).otherwise(0)),
-        F.count_distinct(*[F.col(k) for k in keys]),
-    ).first()
-    if n_nulls:
-        # a NULL key can never equi-match: such a row would silently
-        # insert on EVERY merge instead of updating anything (and it
-        # poisons the distinct-count duplicate check below)
-        raise ValueError(
-            f"merge_table: {n_nulls} update rows have NULL in {keys} "
-            "— NULL merge keys cannot match; clean them upstream"
-        )
-    if n_all != n_keys:
-        raise ValueError(
-            f"merge_table: updates carry {n_all - n_keys} duplicate "
-            f"key rows on {keys} — ambiguous which should win; "
-            "dedupe upstream (the Delta MULTIPLE_MATCHES rule)"
-        )
-    probe_files = m["files"]
-    if len(keys) == 1 and keys[0] in m.get("stats_cols", []):
-        lo, hi = m_updates.agg(F.min(keys[0]), F.max(keys[0])).first()
-        probe_files = _prune_by_stats(m["files"], keys[0], lo, hi)
-    full = _read_files(
-        spark, table_path, m, probe_files, with_meta=True
+    return _merge_keyed(
+        spark, table_path, m, keys, updates, None, "merge_table"
     )
-    hit = {
-        r["_dvf"]
-        for r in full.join(
-            m_updates.select(*keys).dropDuplicates(keys), keys, "leftsemi"
-        )
-        .select("_dvf")
-        .distinct()
-        .collect()
-    }
-    touched, untouched = _split_by_dvf(m["files"], hit)
-    cols = [f.name for f in StructType.fromJson(json.loads(m["schema"]))]
-    survivors = (
-        _read_files(spark, table_path, m, touched)
-        .join(m_updates.select(*keys).dropDuplicates(keys), keys, "left_anti")
-        .select(*cols)
-    )
-    staged = survivors.unionByName(m_updates.select(*cols))
-    b_cols, b_bits, b_hashes = _bloom_params(m)
-    new_files = _stage_files(
-        spark,
-        staged,
-        table_path,
-        tuple(m.get("stats_cols", [])),
-        target_files=max(1, len(touched)),
-        bloom_cols=b_cols,
-        bloom_bits=b_bits,
-        bloom_hashes=b_hashes,
-        partition_by=tuple(m.get("partition_by", [])),
-    )
-    # write-time CDF (Delta change-type vocabulary): old rows whose
-    # key the merge replaces are update_preimage, the replacing
-    # update rows update_postimage, unmatched update rows insert.
-    # Every frame is scoped to the touched files or the (small)
-    # updates frame — a needle merge records the needle's changes.
-    old_touched = _read_files(spark, table_path, m, touched)
-    old_keys = old_touched.select(*keys).dropDuplicates(keys)
-    upd_keys = m_updates.select(*keys).dropDuplicates(keys)
-    changes = (
-        old_touched.join(upd_keys, keys, "leftsemi")
-        .select(*cols)
-        .withColumn("_change_type", F.lit("update_preimage"))
-        .unionByName(
-            m_updates.join(old_keys, keys, "leftsemi")
-            .select(*cols)
-            .withColumn("_change_type", F.lit("update_postimage"))
-        )
-        .unionByName(
-            m_updates.join(old_keys, keys, "left_anti")
-            .select(*cols)
-            .withColumn("_change_type", F.lit("insert"))
-        )
-    )
-    change_files = _stage_change_data(spark, changes, table_path)
-    version = m["version"] + 1
-    manifest = _carry_contracts(m, {
-        "version": version,
-        "action": "merge",
-        "schema": m["schema"],
-        "stats_cols": m.get("stats_cols", []),
-        "files": untouched + new_files,
-        "change_files": change_files,
-    })
-    if not _try_commit(spark, table_path, version, manifest):
-        raise RuntimeError(
-            "merge_table: concurrent commit landed mid-merge; rerun "
-            "against the new head (copy-on-write makes the retry safe)"
-        )
-    return version
 
 
 def apply_cdc(
@@ -1652,14 +1602,10 @@ def apply_cdc(
     rewrites the needle's files, not the table. Returns the new
     version.
 
-    Validation mirrors :func:`merge_table`: NULL keys reject (they
-    can never equi-match), duplicate keys in one batch reject (the
-    Delta MULTIPLE_MATCHES rule — ambiguous which op wins), unknown
-    op values reject. The file probe is one semi-join on ``keys``
-    collecting FILE NAMES (metadata-sized); when the single merge
-    key is a manifest stats column the probe file set is pre-pruned
-    driver-side against the batch's key [min, max]. Partitioned
-    tables keep their layout through the rewrite."""
+    Op values outside the set (NULL included) reject; the NULL-key
+    and duplicate-key checks and the pruned file probe are
+    :func:`_merge_keyed`'s, shared with :func:`merge_table`.
+    Partitioned tables keep their layout through the rewrite."""
     fs, P = _hadoop_fs(spark, table_path)
     m = _resolve(spark, fs, P, table_path, None)
     cols = [f.name for f in StructType.fromJson(json.loads(m["schema"]))]
@@ -1669,120 +1615,24 @@ def apply_cdc(
             f"apply_cdc: changes columns {sorted(changes.columns)} != "
             f"table schema + {op_col!r}"
         )
-    null_cond = None
-    for k in keys:
-        c = F.col(k).isNull()
-        null_cond = c if null_cond is None else (null_cond | c)
-    n_all, n_nulls, n_keys, n_badop = changes.agg(
-        F.count(F.lit(1)),
-        F.sum(F.when(null_cond, 1).otherwise(0)),
-        F.count_distinct(*[F.col(k) for k in keys]),
-        F.sum(
-            F.when(~F.col(op_col).isin("upsert", "delete"), 1).otherwise(0)
-        ),
-    ).first()
+    op = F.col(op_col)
+    n_badop = changes.where(
+        ~F.coalesce(op.isin("upsert", "delete"), F.lit(False))
+    ).count()
     if n_badop:
         raise ValueError(
             f"apply_cdc: {n_badop} rows have {op_col} outside "
             "{'upsert', 'delete'}"
         )
-    if n_nulls:
-        raise ValueError(
-            f"apply_cdc: {n_nulls} change rows have NULL in {keys} — "
-            "NULL keys cannot match; clean them upstream"
-        )
-    if n_all != n_keys:
-        raise ValueError(
-            f"apply_cdc: batch carries {n_all - n_keys} duplicate key "
-            f"rows on {keys} — ambiguous which op wins; collapse the "
-            "batch to its latest op per key upstream"
-        )
-    probe_files = m["files"]
-    if len(keys) == 1 and keys[0] in m.get("stats_cols", []):
-        lo, hi = changes.agg(F.min(keys[0]), F.max(keys[0])).first()
-        probe_files = _prune_by_stats(m["files"], keys[0], lo, hi)
-    key_frame = changes.select(*keys).dropDuplicates(keys)
-    full = _read_files(
-        spark, table_path, m, probe_files, with_meta=True
-    )
-    hit = {
-        r["_dvf"]
-        for r in full.join(key_frame, keys, "leftsemi")
-        .select("_dvf")
-        .distinct()
-        .collect()
-    }
-    touched, untouched = _split_by_dvf(m["files"], hit)
-    survivors = (
-        _read_files(spark, table_path, m, touched)
-        .join(key_frame, keys, "left_anti")
-        .select(*cols)
-    )
-    inserts = changes.where(F.col(op_col) == "upsert").select(*cols)
-    staged = survivors.unionByName(inserts)
-    b_cols, b_bits, b_hashes = _bloom_params(m)
-    new_files = _stage_files(
+    return _merge_keyed(
         spark,
-        staged,
         table_path,
-        tuple(m.get("stats_cols", [])),
-        target_files=max(1, len(touched)),
-        bloom_cols=b_cols,
-        bloom_bits=b_bits,
-        bloom_hashes=b_hashes,
-        partition_by=tuple(m.get("partition_by", [])),
+        m,
+        keys,
+        changes.where(op == "upsert").select(*cols),
+        changes.where(op == "delete").select(*keys),
+        "apply_cdc",
     )
-    # write-time CDF: upserts of existing keys emit pre+postimage,
-    # new-key upserts insert, matched delete ops delete (a delete of
-    # an absent key is a no-op and records nothing)
-    old_touched = _read_files(spark, table_path, m, touched)
-    old_keys = old_touched.select(*keys).dropDuplicates(keys)
-    up_keys = (
-        changes.where(F.col(op_col) == "upsert")
-        .select(*keys)
-        .dropDuplicates(keys)
-    )
-    del_keys = (
-        changes.where(F.col(op_col) == "delete")
-        .select(*keys)
-        .dropDuplicates(keys)
-    )
-    cdf_rows = (
-        old_touched.join(up_keys, keys, "leftsemi")
-        .select(*cols)
-        .withColumn("_change_type", F.lit("update_preimage"))
-        .unionByName(
-            inserts.join(old_keys, keys, "leftsemi")
-            .select(*cols)
-            .withColumn("_change_type", F.lit("update_postimage"))
-        )
-        .unionByName(
-            inserts.join(old_keys, keys, "left_anti")
-            .select(*cols)
-            .withColumn("_change_type", F.lit("insert"))
-        )
-        .unionByName(
-            old_touched.join(del_keys, keys, "leftsemi")
-            .select(*cols)
-            .withColumn("_change_type", F.lit("delete"))
-        )
-    )
-    change_files = _stage_change_data(spark, cdf_rows, table_path)
-    version = m["version"] + 1
-    manifest = _carry_contracts(m, {
-        "version": version,
-        "action": "merge",
-        "schema": m["schema"],
-        "stats_cols": m.get("stats_cols", []),
-        "files": untouched + new_files,
-        "change_files": change_files,
-    })
-    if not _try_commit(spark, table_path, version, manifest):
-        raise RuntimeError(
-            "apply_cdc: concurrent commit landed mid-apply; rerun "
-            "against the new head (copy-on-write makes the retry safe)"
-        )
-    return version
 
 
 def compact(
@@ -1884,18 +1734,7 @@ def compact(
         cur = cur.repartitionByRange(
             max(1, target_files), *sort_by
         ).sortWithinPartitions(*sort_by)
-    b_cols, b_bits, b_hashes = _bloom_params(m)
-    new_files = _stage_files(
-        spark,
-        cur,
-        table_path,
-        tuple(m.get("stats_cols", [])),
-        target_files=target_files,
-        bloom_cols=b_cols,
-        bloom_bits=b_bits,
-        bloom_hashes=b_hashes,
-        partition_by=tuple(m.get("partition_by", [])),
-    )
+    new_files = _stage_rewrite(spark, cur, table_path, m, target_files)
     # live rows = manifest rows minus deletion-vector rows: compact
     # reads through the DVs, so the staged count must match the
     # POST-DV count — and the rewrite MATERIALIZES the vectors
@@ -1909,17 +1748,9 @@ def compact(
             f"compact: staged rows {n_new} != live rows {n_old}; "
             "aborting without committing"
         )
-    version = m["version"] + 1
-    manifest = _carry_contracts(m, {
-        "version": version,
-        "action": "compact",
-        "schema": m["schema"],
-        "stats_cols": m.get("stats_cols", []),
-        "files": new_files,
-    }, dv=False)
-    if not _try_commit(spark, table_path, version, manifest):
-        raise RuntimeError("compact: lost the commit race; rerun")
-    return version
+    return _commit_rewrite(
+        spark, table_path, m, "compact", "compact", new_files, dv=False
+    )
 
 
 def read_changes(

@@ -49,6 +49,21 @@ def test_cli_sim_topk(spark, tmp_path):
     assert {"q_id", "n_id", "cos_sim"} <= set(got.columns)
 
 
+def test_get_spark_returns_a_live_session_unchanged(spark):
+    """Every CLI subcommand calls get_spark; inside a running session
+    it must hand that session back without re-applying its own confs
+    (which would reset e.g. ANSI mode for every later caller)."""
+    from geniepool_etl_spark.session import get_spark
+
+    before = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "true")
+    try:
+        assert get_spark("other") is spark
+        assert spark.conf.get("spark.sql.ansi.enabled") == "true"
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", before)
+
+
 def test_cli_etl_wrong_arity_returns_usage():
     assert main(["etl", "a", "b"]) == 2
 

@@ -553,39 +553,6 @@ def test_merge_upsert_update_wins(spark):
     assert got == {1: "a", 2: "B", 3: "c", 4: "D"}
 
 
-def test_upsert_partitioned_lake_touches_only_updated_partitions(
-    spark, tmp_path
-):
-    from geniepool_etl_spark.operators.upsert import upsert_partitioned_lake
-
-    lake = str(tmp_path / "lake")
-    base = spark.createDataFrame(
-        [(1, "p0", "a"), (2, "p0", "b"), (3, "p1", "c"), (4, "p2", "d")],
-        "k LONG, part STRING, v STRING",
-    )
-    base.write.partitionBy("part").parquet(lake)
-    import os
-
-    p2_files = {
-        f: os.path.getmtime(os.path.join(lake, "part=p2", f))
-        for f in os.listdir(os.path.join(lake, "part=p2"))
-        if f.endswith(".parquet")
-    }
-    updates = spark.createDataFrame(
-        [(2, "p0", "B"), (5, "p1", "E")], "k LONG, part STRING, v STRING"
-    )
-    upsert_partitioned_lake(spark, lake, updates, ["k"], ["part"])
-    got = {r.k: r.v for r in spark.read.parquet(lake).collect()}
-    assert got == {1: "a", 2: "B", 3: "c", 4: "d", 5: "E"}
-    # untouched partition p2 was not rewritten
-    p2_after = {
-        f: os.path.getmtime(os.path.join(lake, "part=p2", f))
-        for f in os.listdir(os.path.join(lake, "part=p2"))
-        if f.endswith(".parquet")
-    }
-    assert p2_after == p2_files
-
-
 # ----------------------------------------------------------------- IVF
 
 def test_ivf_lists_partition_corpus(spark):

@@ -365,6 +365,47 @@ def test_codecs_share_one_decoder_wrapper_and_writers():
     }
 
 
+def test_snaptable_has_one_commit_one_merge_and_one_planner():
+    """In ``snaptable.py`` only ``write_table`` and the rewrite helper
+    ``_commit_rewrite`` call ``_try_commit`` (once each); only the
+    planner ``_plan`` reads ``_MANIFEST_INLINE_MAX`` or calls
+    ``_manifest_files_df``; and the keyed merges reach the data only
+    through their shared core (no direct ``_read_files``,
+    ``_stage_files`` or ``_try_commit`` call)."""
+    import ast
+    import inspect
+
+    from geniepool_etl_spark import snaptable as T
+
+    tree = ast.parse(inspect.getsource(T))
+    defs = {
+        top.name: top for top in tree.body if isinstance(top, ast.FunctionDef)
+    }
+
+    def loads(node, name) -> list:
+        return [
+            n
+            for n in ast.walk(node)
+            if isinstance(n, ast.Name)
+            and n.id == name
+            and isinstance(n.ctx, ast.Load)
+        ]
+
+    def owners(name) -> list:
+        return sorted(
+            getattr(top, "name", "<module>")
+            for top in tree.body
+            for _ in loads(top, name)
+        )
+
+    assert owners("_try_commit") == ["_commit_rewrite", "write_table"]
+    assert owners("_MANIFEST_INLINE_MAX") == ["_plan"]
+    assert owners("_manifest_files_df") == ["_plan"]
+    for fn in ("merge_table", "apply_cdc"):
+        for helper in ("_read_files", "_stage_files", "_try_commit"):
+            assert loads(defs[fn], helper) == [], (fn, helper)
+
+
 # Entries whose plans INTENTIONALLY contain a broadcast nested-loop /
 # cross join: a tiny broadcast side (query set, centroid set, 1-row
 # corpus count, literal range bounds) crossed against the corpus — the

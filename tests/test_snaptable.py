@@ -246,6 +246,16 @@ def test_merge_upsert_cow_by_reference(spark, nums, tdir):
         )
 
 
+def test_merge_rejects_updates_of_another_schema(spark, nums, tdir):
+    """merge_table takes only updates of the table's exact schema: an
+    int key against the table's long key is refused, not cast."""
+    T.write_table(nums, tdir, "create")
+    upd = nums.where("k < 3").withColumn("k", F.col("k").cast("int"))
+    with pytest.raises(ValueError, match="schema differs"):
+        T.merge_table(spark, tdir, upd, ["k"])
+    assert T.current_version(spark, tdir) == 0
+
+
 def test_zorder_write_skips_on_both_dimensions(spark, tdir):
     """A single z-ordered layout must buy file skipping for range
     predicates on EITHER participating column — the property a plain
@@ -769,6 +779,12 @@ def test_apply_cdc_validation_rejects(spark, pnums, tdir):
     )
     with pytest.raises(ValueError, match="_op"):
         T.apply_cdc(spark, tdir, bad_op, ["k"])
+    # a NULL op is no op at all: refused, not read as a silent delete
+    null_op = spark.createDataFrame(
+        [(1, 1, 1, None)], "k long, p long, v long, _op string"
+    )
+    with pytest.raises(ValueError, match="_op"):
+        T.apply_cdc(spark, tdir, null_op, ["k"])
     dup = spark.createDataFrame(
         [(1, 1, 1, "upsert"), (1, 1, 2, "delete")],
         "k long, p long, v long, _op string",
@@ -783,6 +799,7 @@ def test_apply_cdc_validation_rejects(spark, pnums, tdir):
     badcols = spark.createDataFrame([(1, "upsert")], "k long, _op string")
     with pytest.raises(ValueError, match="columns"):
         T.apply_cdc(spark, tdir, badcols, ["k"])
+    assert T.current_version(spark, tdir) == 0
 
 
 def test_apply_cdc_delete_all_leaves_empty_readable_table(spark, tdir):
@@ -1171,6 +1188,59 @@ def test_snap_manifest_scale_distributed_pruning(spark, tdir, monkeypatch):
     # a bloom miss inside the stats range prunes to zero files
     t2, s2, b2 = T.point_scan_stats(spark, tdir, "k", 501)
     assert s2 >= 1 and b2 == 0
+
+
+def test_snap_manifest_scale_distributed_partition_pruning(
+    spark, tdir, monkeypatch
+):
+    """The partition-pruned read and its stats, planned DISTRIBUTED
+    past _MANIFEST_INLINE_MAX: fake entries in other partitions prune
+    executor-side, counts and rows match the inline rule, and the big
+    manifest never goes through the driver-side json parse."""
+    df = spark.range(0, 300).select(
+        F.col("id").alias("k"), (F.col("id") % 3).alias("g")
+    )
+    T.write_table(df, tdir, "create", target_files=1, partition_by=("g",))
+    total0, kept0 = T.partition_scan_stats(spark, tdir, {"g": 1})
+    mpath = os.path.join(tdir, "_snaplog", f"{0:08d}.json")
+    with open(mpath) as fh:
+        m = json.load(fh)
+    real = len(m["files"])
+    assert (total0, kept0) == (real, 1)
+    # 60k fake entries, all in partitions no probe below asks for
+    for i in range(60_000):
+        m["files"].append(
+            {
+                "path": f"data/fake/g={3 + i}/part-{i:05d}.parquet",
+                "rows": 1,
+                "partition": {"g": 3 + i},
+            }
+        )
+    with open(mpath, "w") as fh:
+        json.dump(m, fh)
+    crc = os.path.join(tdir, "_snaplog", f".{0:08d}.json.crc")
+    if os.path.exists(crc):
+        os.remove(crc)
+    assert os.path.getsize(mpath) > T._MANIFEST_INLINE_MAX
+    real_read_text = T._read_text
+
+    def guarded(spark_, fs, jpath):
+        if str(jpath).endswith(f"{0:08d}.json"):
+            raise AssertionError(
+                "partition-pruned read drove the big manifest through "
+                "the driver-side json parse"
+            )
+        return real_read_text(spark_, fs, jpath)
+
+    monkeypatch.setattr(T, "_read_text", guarded)
+    assert T.partition_scan_stats(spark, tdir, {"g": 1}) == (
+        real + 60_000, 1
+    )
+    got = T.read_partition(spark, tdir, {"g": 1}).collect()
+    assert sorted(r.k for r in got) == list(range(1, 300, 3))
+    assert T.partition_scan_stats(spark, tdir, {"g": -1}) == (
+        real + 60_000, 0
+    )
 
 
 try:
